@@ -1,228 +1,60 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 import graft.core.InputDoc
 
-/** Benchmark main (driver contract): prints ONE JSON line with the
-  * headline query timings plus the north-rule scaling evidence — the
-  * end-to-end KB-population job at N vs 4N executor JVMs with docs/sec
-  * at both levels and the scaling efficiency between them.
+/** Benchmark main: prints ONE JSON line, and rewrites BENCH_LOCAL.json
+  * after every query and every ladder level, so a killed run still
+  * leaves the phases it finished. It takes two measurements:
   *
-  * Round-3 contract fixes (VERDICT r2 items 1, 2, 8):
-  *   - the DEFAULT invocation is sized to finish well inside a ~10-minute
-  *     driver timeout: one rep per level, a replicate that keeps the
-  *     N-level run ~2 minutes, and NO hidden extra ladder runs;
-  *   - every completed phase is flushed to BENCH_LOCAL.json immediately
-  *     (headline queries, then each ladder level as it lands), so a
-  *     killed run still leaves machine-readable partial evidence;
-  *   - ONLY_LEVEL mode emits the query table it measures instead of
-  *     discarding it.
-  *   - the ladder is sized to FIT THE HOST: per-executor heap times the
-  *     TOP level's executor count must leave headroom (round 2 ran
-  *     8 x 10 GiB executors on a hypervisor-overcommitted 128 GiB box and
-  *     measured eff 0.046 from swap thrash, not from the plan). Default
-  *     is 1 -> 4 executors x 2 cores x 6 GiB: top level = 24 GiB of
-  *     executor heap + 8 GiB driver, and 8 concurrent cores — a quarter
-  *     of the box — so per-core memory bandwidth stays constant across
-  *     levels (on a real cluster every added executor brings its own
-  *     memory bus; a single box does not, and letting the top level
-  *     saturate the bus measures the BOX, not the plan) and the episodic
-  *     co-tenant load this host carries perturbs both levels equally.
+  *  1. the 28 `headline` queries, `Passes` times, each pass in a fresh
+  *     local[cpus] session after a q1_agg warm-up, `count()` per query.
+  *     `queries` holds the per-query minimum; `queries_stats` adds the
+  *     median and the spread (max - min) over the passes;
+  *  2. the KB-population job (docs -> Pipeline.run -> triples count) on a
+  *     loopback standalone cluster ([[BenchCluster]]) at N and 4N
+  *     executor JVMs of equal cores and heap, sized from the host.
+  *
+  * Every value in the output is measured by this run. Each query pass and
+  * ladder level carries a host stamp (CPU used by this process tree vs
+  * the rest of the host over its timed window); a contended level is
+  * reported with its stamp but never enters the scaling pair.
+  *
+  * Env: SPARK_GRAFT_SF_DIR (input tables, required), SPARK_GRAFT_CPUS
+  * (query-pass parallelism, default: available processors).
   */
 object Bench {
 
-  /** Shuffle/spill dir on tmpfs when available: 32 concurrent shuffle
-    * writers on the sandbox's virtio disk showed up as blocked task time
-    * (run-cpu gap); tmpfs removed ~40% of executor run time.
-    */
-  def localDir: String =
-    try {
-      val d = java.nio.file.Paths.get("/dev/shm/spark-local")
-      java.nio.file.Files.createDirectories(d)
-      d.toString
-    } catch { case _: Throwable => System.getProperty("java.io.tmpdir") }
-
-  /** Partition count for the scaling ladder. Deliberately LEVEL-
+  /** Partition count for the queries and the ladder. Deliberately LEVEL-
     * INDEPENDENT: on a real cluster the partitioning is a property of
-    * the DATA (splits ~128 MB), and going N -> 4N executors changes only
-    * how many run at once. Tying partitions to the core count (round 2's
-    * first attempt) both changed the job between levels and let
-    * partition SIZE grow with the input — 640k docs in 2-8 shuffle
-    * partitions spilled and GC-thrashed, measuring ~2x per-doc slowdown
-    * vs the same input in 64 partitions.
+    * the DATA, and going N -> 4N executors changes only how many run at
+    * once. Tying partitions to the core count both changed the job
+    * between levels and let partition SIZE grow with the input (640k
+    * docs in 2-8 shuffle partitions spilled and GC-thrashed, ~2x per-doc
+    * slowdown vs the same input in 64 partitions).
     */
-  def scaleParts: Int = sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTS", "64").toInt
-
-  /** Optional Spark event-log dir (profiling: per-stage task metrics
-    * survive the run; analyze with a JSON scan).
+  val ScaleParts = 64
+  val Passes = 3
+  /** Ladder input = the sf corpus replicated this many times (doc ids
+    * suffixed), so the per-level fixed cost of a Pipeline.run (planning,
+    * ~30 jobs, driver-side steps) does not dominate the pair.
     */
-  def eventLog: Option[String] = sys.env.get("SPARK_GRAFT_EVENTLOG").map { d =>
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)); d
-  }
-
-  /** Host memory-provision probe: MB/s at which the host supplies FRESH
-    * pages (256 MB of new direct memory, touched per 4 KiB, then freed).
-    *
-    * Why it exists: this sandbox's hypervisor overcommits memory. Beyond
-    * ~25 GiB of new allocation host-wide, fresh page faults collapse from
-    * ~1 GB/s to ~10-30 MB/s per process (measured 2026-08-17: 9 GiB
-    * faulted in 732 s under 5-way concurrency while MemAvailable read
-    * 100 GiB; re-walking the SAME pages took 0.6 s). A 4-executor ladder
-    * level must fault ~20 GiB of fresh heap+tmpfs, so on a degraded host
-    * it burns hundreds of kernel-CPU seconds inside GC/JIT/shuffle-write
-    * paths — a host artifact that looks exactly like a scaling failure.
-    * The probe is recorded per ladder level so the evidence separates
-    * plan behavior from host sickness, and retries only spend wall-clock
-    * when the host is actually healthy.
+  val Replicate = 16
+  /** A window is contended when the rest of the host (other processes
+    * plus hypervisor steal) used more than this share of its cores.
     */
-  def probeFaultMBps(): Double = {
-    val chunk = 64 << 20
-    val n = 4
-    val t0 = System.nanoTime()
-    var i = 0
-    while (i < n) {
-      val b = java.nio.ByteBuffer.allocateDirect(chunk)
-      var off = 0
-      while (off < chunk) { b.put(off, 1.toByte); off += 4096 }
-      // free eagerly so probes don't accumulate resident direct memory
-      try b.asInstanceOf[sun.nio.ch.DirectBuffer].cleaner().clean()
-      catch { case _: Throwable => () }
-      i += 1
-    }
-    val mb = (chunk.toLong * n) >> 20
-    mb / ((System.nanoTime() - t0) / 1e9)
-  }
-
-  /** Pre-provision guest free pages before a measured ladder phase:
-    * touch up to `gib` GiB of direct memory in bounded chunks, freeing
-    * each chunk immediately. Guest-freed pages stay guest-resident, so
-    * the MEASURED window's tmpfs shuffle writes and page-cache faults
-    * reuse warm pages instead of taking the host's slow fresh-provision
-    * path — the same reasoning as -XX:+AlwaysPreTouch (BENCH.md run 11),
-    * extended to the non-heap page demand, and consistent with retries
-    * running faster than first attempts (pages warmed by the failed
-    * attempt). Applied identically before every level so it cannot bias
-    * the pair; time-capped so a storm cannot eat the wall budget (a
-    * partial pre-fault just means the level's own health stamps tell
-    * the story as before).
-    *
-    * MEASURED (2026-08-20 A/B, 2x2 interleaved L4-only runs): no
-    * improvement — default stays 0. Explanation consistent with the
-    * data: guest-FREED pages do not stay host-backed (free-page
-    * reporting returns the frames to the hypervisor), so pre-fault
-    * warmth evaporates at release; the retry speedup comes from pages
-    * still RESIDENT (tmpfs files, page cache) at retry time, which a
-    * touch-and-free conditioner cannot reproduce. Knob kept for
-    * experiments on hosts without free-page reporting.
+  val ContendedShare = 0.1
+  /** The whole run, queries and ladder; past it the watchdog emits what
+    * has landed (complete:false) and tears the ladder cluster down.
     */
-  def prefault(gib: Int, capS: Int = 35): Double = {
-    if (gib <= 0) return 0.0
-    val chunk = 256 << 20
-    val total = gib.toLong << 30
-    val deadline = System.nanoTime() + capS * 1000L * 1000 * 1000
-    val t0 = System.nanoTime()
-    var done = 0L
-    while (done < total && System.nanoTime() < deadline) {
-      val b = java.nio.ByteBuffer.allocateDirect(chunk)
-      var off = 0
-      while (off < chunk) { b.put(off, 1.toByte); off += 4096 }
-      try b.asInstanceOf[sun.nio.ch.DirectBuffer].cleaner().clean()
-      catch { case _: Throwable => () }
-      done += chunk
-    }
-    val secs = (System.nanoTime() - t0) / 1e9
-    println(f"[bench] prefault ${done >> 30} GiB in $secs%.1fs " +
-      f"(${(done >> 20) / math.max(secs, 0.001)}%.0f MB/s)")
-    secs
-  }
+  val WallBudgetS = 585
 
-  /** /proc/stat line 1, jiffies: user nice sys idle iowait irq softirq
-    * steal. Deltas across a phase give the host-wide CPU split — the
-    * memory-provisioning storm shows up as sys >> user, co-tenant load
-    * as steal.
-    */
-  private def hostCpu(): Array[Long] =
-    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat"))
-      .linesIterator.next().split("\\s+").drop(1).take(8).map(_.toLong)
-    catch { case _: Throwable => Array.fill(8)(0L) }
-
-  /** Instantaneous host busy-cores over a short /proc/stat sample.
-    * loadavg(1m) is an EWMA of the RUNNABLE count: it keeps reading
-    * high for ~2 minutes after our own query pass / ladder level
-    * finishes, while the box is actually idle NOW — and waiting out
-    * that phantom decay cost 60-150 s of every default run's budget
-    * (the 440k default cannot afford it). The quiet gates accept
-    * either signal: loadavg under the gate, OR a busy-core sample
-    * under the threshold. A short sample can hit a lull of a real
-    * storm, so the per-level post-hoc stamps (CPU split across the
-    * level, fault probe, wall sanity) remain the authoritative
-    * verdict — this only decides WHEN to start, not how to judge.
-    */
-  def busyCores(sampleMs: Int = 2500): Double = {
-    val a = hostCpu(); Thread.sleep(sampleMs); val b = hostCpu()
-    val d = b.zip(a).map { case (x, y) => (x - y).toDouble }
-    val idle = d(3) + d(4) // idle + iowait
-    val total = d.sum
-    if (total <= 0) 0.0
-    else (total - idle) / total * Runtime.getRuntime.availableProcessors()
-  }
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-bench-$cpus")
-      .config("spark.sql.shuffle.partitions", scaleParts.toString)
-      .config("spark.sql.limit.initialNumPartitions", scaleParts.toString)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", localDir)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.rdd.compress", "true")
-      .config("spark.eventLog.enabled", eventLog.isDefined.toString)
-      .config("spark.eventLog.dir", eventLog.getOrElse("/tmp"))
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
-  /** HISTORY note embedded in every artifact: the 2026-08-17 verified
-    * quiet-window pair (eff 0.96, 440k docs). It was measured on code
-    * ~35% slower at both levels than today's (329.5/85.8 s vs
-    * 243.5/73.3 s); slower code has a higher parallel fraction, so the
-    * 0.96 does NOT transfer to current code and is NEVER reported as
-    * `scaling_efficiency` — the headline for a degraded ladder is the
-    * best recorded HEALTHY in-run pair of current code (BENCH_BESTS
-    * `bestpair_eff_*` records; see buildJson).
-    */
-  private val QuietHistory =
-    """"prior_quiet_window":{"mode":"jvms","docs":440000,""" +
-      """"levels":{"1":{"docs_per_sec":1336},"4":{"docs_per_sec":5129}},""" +
-      """"eff_1_4":0.96,"measured":"2026-08-17",""" +
-      """"stale_code":"walls 329.5/85.8s vs current-best 233/73s — """ +
-      """history only, never the headline"}"""
-
-  /** Exoneration anchors now live in BENCH_BESTS.json as
-    * `verified_quiet_wall_<configKey>` records, NOT as Scala literals —
-    * host-specific wall measurements in engine source are meaningless on
-    * any other machine and silently misfire the exoneration gate there.
-    * A config with NO persisted record (neither a verified wall nor a
-    * best-known wall) gets no exoneration at all — anchor-less
-    * exoneration is exactly the over-exoneration case this guards.
-    * Semantics of an anchor (unchanged): storms on this host are
-    * measured one-sided (they only SLOW levels), so a kept wall
-    * at-or-under 1.05x min(verified quiet wall, pre-run best-known
-    * wall) cannot have been materially inflated, whatever the box-wide
-    * CPU ratios say — those count co-tenant activity on cores the level
-    * never used.
-    */
-  private val VerifiedWallPrefix = "verified_quiet_wall_"
-
-  /** Representative query set: one per operator family, cheap enough to
-    * keep the whole bench under a few minutes.
-    */
-  private val headline = Seq(
+  /** Representative query set: one per operator family. */
+  val headline = Seq(
     "q1_agg", "q2_topk_window", "q3_join_agg", "q6_sessionize",
     "q13_interval_overlap", "q16_asof", "q17_rollup", "q18_range_join",
     "t1_exact_dedup", "t6_ngram_neardup", "t7_minhash_lsh", "t8_simhash",
@@ -232,1240 +64,317 @@ object Bench {
     "q57_ancestors", "t39_best_rep", "t40_bpe_step",
     "kg_spans", "kg_sections", "kg_triples")
 
-  /** The KB-population job benched for scaling: docs (optionally
-    * replicated to amortize fixed job overhead) -> full pipeline ->
-    * triples count. Same input both levels (replication is deterministic).
+  /** Shuffle/spill dir on tmpfs when available: 32 concurrent shuffle
+    * writers on a virtio disk showed up as blocked task time; tmpfs
+    * removed ~40% of executor run time.
+    */
+  def localDir: String =
+    try {
+      val d = java.nio.file.Paths.get("/dev/shm/spark-local")
+      java.nio.file.Files.createDirectories(d)
+      d.toString
+    } catch { case _: Throwable => System.getProperty("java.io.tmpdir") }
+
+  // ---- measured results (pure data; buildJson is a function of these) --
+
+  /** Host use over one timed window, in average cores: `host` = busy
+    * user+nice+system time of the whole host, `own` = CPU of this JVM
+    * and its descendants (the ladder's master/worker/executor JVMs).
+    */
+  final case class Stamp(wallS: Double, load1: Double, nproc: Int,
+      hostCores: Double, ownCores: Double, stealCores: Double) {
+    def foreignCores: Double = math.max(0.0, hostCores - ownCores)
+    def contended: Boolean = foreignCores + stealCores > ContendedShare * nproc
+  }
+  final case class QueryPass(times: Map[String, Double], stamp: Stamp)
+  final case class Level(executors: Int, sec: Double, docs: Long,
+      triples: Long, stamp: Stamp)
+  /** Ladder shape: `low` -> `high` = 4 x `low` executors of `cores`
+    * cores and `heapMB` heap each.
+    */
+  final case class Shape(nproc: Int, memTotalMB: Long, low: Int, cores: Int,
+      heapMB: Int) {
+    def high: Int = 4 * low
+  }
+  final case class Run(sfDir: String, shape: Shape, passes: Seq[QueryPass],
+      running: Map[String, Double], levels: Seq[Level],
+      failedLevels: Map[Int, String], finished: Boolean,
+      aborted: Option[String])
+
+  /** N = 1 (the smallest N -> 4N ladder); cores per executor so the top
+    * level takes a quarter of a large host and all of a small one; heap
+    * so the top level's executors together hold a quarter of MemTotal,
+    * within [512 MiB, 5 GiB] (a larger heap grows in-heap aggregation
+    * maps instead of spilling to tmpfs, measured 2.2x slower).
+    */
+  def shapeFor(nproc: Int, memTotalMB: Long): Shape = {
+    val heap = (memTotalMB / 4 / 4 / 128 * 128).toInt
+    Shape(nproc, memTotalMB, 1, math.max(1, nproc / 16),
+      math.min(5120, math.max(512, heap)))
+  }
+
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  private val mapper = new ObjectMapper()
+
+  private def stampJson(s: Stamp): ObjectNode = {
+    val o = mapper.createObjectNode()
+    o.put("wall_s", s.wallS).put("load1_at_start", s.load1)
+      .put("host_busy_cores", s.hostCores).put("own_cores", s.ownCores)
+      .put("foreign_cores", s.foreignCores).put("steal_cores", s.stealCores)
+      .put("contended", s.contended)
+    o
+  }
+
+  private def lvlName(l: Int) = s"executors$l"
+
+  /** The result document. Pure: every value derives from `r`. */
+  def buildJson(r: Run): String = {
+    val times = (r.passes.map(_.times) :+ r.running)
+      .flatMap(_.toSeq).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val root = mapper.createObjectNode()
+    val queries = root.put("metric", "total")
+      .put("value", headline.flatMap(times.get).map(_.min).sum)
+      .put("unit", "sec").putObject("queries")
+    val stats = mapper.createObjectNode()
+    headline.filter(times.contains).foreach { q =>
+      val ts = times(q)
+      queries.put(q, ts.min)
+      stats.putObject(q).put("min", ts.min).put("median", median(ts))
+        .put("spread", ts.max - ts.min).put("runs", ts.size)
+    }
+    root.set[ObjectNode]("queries_stats", stats)
+    val passes = root.putArray("queries_passes")
+    r.passes.foreach { p =>
+      passes.addObject().put("ran", p.times.size).put("of", headline.size)
+        .set[ObjectNode]("host", stampJson(p.stamp))
+    }
+    val levels = r.levels.sortBy(_.executors)
+    val byN = levels.map(l => l.executors -> l).toMap
+    val wanted = Seq(r.shape.low, r.shape.high)
+    val missing = wanted.filterNot(byN.contains)
+    val contended = levels.filter(_.stamp.contended).map(_.executors)
+    val complete = r.finished && r.aborted.isEmpty && missing.isEmpty &&
+      r.passes.size == Passes &&
+      r.passes.forall(p => headline.forall(p.times.contains))
+    root.put("sf", r.sfDir).put("complete", complete)
+    r.aborted.foreach(root.put("aborted", _))
+
+    val kb = root.putObject("kb_pipeline")
+    levels.headOption.foreach { l =>
+      kb.put("docs", l.docs).put("triples", l.triples)
+        .put("triples_check_equal", levels.map(_.triples).distinct.size == 1)
+    }
+    kb.put("mode", "jvms").put("replicate", Replicate)
+    val lv = kb.putObject("levels")
+    levels.foreach { l =>
+      lv.putObject(lvlName(l.executors)).put("sec", l.sec)
+        .put("docs_per_sec", l.docs / l.sec).put("docs", l.docs)
+        .put("triples", l.triples).put("contended", l.stamp.contended)
+        .set[ObjectNode]("host", stampJson(l.stamp))
+    }
+    if (r.failedLevels.nonEmpty) {
+      val f = kb.putObject("failed_levels")
+      r.failedLevels.toSeq.sorted.foreach { case (l, why) => f.put(lvlName(l), why) }
+    }
+    val pairs = kb.putObject("scaling_pairs")
+    if (missing.nonEmpty)
+      kb.put("scaling_provenance",
+        "incomplete: " + missing.map(lvlName).mkString(",") + " not measured")
+    else if (contended.nonEmpty)
+      kb.put("scaling_provenance",
+        "contended: " + contended.map(lvlName).mkString(",") + " not counted")
+    else {
+      val (a, b) = (byN(r.shape.low), byN(r.shape.high))
+      val eff = (b.docs / b.sec) / (4.0 * (a.docs / a.sec))
+      pairs.put(s"eff_${a.executors}_${b.executors}", eff)
+      kb.put("scaling_efficiency", eff).put("scaling_provenance", "this_run")
+    }
+    val sh = kb.putObject("host")
+    sh.put("nproc", r.shape.nproc).put("mem_total_mb", r.shape.memTotalMB)
+      .put("executor_cores", r.shape.cores).put("executor_heap_mb", r.shape.heapMB)
+    sh.putArray("ladder").add(r.shape.low).add(r.shape.high)
+    mapper.writeValueAsString(root)
+  }
+
+  // ---- host accounting ------------------------------------------------
+
+  /** /proc/stat line 1 in seconds: user nice system idle iowait irq
+    * softirq steal (USER_HZ = 100).
+    */
+  private def procStat(): Array[Double] =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/stat"))
+      .linesIterator.next().split("\\s+").slice(1, 9).map(_.toLong / 100.0)
+    catch { case NonFatal(_) => Array.fill(8)(0.0) }
+
+  private def ownCpuS(): Double = {
+    val me = ProcessHandle.current()
+    (Iterator(me) ++ me.descendants().iterator().asScala)
+      .map(_.info().totalCpuDuration().map[Long](_.toNanos).orElse(0L)).sum / 1e9
+  }
+
+  private def load1(): Double =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
+      .split("\\s+")(0).toDouble
+    catch { case NonFatal(_) => 0.0 }
+
+  /** Time `f` and stamp the host over the same window. */
+  private def stamped[T](f: => T): (T, Stamp) = {
+    val (l0, s0, o0, t0) = (load1(), procStat(), ownCpuS(), System.nanoTime())
+    val r = f
+    val (s1, o1) = (procStat(), ownCpuS())
+    val wall = (System.nanoTime() - t0) / 1e9
+    val d = s1.zip(s0).map { case (a, b) => a - b }
+    (r, Stamp(wall, l0, Runtime.getRuntime.availableProcessors(),
+      (d(0) + d(1) + d(2)) / wall, (o1 - o0) / wall, d(7) / wall))
+  }
+
+  private def memTotalMB(): Long =
+    java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/meminfo"))
+      .asScala.find(_.startsWith("MemTotal:"))
+      .map(_.split("\\s+")(1).toLong / 1024)
+      .getOrElse(sys.error("MemTotal missing from /proc/meminfo"))
+
+  // ---- the measured work ----------------------------------------------
+
+  private[graft] def session(cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .appName(s"graft-bench-$cpus")
+      .config("spark.sql.shuffle.partitions", ScaleParts.toString)
+      .config("spark.sql.limit.initialNumPartitions", ScaleParts.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.local.dir", localDir)
+      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .config("spark.rdd.compress", "true")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
+  /** The KB-population job benched for scaling: docs (replicated) ->
+    * full pipeline -> triples count; same input at every level.
     */
   private def kbJob(spark: SparkSession, dir: String, replicate: Int): (Long, Long) = {
     import spark.implicits._
     val base = graft.fixtures.Corpus.inputDocs(spark, dir)
     // the sf corpus is one small parquet file (1-2 input splits): without
-    // an explicit repartition the heavy narrow NER/embedding chain runs on
-    // one or two threads no matter the parallelism level — repartition to
-    // a fixed level-independent count (see scaleParts: the data's
-    // partitioning must not change between ladder levels; at 100 TB the
-    // table has thousands of splits and this is a no-op).
-    val parts = scaleParts
-    // repartition BEFORE the replicate flatMap: the sf parquet is 1-2
-    // splits, and expanding 64x on two threads is a serial bottleneck;
-    // expanded rows stay in their partitions (doc_ids unique, downstream
-    // exchanges hash-shuffle anyway).
-    // NO persist + count of the replicated corpus (r5): since the
-    // one-pass prep (Pipeline.run) consumes `docs` exactly once, the old
-    // docs.persist + docs.count materialized the full replicated corpus
-    // into the block store only for prep to read it straight back — a
-    // whole extra write+read pass plus one job barrier per level. The
-    // repartition exchange's shuffle files already back any recompute;
-    // nDocs is baseCount x replicate (the base count is a tiny parquet
-    // scan).
+    // an explicit repartition the heavy narrow NER/embedding chain runs
+    // on one or two threads at any level. Repartition BEFORE the
+    // replicate flatMap (expanding on two threads is a serial step);
+    // expanded rows stay in their partitions. No persist + count of the
+    // replicated corpus: the one-pass prep consumes `docs` exactly once,
+    // and the repartition's shuffle files back any recompute.
     val docs: org.apache.spark.sql.Dataset[InputDoc] =
-      if (replicate <= 1) base.repartition(parts)
-      else base.repartition(parts).flatMap(d => (0 until replicate).map(r =>
+      if (replicate <= 1) base.repartition(ScaleParts)
+      else base.repartition(ScaleParts).flatMap(d => (0 until replicate).map(r =>
         d.copy(doc_id = s"${d.doc_id}_$r")))
-    val verbose = sys.env.get("SPARK_GRAFT_PHASES").contains("1")
-    def ph[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (verbose) println(f"[phase] $name ${(System.nanoTime() - t0) / 1e9}%.1fs")
-      r
-    }
-    val nDocs = ph("base.count")(base.count()) * math.max(1, replicate)
-    val res = ph("Pipeline.run")(
-      Pipeline.run(spark, docs, graft.kb.Registry.seed(spark).toDF()))
-    val nTriples = ph("triples.count")(res.triples.count())
-    (nDocs, nTriples)
+    val nDocs = base.count() * replicate
+    val res = Pipeline.run(spark, docs, graft.kb.Registry.seed(spark).toDF())
+    (nDocs, res.triples.count())
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // Scaling evidence needs a compute-dominated job: the serial driver
-    // fraction (planning, AQE, eager checkpoint job barriers — measured
-    // level-INDEPENDENT) Amdahl-caps small inputs regardless of plan
-    // quality, so the input is replicated until the parallel fraction
-    // dominates at every ladder level. The default is chosen so the
-    // N-level (slowest) run stays in the ~2 minute band — large enough
-    // for eff >= 0.8 headroom, small enough that the whole default bench
-    // finishes inside the driver timeout (r2's 640k-doc x 2-rep default
-    // timed out and left NO machine-readable evidence).
-    val mode = sys.env.getOrElse("SPARK_GRAFT_SCALE_MODE", "jvms")
-    val heapG = Runtime.getRuntime.maxMemory / (1L << 30)
-    val replicate = sys.env.get("SPARK_GRAFT_REPLICATE").map(_.toInt).getOrElse {
-      // threads mode runs executor + driver in ONE JVM: gate on its heap.
-      // jvms default 176 (880k docs, r5 — was 88): the ~18 s level-
-      // independent per-job serial share caps 440k pairs at ~0.75-0.85
-      // on current code (BENCH.md "Honest scaling accounting"), so the
-      // 440k DEFAULT could no longer demonstrate the >=0.80 gate at its
-      // own scale and had to cite an 880k record (VERDICT r4 item 1).
-      // 720k was tried as a budget-safer middle and REJECTED on
-      // measurement: the ≥720k 4-executor level pays a ~15-20 s host
-      // fresh-page tax (elevated sys time under the 0.22 gate) that a
-      // fast L1 draw cannot carry at 720k — completed 720k defaults
-      // measured 0.66 this_run while the same night's 880k ladders
-      // measured 0.809-0.841. At 880k the timeline is queries ~67 +
-      // L4 (warmup 25 + main ~105) + L1 (warmup 30 + main ~345) ≈
-      // 575 s against the 585 s watchdog: it fits when the host
-      // cooperates, and when it does not the artifact cites the
-      // archived gate pair (BENCH_GATE.json) with this run's partial
-      // evidence — a complete-but-deflated 0.66 pair reads worse than
-      // an honestly clipped ladder. L4 runs FIRST (see the level-order
-      // note), so its warmup always fits and the budget-guard skip
-      // never deflates the pair. If the QUERY pass overruns (storm),
-      // the ladder falls back to 440k before it starts — flagged
-      // `replicate_fallback`.
-      if (mode == "threads" && heapG < 24) 16 else 176
-    }
-    // effective replicate: resolved at ladder start (see fallback above);
-    // everything after the queries reads THIS, not `replicate`
-    @volatile var replicateEff = replicate
-    @volatile var replicateFallback: Option[String] = None
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("set SPARK_GRAFT_SF_DIR to an sf table directory"))
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val shape = shapeFor(Runtime.getRuntime.availableProcessors(), memTotalMB())
+    println(s"[bench] $shape replicate=$Replicate query cpus=$cpus")
 
-    val skipQueries = sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1")
-
-    // ---- progressive result document --------------------------------
-    // Rebuilt and flushed to BENCH_LOCAL.json after every completed
-    // phase: a run killed by a driver timeout still leaves evidence.
-    var queriesJson: Option[String] = None
-    var queriesTotal = 0.0
-    // per-query minimum across passes + per-pass host-health stamps (the
-    // query analog of the ladder's host_cpu/probe fields — see runQueries)
-    val bestQueries = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val queryPassJson = scala.collection.mutable.ArrayBuffer.empty[String]
-    val queryPassDegraded = scala.collection.mutable.ArrayBuffer.empty[Boolean]
-    // NO cross-run seeding (r4, was r3 behavior): minima carried from a
-    // prior artifact are measurements of PRIOR code — after this round's
-    // hot-path rewrites a carried minimum could show a number current
-    // code cannot reproduce, which is worse than a noisy fresh table.
-    // The kept table is min-of-passes WITHIN this run only (queries run
-    // first, deadline-capped, so a pass essentially always lands; a
-    // storm-degraded pass is stamped degraded and the second-chance
-    // block re-measures when the host recovers).
-
-    val levelResults = scala.collection.mutable.LinkedHashMap.empty[Int, (Double, Long, Long)]
-    // (level, value) per ATTEMPT — retries append too, so entries carry
-    // their level explicitly instead of relying on positional alignment
-    val loadSeen = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    val faultSeen = scala.collection.mutable.ArrayBuffer.empty[(Int, Double)]
-    // host-wide CPU split (core-seconds) over each KEPT level run, from
-    // /proc/stat: the memory-overcommit storm (probeFaultMBps scaladoc)
-    // shows up as sys >> user — recording it makes a poisoned level
-    // self-evident in the artifact instead of looking like a plan defect.
-    val levelHostCpu = scala.collection.mutable.Map.empty[Int, (Double, Double, Double, Double)]
-    // wall time of EVERY completed attempt per level (kept or not): on a
-    // quiet host repeated runs of the same job land within a few percent,
-    // so a wide spread across a level's attempts is direct evidence the
-    // level raced episodic co-tenant load even when the kept (fastest)
-    // attempt's own CPU split reads healthy
-    val levelWalls = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.ArrayBuffer[Double]]
-    // kept attempt started with loadavg still above the quiet gate: the
-    // level ran against co-tenant CPU contention (a failure mode the
-    // sys/steal split misses when the neighbors burn plain user time)
-    val levelContended = scala.collection.mutable.Map.empty[Int, Boolean]
-    // observed warmup wall per level, for pricing a retry of that level
-    // (fresh executor JVMs pay JIT + heap pre-touch on every attempt)
-    val levelWarmups = scala.collection.mutable.Map.empty[Int, Double]
-    // set where loadBaseline is captured (ladder start): a 1-min loadavg
-    // already above the quiet gate BEFORE any level has run is genuine
-    // co-tenant load — the baseline+0.5 gate adaptation exists only to
-    // skip waiting out our OWN decaying load between levels, and on a
-    // contended start it silently waves every level through (2026-08-19
-    // run 5: baseline ~4.5, all levels "quiet" per the lifted gate, pair
-    // eff 0.69 vs the 0.96 quiet-window truth — and NOT marked degraded)
-    var baselineContended = false
-    @volatile var abortedBy: Option[String] = None
-    // Set while an OPTIONAL phase (a pair-improving retry) is running.
-    // If the wall-budget watchdog fires inside one, the run is NOT
-    // aborted — every piece of required evidence (the primary pair and
-    // the query table) already landed; the watchdog just clips the
-    // retry and emits a COMPLETE artifact with the clip recorded.
-    @volatile var optionalPhase: Option[String] = None
-    @volatile var clippedOptional: Option[String] = None
-    // set when the warmup circuit-breaker trips (degraded host): the
-    // remaining ladder levels are skipped so the queries still land
-    @volatile var ladderAborted: Option[String] = None
-    // budget-aware warmup skip (r4): runLevel arms it for the TOP level
-    // when the remaining wall budget cannot fit warmup + storm-margin
-    // main; timedLevel consumes it. Armed WITH the target level id
-    // (ADVICE r4): a flag armed for an attempt that dies before reaching
-    // timedLevel (e.g. cluster-start failure) must not skip the warmup
-    // of a LATER bottom-level run — that deflates the bottom level,
-    // the pair-flattering direction. -1 = unarmed.
-    val skipWarmupFor = new java.util.concurrent.atomic.AtomicInteger(-1)
-    // read by the watchdog thread via buildJson while the main thread
-    // writes — concurrent set, same reasoning as bestWalls (ADVICE r4)
-    val warmupSkipped: scala.collection.mutable.Set[Int] = {
-      import scala.jdk.CollectionConverters._
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Int]().asScala
-    }
-    val execCores = sys.env.getOrElse("SPARK_GRAFT_EXEC_CORES", "2").toInt
-    // 6 GiB/worker -> 5 GiB executor heap. COUNTER-INTUITIVE, measured
-    // both ways at 160-200k docs: 8 GiB workers ran the same job 2.2x
-    // SLOWER (135s vs 52s at 160k) with >100 core-s of GC in single
-    // stages, on a host with 118 GiB free (not memory pressure). A
-    // larger heap means a larger unified memory pool, so hash
-    // aggregates grow giant in-heap maps instead of spilling — and
-    // spill here goes to tmpfs (RAM-speed), far cheaper than the
-    // old-gen churn of carrying the maps. Keep executors lean and let
-    // them spill. (The round-3 4-scan triple emission that once GC-
-    // thrashed 5 GiB heaps at 240k docs was fixed separately — fused
-    // single-scan emission.)
-    val execMemG = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_G", "6").toInt
-    val lvlName: Int => String =
-      if (mode == "threads") l => s"local$l" else l => s"executors$l"
-
-    // Cross-run wall sanity (BENCH_BESTS.json): fastest completed wall
-    // ever recorded per exact level config (mode, level, docs, cores,
-    // heap). Under the documented one-sided interference model (BENCH.md
-    // pathology section) a kept level running far over its best-known
-    // same-config wall is host-tail evidence the CPU-split ratio cannot
-    // see: 2026-08-20 runs 17-18 kept L4 at 54 s (ratio 0.217-0.248,
-    // under every split gate) vs the same code's 37.6 s best and
-    // promoted eff 0.47-0.51 pairs to this_run headlines. SYMMETRIC by
-    // design: a storm-slowed small level would inflate the ratio
-    // FLATTERINGLY, and it demotes the same way — the detector fires on
-    // any kept level >1.3x its best, whichever direction that biases
-    // the pair. The measured ratio is always still recorded as
-    // scaling_efficiency_this_run.
-    val bestsPath = java.nio.file.Paths.get("BENCH_BESTS.json")
-    // concurrent: read from the watchdog thread (buildJson via emitFinal)
-    // while the main thread writes via noteWall/flush — a plain mutable
-    // Map raced there (ADVICE r3)
-    val bestWalls = scala.collection.concurrent.TrieMap.empty[String, Double]
-    try {
-      val txt = java.nio.file.Files.readString(bestsPath)
-      """"([^"]+)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
-        .foreach(m => bestWalls(m.group(1)) = m.group(2).toDouble)
-    } catch { case _: Throwable => () }
-    // pre-run snapshot: exoneration and best-pair comparisons must never
-    // reference a record this same run just set
-    val bestWallsAtStart = bestWalls.toMap
-    def bestKey(l: Int, docs: Long): String =
-      if (mode == "threads") s"threads_L${l}_d$docs"
-      else s"jvms_L${l}_d${docs}_${execCores}c${execMemG}g"
-    def persistBests(): Unit =
-      try java.nio.file.Files.writeString(bestsPath,
-        bestWalls.toSeq.sortBy(_._1).map { case (k2, v2) =>
-          f""""$k2":$v2%.4f""" }.mkString("{", ",", "}") + "\n")
-      catch { case _: Throwable => () }
-    def noteBest(k: String, v: Double, bigger: Boolean): Boolean =
-      bestWalls.synchronized {
-        val improved = bestWalls.get(k).forall(o => if (bigger) v > o else v < o)
-        if (improved) { bestWalls(k) = v; persistBests() }
-        improved
-      }
-    def noteWall(l: Int, sec: Double, docs: Long): Unit =
-      noteBest(bestKey(l, docs), sec, bigger = false)
-    // best HEALTHY same-run pair ever measured for this config (max
-    // semantics): the pair ratio mixes two time-separated host draws,
-    // so single-run ratios bounce (0.877 and 0.764 within an hour on
-    // 2026-08-20, both with record-class levels) — the cross-run best
-    // healthy draw is the tightest in-run lower bound on the plan's
-    // scaling and is embedded in every artifact
-    def pairKey(a: Int, b: Int, docs: Long): String =
-      s"bestpair_eff_${bestKey(a, docs)}_to_$b"
-
-    // ---- gate-pair archival (VERDICT r4 item 1b) ---------------------
-    // Whenever this run sets a bestpair record, every subsequent flush
-    // MIRRORS the full detector-stamped artifact to BENCH_GATE.json —
-    // the round-4 gate-carrying pair (0.8538) survived only as a scalar
-    // in BENCH_BESTS because its raw artifact was overwritten by a later
-    // draw; a gate-carrying measurement must stay auditable. If a later
-    // flush of the SAME run turns degraded (a detector flipped after the
-    // record was persisted — ADVICE r4), the record is retracted to its
-    // pre-run value and the prior gate artifact restored: only pairs
-    // still healthy at end of run survive as records.
-    val gatePath = java.nio.file.Paths.get("BENCH_GATE.json")
-    val gatePrevBytes: Option[String] =
-      try Some(java.nio.file.Files.readString(gatePath))
-      catch { case _: Throwable => None }
-    @volatile var gatePairKey: Option[String] = None
-    def retractPairRecord(k: String): Unit = {
-      bestWalls.synchronized {
-        bestWallsAtStart.get(k) match {
-          case Some(prev) => bestWalls(k) = prev
-          case None => bestWalls.remove(k)
-        }
-        persistBests()
-      }
-      try gatePrevBytes match {
-        case Some(b) => java.nio.file.Files.writeString(gatePath, b)
-        case None => java.nio.file.Files.deleteIfExists(gatePath); ()
-      } catch { case _: Throwable => () }
-      gatePairKey = None
-      println(s"[bench] bestpair record $k RETRACTED: the run turned " +
-        "degraded after the record was flushed")
-    }
-    def mirrorGate(json: String): Unit =
-      if (gatePairKey.isDefined)
-        try java.nio.file.Files.writeString(gatePath, json + "\n")
-        catch { case _: Throwable => () }
-
-    def buildJson(done: Boolean): String = {
-      val qs = queriesJson.getOrElse("{}")
-      // sorted: the run ORDER puts the big level first (largest fresh-
-      // page demand meets the freshest host), but pairs/efficiency are
-      // defined small -> large
-      val levels = levelResults.keys.toSeq.sorted
-      def tput(l: Int) = { val (sec, docs, _) = levelResults(l); docs / sec }
-      def cpuJson(h: (Double, Double, Double, Double)): String =
-        f"""{"user":${h._1}%.0f,"sys":${h._2}%.0f,"idle":${h._3}%.0f,"steal":${h._4}%.0f}"""
-      val perLevel = levels.map { l =>
-        val host = levelHostCpu.get(l).map(h => s""","host_cpu_cores_s":${cpuJson(h)}""").getOrElse("")
-        s""""${lvlName(l)}":{"sec":${levelResults(l)._1},"docs_per_sec":${tput(l)}$host}"""
-      }.mkString("{", ",", "}")
-      // one-glance health verdict: a level that burned kernel+steal time
-      // beyond 25% of its user CPU ran during a provisioning/co-tenant
-      // storm (BENCH.md pathology section) — its wall time measures the
-      // host, not the plan. Calibration from measured levels of the SAME
-      // job: healthy 0.19-0.21 (user 424 / sys 55 / steal 34), storm
-      // 1.39 (user 922 / sys 702 / steal 584); levels at 0.37 and 0.286
-      // each slipped under earlier thresholds (0.5, then 0.3) while
-      // running their 4N wall 1.4-2.1x over the Amdahl prediction fitted
-      // on the quiet-window pair — i.e. still poisoned. Second signal:
-      // a level whose completed attempts spread >25% in wall time raced
-      // episodic load (quiet-host repeats land within a few percent;
-      // the 2026-08-19 run that shipped eff 0.62 as "this_run" spread
-      // 117 -> 159 s across four L4 attempts). Threshold history:
-      // 0.5 -> 0.3 -> 0.25 -> 0.22. Healthy kept levels on this host
-      // measure 0.15-0.21 across every calibrated run; a 0.248-ratio L4
-      // slipped under the 0.25 gate on 2026-08-20 while running its
-      // wall 1.47x over the same code's best (55.1 s vs 37.6 s) and
-      // promoted a 0.47 pair to a this_run headline. 0.22-0.25 is the
-      // provisioning tail's gray zone — demote it like a storm.
-      val wallSuspect = levels.filter { l =>
-        // a warmup-skipped level's main carries JIT/classloading the
-        // best-known wall excludes: allow it that slack before calling
-        // the wall suspect (the skip itself is already pair-deflating)
-        val slack =
-          if (warmupSkipped(l))
-            levelWarmups.values.filter(_ > 0).maxOption.getOrElse(35.0)
-          else 0.0
-        bestWalls.get(bestKey(l, levelResults(l)._2))
-          .exists(b => levelResults(l)._1 > 1.3 * b + slack)
-      }
-      // Exoneration (see VerifiedWallPrefix scaladoc): interference
-      // flags on a level exist to catch walls INFLATED by the host; a
-      // kept wall at-or-under 1.05x the anchor for its exact config was
-      // not materially inflated, so its flags are false positives by
-      // construction (storms are measured one-sided: they only slow
-      // levels, never speed them). The anchor TIGHTENS automatically as
-      // records fall — min(verified quiet wall, pre-run best-known
-      // wall) — because a fixed anchor over-exonerates once the code
-      // outruns it. Both anchor sources come from BENCH_BESTS.json; a
-      // config with NEITHER record gets no exoneration (anchor-less
-      // exoneration is the over-exoneration case — ADVICE r3).
-      // A VERIFIED record is required (a best-known wall alone may
-      // itself be interference-tinged — e.g. the 160k config — so it
-      // can only TIGHTEN an anchor, never create one).
-      def exonerated(l: Int): Boolean = {
-        val k = bestKey(l, levelResults(l)._2)
-        bestWallsAtStart.get(VerifiedWallPrefix + k)
-          .map(v => math.min(v, bestWallsAtStart.getOrElse(k, v)))
-          .exists(anchor => levelResults(l)._1 <= 1.05 * anchor)
-      }
-      val degraded = levels.exists(l => !exonerated(l) &&
-        levelHostCpu.get(l).exists(h => h._2 + h._4 > 0.22 * h._1)) ||
-        levels.exists(l => !exonerated(l) &&
-          levelContended.getOrElse(l, false)) ||
-        levels.exists(l => !exonerated(l) && levelWalls.get(l)
-          .exists(w => w.size > 1 && w.max > 1.25 * w.min)) ||
-        (baselineContended &&
-          !(levels.nonEmpty && levels.forall(exonerated))) ||
-        wallSuspect.nonEmpty
-      // drop(1), not .tail: Nil.tail THROWS, and this runs on the
-      // watchdog thread before any level has completed — the round-3
-      // driver run lost its whole artifact to exactly that (the watchdog
-      // died mid-emit, so neither the partial JSON nor the cluster
-      // teardown nor the exit-0 happened, and the driver saw rc=124)
-      val pairs = levels.zip(levels.drop(1)).filter { case (a, b) => b == 4 * a }
-      def eff(a: Int, b: Int) = tput(b) / ((b.toDouble / a) * tput(a))
-      val pairJson = pairs.map { case (a, b) => s""""eff_${a}_$b":${eff(a, b)}""" }
-        .mkString("{", ",", "}")
-      val primary = pairs.headOption
-      // a storm-bound ladder measures the host, not the plan: keep this
-      // run's ratio as a diagnostic but report the recorded quiet-window
-      // pair as the headline number, with provenance spelled out
-      // persist + embed the best HEALTHY same-run pair across runs: a
-      // single run's ratio mixes two time-separated host draws, so the
-      // cross-run best healthy draw is the tightest in-run lower bound
-      // on the plan's scaling (0.877 vs 0.764 within an hour on
-      // 2026-08-20, both runs with record-class levels)
-      val bestPairJson = {
-        val thisCfg = primary.map { case (a, b) =>
-          val k = pairKey(a, b, levelResults(a)._2)
-          // record on EVERY healthy flush, not only the final emit: a
-          // run killed or clipped mid-retry otherwise loses a genuinely
-          // measured healthy pair (the 2026-08-20 880k run measured
-          // 0.8386 and died in its 4th optional retry with the record
-          // unpersisted). Each flush state is a real completed-pair
-          // measurement; max-keeping over flushes equals max over runs.
-          // A record set by THIS run arms the gate-artifact mirror; a
-          // degraded turn retracts it (see retractPairRecord).
-          if (!degraded) {
-            if (noteBest(k, eff(a, b), bigger = true)) gatePairKey = Some(k)
-          } else if (gatePairKey.contains(k)) retractPairRecord(k)
-          math.max(bestWallsAtStart.getOrElse(k, 0.0),
-            if (degraded) 0.0 else eff(a, b))
-        }.filter(_ > 0).map(e =>
-          f""","best_healthy_in_run_eff":$e%.4f""").getOrElse("")
-        // the north-rule evidence is config-agnostic (same job, larger
-        // replicate amortizes fixed per-level costs — the 440k ladder is
-        // the SAME pipeline measured at the scale where short-wall
-        // overheads stop dominating), so also surface the best healthy
-        // same-run pair across EVERY recorded config, labeled with the
-        // config that produced it
-        val any = bestWalls.toSeq.filter(_._1.startsWith("bestpair_eff_"))
-          .sortBy(-_._2).headOption
-        val anyJson = any.map { case (k, v) =>
-          f""","best_healthy_in_run_any":{"eff":$v%.4f,""" +
-            s""""config":"${k.stripPrefix("bestpair_eff_")}"}"""
-        }.getOrElse("")
-        thisCfg + anyJson
-      }
-      // Fallback headline for degraded/incomplete ladders: the best
-      // recorded HEALTHY in-run pair of CURRENT code (BENCH_BESTS
-      // bestpair records — each was measured in one run with every
-      // detector green), labeled with the config that produced it.
-      // NEVER the 2026-08-17 0.96 prior-quiet pair: that was stale-code
-      // evidence (see QuietHistory) and rides along as history only.
-      val recordedPair: Option[(String, Double)] = bestWallsAtStart.toSeq
-        .filter(_._1.startsWith("bestpair_eff_")).sortBy(-_._2).headOption
-        .map { case (k, v) => (k.stripPrefix("bestpair_eff_"), v) }
-      def recordedHeadline(why: String): String = recordedPair.map {
-        case (cfg, v) =>
-          f""","scaling_efficiency":$v%.4f,""" +
-            s""""scaling_provenance":"best recorded healthy in-run pair """ +
-            s"""(BENCH_BESTS $cfg, current code) — $why""""
-      }.getOrElse(
-        s""","scaling_provenance":"no healthy pair recorded — $why"""")
-      val effJson = primary.map { case (a, b) =>
-        if (degraded)
-          s""","scaling_efficiency_this_run":${eff(a, b)}""" +
-            recordedHeadline("a level of this run's ladder ran against " +
-              "host interference (sys/steal storm, a contended load gate, " +
-              "or a kept wall >1.3x the best-known same-config wall; " +
-              "host_cpu_cores_s, loadavg_at_levels and best_known_wall_s " +
-              "above; BENCH.md host pathology section)")
-        else {
-          // healthy ladder: the headline is the BEST healthy in-run
-          // pair of current code — this run's own pair, or the recorded
-          // round best when that is higher (VERDICT r3 item 1b: "the
-          // best healthy in-run pair of THIS run, or
-          // best_healthy_in_run_eff across the round"). Single-run
-          // ratios mix two time-separated host draws and bounce +-0.06
-          // even with every detector green; both numbers are always
-          // present and provenance says which one leads.
-          val thisEff = eff(a, b)
-          // cross-config like the degraded path: the recorded pairs are
-          // the SAME job on current code — a larger replicate only
-          // amortizes the fixed per-level costs this single box cannot
-          // shrink (BENCH.md "Honest scaling accounting")
-          recordedPair.filter(_._2 > thisEff).map { case (cfg, r) =>
-            s""","scaling_efficiency_this_run":$thisEff,""" +
-              f""""scaling_efficiency":$r%.4f,""" +
-              s""""scaling_provenance":"best healthy in-run pair of the """ +
-              s"""round (BENCH_BESTS $cfg, current code); this run's """ +
-              s"""own healthy pair is scaling_efficiency_this_run""""
-          }.getOrElse(
-            s""","scaling_efficiency":$thisEff,""" +
-              """"scaling_provenance":"this_run"""")
-        }
-      }.getOrElse(
-        // SOME level completed but no (N, 4N) pair did — wall-budget or
-        // mid-ladder abort. Without this branch the artifact carried no
-        // scaling number at all (2026-08-19 run: executors4 only,
-        // scaling_pairs:{}), which reads as missing evidence.
-        recordedHeadline("this run completed fewer than two ladder " +
-          "levels (wall budget or abort; see aborted/ladder_aborted " +
-          "markers)"))
-      val pairDesc = primary.map { case (a, b) =>
-        if (mode == "threads") s"local[$a] -> local[$b] threads"
-        else s"$a -> $b standalone executor JVMs x $execCores cores, " +
-          s"${execMemG}g each (N vs 4N executors per the north rule; " +
-          "separate heaps per executor as on a real cluster)"
-      }.getOrElse("")
-      val triplesAll = levels.map(levelResults(_)._3).distinct
-      val pipeline =
-        if (levels.isEmpty)
-          // no ladder level survived this run (degraded-host breaker):
-          // fall back to the best recorded healthy in-run pair, labeled
-          // prior_run — the SAME rule as the degraded-ladder path, so
-          // a new record updates every branch at once.
-          s"""{"note":"ladder skipped on degraded host; scaling evidence """ +
-            s"""from the best recorded healthy in-run pair","prior_run":true,""" +
-            s""""mode":"$mode"${recordedHeadline("no ladder level completed " +
-              "this run (degraded-host breaker)")},$QuietHistory}"""
-        else s"""{"docs":${levelResults(levels.head)._2},"triples":${triplesAll.head},""" +
-          s""""triples_check_equal":${triplesAll.size == 1},"mode":"$mode",""" +
-          s""""replicate":$replicateEff,"levels":$perLevel,""" +
-          replicateFallback.map(r =>
-            s""""replicate_fallback":"$r",""").getOrElse("") +
-          s""""scaling_pairs":$pairJson,""" +
-          s""""loadavg_at_levels":[${loadSeen.map { case (l, v) =>
-            s"""{"level":$l,"load":$v}""" }.mkString(",")}],""" +
-          s""""attempt_walls_s":{${levelWalls.toSeq.sortBy(_._1).map {
-            case (l, ws) => s""""$l":[${ws.map(w => f"$w%.1f").mkString(",")}]"""
-          }.mkString(",")}},""" +
-          // fresh-page provision rate right before each level (see
-          // probeFaultMBps scaladoc): healthy host ~1000+, degraded
-          // ~10-30. A pair taken under a degraded probe measures the
-          // hypervisor's memory reclaim, not the plan.
-          s""""host_fault_mbps_at_levels":[${faultSeen.map { case (l, v) =>
-            f"""{"level":$l,"mbps":$v%.0f}""" }.mkString(",")}],""" +
-          s""""best_known_wall_s":{${levels.flatMap(l =>
-            bestWalls.get(bestKey(l, levelResults(l)._2))
-              .map(b => f""""$l":$b%.1f""")).mkString(",")}},""" +
-          s""""wall_suspect_levels":[${wallSuspect.mkString(",")}],""" +
-          s""""warmup_skipped_levels":[${warmupSkipped.toSeq.sorted.mkString(",")}],""" +
-          s""""exonerated_levels":[${levels.filter(exonerated).mkString(",")}],""" +
-          s""""host_degraded":$degraded,"primary_pair":"$pairDesc"""" +
-          s"""$bestPairJson$effJson,$QuietHistory}"""
-      val aborted = abortedBy.map(a => s""","aborted":"$a"""").getOrElse("") +
-        ladderAborted.map(a => s""","ladder_aborted":"$a"""").getOrElse("") +
-        clippedOptional.map(c => s""","clipped_optional":"$c"""").getOrElse("")
-      // queries_degraded is a one-glance verdict on the KEPT table: true
-      // only when EVERY pass ran storm-bound (a single healthy pass makes
-      // the per-query minimums trustworthy). queries_provenance labels a
-      // table values are always THIS run's measurements (no cross-run
-      // seeding since r4 — see the bestQueries note).
-      val qProv = if (queryPassJson.nonEmpty) "this_run" else "none"
-      val qHealth = s""","queries_passes":${queryPassJson.mkString("[", ",", "]")},""" +
-        s""""queries_provenance":"$qProv",""" +
-        s""""queries_degraded":${queryPassDegraded.nonEmpty && queryPassDegraded.forall(identity)}"""
-      s"""{"metric":"total","value":$queriesTotal,"unit":"sec","queries":$qs$qHealth,""" +
-        s""""sf":"$sfDir","complete":$done$aborted,"kb_pipeline":$pipeline}"""
-    }
+    // read by the watchdog thread: every update swaps an immutable Run
+    @volatile var run = Run(sfDir, shape, Nil, Map.empty, Nil, Map.empty,
+      finished = false, aborted = None)
     def flush(): Unit =
-      try {
-        val json = buildJson(false)
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(artifactPath), json + "\n")
-        mirrorGate(json)
-      } catch { case _: Throwable => () }
+      try java.nio.file.Files.writeString(
+        java.nio.file.Paths.get("BENCH_LOCAL.json"), buildJson(run) + "\n")
+      catch { case NonFatal(_) => () }
+    val emitted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    def emit(): Unit = if (emitted.compareAndSet(false, true)) {
+      val json = buildJson(run)
+      System.out.println(json)
+      System.out.flush()
+      flush()
+    }
 
-    // ---- wall-budget watchdog ----------------------------------------
-    // Rounds 2 and 3 both lost bench evidence to a driver timeout
-    // (rc=124, parsed:null). The watchdog makes that impossible: at
-    // T+budget it emits whatever completed so far (marked
-    // "aborted":"wall_budget"), tears down any live ladder cluster (an
-    // orphaned 4x6g cluster would poison the NEXT run on this memory-
-    // overcommitted host), and exits 0 — a degraded host now costs
-    // fidelity, never the evidence itself.
-    // 585 (r5, was 570): the 880k default's healthy timeline is queries
-    // ~50 s + L1 warmup ~35 s + L1 ~355 s + L4 ~110 s (warmup skipped
-    // by the budget guard) + starts/probes ~15 s ≈ 565 s — a 570 s
-    // watchdog clipped the required L4 main on ordinary noise. Measured
-    // sbt overhead is ~7 s warm (570-budget runs end at 577 s total,
-    // rc 0), so 585 + overhead ≈ 592 s still lands inside the ~600 s
-    // driver window.
-    val wallBudgetS = sys.env.getOrElse("SPARK_GRAFT_WALL_BUDGET_S", "585").toInt
-    // once-only final emit: without it a watchdog firing just as the run
-    // completes would print a SECOND JSON line and overwrite the
-    // completed BENCH_LOCAL.json with an "aborted" one
-    val emittedFinal = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def emitFinal(json: => String): Unit =
-      if (emittedFinal.compareAndSet(false, true)) {
-        val j = json
-        emit(j)
-        mirrorGate(j)
-      }
     val watchdog = new Thread(() => {
-      val ok = try { Thread.sleep(wallBudgetS * 1000L); true }
-               catch { case _: InterruptedException => false }
-      if (ok) {
-        // firing inside an OPTIONAL phase is not an abort: the pair and
-        // query table are already flushed; record the clip and emit the
-        // artifact as complete (the in-flight retry dies with the halt)
-        val clipped = optionalPhase
-        if (clipped.isDefined) clippedOptional = clipped
-        else abortedBy = Some("wall_budget")
-        // belt-and-braces: NOTHING on this path may prevent the teardown
-        // + exit-0 — an exception here orphans a multi-GiB cluster AND
-        // turns the abort into a driver-side rc=124 with no artifact
-        try emitFinal(buildJson(clipped.isDefined))
-        catch { case t: Throwable =>
-          emitFinal(s"""{"metric":"total","value":0,"unit":"sec",""" +
-            s""""complete":false,"aborted":"wall_budget_emit_failed:${t.getClass.getSimpleName}"}""")
-        }
-        try BenchCluster.killAll() catch { case _: Throwable => () }
+      try {
+        Thread.sleep(WallBudgetS * 1000L)
+        run = run.copy(aborted = Some("wall_budget"))
+        emit()
+        BenchCluster.killAll()
         Runtime.getRuntime.halt(0)
-      }
+      } catch { case _: InterruptedException => () }
     }, "graft-bench-watchdog")
     watchdog.setDaemon(true)
     watchdog.start()
 
-    // ---- headline queries at the requested parallelism ----------------
-    // Runs FIRST (r4, VERDICT r3 item 1): the round artifact must carry
-    // a fresh query table measured by ITS OWN run — r3's artifact
-    // shipped queries_passes:[] with a carried-forward table because the
-    // ladder consumed the whole budget. The pass is deadline-capped
-    // (SPARK_GRAFT_QUERIES_CAP_S) so a storm-slowed pass (measured
-    // 6-12x on 2026-08-18) cannot starve the ladder: remaining queries
-    // are skipped, the clip is recorded in the pass stamp, and the
-    // second-chance block can re-run them later.
-    //
-    // Health-stamped like the ladder levels: the 2026-08-18 storm ran the
-    // same query set 6-12x slower (t6 8.5 -> 101 s) with NOTHING in the
-    // artifact marking the table as storm-bound — a reader comparing it
-    // against an earlier round would diagnose a 10x regression that never
-    // happened. Each pass records the pre-pass fault probe + the
-    // /proc/stat CPU split across the pass, and the kept table is the
-    // per-query MINIMUM across passes (min-of-N under additive noise,
-    // same estimator the ladder retries use).
-    def runQueries(): Unit = if (!skipQueries) {
-      // the ladder auto-sets graft.ckpt.level=disk for multi-executor
-      // runs; the query table is a single local[k] JVM and must keep the
-      // MEMORY_AND_DISK_SER default or its timings stop being
-      // like-for-like with earlier rounds' query baselines
-      val ladderCkpt = sys.props.remove("graft.ckpt.level")
-      val fault = probeFaultMBps()
-      // Contention stamp (r5, VERDICT r4 "what's wrong" 1): the r4
-      // round artifact shipped kg_triples 1.7x its quiet wall with no
-      // flag, because the pass-level degraded verdict only looked at
-      // sys+steal — co-tenant USER-time load (e.g. a just-finished
-      // ladder still burning) is invisible to that split. Same
-      // two-signal rule as the ladder levels: contended only when
-      // loadavg exceeds the quiet gate AND the box is instantaneously
-      // busy (loadavg alone carries our own phantom EWMA tail).
-      // quietLoad's env knob is re-read here (the val lives later in
-      // main; a block-local forward reference would not compile).
-      val passGate = sys.env.getOrElse("SPARK_GRAFT_QUIET_LOAD", "2.5").toDouble
-      val passLoad =
-        try java.nio.file.Files.readString(
-          java.nio.file.Paths.get("/proc/loadavg")).split("\\s+")(0).toDouble
-        catch { case _: Throwable => 0.0 }
-      val passBusy = busyCores(1500)
-      val contended = passLoad > passGate && passBusy > 3.0
-      val c0 = hostCpu()
-      val t0 = System.nanoTime()
-      // pass deadline: a healthy pass is ~55 s; past the cap the host is
-      // storm-bound and finishing would starve the ladder of wall budget
-      val capS = sys.env.getOrElse("SPARK_GRAFT_QUERIES_CAP_S", "240").toInt
-      val passDeadline = t0 + capS * 1000L * 1000 * 1000
-      var ran = 0
-      val s1 = session(cpus)
-      // warm-up: parquet footer reads + codegen
-      SparkEntry.queries("q1_agg")(s1, sfDir).count()
-      // flush after EVERY query: a wall-budget abort mid-loop keeps the
-      // timings already measured (the 2026-08-17 degraded-window run lost
-      // its whole query table to an abort on the later queries)
-      headline.foreach { name =>
-        if (System.nanoTime() < passDeadline) {
-          ran += 1
-          val q0 = System.nanoTime()
-          // a FAILED query must never enter the minimum: elapsed-to-failure
-          // is not a timing, and min-of-passes would keep it forever (and
-          // seed it into every later artifact)
-          val ok = try { SparkEntry.queries(name)(s1, sfDir).count(); true }
-          catch { case _: Throwable => false }
-          val sec = (System.nanoTime() - q0) / 1e9
-          if (ok && bestQueries.get(name).forall(_ > sec)) bestQueries(name) = sec
-          queriesJson = Some(bestQueries.map { case (k, v) => "\"" + k + "\":" + v }
-            .mkString("{", ",", "}"))
-          queriesTotal = bestQueries.values.sum
-          flush()
-        }
-      }
-      s1.stop()
-      val d = hostCpu().zip(c0).map { case (a, b) => (a - b) / 100.0 }
-      val passSec = (System.nanoTime() - t0) / 1e9
-      queryPassDegraded += (d(2) + d(7) > 0.5 * d(0) || ran < headline.size ||
-        contended)
-      queryPassJson += f"""{"sec":$passSec%.1f,"host_fault_mbps":$fault%.0f,""" +
-        f""""host_cpu_cores_s":{"user":${d(0)}%.0f,"sys":${d(2)}%.0f,""" +
-        f""""idle":${d(3)}%.0f,"steal":${d(7)}%.0f},""" +
-        f""""load_at_start":$passLoad%.2f,"busy_cores_at_start":$passBusy%.1f,""" +
-        s""""contended":$contended,""" +
-        s""""ran":$ran,"of":${headline.size},""" +
-        s""""degraded":${queryPassDegraded.last}}"""
-      println(f"[bench] queries pass ${queryPassJson.length} $passSec%.1fs " +
-        f"ran=$ran/${headline.size} fault=$fault%.0f user=${d(0)}%.0f " +
-        f"sys=${d(2)}%.0f steal=${d(7)}%.0f load=$passLoad%.1f " +
-        f"busy=$passBusy%.1f contended=$contended")
-      flush()
-      // restore: retries may still run ladder levels after the queries
-      ladderCkpt.foreach(v => sys.props("graft.ckpt.level") = v)
-    }
-
-    // ---- scaling evidence: same KB job at N vs 4N -----------------------
-    // Two modes. "jvms" (default): N vs 4N standalone EXECUTOR JVMs on
-    // loopback (BenchCluster) — the faithful reading of the rule; each
-    // level's executors have identical cores+heap, so only genuine
-    // scale-out effects differ between levels. "threads": the older
-    // local[k] thread ladder (kept for comparison; conflates scale-out
-    // with single-JVM GC + memory-bus artifacts).
-    //
-    // Executors are the unit being scaled; keep their storage pool out of
-    // the picture entirely (checkpoint + input blocks on tmpfs disk) so
-    // a small-executor-count level is not starved by eviction storms.
-    if (mode != "threads" && !sys.props.contains("graft.ckpt.level") &&
-        !sys.env.contains("SPARK_GRAFT_CKPT_LEVEL"))
-      sys.props("graft.ckpt.level") = "disk"
-    def load1: Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-      catch { case _: Throwable => 0.0 }
-    // wall-clock accounting: each ladder step prints its own duration so
-    // a killed/slow run is diagnosable from the log alone (the r3 default
-    // run that outlived the driver timeout was unattributable without it)
-    def step[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[bench] $tag ${(System.nanoTime() - t0) / 1e9}%.1fs load=$load1%.1f")
-      r
-    }
-    // Degraded-host circuit breaker. The warmup is a FIXED tiny job
-    // (sf0.001, ~60 docs; healthy wall 10-20 s incl. codegen): when it
-    // exceeds this limit the host is in a provisioning/co-tenant storm
-    // (BENCH.md pathology; measured 10-50x task slowdowns with a
-    // borderline 652 MB/s probe), every subsequent ladder level would
-    // crawl the same way, and finishing the ladder would eat the whole
-    // wall budget and leave an EMPTY artifact. Abort the ladder instead
-    // and spend the remaining budget on the per-query-flushed headline
-    // table — partial evidence beats none (the r2/r3 driver lesson).
-    val warmupLimitS =
-      sys.env.getOrElse("SPARK_GRAFT_WARMUP_LIMIT_S", "90").toInt
-    final class HostTooSlow(val sec: Double) extends RuntimeException
-    // healthy main-level walls at 440k are ~40-60 s (L4) / ~160-180 s
-    // (L1), at the 720k default ~86 s / ~282 s, at 880k ~100 s /
-    // ~345 s; a level past this limit is storm-bound and finishing it
-    // would starve the rest of the run. Scaled with the EFFECTIVE
-    // replicate (larger ladders' healthy L1 walls exceed the old flat
-    // 330 s limit, which would have broken a healthy default level).
-    def mainLimitS: Int =
-      sys.env.get("SPARK_GRAFT_MAIN_LIMIT_S").map(_.toInt)
-        .getOrElse(if (replicateEff >= 176) 430
-                   else if (replicateEff >= 144) 380 else 330)
-    // RETRY attempts get tighter breakers: min-of-N keeps only attempts
-    // that beat the current minimum, so an attempt running past ~1.2x
-    // the kept wall cannot improve the pair — cut it off and return the
-    // wall budget instead of burning up to mainLimitS on a storm.
-    @volatile var retryWarmupCapS: Option[Int] = None
-    @volatile var retryMainCapS: Option[Int] = None
-    /** Run one ladder job with a hard deadline: a timer thread cancels
-      * all Spark jobs at the limit and the abort surfaces as
-      * [[HostTooSlow]]. Measuring after the fact is NOT enough — in the
-      * storm this guards against, the 60-doc warmup itself ran >10 min
-      * (10-50x task slowdown), so a post-hoc check never gets to run.
-      */
-    def guarded[T](s: SparkSession, tag: String, limitS: Int)(f: => T): T = {
-      val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val w0 = System.nanoTime()
-      val timer = new Thread(() => {
-        val interrupted =
-          try { Thread.sleep(limitS * 1000L); false }
-          catch { case _: InterruptedException => true }
-        if (!interrupted) {
-          cancelled.set(true)
-          // cancel REPEATEDLY, not once: a one-shot cancel that fires
-          // while the driver is between jobs (codegen compilation,
-          // planning — exactly where a storm-bound driver spends long
-          // gaps) is a no-op, and the next submitted job runs normally.
-          // Measured 2026-08-18: the 90 s breaker missed and the warmup
-          // ran 522 s, eating the whole wall budget and leaving an
-          // artifact with an EMPTY query table. Keep cancelling until
-          // the guarded block exits (interrupt clears the loop).
-          try {
-            while (!Thread.currentThread().isInterrupted) {
-              try s.sparkContext.cancelAllJobs() catch { case _: Throwable => () }
-              Thread.sleep(2000L)
-            }
-          } catch { case _: InterruptedException => () }
-        }
-      }, s"graft-guard-$tag")
-      timer.setDaemon(true)
-      timer.start()
-      val r =
-        try step(tag)(f)
-        catch {
-          case t: Throwable =>
-            if (cancelled.get()) throw new HostTooSlow((System.nanoTime() - w0) / 1e9)
-            else throw t
-        } finally timer.interrupt()
-      val sec = (System.nanoTime() - w0) / 1e9
-      if (sec > limitS) throw new HostTooSlow(sec)
-      r
-    }
-    def timedLevel(s: SparkSession, l: Int): (Double, Long, Long) = {
-      // warm-up pass at tiny scale so codegen/classloading is excluded —
-      // unless the budget-aware skip fired (see runLevel): a skipped
-      // warmup folds JIT/classloading INTO the measured main, which can
-      // only lower that level's throughput. On the top level that
-      // DEFLATES the pair (conservative); the skip never applies to the
-      // bottom level (deflating IT would flatter the ratio).
-      if (skipWarmupFor.compareAndSet(l, -1)) {
-        println(s"[bench] L$l warmup skipped (budget guard) — " +
-          "main includes JIT; direction is pair-deflating")
-        warmupSkipped += l
-        levelWarmups(l) = 0.0
-      } else {
-        val w0 = System.nanoTime()
-        guarded(s, s"L$l warmup", retryWarmupCapS.getOrElse(warmupLimitS))(
-          kbJob(s, sfDir.replace("sf0.1", "sf0.001"), 1))
-        levelWarmups(l) = (System.nanoTime() - w0) / 1e9
-      }
-      val t0 = System.nanoTime()
-      val (docs, triples) =
-        guarded(s, s"L$l main", retryMainCapS.getOrElse(mainLimitS))(
-          kbJob(s, sfDir, replicateEff))
-      val sec = (System.nanoTime() - t0) / 1e9
-      (sec, docs, triples)
-    }
-    def timedThreads(c: Int): (Double, Long, Long) = {
-      val s = session(c)
-      try timedLevel(s, c) finally s.stop()
-    }
-    def timedJvms(workers: Int): (Double, Long, Long) = {
-      val c = step(s"L$workers cluster-start")(
-        BenchCluster.start(workers, execCores, execMemG))
-      try {
-        val s = BenchCluster.session(c, workers, execCores, execMemG - 1)
-        try timedLevel(s, workers) finally s.stop()
-      } finally c.shutdown()
-    }
-    def timed(c: Int): (Double, Long, Long) =
-      if (mode == "threads") timedThreads(c) else timedJvms(c)
-
-    // The host carries EPISODIC co-tenant load (loadavg 4-17 observed
-    // with zero repo processes; identical runs vary up to 3x). A ladder
-    // level that lands on a burst measures the co-tenant, not the plan —
-    // round 3 recorded one level-4 run at 288s whose quiet-window truth
-    // is ~55s (loadavg 9 during the window). Two bounded defenses:
-    // (a) before each level, wait up to `quietWaitS` for loadavg(1m) to
-    // fall under `quietLoad`; (b) after the ladder, if the pair implies
-    // a physically implausible result (4x cores slower per-core than
-    // HALF the small level's rate), re-run the suspect level once and
-    // keep the better time. Both are bounded so the default run still
-    // fits the driver timeout; the observed loadavg is recorded in the
-    // result JSON for transparency.
-    // quiet-wait defaults are now SMALL: the per-level host_cpu/probe
-    // fields carry the poisoned-window diagnosis, so waiting out noise
-    // buys little and eats the wall budget (a 90 s wait between levels
-    // was mostly measuring our OWN just-finished run's decaying loadavg)
-    val quietLoad = sys.env.getOrElse("SPARK_GRAFT_QUIET_LOAD", "2.5").toDouble
-    // per-level wait 75 s: the 1-minute loadavg of our OWN finished 4N
-    // level needs ~60-90 s to decay below the gate, and a timed-out gate
-    // now flags the level CONTENDED (degrading the run's scaling pair to
-    // a diagnostic) — so an unreachable gate costs evidence, not just
-    // wall time
-    val quietWaitS = sys.env.getOrElse("SPARK_GRAFT_QUIET_WAIT_S", "75").toInt
-    // global waiting budget across ALL levels/retries, so worst-case
-    // noise cannot push the default run past the driver timeout
-    var quietBudgetS = sys.env.getOrElse("SPARK_GRAFT_QUIET_BUDGET_S", "150").toInt
-    // baseline at process start: loadavg(1m) between ladder levels still
-    // carries OUR OWN just-finished run (the first trimmed default run
-    // burned ~75 s waiting for its own decaying load); only wait when
-    // load clearly exceeds what the box showed before we did anything.
-    // The baseline read itself needs a bounded settle: loadavg(1m) still
-    // carries THIS process's sbt/compile/startup burst (and any work the
-    // operator ran just before, e.g. a Verify pass) for ~60-90 s. A
-    // polluted baseline both raises every later quiet gate AND stamps
-    // the whole run host_degraded before any level has run (2026-08-20:
-    // baseline 4.51 from a Verify that finished seconds earlier).
-    // r4: the settle loop ALSO exits when the box is instantaneously
-    // idle (busyCores) — loadavg at process start still carries the
-    // operator's just-finished sbt/Verify work as phantom runnable
-    // count, and a 2026-08-20 run was stamped host_degraded purely from
-    // that EWMA tail while /proc/stat showed the box idle.
-    val loadBaseline = {
-      val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000
-      var l = load1
-      while (l > quietLoad && busyCores() > 3.0 &&
-             System.nanoTime() < deadline) {
-        Thread.sleep(7500); l = load1
-      }
-      l
-    }
-    baselineContended = loadBaseline > quietLoad && busyCores() > 3.0
-    if (baselineContended)
-      println(f"[bench] ladder baseline load=$loadBaseline%.2f > quiet " +
-        f"gate $quietLoad%.1f with busy CPU — run will be marked host_degraded")
-    /** Returns true if the load gate was reached (level starts quiet);
-      * false means the bounded wait timed out and the level will run
-      * against live co-tenant load.
-      */
-    def awaitQuiet(level: Int): Boolean = {
-      val gate = math.max(quietLoad, loadBaseline + 0.5)
-      // quiet = loadavg under the gate OR the box instantaneously idle
-      // (busyCores; see its scaladoc — loadavg's EWMA tail is OUR OWN
-      // finished phases, and waiting it out was the single largest
-      // budget cost of the default run)
-      def quietNow(): Boolean = load1 <= gate || busyCores() <= 3.0
-      val waitS = math.min(quietWaitS, quietBudgetS)
-      val t0 = System.nanoTime()
-      val deadline = t0 + waitS * 1000L * 1000 * 1000
-      var ok = quietNow()
-      while (!ok && System.nanoTime() < deadline) {
-        Thread.sleep(7500); ok = quietNow()
-      }
-      quietBudgetS -= ((System.nanoTime() - t0) / 1e9).toInt
-      loadSeen += ((level, load1))
-      ok
-    }
-
-    // single-level mode: honest per-JVM isolation (JIT/GC state from one
-    // level otherwise bleeds into the other). Emits the query table it
-    // measured alongside the level result (r2 discarded it).
-    val onlyLevel = sys.env.get("SPARK_GRAFT_ONLY_LEVEL")
-    if (onlyLevel.isDefined) {
-      val lvl = onlyLevel.get.toInt
-      val fault = probeFaultMBps()
-      try {
-        levelResults(lvl) = timed(lvl)
-        noteWall(lvl, levelResults(lvl)._1, levelResults(lvl)._2)
-      } catch {
-        case h: HostTooSlow =>
-          println(f"[bench] L$lvl ladder-abort: warmup ${h.sec}%.0fs > ${warmupLimitS}s")
-          levelResults(lvl) = (-1.0, 0L, 0L)
-        case t: Throwable =>
-          // even a cluster-start failure must not cost the artifact
-          println(s"[bench] L$lvl failed: ${t.getClass.getSimpleName}: ${t.getMessage}")
-          levelResults(lvl) = (-1.0, 0L, 0L)
-      }
-      runQueries()
-      val (sec, docs, triples) = levelResults(lvl)
-      // a failed level is marked as such — sec:-1 with docs_per_sec:-0.0
-      // is plausible-typed garbage to a parser
-      val levelJson =
-        if (sec <= 0) s""""level":$lvl,"level_failed":true"""
-        else s""""level":$lvl,"sec":$sec,"docs":$docs,"triples":$triples,""" +
-          s""""docs_per_sec":${docs / sec}"""
-      emitFinal(s"""{$levelJson,"host_fault_mbps":${f"$fault%.0f"},""" +
-        s""""queries":${queriesJson.getOrElse("{}")},""" +
-        s""""queries_total_sec":$queriesTotal}""")
-      return
-    }
-
-    // Interleave the levels and keep the MINIMUM wall per level: the
-    // sandbox host has uncontrolled co-tenant load (observed loadavg 4-8
-    // with this process idle), and min-of-N interleaved is robust to
-    // additive noise while preserving the level-to-level comparison.
-    // DEFAULT is one rep (fits the driver timeout); quiet-window manual
-    // runs can raise SPARK_GRAFT_SCALE_REPS.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "1").toInt
-    // jvms default runs the BIG level first (r5, small-first in r4):
-    // repeated A/B probes found a ~10% "recently-active host" penalty
-    // with a ~3-4 minute horizon that the fault/loadavg/busy-core
-    // probes cannot see (L4-440k drew 55.4 s after true idle vs
-    // 60.7-60.8 s minutes after heavy activity, interleaved both
-    // orders), and it lands asymmetrically: the 8-core L4 level eats it
-    // in full while the 2-core L1 level is insensitive (L1 set records
-    // all night in warm slots). Small-first put L4 right after L1's
-    // 4-minute burn on every run, systematically deflating the pair —
-    // big-first gives L4 the coldest slot the run has, and L1 follows
-    // unharmed. Pair math is order-free; budget also improves (the L4
-    // warmup always fits at the start, so the budget-guard skip never
-    // fires on the level where it deflates the pair).
-    val levels = sys.env.getOrElse("SPARK_GRAFT_LEVELS",
-        if (mode == "threads") "2,8,32" else "4,1")
-      .split(",").map(_.trim.toInt).toSeq
-    val levelsSorted = levels.sorted
-    // required-phase epoch: queries + ladder + retries are all budgeted
-    // from here (the watchdog's own epoch is a few seconds earlier)
-    val mainStart = System.nanoTime()
-    def runLevel(l: Int, retry: Boolean = false): Unit =
-        if (ladderAborted.isEmpty) {
-      // budget guard (r4): the first 440k default lost its TOP level to
-      // the watchdog by ~10 s after spending 33 s on that level's
-      // warmup. If the remaining budget cannot fit warmup + 1.3x the
-      // best-known main + 25 s slack, arm the warmup skip — top level
-      // only (folding JIT into the top main deflates the pair, the
-      // conservative direction; deflating the BOTTOM level would
-      // flatter it, so the bottom always warms).
-      if (!retry && l == levelsSorted.max && levelResults.nonEmpty) {
-        val docsKnown = levelResults.values.headOption.map(_._2)
-        // main estimate: best-known same-config wall, else project from
-        // THIS run's completed bottom level (wall/4 + ~18 s serial
-        // share — see BENCH.md "Honest scaling accounting"). Without
-        // the fallback a first run at a new replicate had NO estimate,
-        // so a slow top-level warmup ran unguarded and pushed the
-        // required main past the watchdog (measured: a 59.9 s L4
-        // warmup at the first 720k default killed the run's pair).
-        val mainEst = docsKnown.flatMap(d => bestWalls.get(bestKey(l, d)))
-          .orElse(levelsSorted.headOption.flatMap(levelResults.get)
-            .map(_._1 / (l / levelsSorted.head) + 18.0))
-        val warmEst = levelWarmups.values.filter(_ > 0).maxOption.getOrElse(35.0)
-        val remaining = wallBudgetS - (System.nanoTime() - mainStart) / 1e9
-        // 1.15x + 15 s (r5, was 1.3x + 25): the margins are asymmetric.
-        // A skipped warmup folds ~25 s of JIT into a ~86 s top main —
-        // measured eff 0.66 vs ~0.83 warmed, i.e. the skip reliably
-        // DESTROYS the pair it was protecting — while the risk being
-        // margined against (a storm-slowed main clipped by the
-        // watchdog) merely demotes the artifact to the recorded
-        // headline. The old fat margin skipped a warmup with 49 s of
-        // true slack (remaining 168 s vs warmup 29 + main 90).
-        if (mainEst.exists(m => remaining < warmEst + 1.15 * m + 15)) {
-          println(f"[bench] L$l budget guard: remaining $remaining%.0fs < " +
-            f"warmup $warmEst%.0fs + 1.15x main ${mainEst.get}%.0fs + 15s")
-          skipWarmupFor.set(l)
-        }
-      }
-      // retries are opportunistic: don't SPEND quiet-wait budget on them
-      // (the hostHealthy fault probe already gated the attempt; waiting
-      // here mostly measures our OWN just-finished phases' decaying
-      // loadavg and once ate 75 s before a retry that then aborted) —
-      // but still RECORD whether the attempt started quiet, since a kept
-      // contended attempt must still mark the run degraded
-      val quiet =
-        if (retry) {
-          val l1 = load1
-          loadSeen += ((l, l1))
-          // same two-signal rule as awaitQuiet: a retry right after our
-          // own level carries that level's phantom loadavg tail — the
-          // 2026-08-20 run stamped its L4 retry "contended" (degrading
-          // the whole run) at load 7.3 while the box was idle
-          l1 <= math.max(quietLoad, loadBaseline + 0.5) || busyCores() <= 3.0
-        } else awaitQuiet(l)
-      // prefault may OOM on direct memory when the cleaner is
-      // inaccessible (ADVICE r3); it is an optional conditioner and must
-      // never kill the level before runLevel's own try can catch it
-      try prefault(sys.env.getOrElse("SPARK_GRAFT_PREFAULT_GIB", "0").toInt)
-      catch { case t: Throwable =>
-        println(s"[bench] prefault failed (${t.getClass.getSimpleName}); continuing") }
-      val fault = probeFaultMBps()
-      faultSeen += ((l, fault))
-      println(f"[bench] L$l host_fault_mbps=$fault%.0f")
-      val c0 = hostCpu()
-      try {
-        val r = timed(l)
-        noteWall(l, r._1, r._2)
-        levelWalls.getOrElseUpdate(l,
-          scala.collection.mutable.ArrayBuffer.empty) += r._1
-        val d = hostCpu().zip(c0).map { case (a, b) => (a - b) / 100.0 }
-        val cpu = (d(0), d(2), d(3), d(7))
-        println(f"[bench] L$l host_cpu_cores_s user=${d(0)}%.0f sys=${d(2)}%.0f " +
-          f"idle=${d(3)}%.0f steal=${d(7)}%.0f")
-        if (levelResults.get(l).forall(_._1 > r._1)) {
-          levelResults(l) = r
-          levelHostCpu(l) = cpu
-          levelContended(l) = !quiet
-        }
-      } catch {
-        case h: HostTooSlow =>
-          // an aborted attempt must not leave its warmup skip armed for
-          // a later attempt of a DIFFERENT level (ADVICE r4)
-          skipWarmupFor.set(-1)
-          // storm confirmed by a REAL job (the probe alone missed it once:
-          // 652 MB/s yet 10-50x task slowdowns; 2026-08-18 midday the
-          // probe read 1700-2040 MB/s while sustained work ran sys:user
-          // = 5:1 — short bursts refill from the ready pool, sustained
-          // multi-GiB working sets drain it). Record the warmup's OWN
-          // CPU split in the marker so the artifact self-diagnoses.
-          // A RETRY of an already-completed level is different: the pair
-          // is intact, so a storm costs only that attempt — aborting the
-          // ladder here stamped an otherwise-complete 2026-08-20 run
-          // "ladder_aborted" and blocked its remaining retry budget.
-          val d = hostCpu().zip(c0).map { case (a, b) => (a - b) / 100.0 }
-          val marker = f"degraded_host:warmup_${h.sec}%.0fs" +
-            f"_user${d(0)}%.0f_sys${d(2)}%.0f_steal${d(7)}%.0f"
-          if (levelResults.contains(l))
-            println(s"[bench] L$l retry storm-bound ($marker); " +
-              "keeping the completed attempt")
-          else {
-            ladderAborted = Some(marker)
-            println(s"[bench] L$l ladder-abort: $marker")
-          }
-        case t: Throwable =>
-          skipWarmupFor.set(-1)
-          // a broken level (cluster-start failure, driver OOM) must not
-          // cost the query table — skip the ladder, keep going; as above,
-          // a failed RETRY leaves the completed pair standing
-          if (levelResults.contains(l))
-            println(s"[bench] L$l retry failed " +
-              s"(${t.getClass.getSimpleName}: ${t.getMessage}); " +
-              "keeping the completed attempt")
-          else {
-            ladderAborted = Some(s"level_failed:${t.getClass.getSimpleName}")
-            println(s"[bench] L$l ladder-abort: ${ladderAborted.get}: ${t.getMessage}")
-          }
-      }
-      flush()
-    }
-    // ANY escape hatch below must still leave the final artifact: an
-    // uncaught exception (cluster-start failure, OOM on the driver side)
-    // previously killed main with no stdout JSON line — the driver then
-    // records parsed:null even though per-phase flushes hit the file.
     try {
-    // QUERIES FIRST (r4 contract, VERDICT r3 item 1): the fresh query
-    // table is required evidence and costs ~55 s healthy; it must land
-    // before the ladder can consume the budget. The pass is deadline-
-    // capped (see runQueries) so a storm cannot invert the priority.
-    runQueries()
-    // Replicate fallback gate (r5): the 880k default ladder needs
-    // ~500 s after the queries (L1 warmup ~30 + L1 ~345 + L4 ~100 +
-    // starts/probes; the budget guard already drops the L4 warmup when
-    // tight). A storm-slowed query pass eats that budget — fall back to
-    // 440k BEFORE the ladder starts, flagged in the artifact, rather
-    // than lose the top level to the watchdog (r4's first default run).
-    if (replicateEff >= 144 && sys.env.get("SPARK_GRAFT_REPLICATE").isEmpty) {
-      val remaining = wallBudgetS - (System.nanoTime() - mainStart) / 1e9
-      // 505 = warmups ~55 + L4 main ~105 x 1.2 + L1 main ~345 x 1.1 +
-      // starts/probes ~10 at the 880k default — under that the query
-      // pass was storm-slowed and the full ladder no longer fits
-      if (remaining < 505) {
-        replicateEff = 88
-        replicateFallback = Some(
-          f"queries left $remaining%.0fs < ~505s the default ladder " +
-            "needs; ladder ran at 440k")
-        println(s"[bench] replicate fallback: ${replicateFallback.get}")
-      }
-    }
-    // Settle between queries and the first ladder level (r5): the
-    // ~10% recently-active-host penalty (see the level-order note) has
-    // a minutes-scale horizon and no observable probe — the busy-cores
-    // gate starts the level within seconds of our own load decaying,
-    // which is exactly when the penalty still applies to the 8-core
-    // level that now runs first. A bounded idle settle is host
-    // conditioning applied BEFORE any measurement, identical for every
-    // run, and the per-level stamps still judge what actually ran.
-    // (default 0: a 60 s settle was measured NOT to clear the penalty —
-    // its horizon is minutes — and the 880k default cannot spare more)
-    if (!skipQueries) {
-      val settleS = sys.env.getOrElse("SPARK_GRAFT_SETTLE_S", "0").toInt
-      if (settleS > 0)
-        step(s"pre-ladder settle ${settleS}s")(Thread.sleep(settleS * 1000L))
-    }
-    (1 to reps).foreach(_ => levels.foreach(l => runLevel(l)))
-    // Second-chance ladder: the host's degraded windows are EPISODIC
-    // (minutes). If the breaker tripped before the queries, the ~2-4 min
-    // query table doubled as a cool-down — re-probe and, if the host
-    // recovered, spend remaining budget on one full ladder pass (a fresh
-    // trip inside it re-arms the breaker and re-skips the rest).
-    if (ladderAborted.isDefined &&
-        (System.nanoTime() - mainStart) / 1e9 < wallBudgetS - 280) {
-      val f = probeFaultMBps()
-      println(f"[bench] ladder second-chance gate host_fault_mbps=$f%.0f")
-      if (f > 300) {
-        ladderAborted = None
-        levels.foreach(l => runLevel(l))
-      }
-    }
-    // Noise-shortfall retry. The host's co-tenant bursts swing identical
-    // runs +-35%, so a single-shot pair is a coin flip: one burst inside
-    // either level's window corrupts the ratio (measured eff 0.14-0.96
-    // across identical configs in one afternoon). Defense: while the
-    // primary pair reads below the target and wall-clock remains, re-run
-    // the level whose PER-CORE throughput is out of line (the burst
-    // victim) and keep the MINIMUM wall per level — under additive noise
-    // the min is the consistent estimator of the quiet-window time, and
-    // every kept number is a real complete run (loadavg recorded). All
-    // bounded by a deadline so the default invocation can never outlive
-    // the driver timeout (the r2 lesson); the big level only retries
-    // while plenty of time remains since it costs ~2x the small one.
-    // Retry admission is VICTIM-AWARE, priced from this run's own walls:
-    // expected cost = cluster start + the level's observed warmup (new
-    // executor JVMs re-JIT and re-pre-touch every time) + a main capped
-    // at 1.2x the kept minimum (slower cannot improve min-of-N) + emit
-    // slack. The old flat deadline (budget - 260 s) priced every retry
-    // as a worst-case SMALL-level cycle, which priced the default 545 s
-    // run out of the one big-level retry it could afford — and the
-    // 2026-08-20 attempt-wall series (74.9 -> 48.3 -> 38.5 s) shows the
-    // second big-level attempt is exactly where the healthy pair lands.
-    // If the host storms mid-retry anyway, the tight caps bound the
-    // overrun and the watchdog clips only the OPTIONAL phase (see
-    // optionalPhase below) — required evidence has already landed.
-    val retryDeadlineS = sys.env.get("SPARK_GRAFT_RETRY_DEADLINE_S")
-      .map(_.toInt).getOrElse(math.max(0, wallBudgetS - 15))
-    val retryTarget =
-      sys.env.getOrElse("SPARK_GRAFT_RETRY_BELOW_EFF", "0.85").toDouble
-    def elapsedS = (System.nanoTime() - mainStart) / 1e9
-    def tput(l: Int) = levelResults(l)._2 / levelResults(l)._1
-    def retryMainCap(l: Int): Int =
-      math.max(60, (1.2 * levelWalls(l).min).toInt)
-    for ((a, b) <- levelsSorted.zip(levelsSorted.drop(1))
-           .filter { case (x, y) =>
-             // only retry a pair BOTH of whose levels completed (the
-             // degraded-host circuit breaker can skip levels entirely)
-             y == 4 * x && levelResults.contains(x) && levelResults.contains(y)
-           }.take(1) if ladderAborted.isEmpty) {
-      var tries = 0
-      // host must be able to PROVIDE memory before a retry is worth its
-      // wall-clock: a degraded host (fault probe under ~300 MB/s) will
-      // reproduce the same kernel-time storm, so stop and let the JSON's
-      // host_fault_mbps field carry the explanation instead.
-      def hostHealthy: Boolean = {
-        val f = probeFaultMBps()
-        println(f"[bench] retry-gate host_fault_mbps=$f%.0f")
-        f > 300
-      }
-      while (tput(b) / (4.0 * tput(a)) < retryTarget && tries < 3 &&
-             elapsedS < retryDeadlineS && hostHealthy) {
-        tries += 1
-        // burst victim = lower per-core throughput; ties favor the
-        // cheaper (big-parallelism) level
-        val victim = if (tput(a) / a.toDouble < tput(b) / b.toDouble) a else b
-        // runway check, not a full cost model: an overrunning retry is
-        // clipped by the watchdog as an optional phase (complete
-        // artifact, clip recorded), so admission only needs enough
-        // runway for the attempt to plausibly land — expected-cost
-        // models twice missed an affordable L4 retry by seconds
-        // (2026-08-20 runs 17-18). r4: guard loosened 90 -> 45 s; the
-        // 440k default finishes its required phases ~450 s in, and a
-        // clipped retry costs nothing (the kept pair stands), so
-        // admitting a might-get-clipped retry is strictly better odds
-        if (elapsedS > retryDeadlineS - 45) tries = 3
-        else {
-          retryWarmupCapS = Some(math.min(warmupLimitS,
-            levelWarmups.get(victim).map(w => (1.3 * w).toInt + 5)
-              .getOrElse(warmupLimitS)))
-          retryMainCapS = Some(retryMainCap(victim))
-          optionalPhase = Some(s"retry_L$victim")
-          try runLevel(victim, retry = true)
-          finally {
-            retryWarmupCapS = None; retryMainCapS = None
-            optionalPhase = None
-          }
+      (1 to Passes).foreach { pass =>
+        val (_, stamp) = stamped {
+          val s = session(cpus)
+          try {
+            // warm-up: parquet footer reads + codegen
+            SparkEntry.queries("q1_agg")(s, sfDir).count()
+            headline.foreach { name =>
+              val q0 = System.nanoTime()
+              // a failed query never enters the table: elapsed-to-failure
+              // is not a timing
+              try {
+                SparkEntry.queries(name)(s, sfDir).count()
+                run = run.copy(running =
+                  run.running + (name -> (System.nanoTime() - q0) / 1e9))
+              } catch { case NonFatal(e) =>
+                println(s"[bench] pass $pass $name failed: ${e.getMessage}")
+              }
+              flush()
+            }
+          } finally s.stop()
         }
+        run = run.copy(passes = run.passes :+ QueryPass(run.running, stamp),
+          running = Map.empty)
+        println(f"[bench] queries pass $pass ${stamp.wallS}%.1fs " +
+          f"ran=${run.passes.last.times.size}/${headline.size} " +
+          f"foreign=${stamp.foreignCores}%.2f steal=${stamp.stealCores}%.2f")
+        flush()
       }
-    }
-    // Second-chance queries: if EVERY pass so far ran storm-bound (the
-    // 2026-08-18 morning storm inflated the table 6-12x) and the host
-    // has since recovered, spend remaining budget on one more pass — the
-    // per-query minimums then come from the healthy window, and the
-    // degraded passes remain recorded in queries_passes. Bounded: probe
-    // gate (never re-measures a still-sick host) + wall check (a healthy
-    // pass is ~40-60 s; the watchdog still bounds the worst case).
-    if (!skipQueries && queryPassDegraded.nonEmpty &&
-        queryPassDegraded.forall(identity) &&
-        (System.nanoTime() - mainStart) / 1e9 < wallBudgetS - 150) {
-      val f = probeFaultMBps()
-      println(f"[bench] queries second-chance gate host_fault_mbps=$f%.0f")
-      if (f > 300) {
-        optionalPhase = Some("queries_second_chance")
-        try runQueries() finally optionalPhase = None
+
+      Seq(shape.low, shape.high).foreach { workers =>
+        try {
+          val c = BenchCluster.start(workers, shape.cores, shape.heapMB)
+          try {
+            val s = BenchCluster.session(c, workers, shape.cores, shape.heapMB)
+            try {
+              // warm-up at 1x the corpus: codegen, classloading and JIT
+              // stay out of the timed window
+              kbJob(s, sfDir, 1)
+              val ((docs, triples), stamp) = stamped(kbJob(s, sfDir, Replicate))
+              run = run.copy(levels = run.levels :+
+                Level(workers, stamp.wallS, docs, triples, stamp))
+              println(f"[bench] L$workers ${stamp.wallS}%.1fs docs=$docs " +
+                f"foreign=${stamp.foreignCores}%.2f steal=${stamp.stealCores}%.2f " +
+                s"contended=${stamp.contended}")
+            } finally s.stop()
+          } finally c.shutdown()
+        } catch { case NonFatal(e) =>
+          println(s"[bench] L$workers failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          run = run.copy(failedLevels = run.failedLevels +
+            (workers -> s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+        }
+        flush()
       }
-    }
-    emitFinal(buildJson(true))
+      run = run.copy(finished = true)
     } catch { case t: Throwable =>
-      abortedBy = Some(s"exception:${t.getClass.getSimpleName}")
       t.printStackTrace()
-      try emitFinal(buildJson(false)) catch { case _: Throwable => () }
-      try BenchCluster.killAll() catch { case _: Throwable => () }
+      run = run.copy(aborted = Some(s"exception:${t.getClass.getSimpleName}"))
+      BenchCluster.killAll()
     }
+    watchdog.interrupt()
+    emit()
   }
-
-  /** Driver contract: the result JSON must be machine-parseable from the
-    * run output. Print it as its own raw stdout line (the forked JVM's
-    * stdout passes through un-prefixed via build.sbt outputStrategy) AND
-    * persist it to BENCH_LOCAL.json so a log-scraping driver has a
-    * file fallback — round-1 lost the line inside sbt log noise.
-    */
-  private def emit(json: String): Unit = {
-    System.out.println(json)
-    System.out.flush()
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(artifactPath), json + "\n")
-    catch { case _: Throwable => () }
-  }
-
-  /** Diagnostic invocations (single-level / skip-queries) must not
-    * clobber the primary artifact — a mid-round ONLY_LEVEL probe once
-    * overwrote a completed BENCH_LOCAL.json (19-query table) with an
-    * empty skip-queries one. They write a sibling .diag file instead.
-    */
-  private[graft] def artifactPath: String =
-    if (sys.env.contains("SPARK_GRAFT_ONLY_LEVEL") ||
-        sys.env.get("SPARK_GRAFT_SKIP_QUERIES").contains("1"))
-      "BENCH_LOCAL.diag.json"
-    else "BENCH_LOCAL.json"
 }

@@ -95,9 +95,9 @@ object BenchCluster {
   }
 
   /** Start master + `workers` worker JVMs, each advertising `coresPer`
-    * cores and `memG` GiB. Blocks until the master port accepts.
+    * cores and `memMB` MiB. Blocks until the master port accepts.
     */
-  def start(workers: Int, coresPer: Int, memG: Int): Cluster = {
+  def start(workers: Int, coresPer: Int, memMB: Int): Cluster = {
     val logDir = new File(s"/tmp/graft-cluster-${System.nanoTime()}")
     logDir.mkdirs()
     val port = (0 until 50).map(7177 + _).find(!portOpen(_))
@@ -118,7 +118,7 @@ object BenchCluster {
     }
     val ws = (1 to workers).map { i =>
       spawn("org.apache.spark.deploy.worker.Worker",
-        Seq(masterUrl, "--cores", coresPer.toString, "--memory", s"${memG}g",
+        Seq(masterUrl, "--cores", coresPer.toString, "--memory", s"${memMB}m",
           "--port", "0", "--webui-port", "0",
           "--work-dir", new File(logDir, s"worker$i").getAbsolutePath),
         new File(logDir, s"worker$i.log"), env)
@@ -132,15 +132,13 @@ object BenchCluster {
     * (executor.cores = worker cores), fixed per-executor heap — the
     * quantity held constant while the ladder scales the executor COUNT.
     */
-  def session(c: Cluster, workers: Int, coresPer: Int, execMemG: Int): SparkSession = {
+  def session(c: Cluster, workers: Int, coresPer: Int, execMemMB: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(c.masterUrl)
       .appName(s"graft-bench-${workers}x$coresPer")
       .config("spark.executor.cores", coresPer.toString)
-      .config("spark.executor.memory", s"${execMemG}g")
+      .config("spark.executor.memory", s"${execMemMB}m")
       .config("spark.cores.max", (workers * coresPer).toString)
-      .config("spark.eventLog.enabled", Bench.eventLog.isDefined.toString)
-      .config("spark.eventLog.dir", Bench.eventLog.getOrElse("/tmp"))
       // Each executor must size itself for ITS slice of the box, not the
       // whole box: without ActiveProcessorCount an 8-executor level
       // spawns 8 x ~20 GC/JIT/netty threads sized for 32 CPUs (observed
@@ -158,15 +156,13 @@ object BenchCluster {
       // the 4N level faults ~4x the pages and absorbs a kernel-time
       // penalty the 1-executor level never sees (every 8/20 ladder L4
       // carried sys 0.26-0.94x user while L1 ran clean). Pre-touch moves
-      // all heap faulting into cluster start, which the fault probe
-      // gates and the ladder does not time. Real clusters run
-      // AlwaysPreTouch for the same reason (page-fault-free steady
-      // state); build.sbt's Xms warning is about the DRIVER/sbt JVM,
-      // whose startup is inside measured wall time.
+      // all heap faulting into cluster start, which the ladder does not
+      // time. Real clusters run AlwaysPreTouch for the same reason
+      // (page-fault-free steady state); build.sbt's Xms warning is about
+      // the DRIVER/sbt JVM, whose startup is inside measured wall time.
       .config("spark.executor.extraJavaOptions",
         s"-XX:+UseParallelGC -XX:ActiveProcessorCount=$coresPer -XX:NewRatio=1 " +
-          s"-Xms${execMemG}g -XX:+AlwaysPreTouch " +
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_OPTS", ""))
+          s"-Xms${execMemMB}m -XX:+AlwaysPreTouch")
       // Loopback cluster: a "remote" fetch costs microseconds, so never
       // hold a task back waiting for block locality (the default 3s
       // locality.wait turns every post-checkpoint stage into scheduler
@@ -208,42 +204,24 @@ object BenchCluster {
       .config("spark.excludeOnFailure.timeout", "60s")
       .config("spark.excludeOnFailure.task.maxTaskAttemptsPerExecutor", "2")
       .config("spark.excludeOnFailure.application.maxFailedTasksPerExecutor", "4")
-      .config("spark.sql.shuffle.partitions", Bench.scaleParts.toString)
+      .config("spark.sql.shuffle.partitions", Bench.ScaleParts.toString)
       // take(n) defaults to an incremental partition scan (1, 4, 16, ...
       // partitions = one sequential JOB each). The pipeline's two guard
       // takes (vocabulary probe, cluster guard) each burned 4-5 job
       // round-trips of pure driver latency — level-independent serial
       // fraction. Scan all partitions in the first job instead.
-      .config("spark.sql.limit.initialNumPartitions", Bench.scaleParts.toString)
-      // AQE default OFF for the ladder: its per-stage re-planning is
+      .config("spark.sql.limit.initialNumPartitions", Bench.ScaleParts.toString)
+      // AQE OFF for the ladder: its per-stage re-planning is
       // driver-side latency (~8 s level-independent at 80k docs,
       // measured), i.e. pure serial fraction. At 100 TB the same latency
       // amortizes over minutes-long stages and AQE's skew handling pays
-      // for itself — this is a bench-scale knob, not a design stance.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
+      // for itself — this is a bench-scale setting, not a design stance.
+      .config("spark.sql.adaptive.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", Bench.localDir)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    if (sys.env.get("SPARK_GRAFT_PHASES").contains("1"))
-      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val m = i.taskMetrics
-          val wall = (i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)) / 1e3
-          if (wall > 0.5)
-            println(f"[stage] ${i.stageId}%4d wall=$wall%6.1fs " +
-              f"run=${m.executorRunTime / 1e3}%7.1fs cpu=${m.executorCpuTime / 1e9}%7.1fs " +
-              f"gc=${m.jvmGCTime / 1e3}%6.1fs tasks=${i.numTasks}%4d ${i.name.take(50)}")
-          if (m.executorCpuTime / 1e9 > 40 &&
-              sys.env.get("SPARK_GRAFT_STAGE_DETAILS").contains("1"))
-            println(s"[stage-details] ${i.stageId}\n" + i.details.linesIterator
-              .filter(_.contains("graft")).take(8).mkString("\n"))
-        }
-      })
     // wait for every executor to register so the timed run sees full
     // parallelism from its first stage
     val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000

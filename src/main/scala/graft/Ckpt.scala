@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Eager lineage-truncating checkpoint with SERIALIZED block storage.
@@ -17,22 +17,16 @@ import org.apache.spark.storage.StorageLevel
   * buffer: same reuse semantics, O(partitions) live objects, GC flat.
   */
 object Ckpt {
-  /** Storage knob: system property graft.ckpt.level (set e.g. by Bench
-    * before building cluster-mode plans) falls back to env
-    * SPARK_GRAFT_CKPT_LEVEL. "deser" restores the Spark default
-    * (deserialized rows); "disk" forces DISK_ONLY — on multi-executor
-    * runs checkpoint blocks then live on (tmpfs-backed) executor disk,
-    * putting zero pressure on the storage memory pool whose eviction
-    * storms starved small executors.
+  /** Storage level for the session's stage-boundary blocks: serialized
+    * memory-and-disk on a local master; DISK_ONLY on a multi-executor
+    * one, where checkpoint blocks then live on (tmpfs-backed) executor
+    * disk and put zero pressure on the storage memory pool whose
+    * eviction storms starved small executors.
     */
-  def storage: StorageLevel =
-    sys.props.get("graft.ckpt.level")
-      .orElse(sys.env.get("SPARK_GRAFT_CKPT_LEVEL"))
-      .getOrElse("ser") match {
-      case "deser" => StorageLevel.MEMORY_AND_DISK
-      case "disk" => StorageLevel.DISK_ONLY
-      case _ => StorageLevel.MEMORY_AND_DISK_SER
-    }
+  def storage(spark: SparkSession): StorageLevel =
+    if (spark.sparkContext.isLocal) StorageLevel.MEMORY_AND_DISK_SER
+    else StorageLevel.DISK_ONLY
+
   def apply[T](ds: Dataset[T]): Dataset[T] =
-    ds.localCheckpoint(true, storage)
+    ds.localCheckpoint(true, storage(ds.sparkSession))
 }

@@ -38,11 +38,10 @@ object Linker {
 
   /** Registry rows above which the token index is no longer broadcast
     * (the token-exploded index of a 10^8-entity registry does not fit an
-    * executor); overridable for tests via system property.
+    * executor). The gated kernels take it as a defaulted parameter so a
+    * test can force the salted path.
     */
-  def broadcastMaxRows: Long =
-    sys.props.get("graft.linker.broadcastMaxRows").map(_.toLong)
-      .getOrElse(2000000L)
+  val BroadcastMaxRows: Long = 2000000L
 
   /** Salt fan-out for the non-broadcast candidate join. */
   val TokenJoinSalts = 16
@@ -62,77 +61,31 @@ object Linker {
   val NilWeights: Array[Double] = Array(1.0, 1.0, 2.0, 2.0, 1.0, 1.0, -0.5)
   val NilBias: Double = -4.0
 
-  final case class LinkInput(
-      doc_id: String, annset: String, ann_id: Int, mention_type: String,
-      start: Int, end: Int, mention: String, skip: Boolean,
-      gazetteer_id: Long, ctx_left: String, ctx_right: String,
-      m_emb: Array[Float])
-
-  /** Attach context windows + mention embeddings. Shaped as a per-DOC
-    * cogroup, not a per-mention join: joining text onto mentions ships
-    * (and garbage-collects) the full document string once PER MENTION —
-    * measured as GC-bound at scale (~35% of executor time); the cogroup
-    * shuffles each text exactly once and slices contexts in place.
-    */
-  def withEmbeddings(
-      spark: SparkSession,
-      mentions: Dataset[Mention],
-      docText: DataFrame,
-      keepCtx: Boolean = true): Dataset[LinkInput] = {
-    import spark.implicits._
-    val byDoc = mentions.groupByKey(_.doc_id)
-    val texts = docText.select(col("doc_id"), col("text"))
-      .as[(String, String)].groupByKey(_._1)
-    byDoc.cogroup(texts) { (doc, ms, ts) =>
-      // a mention group with no text row is dropped whole — the inner-join
-      // semantics this cogroup replaced; slicing into "" would throw
-      if (!ts.hasNext) Iterator.empty
-      else {
-        val text = ts.next()._2
-        ms.map { mn =>
-          val cl = text.substring(math.max(0, mn.start - 30), mn.start)
-          val cr = text.substring(mn.end, math.min(text.length, mn.end + 30))
-          // context windows feed the mention embedding here either way;
-          // they are STORED on the row only for the cross-encoder rerank
-          // (keepCtx) — without it they are ~120 B/mention of dead
-          // weight in the persisted frame and every row it fans into
-          LinkInput(doc, mn.annset, mn.ann_id, mn.mention_type, mn.start,
-            mn.end, mn.mention, mn.skip, mn.gazetteer_id,
-            if (keepCtx) cl else "", if (keepCtx) cr else "",
-            Embed.embedMention(cl, mn.mention, cr))
-        }
-      }
-    }
-  }
-
   private val embedMentionUdf = udf((cl: String, m: String, cr: String) =>
     Embed.embedMention(cl, m, cr))
 
-  /** Row-based [[withEmbeddings]] (r4, the shipping path): a shuffled
-    * hash join mentions x texts on doc_id with INLINE context slicing,
-    * instead of the typed cogroup. The cogroup deserialized 8.8M
-    * Mention objects through Kryo and re-encoded every LinkInput row
-    * through the reflection encoder — the last object-SerDe-heavy op in
-    * the hot path (measured: the linker phase dominated the ladder's
-    * 4-executor wall). Here both sides stay Tungsten rows: the build
-    * side holds each doc's text ONCE per partition hash map (the
-    * per-mention-copy GC problem that motivated the cogroup came from
-    * carrying the full text on every joined row; the codegen projection
+  /** Attach context windows + mention embeddings: a shuffled hash join
+    * mentions x texts on doc_id with INLINE context slicing. A typed
+    * per-doc cogroup was measured slower (r4): it deserialized 8.8M
+    * Mention objects through Kryo and re-encoded every output row
+    * through the reflection encoder (the linker phase dominated the
+    * ladder's 4-executor wall). Here both sides stay Tungsten rows: the
+    * build side holds each doc's text ONCE per partition hash map (a
+    * per-mention join that CARRIED the full text on every joined row was
+    * measured GC-bound at ~35% of executor time; the codegen projection
     * below consumes `text` inside the join stage and only the <=30-char
     * slices survive), and the embed UDF is the single object boundary.
     * Scale: doc_id-keyed shuffle join, one text row per doc — no skew;
     * at 100 TB the per-partition build side is corpus_bytes/partitions.
-    * Output rows identical to the cogroup (same slice math, same embed;
-    * property-tested in MergeLinkerSpec/GoldenSpec via the pipeline).
+    * Context windows feed the mention embedding either way; they are
+    * STORED on the row only for the cross-encoder rerank (`keepCtx`).
     *
     * UNICODE SCOPE (ADVICE r4): Spark's `substr` counts CODE POINTS
     * while Mention.start/end are UTF-16 indices from String ops in the
     * NER stage, so on text containing supplementary characters (outside
-    * the BMP — emoji etc.) this path's context windows can differ from
-    * the typed cogroup's by the surrogate-pair offset. The row-identical
-    * A/B guarantee therefore holds for BMP corpora (every fixture and
-    * gazetteer surface here; the offsets of the MENTIONS themselves are
-    * consistent either way — only the ±30-char context padding shifts).
+    * the BMP — emoji etc.) the context windows shift by the
+    * surrogate-pair offset (the offsets of the MENTIONS themselves are
+    * unaffected — only the ±30-char context padding shifts).
     */
   def withEmbeddingsDF(
       spark: SparkSession,
@@ -148,8 +101,7 @@ object Linker {
     mentions.toDF()
       .join(t.hint("SHUFFLE_HASH"), Seq("doc_id"))
       .withColumn("m_emb", embedMentionUdf(cl, col("mention"), cr))
-      // contexts are stored only for the cross-encoder rerank, same
-      // rule as withEmbeddings(keepCtx)
+      // contexts are stored only for the cross-encoder rerank
       .withColumn("ctx_left", if (keepCtx) cl else lit(""))
       .withColumn("ctx_right", if (keepCtx) cr else lit(""))
       .select("doc_id", "annset", "ann_id", "mention_type", "start", "end",
@@ -172,7 +124,8 @@ object Linker {
     */
   def candidates(spark: SparkSession, linkable: DataFrame,
                  registry: DataFrame, rerank: Boolean = false,
-                 registryRows: Option[Long] = None): DataFrame = {
+                 registryRows: Option[Long] = None,
+                 broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     import spark.implicits._
 
     // ltitle computed ONCE per registry row (r6): the lev_sim feature
@@ -333,25 +286,19 @@ object Linker {
   def linkWithCandidates(
       spark: SparkSession, mentions: Dataset[Mention], docText: DataFrame,
       registry: DataFrame, rerank: Boolean = false,
-      registryRows: Option[Long] = None): (DataFrame, DataFrame) = {
+      registryRows: Option[Long] = None,
+      broadcastMaxRows: Long = BroadcastMaxRows): (DataFrame, DataFrame) = {
     import spark.implicits._
 
     // mention-scale with embeddings + contexts — the widest hot frame;
     // Ckpt.storage (not .cache()) keeps it out of the executor storage
     // pools on the multi-executor bench (see Pipeline.run note).
     // COLUMN filters + row-based embed join (r4): the persisted frame
-    // is consumed by three branches, and both the old typed cogroup and
-    // typed `.filter(_.skip)` paid full object SerDe per row per pass —
+    // is consumed by three branches, and a typed cogroup or typed
+    // `.filter(_.skip)` would pay full object SerDe per row per pass —
     // the row join + codegen filters keep everything in Tungsten.
-    // SPARK_GRAFT_EMBED_COGROUP=1 restores the typed cogroup (perf A/B
-    // only — the two paths are row-identical).
-    val useCogroup = sys.env.get("SPARK_GRAFT_EMBED_COGROUP").contains("1") ||
-      sys.props.get("graft.linker.embedCogroup").contains("1")
-    val allDf =
-      (if (useCogroup)
-        withEmbeddings(spark, mentions, docText, keepCtx = rerank).toDF()
-      else withEmbeddingsDF(spark, mentions, docText, keepCtx = rerank))
-        .persist(graft.Ckpt.storage)
+    val allDf = withEmbeddingsDF(spark, mentions, docText, keepCtx = rerank)
+      .persist(graft.Ckpt.storage(spark))
 
     // skip-path: dictionary-resolved or DATE mentions bypass scoring
     // (reference linking.skip, TrieNER.py:79-81 / spacyner/main.py:51-54).
@@ -372,7 +319,8 @@ object Linker {
     // resolve the registry row count ONCE per run — both the candidate
     // join and the hydrate join gate their broadcast on it
     val regRows = registryRows.getOrElse(registry.count())
-    val cands = candidates(spark, linkable, registry, rerank, Some(regRows))
+    val cands = candidates(spark, linkable, registry, rerank, Some(regRows),
+      broadcastMaxRows)
 
     // ONE aggregation derives everything per mention — the candidate
     // list, the top candidate, and the NIL features. (An earlier shape
@@ -468,6 +416,8 @@ object Linker {
 
   /** Linking decisions only (see [[linkWithCandidates]]). */
   def link(spark: SparkSession, mentions: Dataset[Mention], docText: DataFrame,
-           registry: DataFrame, rerank: Boolean = false): DataFrame =
-    linkWithCandidates(spark, mentions, docText, registry, rerank)._1
+           registry: DataFrame, rerank: Boolean = false,
+           broadcastMaxRows: Long = BroadcastMaxRows): DataFrame =
+    linkWithCandidates(spark, mentions, docText, registry, rerank,
+      broadcastMaxRows = broadcastMaxRows)._1
 }

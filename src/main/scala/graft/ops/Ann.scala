@@ -38,10 +38,10 @@ object Ann {
     * the cap are split by a SECOND sign level (the next `dims` coords /
     * next `planes` hyperplanes); refined buckets still above the cap are
     * dropped from pair generation (graceful recall loss, never a blowup).
-    * Overridable for tests via system property.
+    * The LSH kernels take it as a defaulted parameter so a test can
+    * exercise the cap on a small input.
     */
-  def BucketCap: Int =
-    sys.props.get("graft.ann.bucketCap").map(_.toInt).getOrElse(10000)
+  val BucketCap: Int = 10000
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * murmur-based in [-1, 1).
@@ -103,7 +103,8 @@ object Ann {
     * for the correctness oracle AND whole-stage-codegen'd (no UDF).
     * Hot buckets are refined/capped (see [[BucketCap]]).
     */
-  def signLshTopK(vectors: DataFrame, k: Int, dims: Int = 8): DataFrame = {
+  def signLshTopK(vectors: DataFrame, k: Int, dims: Int = 8,
+                  bucketCap: Int = BucketCap): DataFrame = {
     def signBits(from: Int): org.apache.spark.sql.Column =
       (0 until dims).map { j =>
         // past-the-end coords (short vectors) contribute bit 0. `get` is
@@ -116,7 +117,7 @@ object Ann {
     val b = vectors.select(col("id"), col("vec"))
       .withColumn("bucket", signBits(0))
       .withColumn("bucket2", signBits(dims))
-    val scored = cappedBucketPairs(b, BucketCap)
+    val scored = cappedBucketPairs(b, bucketCap)
       .withColumn("cos", Similarity.cosineCol(col("qv"), col("cv")))
     TopK.topKPerKey(scored, Seq("query_id"), "cos", "neighbor_id", k)
       .select("query_id", "neighbor_id", "cos", "rnk")
@@ -167,11 +168,12 @@ object Ann {
       .select("query_id", "neighbor_id", "cos", "rnk")
   }
 
-  def lshTopK(vectors: DataFrame, k: Int, planes: Int = 6): DataFrame = {
+  def lshTopK(vectors: DataFrame, k: Int, planes: Int = 6,
+              bucketCap: Int = BucketCap): DataFrame = {
     val b = vectors.select(col("id"), col("vec"))
       .withColumn("bucket", bucketUdf(col("vec"), lit(planes), lit(0)))
       .withColumn("bucket2", bucketUdf(col("vec"), lit(planes), lit(planes)))
-    val scored = cappedBucketPairs(b, BucketCap)
+    val scored = cappedBucketPairs(b, bucketCap)
       .withColumn("cos", Similarity.cosineCol(col("qv"), col("cv")))
     TopK.topKPerKey(scored, Seq("query_id"), "cos", "neighbor_id", k)
       .select("query_id", "neighbor_id", "cos", "rnk")

@@ -105,20 +105,18 @@ class GraphSpec extends SparkTestBase {
 
   test("pageRank/twoHop: broadcast path == shuffle fallback (r6 gate)") {
     // the r6 rank-vector and broadcast-hop1 paths must be bit-identical
-    // to the shuffle formulations they shortcut; force the fallback via
-    // the size-gate property and compare on the fixture graph
+    // to the shuffle formulations they shortcut; force the fallback with
+    // a zero size-gate cap and compare on the fixture graph
     val edges = Graph.symmetrize(pairs)
     val seeds = Seq(1L, 4L).toDF("vertex")
     val prLocal = Graph.pageRank(edges, 5).as[(Long, Long)].collect().toMap
     val hopLocal = Graph.twoHopFromSeeds(edges, seeds)
       .as[(Long, Long)].collect().toMap
-    System.setProperty("graft.graph.broadcastMaxRows", "0")
-    try {
-      val prDist = Graph.pageRank(edges, 5).as[(Long, Long)].collect().toMap
-      val hopDist = Graph.twoHopFromSeeds(edges, seeds)
-        .as[(Long, Long)].collect().toMap
-      assert(prDist === prLocal)
-      assert(hopDist === hopLocal)
-    } finally System.clearProperty("graft.graph.broadcastMaxRows")
+    val prDist = Graph.pageRank(edges, 5, broadcastMaxRows = 0)
+      .as[(Long, Long)].collect().toMap
+    val hopDist = Graph.twoHopFromSeeds(edges, seeds, broadcastMaxRows = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(prDist === prLocal)
+    assert(hopDist === hopLocal)
   }
 }

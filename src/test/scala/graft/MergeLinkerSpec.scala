@@ -204,25 +204,24 @@ class MergeLinkerSpec extends SparkTestBase {
     val text = Pipeline.docText(spark, docs)
     val mentions = TrieNer.mentions(spark, docs)
     val reg = graft.kb.Registry.seed(spark).toDF()
-    def links() = Linker.link(spark, mentions, text, reg)
+    def links(cap: Long) = Linker.link(spark, mentions, text, reg,
+        broadcastMaxRows = cap)
       .select("doc_id", "mention", "entity_id", "is_nil", "url").collect()
       .map(_.toString).sorted.toSeq
-    val broadcastPath = links()
-    sys.props("graft.linker.broadcastMaxRows") = "0" // force salted path
-    try {
-      assert(links() == broadcastPath,
-        "salted token join must reproduce the broadcast join exactly")
-      // past the gate NOTHING may carry an explicit broadcast hint — the
-      // candidate join salts and the J2 hydrate join (registry id/title/
-      // type_) falls back to a plain shuffle join; at a 10^8-entity
-      // registry an unconditional broadcast(reg) would OOM the driver
-      val analyzed = Linker.link(spark, mentions, text, reg)
-        .queryExecution.analyzed.toString
-      // the SHUFFLE_HASH hint on the embed join is fine — only a
-      // BROADCAST hint would blow up at a 10^8-entity registry
-      assert(!analyzed.toLowerCase.contains("strategy=broadcast"),
-        "no broadcast hints allowed when registry exceeds broadcastMaxRows")
-    } finally sys.props.remove("graft.linker.broadcastMaxRows")
+    val broadcastPath = links(Linker.BroadcastMaxRows)
+    // cap 0 forces the salted path
+    assert(links(0) == broadcastPath,
+      "salted token join must reproduce the broadcast join exactly")
+    // past the gate NOTHING may carry an explicit broadcast hint — the
+    // candidate join salts and the J2 hydrate join (registry id/title/
+    // type_) falls back to a plain shuffle join; at a 10^8-entity
+    // registry an unconditional broadcast(reg) would OOM the driver
+    val analyzed = Linker.link(spark, mentions, text, reg, broadcastMaxRows = 0)
+      .queryExecution.analyzed.toString
+    // the SHUFFLE_HASH hint on the embed join is fine — only a
+    // BROADCAST hint would blow up at a 10^8-entity registry
+    assert(!analyzed.toLowerCase.contains("strategy=broadcast"),
+      "no broadcast hints allowed when registry exceeds broadcastMaxRows")
   }
 
   test("linker: NIL features carry max_cross (reference LR parity)") {
