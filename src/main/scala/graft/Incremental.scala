@@ -84,36 +84,47 @@ object Incremental {
   def run(spark: SparkSession, docs: Dataset[InputDoc], workDir: String,
           numBatches: Int, upToBatch: Int = Int.MaxValue): Tables = {
     import spark.implicits._
-    val t = Tables(workDir)
-
-    if (!t.registry.exists) t.registry.overwrite(Registry.seed(spark).toDF())
-
     val batched = withBatch(docs, numBatches).cache()
-    val done = doneBatches(spark, t)
-    val pinned = pinnedSnapshots(spark, t)
-    var ran = 0
-
-    (0 until numBatches).foreach { b =>
-      if (!done.contains(b) && ran < upToBatch) {
-        val batchDocs = batched.filter(col("batch_id") === b)
-          .drop("batch_id").as[InputDoc]
-        processBatch(spark, t, batchDocs, b, pinned.get(b))
-        ran += 1
-      }
-    }
+    val t = runPending(spark, workDir, 0 until numBatches, upToBatch)(b =>
+      batched.filter(col("batch_id") === b).drop("batch_id").as[InputDoc])
     batched.unpersist()
     t
   }
 
+  /** The resume protocol shared by [[run]] and
+    * [[graft.streaming.StreamKb.populate]]: seed the registry on first
+    * use, skip batches whose done row exists, and run the others (at most
+    * `limit`) in order, each against the registry snapshot a crashed
+    * attempt pinned, if any.
+    */
+  def runPending(spark: SparkSession, workDir: String, batchIds: Seq[Int],
+                 limit: Int = Int.MaxValue)(docsOf: Int => Dataset[InputDoc]): Tables = {
+    val t = Tables(workDir)
+    if (!t.registry.exists) t.registry.overwrite(Registry.seed(spark).toDF())
+    val done = doneBatches(spark, t)
+    val pinned = pinnedSnapshots(spark, t)
+    batchIds.filterNot(done).take(limit)
+      .foreach(b => processBatch(spark, t, docsOf(b), b, pinned.get(b)))
+    t
+  }
+
+  /** Columns of the `mentions` table, selected from `Pipeline.run`'s
+    * linked frame.
+    */
+  private val MentionColumns = Seq("doc_id", "annset", "ann_id", "mention_type",
+    "start", "end", "mention", "skip", "entity_id", "title", "entity_type",
+    "bi_score", "nil_score", "is_nil", "url", "name").map(col)
+
   /** One micro-batch of KB population against `t`: pin the registry
     * snapshot, run the pipeline, MERGE results, append metrics, and
-    * commit the lineage "done" row LAST (the resume point). Shared by
-    * the batch loop above and the Structured Streaming front-end
-    * ([[graft.streaming.StreamKb.populate]]) — the crash/replay protocol
-    * is identical: a replay of batch `b` (foreachBatch re-invocation or
-    * loop resume) is skipped if its done row exists, and otherwise
-    * re-runs against the PINNED registry snapshot, making the keyed
-    * MERGEs byte-identical to an uninterrupted run.
+    * commit the lineage "done" row LAST (the resume point). The batch
+    * loop and the Structured Streaming front-end
+    * ([[graft.streaming.StreamKb.populate]]) both reach it through
+    * [[runPending]], so the crash/replay protocol is identical: a
+    * replay of batch `b` (foreachBatch re-invocation or loop resume) is
+    * skipped if its done row exists, and otherwise re-runs against the
+    * PINNED registry snapshot, making the keyed MERGEs byte-identical
+    * to an uninterrupted run.
     */
   def processBatch(spark: SparkSession, t: Tables, batchDocs: Dataset[InputDoc],
                    b: Int, pinnedSnap: Option[Int]): Unit = {
@@ -134,10 +145,7 @@ object Incremental {
     val res = Pipeline.run(spark, batchDocs, registry)
 
     t.documents.mergeInto(spark, batchDocs.toDF(), Seq("doc_id"))
-    t.mentions.mergeInto(spark,
-      res.linked.select("doc_id", "annset", "ann_id", "mention_type",
-        "start", "end", "mention", "skip", "entity_id", "title",
-        "entity_type", "bi_score", "nil_score", "is_nil", "url", "name"),
+    t.mentions.mergeInto(spark, res.linked.select(MentionColumns: _*),
       Seq("doc_id", "annset", "ann_id"))
     t.candidates.mergeInto(spark, res.candidates,
       Seq("doc_id", "annset", "ann_id"))
@@ -197,7 +205,7 @@ object Incremental {
     // would link mentions to entities created by an attempt that "never
     // happened", a state no uninterrupted execution can produce. A
     // dangling start row for the SAME id-set carries the pin to reuse.
-    val snapId = latestDanglingSnap(spark, t, idList)
+    val snapId = danglingReannotations(spark, t).get(idList).flatten
       .getOrElse(t.registry.latestSnapshot.get)
     val registry = t.registry.readSnapshot(spark, snapId).cache()
     val res = Pipeline.run(spark, docs, registry)
@@ -211,10 +219,7 @@ object Incremental {
     t.lineage.append(Seq((-1, "reannotate_start", marker))
       .toDF("batch_id", "stage", "status"))
     val delKeys = docIds.toDF("doc_id")
-    t.mentions.replaceKeys(spark, delKeys,
-      res.linked.select("doc_id", "annset", "ann_id", "mention_type",
-        "start", "end", "mention", "skip", "entity_id", "title",
-        "entity_type", "bi_score", "nil_score", "is_nil", "url", "name"))
+    t.mentions.replaceKeys(spark, delKeys, res.linked.select(MentionColumns: _*))
     t.candidates.replaceKeys(spark, delKeys, res.candidates)
     t.triples.replaceKeys(spark, delKeys, res.triples)
     t.registry.mergeInto(spark, res.newEntities, Seq("id", "indexer"))
@@ -224,11 +229,6 @@ object Incremental {
     t
   }
 
-  /** Doc-id sets of reannotate attempts that started but never recorded
-    * completion (crash recovery: replay each with [[reannotate]] —
-    * idempotent, and the replay gets its own attempt marker so the
-    * crashed attempt's dangling start row never re-flags it).
-    */
   /** One parsed reannotate lineage row: (idList, attempt, pinned registry
     * snapshot, isStart). Tolerates all three historical marker formats —
     * "<ids>" (earliest), "<attempt>:<ids>", "<attempt>:<snap>:<ids>" —
@@ -253,21 +253,19 @@ object Incremental {
         .map(r => parseMarker(r.getString(0), r.getString(1)))
     }
 
-  /** Registry snapshot pinned by the latest UNfinished attempt for this
-    * id-set, if any (None for finished sets, unknown sets, or pre-pin
-    * marker formats — callers then pin the current snapshot).
+  /** Reannotate id-sets whose LATEST attempt (highest marker) has no
+    * done row — a completed replay supersedes a crashed attempt's
+    * dangling start — each with the registry snapshot that attempt
+    * pinned (None for pre-pin marker formats: callers then pin the
+    * current snapshot).
     */
-  private def latestDanglingSnap(spark: SparkSession, t: Tables,
-                                 idList: String): Option[Int] = {
-    val attempts = reannotateRows(spark, t).filter(_._1 == idList)
-    if (attempts.isEmpty) None
-    else {
+  private def danglingReannotations(spark: SparkSession,
+                                    t: Tables): Map[String, Option[Int]] =
+    reannotateRows(spark, t).groupBy(_._1).flatMap { case (ids, attempts) =>
       val latest = attempts.map(_._2).max
-      val latestDone = attempts.exists(a => a._2 == latest && !a._4)
-      if (latestDone) None
-      else attempts.collectFirst { case (_, `latest`, Some(s), true) => s }
+      if (attempts.exists(a => a._2 == latest && !a._4)) None
+      else Some(ids -> attempts.collectFirst { case (_, `latest`, Some(s), true) => s })
     }
-  }
 
   /** Registry snapshot ids pinned by UNFINISHED work (batches with a
     * registry_snapshot lineage row but no done row; reannotate attempts
@@ -279,14 +277,7 @@ object Incremental {
     val done = doneBatches(spark, t)
     val batchPins = pinnedSnapshots(spark, t)
       .collect { case (b, s) if !done.contains(b) => s }
-    val reannPins = reannotateRows(spark, t).groupBy(_._1).values.flatMap {
-      attempts =>
-        val latest = attempts.map(_._2).max
-        val latestDone = attempts.exists(a => a._2 == latest && !a._4)
-        if (latestDone) None
-        else attempts.collectFirst { case (_, `latest`, Some(s), true) => s }
-    }
-    (batchPins ++ reannPins).toSet
+    (batchPins ++ danglingReannotations(spark, t).values.flatten).toSet
   }
 
   /** Table maintenance for a long-lived work dir (Iceberg's
@@ -318,16 +309,12 @@ object Incremental {
     }
   }
 
-  def pendingReannotations(spark: SparkSession, workDir: String): Seq[Seq[String]] = {
-    val t = Tables(workDir)
-    // an id-set is pending iff its LATEST attempt (highest marker) has
-    // no done row — a completed replay supersedes the crashed attempt's
-    // dangling start
-    reannotateRows(spark, t).groupBy(_._1).toSeq.sortBy(_._1)
-      .flatMap { case (ids, attempts) =>
-        val latest = attempts.map(_._2).max
-        val latestDone = attempts.exists(a => a._2 == latest && !a._4)
-        if (latestDone) None else Some(ids.split(",").toSeq)
-      }
-  }
+  /** Doc-id sets of reannotate attempts that started but never recorded
+    * completion (crash recovery: replay each with [[reannotate]] —
+    * idempotent, and the replay gets its own attempt marker so the
+    * crashed attempt's dangling start row never re-flags it).
+    */
+  def pendingReannotations(spark: SparkSession, workDir: String): Seq[Seq[String]] =
+    danglingReannotations(spark, Tables(workDir)).keys.toSeq.sorted
+      .map(_.split(",").toSeq)
 }

@@ -44,13 +44,6 @@ object Pipeline {
     docs.map(d => (d.doc_id, SpanOps.assemble(d.spans))).toDF("doc_id", "text")
   }
 
-  def mediaSpans(spark: SparkSession, docs: Dataset[InputDoc]): DataFrame = {
-    import spark.implicits._
-    docs.flatMap(d => d.spans.filter(_.kind == "media")
-      .map(s => (d.doc_id, s.media_ref, s.offset)))
-      .toDF("doc_id", "media_ref", "offset")
-  }
-
   /** Run the full pipeline over an input-doc dataset against a registry
     * snapshot. Pure function of (docs, registry) — the incremental loop
     * feeds back the grown registry (see [[Incremental]]).
@@ -141,42 +134,34 @@ object Pipeline {
     // indexer/main.py:408-411): base = max registry id (fused aggregate
     // above).
 
-    // One row per NIL cluster — bounded by the distinct-surface
-    // vocabulary (breakup rule A8 caps cluster fan-in), so up to a guard
-    // it is DRIVER-SIZED: materialize as a LocalRelation (id assignment
-    // in plain Scala) instead of a window + checkpoint. This removes two
-    // eager jobs and turns every downstream cluster join into a
-    // broadcast of a local table. Beyond the guard, fall back to the
-    // distributed window formulation.
-    val clusterGuard = 200000
-    val clusterHead = clustersRaw.take(clusterGuard + 1)
+    // One row per NIL cluster, with ids following the cluster_key order
+    // on both paths. On NilCluster's local path there are at most
+    // LocalLimit clusters (one per surface at most), so the id assignment
+    // runs in plain Scala over a LocalRelation instead of a window +
+    // checkpoint — two fewer eager jobs, and every downstream cluster
+    // join broadcasts a local table. The distributed path keeps the
+    // clusters distributed.
+    val nilIdField = org.apache.spark.sql.types.StructField("nil_id",
+      org.apache.spark.sql.types.LongType, nullable = false)
+    val clusterSchema = org.apache.spark.sql.types.StructType(
+      clustersRaw.schema.fields :+ nilIdField)
     val clusters: DataFrame =
-      if (clusterHead.length <= clusterGuard) {
+      if (clusterRes.isLocal) {
         import org.apache.spark.sql.Row
-        val sorted = clusterHead.sortBy(_.getAs[String]("cluster_key"))
+        val sorted = clustersRaw.collect().sortBy(_.getAs[String]("cluster_key"))
         val rows = sorted.zipWithIndex.map { case (r, i) =>
           Row.fromSeq(r.toSeq :+ (base + i + 1L))
         }
-        val schema = org.apache.spark.sql.types.StructType(
-          clustersRaw.schema.fields :+
-            org.apache.spark.sql.types.StructField("nil_id",
-              org.apache.spark.sql.types.LongType, nullable = false))
         spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+          spark.sparkContext.parallelize(rows.toSeq, 1), clusterSchema)
       } else {
-        // distributed fallback (>200k clusters): a global
-        // Window.orderBy would funnel every row through ONE partition;
-        // rangepartition-sort + zipWithIndex keeps the id assignment
-        // parallel and deterministic (ids follow the cluster_key order).
-        val sortedDf = clustersRaw.sort(col("cluster_key"))
-        val schema = org.apache.spark.sql.types.StructType(
-          clustersRaw.schema.fields :+
-            org.apache.spark.sql.types.StructField("nil_id",
-              org.apache.spark.sql.types.LongType, nullable = false))
-        val withIds = sortedDf.rdd.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (base + i + 1L))
+        // a global Window.orderBy would funnel every row through ONE
+        // partition; rangepartition-sort + zipWithIndex keeps the id
+        // assignment parallel and deterministic
+        val withIds = clustersRaw.sort(col("cluster_key")).rdd.zipWithIndex.map {
+          case (r, i) => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (base + i + 1L))
         }
-        Ckpt(spark.createDataFrame(withIds, schema))
+        Ckpt(spark.createDataFrame(withIds, clusterSchema))
       }
 
     val newEntities = clusters.select(

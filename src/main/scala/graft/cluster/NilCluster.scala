@@ -2,7 +2,6 @@ package graft.cluster
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.Similarity
 import graft.link.Embed
 
@@ -24,14 +23,28 @@ import graft.link.Embed
   *
   * SCALE DESIGN. Clustering runs over DISTINCT lowercase surfaces, never
   * raw mentions: 10^12 mentions collapse to the surface vocabulary first
-  * (one distinct + one broadcast-join back). The surface set is usually
-  * small enough to cluster on the driver (deterministic union-find over
-  * BLOCKED candidate pairs — same blocking as the distributed path, no
-  * all-pairs); above `LocalLimit` surfaces the identical stages run
-  * distributed: blocked pair join + [[ConnectedComponents]] min-id
-  * label propagation. Both paths share the blocking, the metrics, and
-  * the min-surface component key, so they produce identical clusters
-  * (property-tested).
+  * (one distinct + one broadcast-join back). Only stage 1 is global, and
+  * it is the only stage with two drivers: union-find on the driver up to
+  * `LocalLimit` surfaces, [[ConnectedComponents]] min-id label
+  * propagation above it. Both take their candidate pairs from one rule
+  * ([[blockKeys]] blocks, blocks above `BlockCap` dropped: [[blockPairs]])
+  * and one metric ([[stringLink]]).
+  *
+  * Every later stage is ONE pure kernel over one group, written once and
+  * run by both paths — in memory on the driver path, inside
+  * `groupByKey(...).flatMapGroups` on the distributed path:
+  *   [[stage2]]  one stage-1 component -> cosine sub-clusters;
+  *   [[stage3]]  one [[signBucket]] of sub-cluster centroids -> merges;
+  *   [[finish]]  one final cluster -> breakup, key (min surface), center.
+  * So the two paths give identical keys and centers (tested).
+  *
+  * Scale bound of the distributed path: a group must fit in one task —
+  * one stage-1 component, one sign bucket of centroids, or one final
+  * cluster. The pair count stays bounded: a component or cluster above
+  * `BlockCap` members switches from all pairs to banded sign-LSH
+  * (stage 2) or blocking (breakup), with buckets and blocks above the
+  * cap dropped, and its center to the member nearest the centroid.
+  * Stage 3 compares all centroid pairs within one bucket.
   */
 object NilCluster {
 
@@ -50,12 +63,12 @@ object NilCluster {
   val BreakupSize = 25
   val BreakupThreshold = 0.1
 
-  /** Max members per blocking key before the block is dropped from pair
-    * generation. A head token ("the"-class surface token) otherwise makes
-    * the within-block pair join quadratic (10^6 members -> 10^12 pairs).
-    * Surfaces in an overfull block still pair through their OTHER keys
-    * (remaining tokens + 2-char prefix), so recall degrades gracefully
-    * and identically on the local and distributed paths. The surface
+  /** Max members per group before all-pairs work is replaced by a
+    * bounded rule. For stage-1 blocks: a block above the cap is dropped
+    * from pair generation — a head token ("the"-class surface token)
+    * otherwise makes the within-block pairs quadratic (10^6 members ->
+    * 10^12 pairs); surfaces in an overfull block still pair through their
+    * OTHER keys (remaining tokens + 2-char prefix). The surface
     * clusterers take it as a defaulted parameter so a test can exercise
     * the cap on a small input.
     */
@@ -75,6 +88,19 @@ object NilCluster {
   def blockKeys(surface: String): Seq[String] =
     (surface.split("\\s+").filter(_.nonEmpty) :+ surface.take(2)).distinct.toSeq
 
+  /** Stage-1 candidate rule for ONE block: all pairs (a < b) of its
+    * members, or none if it holds more than `cap`. Reads at most cap+1
+    * members, so a hot block costs O(cap) memory.
+    */
+  private def blockPairs[T: Ordering](block: Iterator[T], cap: Int): Iterator[(T, T)] = {
+    val v = block.take(cap + 1).toVector
+    if (v.length > cap) Iterator.empty else allPairs(v.sorted)
+  }
+
+  /** Stage-1 link test, the one metric both drivers apply. */
+  private def stringLink(a: String, b: String): Boolean =
+    Similarity.damLevNorm(a, b) < Stage1Threshold
+
   /** Sign-LSH bucket over the leading 8 dims (stage-3 blocking). A
     * centroid pair with cosine distance < 0.05 is near-parallel, so its
     * leading-dim signs almost surely agree; documented approximation of
@@ -88,17 +114,15 @@ object NilCluster {
   }
 
   /** Banded sign-LSH for stage-2 pair generation inside OVERSIZE stage-1
-    * components (both paths use the same rule, keeping local/distributed
-    * clusters identical). One axis-aligned 8-bit bucket is far too
-    * selective for the 0.5-cosine stage-2 threshold (θ<60° ⇒ per-plane
-    * collision ≥ 1−θ/π ≈ 2/3, so an 8-plane bucket collides with
-    * probability ≈ (2/3)^8 ≈ 4%). Instead: `SubBands` independent bands
-    * of `SubBandPlanes` seeded random hyperplanes each — a true pair
-    * shares ≥1 band with probability ≥ 1−(1−(2/3)^4)^8 ≈ 0.83, and
-    * component transitivity (union-find / connected components) recovers
-    * most of the remainder through chains. Per-band buckets above
-    * BlockCap are still dropped, so pair volume stays ≤ bands·cap² per
-    * component.
+    * components. One axis-aligned 8-bit bucket is far too selective for
+    * the 0.5-cosine stage-2 threshold (θ<60° ⇒ per-plane collision ≥
+    * 1−θ/π ≈ 2/3, so an 8-plane bucket collides with probability ≈
+    * (2/3)^8 ≈ 4%). Instead: `SubBands` independent bands of
+    * `SubBandPlanes` seeded random hyperplanes each — a true pair shares
+    * ≥1 band with probability ≥ 1−(1−(2/3)^4)^8 ≈ 0.83, and component
+    * transitivity (union-find) recovers most of the remainder through
+    * chains. Per-band buckets above BlockCap are still dropped, so pair
+    * volume stays ≤ bands·cap² per component.
     */
   val SubBands = 8
   val SubBandPlanes = 4
@@ -121,6 +145,93 @@ object NilCluster {
     b
   }
 
+  private def allPairs[T](v: IndexedSeq[T]): Iterator[(T, T)] =
+    for (a <- v.indices.iterator; b <- (a + 1) until v.length) yield (v(a), v(b))
+
+  /** Single linkage over candidate pairs of `n` items -> label per item
+    * (min member index). `near` runs only for pairs not yet joined.
+    */
+  private def link(n: Int, pairs: Iterator[(Int, Int)])(
+      near: (Int, Int) => Boolean): Array[Int] = {
+    val uf = new UnionFind(n)
+    pairs.foreach { case (a, b) => if (uf.find(a) != uf.find(b) && near(a, b)) uf.union(a, b) }
+    uf.labels
+  }
+
+  /** Member indices of each label, ascending within a group. */
+  private def groups(labels: Array[Int]): Iterable[IndexedSeq[Int]] =
+    labels.indices.groupBy(labels(_)).values
+
+  /** Candidate pairs (indices) of a surface set under the stage-1 rule. */
+  private def blockedPairs(surfaces: IndexedSeq[String], cap: Int): Iterator[(Int, Int)] = {
+    val byKey = scala.collection.mutable.HashMap.empty[String, List[Int]]
+    surfaces.indices.foreach { i =>
+      blockKeys(surfaces(i)).foreach(k => byKey(k) = i :: byKey.getOrElse(k, Nil))
+    }
+    byKey.valuesIterator.flatMap(b => blockPairs(b.iterator, cap))
+  }
+
+  /** L2-normalized mean, summed in member order. */
+  private def centroid(embs: IndexedSeq[Array[Float]]): Array[Float] = {
+    val acc = new Array[Double](embs.head.length)
+    embs.foreach { e => var i = 0; while (i < acc.length) { acc(i) += e(i); i += 1 } }
+    Embed.l2(acc.map(x => (x / embs.length).toFloat))
+  }
+
+  /** Stage 2 over ONE stage-1 component (members sorted by surface) ->
+    * sub-cluster label per member. All pairs up to `cap` members; above
+    * it, pairs sharing a [[signBand]] bucket, buckets above `cap` dropped.
+    */
+  private def stage2(embs: IndexedSeq[Array[Float]], cap: Int): Array[Int] = {
+    val idx = embs.indices
+    val pairs =
+      if (idx.length <= cap) allPairs(idx)
+      else (0 until SubBands).iterator.flatMap { g =>
+        idx.groupBy(i => signBand(embs(i), g)).valuesIterator
+          .filter(_.length <= cap).flatMap(allPairs)
+      }
+    link(idx.length, pairs)((a, b) =>
+      Similarity.cosineDist(embs(a), embs(b)) < Stage2Threshold)
+  }
+
+  /** Stage 3 over ONE sign bucket of sub-cluster centroids -> merge label
+    * per centroid (all pairs: a bucket holds centroids, not surfaces).
+    */
+  private def stage3(centroids: IndexedSeq[Array[Float]]): Array[Int] =
+    link(centroids.length, allPairs(centroids.indices))((a, b) =>
+      Similarity.cosineDist(centroids(a), centroids(b)) < Stage3Threshold)
+
+  /** ONE final cluster (members sorted by surface) -> (surface, key,
+    * center) per member. Above `BreakupSize` members it re-clusters at
+    * the breakup threshold: all pairs up to `cap` (the reference's rule),
+    * stage-1 blocking above it. Key = min surface of each part; center =
+    * exact 1-medoid (min summed cosine distance, ties to the smaller
+    * surface) up to `cap` members, else the member nearest the centroid.
+    */
+  private def finish(surfaces: IndexedSeq[String], embs: IndexedSeq[Array[Float]],
+      cap: Int): Iterator[(String, String, Array[Float])] = {
+    val n = surfaces.length
+    val parts =
+      if (n <= BreakupSize) Iterable(surfaces.indices)
+      else groups(link(n,
+        if (n <= cap) allPairs(surfaces.indices) else blockedPairs(surfaces, cap)
+      )((a, b) => Similarity.damLevNorm(surfaces(a), surfaces(b)) < BreakupThreshold))
+    parts.iterator.flatMap { ms =>
+      val center =
+        if (ms.length == 1) embs(ms.head)
+        else if (ms.length <= cap) embs(ms.map { i =>
+          var d = 0.0
+          ms.foreach { j => if (i != j) d += Similarity.cosineDist(embs(i), embs(j)) }
+          (d, i)
+        }.reduceLeft((best, c) => if (c._1 < best._1 - 1e-12) c else best)._2)
+        else {
+          val c = centroid(ms.map(embs))
+          embs(ms.minBy(i => Similarity.cosineDist(embs(i), c)))
+        }
+      ms.iterator.map(i => (surfaces(i), surfaces(ms.head), center))
+    }
+  }
+
   // ---------------------------------------------------------------------
   // driver-side path (surface set fits on driver)
   // ---------------------------------------------------------------------
@@ -131,305 +242,67 @@ object NilCluster {
     */
   def clusterSurfacesLocal(surfacesIn: Seq[String],
       blockCap: Int = BlockCap): Map[String, (String, Array[Float])] = {
-    val surfaces = surfacesIn.distinct.sorted.toArray
-    val n = surfaces.length
-    if (n == 0) return Map.empty
+    val surfaces = surfacesIn.distinct.sorted.toIndexedSeq
     val embs = surfaces.map(Embed.embed(_))
-
-    def blockedPairs(idx: Seq[Int]): Iterator[(Int, Int)] = {
-      val byKey = scala.collection.mutable.HashMap.empty[String, List[Int]]
-      idx.foreach { i =>
-        blockKeys(surfaces(i)).foreach(k => byKey(k) = i :: byKey.getOrElse(k, Nil))
+    val c1 = link(surfaces.length, blockedPairs(surfaces, blockCap))((a, b) =>
+      stringLink(surfaces(a), surfaces(b)))
+    // sub-clusters as ascending global indices, then their centroids
+    val subs = groups(c1).toIndexedSeq.flatMap { comp =>
+      groups(stage2(comp.map(embs), blockCap)).map(_.map(comp))
+    }
+    val cents = subs.map(s => centroid(s.map(embs)))
+    val finals = subs.indices.groupBy(i => signBucket(cents(i))).values.iterator
+      .flatMap { bucket =>
+        groups(stage3(bucket.map(cents))).map(_.flatMap(j => subs(bucket(j))).sorted)
       }
-      byKey.valuesIterator
-        .filter(_.size <= blockCap) // same hot-block cap as distributed
-        .flatMap { is =>
-          val v = is.sorted.toArray
-          for (a <- v.indices.iterator; b <- (a + 1) until v.length)
-            yield (v(a), v(b))
-        }
-    }
-
-    // stage 1: string eps-graph over blocked pairs
-    val uf1 = new UnionFind(n)
-    blockedPairs(0 until n).foreach { case (a, b) =>
-      if (uf1.find(a) != uf1.find(b) &&
-          Similarity.damLevNorm(surfaces(a), surfaces(b)) < Stage1Threshold)
-        uf1.union(a, b)
-    }
-    val c1 = uf1.labels
-
-    // stage 2: cosine sub-clusters within each string cluster. Oversize
-    // components (> BlockCap) generate pairs through banded sign-LSH
-    // ([[signBand]]) instead of all-pairs — the SAME rule as the
-    // distributed path, so both paths enumerate the same pair set.
-    val uf2 = new UnionFind(n)
-    c1.zipWithIndex.groupBy(_._1).values.foreach { members =>
-      val ms = members.map(_._2).sorted
-      val pairs: Iterator[(Int, Int)] =
-        if (ms.length <= blockCap)
-          for (x <- ms.indices.iterator; y <- (x + 1) until ms.length)
-            yield (ms(x), ms(y))
-        else
-          (0 until SubBands).iterator.flatMap { g =>
-            ms.groupBy(i => signBand(embs(i), g)).toSeq.sortBy(_._1)
-              .iterator.map(_._2)
-              .filter(_.length <= blockCap)
-              .flatMap { grp =>
-                val v = grp.sorted
-                for (x <- v.indices.iterator; y <- (x + 1) until v.length)
-                  yield (v(x), v(y))
-              }
-          }
-      pairs.foreach { case (a, b) =>
-        if (uf2.find(a) != uf2.find(b) &&
-            Similarity.cosineDist(embs(a), embs(b)) < Stage2Threshold)
-          uf2.union(a, b)
-      }
-    }
-    // sub-cluster id respects stage-1 boundaries by construction
-    val c2 = uf2.labels
-
-    // stage 3: centroid regrouping across sub-clusters (sign buckets)
-    val subIds = c2.distinct.sorted
-    val centroid: Map[Int, Array[Float]] = subIds.map { s =>
-      val ms = (0 until n).filter(c2(_) == s)
-      val acc = new Array[Double](embs(ms.head).length)
-      ms.foreach { m => var i = 0; while (i < acc.length) { acc(i) += embs(m)(i); i += 1 } }
-      s -> Embed.l2(acc.map(x => (x / ms.size).toFloat))
-    }.toMap
-    val ufSub = new UnionFind(n) // union on representative indices
-    subIds.groupBy(s => signBucket(centroid(s))).values.foreach { group =>
-      val g = group.sorted
-      for (x <- g.indices; y <- (x + 1) until g.length) {
-        val (a, b) = (g(x), g(y))
-        if (Similarity.cosineDist(centroid(a), centroid(b)) < Stage3Threshold)
-          ufSub.union(a, b)
-      }
-    }
-    var c3 = (0 until n).map(i => ufSub.find(c2(i))).toArray
-
-    // breakup of oversize clusters at the tighter string threshold
-    val bySize = c3.zipWithIndex.groupBy(_._1)
-    bySize.values.filter(_.length > BreakupSize).foreach { members =>
-      val ms = members.map(_._2).sorted
-      val local = new UnionFind(n)
-      blockedPairs(ms.toIndexedSeq).foreach { case (a, b) =>
-        if (local.find(a) != local.find(b) &&
-            Similarity.damLevNorm(surfaces(a), surfaces(b)) < BreakupThreshold)
-          local.union(a, b)
-      }
-      ms.foreach(i => c3(i) = local.find(i))
-    }
-
-    // final components; key = min surface; center = 1-medoid (A4)
-    val comps = c3.zipWithIndex.groupBy(_._1).values.map(_.map(_._2).sorted)
-    comps.flatMap { ms =>
-      val key = surfaces(ms.head) // ms sorted, surfaces sorted => min surface
-      val center =
-        if (ms.length == 1) embs(ms.head)
-        else {
-          // medoid: min summed cosine distance, tie-break surface asc
-          var best = ms.head
-          var bestD = Double.MaxValue
-          ms.foreach { i =>
-            var d = 0.0
-            ms.foreach { j => if (i != j) d += Similarity.cosineDist(embs(i), embs(j)) }
-            if (d < bestD - 1e-12 ||
-                (math.abs(d - bestD) <= 1e-12 && surfaces(i) < surfaces(best))) {
-              best = i; bestD = d
-            }
-          }
-          embs(best)
-        }
-      ms.map(i => surfaces(i) -> (key, center))
-    }.toMap
+    finals.flatMap(ms => finish(ms.map(surfaces), ms.map(embs), blockCap))
+      .map { case (s, k, c) => s -> (k, c) }.toMap
   }
 
   // ---------------------------------------------------------------------
   // distributed path (huge surface vocabularies)
   // ---------------------------------------------------------------------
 
-  private val damLevNormUdf = udf((a: String, b: String) => Similarity.damLevNorm(a, b))
-  private val cosDistUdf =
-    udf((a: Seq[Float], b: Seq[Float]) => Similarity.cosineDist(a.toArray, b.toArray))
-  private val embedUdf = udf((s: String) => Embed.embed(s))
-  private val signBucketUdf = udf((v: Seq[Float]) => signBucket(v.toArray))
-  private val signBandUdf = udf((v: Seq[Float], g: Int) => signBand(v.toArray, g))
-
-  private def blockedPairsDF(surfaces: DataFrame, blockCap: Int): DataFrame = {
-    val withKeys = surfaces
-      .withColumn("bkey", explode(array_union(
-        array_distinct(split(col("surface"), "\\s+")),
-        array(substring(col("surface"), 1, 2)))))
-    // hot-block cap (same rule/constant as the local path): drop keys
-    // whose membership exceeds BlockCap BEFORE the self-join — one tiny
-    // aggregate instead of a quadratic blowup on stop-token blocks
-    val keyCounts = withKeys.groupBy("bkey")
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") <= blockCap)
-      .select("bkey")
-    val capped = withKeys.join(keyCounts, Seq("bkey"))
-    val a = capped.select(col("bkey"), col("surface").as("src"))
-    val b = capped.select(col("bkey"), col("surface").as("dst"))
-    a.join(b, Seq("bkey"))
-      .filter(col("src") < col("dst"))
-      .select("src", "dst").distinct()
-  }
-
   /** Distributed surface clustering -> DataFrame(surface, cluster_key,
-    * center). Same stages/metrics/keys as the local path.
+    * center). Stage 1 by label propagation, then the same kernels as the
+    * local path, one group per `flatMapGroups` call.
     */
   def clusterSurfacesDistributed(spark: SparkSession, surfacesDf: DataFrame,
       blockCap: Int = BlockCap): DataFrame = {
-    val surfaces = surfacesDf.select("surface").distinct()
-      .withColumn("emb", embedUdf(col("surface"))).cache()
+    import spark.implicits._
+    val surfaces = surfacesDf.select("surface").distinct().as[String]
 
-    val e1 = blockedPairsDF(surfaces, blockCap)
-      .filter(damLevNormUdf(col("src"), col("dst")) < Stage1Threshold)
-    val cc1 = ConnectedComponents.run(spark,
-      surfaces.select(col("surface").as("id")), e1)
-      .withColumnRenamed("id", "surface").withColumnRenamed("comp", "c1")
-    val s1 = surfaces.join(cc1, Seq("surface"))
+    val e1 = surfaces.flatMap(s => blockKeys(s).map(k => (k, s)))
+      .groupByKey(_._1).flatMapGroups((_, block) => blockPairs(block.map(_._2), blockCap))
+      .distinct().filter(p => stringLink(p._1, p._2))
+      .toDF("src", "dst")
+    val c1 = ConnectedComponents.run(spark, surfaces.toDF("id"), e1).as[(String, String)]
 
-    // Stage-2 guard: the within-c1 self-join is quadratic in the largest
-    // stage-1 component, and a transitive chain of near-dup surfaces can
-    // grow a component without limit — BlockCap on the BLOCKS does not
-    // bound it. Components above BlockCap generate pairs through banded
-    // sign-LSH ([[signBand]]: ~0.83 per-pair recall at the stage-2
-    // threshold plus CC transitivity, vs ~4% for one 8-bit bucket);
-    // per-band buckets still above the cap are dropped — never a
-    // quadratic blowup, pair volume ≤ bands·cap² per component. Sub-cap
-    // components keep the exact all-pairs join (band/sub pinned to -1),
-    // and the local path applies the identical rule, so both paths
-    // enumerate the same pair set.
-    val c1Sizes = s1.groupBy("c1").agg(count(lit(1)).as("c1n"))
-    val s1k = s1.join(c1Sizes, Seq("c1"))
-    val s1smallK = s1k.filter(col("c1n") <= blockCap)
-      .withColumn("band", lit(-1)).withColumn("sub", lit(-1))
-    val s1bigK = s1k.filter(col("c1n") > blockCap)
-      .withColumn("band", explode(array((0 until SubBands).map(lit): _*)))
-      .withColumn("sub", signBandUdf(col("emb"), col("band")))
-    val s1kb = s1smallK.unionByName(s1bigK)
-    val subOk = s1kb.groupBy("c1", "band", "sub").agg(count(lit(1)).as("subn"))
-      .filter(col("subn") <= blockCap).select("c1", "band", "sub")
-    val s1c = s1kb.join(subOk, Seq("c1", "band", "sub"))
-    val l = s1c.select(col("c1"), col("band"), col("sub"),
-      col("surface").as("src"), col("emb").as("eA"))
-    val r = s1c.select(col("c1"), col("band"), col("sub"),
-      col("surface").as("dst"), col("emb").as("eB"))
-    val e2 = l.join(r, Seq("c1", "band", "sub")).filter(col("src") < col("dst"))
-      // a pair can collide in several bands: dedup BEFORE the cosine UDF
-      .dropDuplicates("src", "dst")
-      .filter(cosDistUdf(col("eA"), col("eB")) < Stage2Threshold)
-      .select("src", "dst")
-    val cc2 = ConnectedComponents.run(spark,
-      s1.select(col("surface").as("id")), e2)
-      .withColumnRenamed("id", "surface").withColumnRenamed("comp", "c2raw")
-    val s2 = s1.join(cc2, Seq("surface"))
-      .withColumn("c2", concat_ws("|", col("c1"), col("c2raw")))
-
-    val cent = s2.groupBy(col("c2"))
-      .agg(VectorAgg.meanVec(col("emb")).as("centroid"))
-      .withColumn("bucket", signBucketUdf(col("centroid")))
-    val cl3 = cent.select(col("bucket"), col("c2").as("src"), col("centroid").as("cA"))
-    val cr3 = cent.select(col("bucket"), col("c2").as("dst"), col("centroid").as("cB"))
-    val e3 = cl3.join(cr3, Seq("bucket")).filter(col("src") < col("dst"))
-      .filter(cosDistUdf(col("cA"), col("cB")) < Stage3Threshold)
-      .select("src", "dst")
-    val cc3 = ConnectedComponents.run(spark,
-      cent.select(col("c2").as("id")), e3)
-      .withColumnRenamed("id", "c2").withColumnRenamed("comp", "c3")
-
-    val s3 = s2.join(cc3, Seq("c2"))
-      .withColumn("cluster_key",
-        min(col("surface")).over(Window.partitionBy(col("c3"))))
-
-    // breakup: distributed variant regroups oversize clusters by the
-    // tighter threshold (same rule as local path)
-    val sizes = s3.groupBy("cluster_key").agg(countDistinct("surface").as("nsurf"))
-    val flagged = s3.join(sizes, Seq("cluster_key"))
-    val small = flagged.filter(col("nsurf") <= BreakupSize)
-    val bigPart = flagged.filter(col("nsurf") > BreakupSize).cache()
-    val result =
-      if (bigPart.isEmpty) small
-      else {
-        val bigSurf = bigPart.select(col("cluster_key").as("pk"), col("surface")).distinct()
-        // breakup pair guard: oversize-cluster groups (> BlockCap) switch
-        // from all-pairs to token/prefix blocking within the group (the
-        // breakup criterion is STRING distance, so near pairs share
-        // token or 2-char-prefix keys), capped like blockedPairsDF;
-        // sub-cap groups keep the exact all-pairs join
-        val pkSizes = bigSurf.groupBy("pk").agg(count(lit(1)).as("pn"))
-        val pkSmall = bigSurf.join(
-          pkSizes.filter(col("pn") <= blockCap).select("pk"), Seq("pk"))
-        val pkHuge = bigSurf.join(
-          pkSizes.filter(col("pn") > blockCap).select("pk"), Seq("pk"))
-        val ebSmall = pkSmall.select(col("pk"), col("surface").as("src"))
-          .join(pkSmall.select(col("pk"), col("surface").as("dst")), Seq("pk"))
-          .filter(col("src") < col("dst"))
-          .select("src", "dst")
-        val hugeKeyed = pkHuge.withColumn("bkey", explode(array_union(
-          array_distinct(split(col("surface"), "\\s+")),
-          array(substring(col("surface"), 1, 2)))))
-        val hugeOk = hugeKeyed.groupBy("pk", "bkey")
-          .agg(count(lit(1)).as("bn"))
-          .filter(col("bn") <= blockCap).select("pk", "bkey")
-        val hugeCapped = hugeKeyed.join(hugeOk, Seq("pk", "bkey"))
-        val ebHuge = hugeCapped.select(col("pk"), col("bkey"), col("surface").as("src"))
-          .join(hugeCapped.select(col("pk"), col("bkey"), col("surface").as("dst")),
-            Seq("pk", "bkey"))
-          .filter(col("src") < col("dst"))
-          .select("src", "dst").distinct()
-        val eb = ebSmall.unionByName(ebHuge)
-          .filter(damLevNormUdf(col("src"), col("dst")) < BreakupThreshold)
-        val ccb = ConnectedComponents.run(spark,
-          bigSurf.select(col("surface").as("id")), eb)
-          .withColumnRenamed("id", "surface").withColumnRenamed("comp", "new_key")
-        val rebuilt = bigPart.drop("cluster_key").join(ccb, Seq("surface"))
-          .withColumnRenamed("new_key", "cluster_key")
-        small.unionByName(rebuilt.select(small.columns.map(col): _*))
+    // stage 2 per component: (surface, sub-cluster id = its min surface,
+    // centroid on the sub-cluster's first row only)
+    val s2 = c1.groupByKey(_._2).flatMapGroups { (_, rows) =>
+      val ms = rows.map(_._1).toVector.sorted
+      val embs = ms.map(Embed.embed(_))
+      groups(stage2(embs, blockCap)).iterator.flatMap { g =>
+        val cent = centroid(g.map(embs))
+        g.iterator.map(i => (ms(i), ms(g.head), if (i == g.head) Some(cent) else None))
       }
+    }.cache()
 
-    // medoid center per final cluster. The exact medoid needs an
-    // all-pairs distance sum — quadratic in cluster size, so it is
-    // gated to clusters <= BlockCap; above the cap the center is the
-    // member nearest the centroid (O(n), deterministic tie-break) — the
-    // standard scale approximation, and within-tolerance for the NIL
-    // center's only consumer (new-entity embedding).
-    val fin = result.select("surface", "emb", "cluster_key").cache()
-    val finSizes = fin.groupBy("cluster_key").agg(count(lit(1)).as("fn"))
-    val finSmall = fin.join(
-      finSizes.filter(col("fn") <= blockCap).select("cluster_key"), Seq("cluster_key"))
-    val finBig = fin.join(
-      finSizes.filter(col("fn") > blockCap).select("cluster_key"), Seq("cluster_key"))
+    // stage 3 per sign bucket: sub-cluster id -> final cluster id
+    val c3 = s2.flatMap { case (_, sub, cent) => cent.map(c => (sub, c)) }
+      .groupByKey(r => signBucket(r._2)).flatMapGroups { (_, rows) =>
+        val subs = rows.toVector.sortBy(_._1)
+        val lab = stage3(subs.map(_._2))
+        subs.indices.iterator.map(i => (subs(i)._1, subs(lab(i))._1))
+      }.toDF("sub", "c3")
 
-    val fa = finSmall.select(col("cluster_key"), col("surface").as("sA"), col("emb").as("eA"))
-    val fb = finSmall.select(col("cluster_key"), col("surface").as("sB"), col("emb").as("eB"))
-    val sums = fa.join(fb, Seq("cluster_key"))
-      .filter(col("sA") =!= col("sB"))
-      .withColumn("d", cosDistUdf(col("eA"), col("eB")))
-      .groupBy(col("cluster_key"), col("sA")).agg(sum(col("d")).as("sumd"))
-    val medSmall = finSmall
-      .join(sums.withColumnRenamed("sA", "surface"), Seq("cluster_key", "surface"), "left")
-      .withColumn("sumd", coalesce(col("sumd"), lit(0.0)))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("cluster_key")).orderBy(col("sumd").asc, col("surface").asc)))
-      .filter(col("rn") === 1)
-      .select(col("cluster_key"), col("emb").as("center"))
-
-    val centroids = finBig.groupBy(col("cluster_key"))
-      .agg(VectorAgg.meanVec(col("emb")).as("centroid"))
-    val medBig = finBig.join(centroids, Seq("cluster_key"))
-      .withColumn("d", cosDistUdf(col("emb"), col("centroid")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("cluster_key")).orderBy(col("d").asc, col("surface").asc)))
-      .filter(col("rn") === 1)
-      .select(col("cluster_key"), col("emb").as("center"))
-
-    val med = medSmall.unionByName(medBig)
-    fin.select("surface", "cluster_key").join(med, Seq("cluster_key"))
-      .select("surface", "cluster_key", "center")
+    s2.map(r => (r._1, r._2)).toDF("surface", "sub").join(c3, "sub")
+      .select("surface", "c3").as[(String, String)]
+      .groupByKey(_._2).flatMapGroups { (_, rows) =>
+        val ms = rows.map(_._1).toVector.sorted
+        finish(ms, ms.map(Embed.embed(_)), blockCap)
+      }.toDF("surface", "cluster_key", "center")
   }
 
   // ---------------------------------------------------------------------

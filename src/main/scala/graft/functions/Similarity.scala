@@ -177,14 +177,6 @@ object Similarity {
 
   def norm(a: Array[Float]): Double = math.sqrt(dot(a, a))
 
-  /** Normalized linking score `dot / max(|a|,|b|)^2`
-    * (reference: indexer/main.py:313-317) — part of the output contract.
-    */
-  def normScore(a: Array[Float], b: Array[Float]): Double = {
-    val m = math.max(norm(a), norm(b))
-    if (m == 0) 0.0 else dot(a, b) / (m * m)
-  }
-
   def cosine(a: Array[Float], b: Array[Float]): Double = {
     val na = norm(a); val nb = norm(b)
     if (na == 0 || nb == 0) 0.0 else dot(a, b) / (na * nb)
@@ -194,8 +186,6 @@ object Similarity {
     * sklearn affinity='cosine').
     */
   def cosineDist(a: Array[Float], b: Array[Float]): Double = 1.0 - cosine(a, b)
-
-  def sigmoid(x: Double): Double = 1.0 / (1.0 + math.exp(-x))
 
   // ---- Column-level (whole-stage-codegen'd) vector kernels -------------
   // Native Catalyst expressions (VectorExpressions): measured ~50x faster

@@ -39,11 +39,6 @@ object Graph {
     pairs.select(col(a).as("src"), col(b).as("dst"))
       .unionAll(pairs.select(col(b).as("src"), col(a).as("dst")))
 
-  /** Per-vertex out-degree of `edges(src, dst)`. */
-  def outDegrees(edges: DataFrame): DataFrame =
-    edges.groupBy(col("src").as("vertex"))
-      .agg(count(lit(1)).as("outdeg"))
-
   /** Exact 2-hop neighborhoods of a seed set: for each seed, the count of
     * vertices reachable in exactly two hops that are NOT the seed itself
     * and NOT already direct neighbors (friend-of-friend semantics).

@@ -15,13 +15,6 @@ object TextAnalysis {
   def tokenCount(text: Column): Column =
     size(split(text, "\\s+"))
 
-  /** BPE-ish subword count: word-piece heuristic counting runs of
-    * letters/digits plus standalone punctuation marks, approximating a
-    * tokenizer's token count without a vocab.
-    */
-  def subwordCount(text: Column): Column =
-    size(split(text, "(?<=\\p{L})(?=\\p{N})|(?<=\\p{N})(?=\\p{L})|\\s+|(?=[^\\p{L}\\p{N}\\s])"))
-
   /** Quality features per document: length, token stats, duplication,
     * stopword ratio, punctuation ratio.
     */

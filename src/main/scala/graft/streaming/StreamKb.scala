@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StreamingQuery, Trigger}
-import graft.{Incremental, Pipeline}
+import graft.Incremental
 import graft.core.{InputDoc, SpanOps}
 
 /** Structured Streaming front-end over the KB-population engine.
@@ -61,15 +61,8 @@ object StreamKb {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[InputDoc], batchId: Long) =>
-        val spark = batch.sparkSession
-        val t = Incremental.Tables(workDir)
-        if (!t.registry.exists)
-          t.registry.overwrite(graft.kb.Registry.seed(spark).toDF())
-        val b = batchId.toInt
-        if (!Incremental.doneBatches(spark, t).contains(b)) {
-          val pinned = Incremental.pinnedSnapshots(spark, t).get(b)
-          Incremental.processBatch(spark, t, batch, b, pinned)
-        }
+        Incremental.runPending(batch.sparkSession, workDir, Seq(batchId.toInt))(_ => batch)
+        ()
       }
       .start()
   }
@@ -120,19 +113,6 @@ object StreamKb {
     wm.groupBy(window(col(tsCol), windowLen), col("mention_type"))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("ws"), col("mention_type"), col("n"))
-  }
-
-  /** Streaming NER+link WITHOUT table state — the stateless slice of the
-    * pipeline (sectioning, trie/regex NER, annotation-set merge) as a
-    * per-micro-batch transform suitable for `foreachBatch`-free sinks.
-    * Returns merged mentions for the batch; linking needs the registry
-    * and belongs in [[populate]].
-    */
-  def mentionsOf(spark: SparkSession,
-                 docs: Dataset[InputDoc]): Dataset[graft.core.Mention] = {
-    val trie = graft.ner.TrieNer.mentions(spark, docs)
-    val regex = graft.ner.RegexNer.mentions(spark, docs)
-    graft.merge.MergeAnnsets.merge(spark, Seq(trie, regex))
   }
 
   /** Open-session state: first/last event time (epoch ms) + event count. */

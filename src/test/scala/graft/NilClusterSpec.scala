@@ -29,13 +29,26 @@ class NilClusterSpec extends SparkTestBase {
     assert(a.view.mapValues(_._1).toMap == b.view.mapValues(_._1).toMap)
   }
 
+  // 30 surfaces, one stage-1 cluster above BreakupSize. "xbcdefghijkl"
+  // is within the breakup threshold of "abcdefghijkl" but shares no
+  // blocking key with it, so a breakup over blocked pairs only would
+  // split it off where the all-pairs breakup keeps it.
+  private val breakupSurfaces = {
+    val base = "abcdefghijkl"
+    (base +: ('a' to 'z').map(c => s"$base$c")) ++
+      Seq(s"$base p", "xbcdefghijkl p", "xbcdefghijkl")
+  }
+
   test("distributed path produces identical cluster keys") {
-    val df = surfaces.toDF("surface")
-    val dist = NilCluster.clusterSurfacesDistributed(spark, df)
-      .select("surface", "cluster_key").collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    val local = NilCluster.clusterSurfacesLocal(surfaces).view.mapValues(_._1).toMap
-    assert(dist == local)
+    Seq(surfaces, breakupSurfaces).foreach { input =>
+      val dist = NilCluster.clusterSurfacesDistributed(spark, input.toDF("surface"))
+        .select("surface", "cluster_key", "center").collect()
+        .map(r => r.getString(0) -> (r.getString(1), r.getSeq[Float](2))).toMap
+      val local = NilCluster.clusterSurfacesLocal(input)
+        .view.mapValues { case (k, c) => (k, c.toSeq) }.toMap
+      assert(dist.view.mapValues(_._1).toMap == local.view.mapValues(_._1).toMap)
+      assert(dist == local, "centers differ between paths")
+    }
   }
 
   test("forced distributed path equals the local path end-to-end, no forced broadcast") {
