@@ -18,8 +18,8 @@ import graft.tables.IceLite
   *      from text[start:end] (P14, document.js:75-79)
   *   S2 upsert: MERGE INTO by doc_id (delete+reinsert analog,
   *      document.js:173-249)
-  *   S3 cascade delete: deleteWhere(doc_id) — annotations are nested, so
-  *      the cascade is free (document.js:14-33)
+  *   S3 cascade delete: replaceKeys(doc_id) with an empty insert set —
+  *      annotations are nested, so the cascade is free (document.js:14-33)
   *   S4 list: regex filter + preview/name derivation (F19,
   *      document.js:26-41 + models/document.js:26-27) + pagination (T4)
   *   P10 encoding strip before save (pipelinehelper/main.py:144-149)

@@ -4,6 +4,7 @@ import java.nio.file.{FileAlreadyExistsException, Files, Paths, Path,
   StandardCopyOption, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
 /** IceLite — a minimal Iceberg-shaped snapshot table layer over Parquet.
@@ -30,8 +31,9 @@ import scala.jdk.CollectionConverters._
   * hash-bucketed on the MERGE key, and mergeInto rewrites ONLY the
   * buckets the source rows hash into — the Iceberg bucket(key)
   * copy-on-write shape; at 10^12 docs a micro-batch commit is O(touched
-  * buckets), not O(table). Unbucketed tables (numBuckets = 0) keep the
-  * simple whole-table copy-on-write.
+  * buckets), not O(table). Unbucketed tables (numBuckets = 0) are the
+  * degenerate case of the same rewrite: every entry is bucket -1, so
+  * every entry is touched (whole-table copy-on-write).
   *
   * Schema evolution (ADD COLUMN, Iceberg-style): each commit stamps its
   * schema into _meta/schema.v<id>.json; a merge/append whose source
@@ -110,6 +112,13 @@ final case class IceLite(root: String, numBuckets: Int = 0,
           s"bucket spec mismatch for table $root: on-disk $onDisk, configured $specString")
     }
 
+  /** A table with no PROPS predates the persisted bucket spec: its
+    * `b<k>:` labels may come from a DIFFERENT spec, so nothing may prune
+    * by them — every entry counts as touched (like bucket -1) until a
+    * full rewrite stamps PROPS.
+    */
+  private def legacy: Boolean = !Files.exists(propsFile)
+
   /** Manifest entries: (bucket or -1 for unbucketed, dir). */
   private def manifestEntries(id: Int): Seq[(Int, String)] = {
     val txt = Files.readString(meta.resolve(s"v$id.json"))
@@ -130,15 +139,19 @@ final case class IceLite(root: String, numBuckets: Int = 0,
 
   private def manifestDirs(id: Int): Seq[String] = manifestEntries(id).map(_._2)
 
-  /** `stampProps`: record the current bucket spec in PROPS. Safe ONLY
-    * when every live entry of the new snapshot was written under the
-    * current spec — i.e. at table creation or after a full rewrite. A
-    * pre-PROPS table's `b<k>:` labels may come from a DIFFERENT spec;
-    * stamping the current one would certify labels mergeInto then
-    * trusts, silently duplicating keys. Until a full rewrite stamps it,
-    * such legacy tables stay PROPS-less and mergeInto/replaceKeys treat
-    * every entry as touched (whole-table COW).
+  /** Split snapshot `id`'s entries into (may hold a key of `buckets`,
+    * cannot): bucket -1 entries (unbucketed layout) hold any key, and a
+    * [[legacy]] table's labels are untrusted. `buckets` is evaluated
+    * only if some entry carries a trusted label, so an unbucketed or
+    * legacy table never computes it.
     */
+  private def splitEntries(id: Int, buckets: => Set[Int]):
+      (Seq[(Int, String)], Seq[(Int, String)]) = {
+    val untrusted = legacy
+    lazy val wanted = buckets
+    manifestEntries(id).partition { case (b, _) => untrusted || b < 0 || wanted(b) }
+  }
+
   /** Commit protocol with single-writer optimistic detection. The table
     * contract is ONE writer at a time (the Incremental loop); this guard
     * turns the common violation into an exception instead of a silent
@@ -152,6 +165,14 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     * for the same reason. A writer that has written its manifest but not
     * yet swapped remains undetectable without a lock server — documented
     * limit, same window real Iceberg closes with a catalog CAS.
+    *
+    * `stampProps` records the current bucket spec in PROPS (a table's
+    * first commit always does). Safe ONLY when every live entry of the
+    * new snapshot was written under the current spec — i.e. at table
+    * creation or after a full rewrite. A [[legacy]] table's `b<k>:`
+    * labels may come from a DIFFERENT spec; stamping the current one
+    * would certify labels the keyed paths then trust, silently
+    * duplicating keys.
     */
   private def commit(entries: Seq[(Int, String)], stampProps: Boolean = false,
                      schema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
@@ -255,20 +276,24 @@ final case class IceLite(root: String, numBuckets: Int = 0,
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
 
+  /** Read table-relative `dirs` under snapshot `id`'s stamped schema
+    * (time travel sees the schema AS OF the snapshot): Spark's parquet
+    * reader resolves columns by name per file, so data dirs written
+    * before an ADD COLUMN read as null in that column — no footer-merge
+    * pass (mergeSchema), no rewrite of untouched buckets. Snapshots that
+    * predate schema tracking fall back to footer inference.
+    */
+  private def readDirs(spark: SparkSession, id: Int, dirs: Seq[String]): DataFrame = {
+    val paths = dirs.map(d => s"$root/$d")
+    schemaOf(id).fold(spark.read)(spark.read.schema).parquet(paths: _*)
+  }
+
   /** Read a specific snapshot (time travel). */
   def readSnapshot(spark: SparkSession, id: Int): DataFrame = {
-    val dirs = manifestDirs(id).map(d => s"$root/$d")
+    val dirs = manifestDirs(id)
     if (dirs.isEmpty)
       throw new IllegalStateException(s"snapshot $id of $root is empty")
-    // snapshot-pinned schema (time travel sees the schema AS OF the
-    // snapshot): Spark's parquet reader resolves columns by name per
-    // file, so data dirs written before an ADD COLUMN read as null in
-    // that column — no footer-merge pass (mergeSchema), no rewrite of
-    // untouched buckets.
-    schemaOf(id) match {
-      case Some(s) => spark.read.schema(s).parquet(dirs: _*)
-      case None => spark.read.parquet(dirs: _*)
-    }
+    readDirs(spark, id, dirs)
   }
 
   /** Read the latest snapshot; None if the table was never written. */
@@ -319,43 +344,8 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     require(bucketed, s"readKeyed needs a bucketed table: $root")
     require(keyVals.length == bucketKeys.length,
       s"readKeyed wants ${bucketKeys.length} key values, got ${keyVals.length}")
-    latestSnapshot.map { id =>
-      val keyFilter = bucketKeys.zip(keyVals)
-        .map { case (k, v) => col(k) === lit(v) }
-        .reduce(_ && _)
-      val b = bucketFor(keyVals).get
-      // same legacy rule as mergeInto/replaceKeys: a pre-PROPS table's
-      // b<k> labels may come from a DIFFERENT spec — trust none of them
-      // (read every dir, like bucket -1) until a full rewrite stamps PROPS
-      val legacy = !Files.exists(propsFile)
-      val dirs = manifestEntries(id).collect {
-        case (bk, d) if legacy || bk == b || bk == -1 => s"$root/$d"
-      }
-      val schema = schemaOf(id)
-      if (dirs.nonEmpty)
-        schema.map(s => spark.read.schema(s).parquet(dirs: _*))
-          .getOrElse(spark.read.parquet(dirs: _*))
-          .filter(keyFilter)
-      else emptyPruned(spark, id, schema)
-    }
-  }
-
-  /** No data dir survived bucket pruning: the result is statically empty
-    * (trusted labels mean the key's bucket holds no rows). Schema sources
-    * in order: the stamped snapshot schema, then the footer of any live
-    * dir — never readSnapshot().filter, which throws on a zero-dir
-    * manifest where an empty frame is the expected result.
-    */
-  private def emptyPruned(spark: SparkSession, id: Int,
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    val all = manifestDirs(id).map(d => s"$root/$d")
-    schema.orElse(
-      if (all.nonEmpty) Some(spark.read.parquet(all: _*).schema) else None) match {
-      case Some(s) => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      case None => throw new IllegalStateException(
-        s"snapshot $id of $root has no data dirs and no stamped schema")
-    }
+    readPruned(spark, Set(bucketFor(keyVals).get),
+      bucketKeys.zip(keyVals).map { case (k, v) => col(k) === lit(v) }.reduce(_ && _))
   }
 
   /** Bucket-pruned MULTI-point read for single-key bucketed tables:
@@ -367,27 +357,37 @@ final case class IceLite(root: String, numBuckets: Int = 0,
   def readKeyedIn(spark: SparkSession, vals: Seq[Any]): Option[DataFrame] = {
     require(bucketed && bucketKeys.length == 1,
       s"readKeyedIn needs a single-key bucketed table: $root")
-    latestSnapshot.map { id =>
-      val keyFilter = col(bucketKeys.head).isin(vals: _*)
-      val wanted = vals.map(v => bucketFor(Seq(v)).get).toSet
-      // legacy rule: pre-PROPS bucket labels untrusted (see readKeyed)
-      val legacy = !Files.exists(propsFile)
-      val dirs = manifestEntries(id).collect {
-        case (bk, d) if legacy || wanted(bk) || bk == -1 => s"$root/$d"
-      }
-      val schema = schemaOf(id)
-      if (dirs.nonEmpty)
-        schema.map(s => spark.read.schema(s).parquet(dirs: _*))
-          .getOrElse(spark.read.parquet(dirs: _*))
-          .filter(keyFilter)
-      else emptyPruned(spark, id, schema)
-    }
+    readPruned(spark, vals.map(v => bucketFor(Seq(v)).get).toSet,
+      col(bucketKeys.head).isin(vals: _*))
   }
 
-  /** Read latest or an empty frame with the given schema. */
-  def readOrEmpty(spark: SparkSession, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    read(spark).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+  /** The pruned reader behind [[readKeyed]] and [[readKeyedIn]]: rows of
+    * the latest snapshot matching `keyFilter`, read from only the entries
+    * that may hold a key of `buckets`. None if the table was never
+    * written.
+    */
+  private def readPruned(spark: SparkSession, buckets: Set[Int],
+                         keyFilter: org.apache.spark.sql.Column): Option[DataFrame] =
+    latestSnapshot.map { id =>
+      val (hit, rest) = splitEntries(id, buckets)
+      if (hit.nonEmpty) readDirs(spark, id, hit.map(_._2)).filter(keyFilter)
+      else emptyPruned(spark, id, rest.map(_._2))
+    }
+
+  /** No data dir survived bucket pruning: the result is statically empty
+    * (trusted labels mean the key's bucket holds no rows). Schema sources
+    * in order: the stamped snapshot schema, then the footer of any live
+    * dir in `all` — never readSnapshot().filter, which throws on a
+    * zero-dir manifest where an empty frame is the expected result.
+    */
+  private def emptyPruned(spark: SparkSession, id: Int, all: Seq[String]): DataFrame =
+    schemaOf(id).orElse(
+      if (all.nonEmpty) Some(readDirs(spark, id, all).schema) else None) match {
+      case Some(s) => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+      case None => throw new IllegalStateException(
+        s"snapshot $id of $root has no data dirs and no stamped schema")
+    }
 
   /** Deterministic bucket of the table's bucket-key tuple (murmur3,
     * fixed seed — stable across JVMs/partitionings, required for replay
@@ -395,27 +395,39 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     */
   private def bucketCol = pmod(hash(bucketKeys.map(col): _*), lit(numBuckets))
 
-  /** Write df split per bucket under dir; returns (bucket -> leaf dir).
-    * With `sortBy`, rows are arranged (_b, sortBy...)-sorted within
-    * bucket-partitioned tasks BEFORE the write: the dynamic-partition
-    * writer's required ordering (partition columns prefix) is then
-    * already satisfied, so it does not inject its own unstable sort and
-    * the per-leaf files come out key-clustered.
+  /** The one writer: df as data dir `dir`, returned as manifest entries.
+    * Unbucketed: the whole dir, one (-1, dir) entry. Bucketed: df split
+    * per bucket, one (k, dir/_b=k) leaf per bucket actually written.
+    * With `sortBy`, rows are arranged before the write. Bucketed tables
+    * get (_b, sortBy...)-sorted bucket-partitioned tasks: the
+    * dynamic-partition writer's required ordering (partition columns
+    * prefix) is then already satisfied, so it does not inject its own
+    * unstable sort and the per-leaf files come out key-clustered.
+    * Unbucketed tables are range-partitioned on sortBy, so file key
+    * ranges are disjoint as well as sorted.
     */
-  private def writeBuckets(df: DataFrame, dir: String,
-                           sortBy: Seq[String] = Nil): Seq[(Int, String)] = {
-    val withB = df.withColumn("_b", bucketCol)
-    val arranged =
-      if (sortBy.isEmpty) withB
-      else withB.repartition(col("_b"))
-        .sortWithinPartitions((col("_b") +: sortBy.map(col)): _*)
-    arranged.write.mode("overwrite").partitionBy("_b").parquet(s"$root/$dir")
-    // enumerate the bucket leaves actually written
-    withStream(Files.list(Paths.get(root, dir)))(_
-      .map(_.getFileName.toString)
-      .collect { case s if s.startsWith("_b=") =>
-        (s.stripPrefix("_b=").toInt, s"$dir/$s") }
-      .toSeq)
+  private def write(df: DataFrame, dir: String,
+                    sortBy: Seq[String] = Nil): Seq[(Int, String)] = {
+    val sortCols = sortBy.map(col)
+    if (!bucketed) {
+      val arranged =
+        if (sortCols.isEmpty) df
+        else df.repartitionByRange(sortCols: _*).sortWithinPartitions(sortCols: _*)
+      arranged.write.mode("overwrite").parquet(s"$root/$dir")
+      Seq((-1, dir))
+    } else {
+      val withB = df.withColumn("_b", bucketCol)
+      val arranged =
+        if (sortCols.isEmpty) withB
+        else withB.repartition(col("_b")).sortWithinPartitions((col("_b") +: sortCols): _*)
+      arranged.write.mode("overwrite").partitionBy("_b").parquet(s"$root/$dir")
+      // enumerate the bucket leaves actually written
+      withStream(Files.list(Paths.get(root, dir)))(_
+        .map(_.getFileName.toString)
+        .collect { case s if s.startsWith("_b=") =>
+          (s.stripPrefix("_b=").toInt, s"$dir/$s") }
+        .toSeq)
+    }
   }
 
   /** Append rows as a new snapshot (previous data dirs stay live). A
@@ -425,14 +437,8 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     */
   def append(df: DataFrame): Int = {
     val evolved = evolvedSchema(df.sparkSession, df.schema)
-    val out = conform(df, evolved)
-    val dir = newDataDir()
     val prev = latestSnapshot.map(manifestEntries).getOrElse(Seq.empty)
-    if (bucketed) commit(prev ++ writeBuckets(out, dir), schema = Some(evolved))
-    else {
-      out.write.mode("overwrite").parquet(s"$root/$dir")
-      commit(prev :+ ((-1, dir)), schema = Some(evolved))
-    }
+    commit(prev ++ write(conform(df, evolved), newDataDir()), schema = Some(evolved))
   }
 
   /** Replace the whole table content with df (new snapshot). The schema
@@ -440,20 +446,12 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     */
   def overwrite(df: DataFrame): Int = overwrite(df, Nil)
 
-  private def overwrite(df: DataFrame, sortBy: Seq[String]): Int = {
-    val dir = newDataDir()
-    if (bucketed)
-      commit(writeBuckets(df, dir, sortBy), stampProps = true,
-        schema = Some(df.schema))
-    else {
-      df.write.mode("overwrite").parquet(s"$root/$dir")
-      commit(Seq((-1, dir)), stampProps = true, schema = Some(df.schema))
-    }
-  }
+  private def overwrite(df: DataFrame, sortBy: Seq[String]): Int =
+    commit(write(df, newDataDir(), sortBy), stampProps = true, schema = Some(df.schema))
 
   /** Delete rows matching the predicate (copy-on-write of the full
     * table — predicate pruning to buckets needs key-equality analysis a
-    * real Iceberg does; callers with key predicates should mergeInto).
+    * real Iceberg does; callers with key predicates should replaceKeys).
     */
   def deleteWhere(spark: SparkSession, cond: org.apache.spark.sql.Column): Int =
     read(spark) match {
@@ -464,59 +462,12 @@ final case class IceLite(root: String, numBuckets: Int = 0,
   /** MERGE INTO: upsert `source` by key columns — matched target rows are
     * replaced by the source row, unmatched source rows are inserted
     * (whole-row WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT).
-    * Idempotent: replaying the same source yields the same table.
-    *
-    * Bucketed tables rewrite ONLY the buckets the source touches: the
-    * new snapshot reuses every untouched bucket's existing leaf dirs.
+    * Idempotent: replaying the same source yields the same table. This
+    * is [[replaceKeys]] with the source's own key tuples as the delete
+    * set: one [[rewrite]], rewriting only the touched buckets.
     */
   def mergeInto(spark: SparkSession, source: DataFrame, keys: Seq[String]): Int =
-    read(spark) match {
-      // Creating a table from an EMPTY source would commit a data dir
-      // with zero parquet part files — unreadable ("unable to infer
-      // schema") on every later read. Leave the table absent instead
-      // (readOrEmpty supplies the schema to callers that need one).
-      case None => if (source.isEmpty) 0 else overwrite(source)
-      case Some(_) if bucketed =>
-        require(bucketKeys.forall(keys.contains),
-          s"bucket keys $bucketKeys must be a subset of merge keys $keys")
-        val evolved = evolvedSchema(spark, source.schema)
-        val entries = manifestEntries(latestSnapshot.get)
-        val srcB = source.withColumn("_b", bucketCol).cache()
-        val touched = srcB.select("_b").distinct().collect().map(_.getInt(0)).toSet
-        // legacy unbucketed entries (b = -1, e.g. a table created before
-        // bucketing was configured) can hold ANY key: always rewrite them
-        // (their rows land in proper buckets in the new snapshot). A
-        // pre-PROPS table's b<k> labels may come from a DIFFERENT spec —
-        // rewrite everything once; the commit then stamps PROPS.
-        val legacy = !Files.exists(propsFile)
-        val (touchedEntries, untouchedEntries) =
-          entries.partition { case (b, _) => legacy || b < 0 || touched.contains(b) }
-        // touched dirs may predate an earlier ADD COLUMN: read them under
-        // the SNAPSHOT schema so the rewrite backfills, same as the reader
-        val rd = schemaOf(latestSnapshot.get)
-          .map(spark.read.schema).getOrElse(spark.read)
-        val oldTouched: Option[DataFrame] =
-          if (touchedEntries.isEmpty) None
-          else Some(rd.parquet(touchedEntries.map(e => s"$root/${e._2}"): _*))
-        val srcPlain = conform(srcB.drop("_b"), evolved)
-        val merged = oldTouched match {
-          case None => srcPlain
-          case Some(old) =>
-            conform(old, evolved)
-              .join(srcPlain.select(keys.map(col): _*).distinct(), keys, "left_anti")
-              .unionByName(srcPlain)
-        }
-        val dir = newDataDir()
-        val written = writeBuckets(merged, dir)
-        srcB.unpersist()
-        commit(untouchedEntries ++ written, stampProps = legacy,
-          schema = Some(evolved))
-      case Some(target) =>
-        val evolved = evolvedSchema(spark, source.schema)
-        val kept = target.join(
-          source.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        overwrite(conform(kept, evolved).unionByName(conform(source, evolved)))
-    }
+    rewrite(spark, keys, None, source)
 
   /** Atomic slice replacement in ONE commit: target rows whose key tuple
     * (the columns of `delKeys`) matches a delKeys row OR appears among
@@ -533,46 +484,56 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     * and rewrite ONLY the buckets touched by delKeys or source rows —
     * O(batch), not O(table), same as mergeInto.
     */
-  def replaceKeys(spark: SparkSession, delKeys: DataFrame, source: DataFrame): Int = {
-    val keyCols = delKeys.columns.toSeq
-    read(spark) match {
-      case None => if (source.isEmpty) 0 else overwrite(source)
-      case Some(_) if bucketed =>
-        require(bucketKeys.forall(keyCols.contains),
-          s"bucket keys $bucketKeys must be a subset of delKeys columns $keyCols")
-        val evolved = evolvedSchema(spark, source.schema)
-        val entries = manifestEntries(latestSnapshot.get)
-        val keysB = delKeys.unionByName(source.select(keyCols.map(col): _*))
-          .distinct().withColumn("_b", bucketCol).cache()
-        val touched = keysB.select("_b").distinct().collect()
-          .map(_.getInt(0)).toSet
-        // same legacy rule as mergeInto: pre-PROPS bucket labels are
-        // untrusted — rewrite everything once, then stamp
-        val legacy = !Files.exists(propsFile)
-        val (touchedEntries, untouchedEntries) =
-          entries.partition { case (b, _) => legacy || b < 0 || touched.contains(b) }
-        val rd = schemaOf(latestSnapshot.get)
-          .map(spark.read.schema).getOrElse(spark.read)
-        val oldTouched: Option[DataFrame] =
-          if (touchedEntries.isEmpty) None
-          else Some(rd.parquet(touchedEntries.map(e => s"$root/${e._2}"): _*))
-        val merged = oldTouched match {
-          case None => conform(source, evolved)
-          case Some(old) =>
-            conform(old, evolved).join(keysB.drop("_b"), keyCols, "left_anti")
-              .unionByName(conform(source, evolved))
-        }
-        val dir = newDataDir()
-        val written = writeBuckets(merged, dir)
-        keysB.unpersist()
-        commit(untouchedEntries ++ written, stampProps = legacy,
+  def replaceKeys(spark: SparkSession, delKeys: DataFrame, source: DataFrame): Int =
+    rewrite(spark, delKeys.columns.toSeq, Some(delKeys), source)
+
+  /** The copy-on-write kernel behind [[mergeInto]] and [[replaceKeys]]:
+    * drop every target row whose `keyCols` tuple is a delete key (the
+    * rows of `extraDel`, plus `source`'s own key tuples) and insert
+    * `source`, in ONE commit. In order:
+    *   1. the source, conformed to the evolved schema, is cached once —
+    *      the bucket probe, the anti-join keys and the insert all read
+    *      that cache, so the caller's plan runs once per call. A source
+    *      the caller already cached is read from that cache and left
+    *      cached (Spark matches a column-for-column projection to its
+    *      child's cache entry, so unpersisting it would drop the
+    *      caller's);
+    *   2. the touched buckets are those the delete keys hash into;
+    *   3. the touched entries ([[splitEntries]]: every bucket -1 entry,
+    *      every entry of a legacy table) are read under the snapshot
+    *      schema, anti-joined with the delete keys, and unioned with the
+    *      source;
+    *   4. the result is written by [[write]];
+    *   5. the untouched entries plus the new leaves are committed. The
+    *      rewrite of a legacy table covered every entry, so that commit
+    *      stamps PROPS.
+    * A never-written table is created from a non-empty source; an EMPTY
+    * source leaves it absent (a data dir with zero part files would be
+    * unreadable — "unable to infer schema" — on every later read).
+    */
+  private def rewrite(spark: SparkSession, keyCols: Seq[String],
+                      extraDel: Option[DataFrame], source: DataFrame): Int = {
+    require(bucketKeys.forall(keyCols.contains),
+      s"bucket keys $bucketKeys must be a subset of the key columns $keyCols")
+    val evolved = evolvedSchema(spark, source.schema)
+    val src = conform(source, evolved)
+    val owned = src.storageLevel == StorageLevel.NONE
+    if (owned) src.cache()
+    try latestSnapshot match {
+      case None => if (src.isEmpty) 0 else overwrite(src)
+      case Some(id) =>
+        val srcKeys = src.select(keyCols.map(col): _*)
+        val delSet = extraDel.fold(srcKeys)(_.unionByName(srcKeys))
+        val (hit, kept) = splitEntries(id,
+          delSet.select(bucketCol).distinct().collect().map(_.getInt(0)).toSet)
+        val merged =
+          if (hit.isEmpty) src
+          else conform(readDirs(spark, id, hit.map(_._2)), evolved)
+            .join(delSet.distinct(), keyCols, "left_anti")
+            .unionByName(src)
+        commit(kept ++ write(merged, newDataDir()), stampProps = legacy,
           schema = Some(evolved))
-      case Some(target) =>
-        val evolved = evolvedSchema(spark, source.schema)
-        val allKeys = delKeys.unionByName(source.select(keyCols.map(col): _*)).distinct()
-        val kept = target.join(allKeys, keyCols, "left_anti")
-        overwrite(conform(kept, evolved).unionByName(conform(source, evolved)))
-    }
+    } finally if (owned) src.unpersist()
   }
 
   /** Drain an NIO stream through `f` and ALWAYS close it — unclosed
@@ -611,12 +572,10 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     * byte-identically before and after — dirs they share with expired
     * ones survive. Manifests are deleted before data so a crash mid-way
     * leaves at worst unreferenced garbage (vacuum's job), never a kept
-    * manifest pointing at deleted files. Returns the expired ids.
-    */
-  /** Expire history beyond the last `keepLast` snapshots. `keepIds`
-    * pins additional snapshots that must survive regardless of age —
-    * e.g. registry snapshots recorded in unfinished batches' lineage
-    * pins, which a crash replay will time-travel to.
+    * manifest pointing at deleted files. `keepIds` pins additional
+    * snapshots that must survive regardless of age — e.g. registry
+    * snapshots recorded in unfinished batches' lineage pins, which a
+    * crash replay will time-travel to. Returns the expired ids.
     */
   def expireSnapshots(keepLast: Int = 1, keepIds: Set[Int] = Set.empty): Seq[Int] = {
     require(keepLast >= 1, "keepLast must be >= 1")
@@ -665,12 +624,7 @@ final case class IceLite(root: String, numBuckets: Int = 0,
     */
   def compactSorted(spark: SparkSession, sortBy: Seq[String]): Option[Int] = {
     require(sortBy.nonEmpty, "sortBy must be non-empty; use compact() otherwise")
-    read(spark).map { df =>
-      if (bucketed) overwrite(df, sortBy) // arrangement happens at the write
-      else overwrite(
-        df.repartitionByRange(sortBy.map(col): _*)
-          .sortWithinPartitions(sortBy.map(col): _*))
-    }
+    read(spark).map(overwrite(_, sortBy)) // the writer arranges the rows
   }
 
   /** Delete orphaned data dirs: `data/s<k>` trees with k <= the latest

@@ -9,6 +9,12 @@ class IceLiteSpec extends SparkTestBase {
 
   private def tmp() = Files.createTempDirectory("icelite").toString + "/t"
 
+  /** The data entries ("b<k>:<dir>" or "<dir>") of manifest `id`. */
+  private def manifestDirs(root: String, id: Int): Set[String] = {
+    val txt = Files.readString(java.nio.file.Paths.get(root, "_meta", s"v$id.json"))
+    "\"([^\"]+)\"".r.findAllMatchIn(txt).map(_.group(1)).filter(_.contains("data/")).toSet
+  }
+
   test("append accumulates, overwrite replaces, snapshots time-travel") {
     val t = IceLite(tmp())
     assert(t.read(spark).isEmpty)
@@ -94,15 +100,11 @@ class IceLiteSpec extends SparkTestBase {
     val root = tmp()
     val t = IceLite(root, numBuckets = 4, bucketKeys = Seq("id"))
     t.overwrite((1 to 100).map(i => (i, s"v$i")).toDF("id", "v"))
-    def manifestDirs(id: Int): Set[String] = {
-      val txt = Files.readString(java.nio.file.Paths.get(root, "_meta", s"v$id.json"))
-      "\"([^\"]+)\"".r.findAllMatchIn(txt).map(_.group(1)).filter(_.contains("data/")).toSet
-    }
-    val dirs1 = manifestDirs(1)
+    val dirs1 = manifestDirs(root, 1)
     assert(dirs1.size == 4, "4 bucket leaves")
 
     t.mergeInto(spark, Seq((1, "X"), (999, "new")).toDF("id", "v"), Seq("id"))
-    val dirs2 = manifestDirs(2)
+    val dirs2 = manifestDirs(root, 2)
     // at most 2 buckets touched; the rest carry over verbatim
     assert((dirs1 & dirs2).size >= 2, s"untouched buckets must be reused: $dirs1 vs $dirs2")
     assert((dirs2 -- dirs1).nonEmpty, "touched buckets get new leaves")
@@ -151,17 +153,52 @@ class IceLiteSpec extends SparkTestBase {
     val root = tmp()
     val t = IceLite(root, numBuckets = 4, bucketKeys = Seq("id"))
     t.overwrite((1 to 100).map(i => (i, s"v$i")).toDF("id", "v"))
-    def manifestDirs(id: Int): Set[String] = {
-      val txt = Files.readString(java.nio.file.Paths.get(root, "_meta", s"v$id.json"))
-      "\"([^\"]+)\"".r.findAllMatchIn(txt).map(_.group(1)).filter(_.contains("data/")).toSet
-    }
-    val dirs1 = manifestDirs(1)
+    val dirs1 = manifestDirs(root, 1)
     t.replaceKeys(spark, Seq(7).toDF("id"), Seq((7, "X")).toDF("id", "v"))
-    val dirs2 = manifestDirs(2)
+    val dirs2 = manifestDirs(root, 2)
     assert(dirs1.intersect(dirs2).size == 3,
       s"3 of 4 bucket leaves must be reused; reused = ${dirs1.intersect(dirs2)}")
     assert(t.read(spark).get.count() == 100)
     assert(t.read(spark).get.filter(col("id") === 7).collect()(0).getString(1) == "X")
+    // a source key absent from delKeys, hashing to another bucket: it is
+    // inserted, and its bucket is rewritten alongside delKeys' bucket
+    val b7 = t.bucketFor(Seq(7)).get
+    val extra = (101 to 200).find(k => t.bucketFor(Seq(k)).get != b7).get
+    val bExtra = t.bucketFor(Seq(extra)).get
+    t.replaceKeys(spark, Seq(7).toDF("id"), Seq((7, "Y"), (extra, "new")).toDF("id", "v"))
+    val dirs3 = manifestDirs(root, 3)
+    assert((dirs3 -- dirs2).map(_.takeWhile(_ != ':')) == Set(s"b$b7", s"b$bExtra"),
+      s"exactly the two touched buckets get new leaves: ${dirs3 -- dirs2}")
+    assert(dirs2.intersect(dirs3).size == 2)
+    val byId = t.read(spark).get.collect().map(r => r.getInt(0) -> r.getString(1)).toMap
+    assert(byId.size == 101 && byId(7) == "Y" && byId(extra) == "new")
+  }
+
+  test("mergeInto and replaceKeys evaluate their source once per call") {
+    val evals = spark.sparkContext.longAccumulator("source key evaluations")
+    val counted = udf((k: Long) => { evals.add(1); k })
+    // spark.range, not a local Seq: a projection over a local relation
+    // is folded at plan time, hiding how often the plan runs
+    def source(from: Long, n: Long) = spark.range(from, from + n, 1, 3)
+      .select(counted(col("id")).as("id"), concat(lit("v"), col("id")).as("v"))
+    def evaluations(op: => Int): Long = { evals.reset(); op; evals.value }
+    for (t <- Seq(IceLite(tmp()), IceLite(tmp(), 4, Seq("id")))) {
+      val layout = if (t.numBuckets > 0) "bucketed" else "unbucketed"
+      assert(evaluations(t.mergeInto(spark, source(0, 20), Seq("id"))) == 20,
+        s"$layout mergeInto creating the table")
+      assert(evaluations(t.mergeInto(spark, source(10, 20), Seq("id"))) == 20,
+        s"$layout mergeInto")
+      assert(evaluations(t.replaceKeys(spark, Seq(1L, 2L).toDF("id"), source(25, 10))) == 10,
+        s"$layout replaceKeys")
+      // ids 0..34 with 1 and 2 deleted
+      assert(t.read(spark).get.count() == 33, layout)
+      // a source the caller cached is read from that cache, and stays cached
+      val cached = source(40, 5).cache()
+      assert(evaluations(t.mergeInto(spark, cached, Seq("id"))) == 5, s"$layout cached source")
+      assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        s"$layout mergeInto dropped the caller's cache")
+      cached.unpersist()
+    }
   }
 
   test("pre-PROPS bucketed manifests are rewritten, never trusted") {
@@ -169,25 +206,30 @@ class IceLiteSpec extends SparkTestBase {
     // bucketed b<k>: manifest entries exist but _meta/PROPS does not.
     // Reopening with a DIFFERENT spec must not classify stale buckets as
     // untouched (that silently duplicates matched keys) — the first
-    // merge rewrites everything and only then stamps the new spec.
-    val root = tmp()
-    val t4 = IceLite(root, 4, Seq("id"))
-    t4.overwrite(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(root, "_meta", "PROPS"))
+    // merge rewrites everything and only then stamps the new spec. The
+    // same rule holds for mergeInto and replaceKeys.
+    def check(upsert: (IceLite, org.apache.spark.sql.DataFrame) => Int): Unit = {
+      val root = tmp()
+      val t4 = IceLite(root, 4, Seq("id"))
+      t4.overwrite(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
+      java.nio.file.Files.delete(java.nio.file.Paths.get(root, "_meta", "PROPS"))
 
-    val t8 = IceLite(root, 8, Seq("id"))
-    t8.mergeInto(spark, Seq((1, "A")).toDF("id", "v"), Seq("id"))
-    val rows = t8.read(spark).get.collect()
-      .map(r => (r.getInt(0), r.getString(1))).toSet
-    assert(rows == Set((1, "A"), (2, "b"), (3, "c")),
-      "matched key must be replaced, not duplicated")
-    // the full rewrite stamped the NEW spec; the old spec now fails fast
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "_meta", "PROPS")))
-    intercept[IllegalStateException] { IceLite(root, 4, Seq("id")).latestSnapshot }
-    // and subsequent merges under the stamped spec are bucket-scoped again
-    t8.mergeInto(spark, Seq((2, "B")).toDF("id", "v"), Seq("id"))
-    assert(t8.read(spark).get.count() == 3)
+      val t8 = IceLite(root, 8, Seq("id"))
+      upsert(t8, Seq((1, "A")).toDF("id", "v"))
+      val rows = t8.read(spark).get.collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSet
+      assert(rows == Set((1, "A"), (2, "b"), (3, "c")),
+        "matched key must be replaced, not duplicated")
+      // the full rewrite stamped the NEW spec; the old spec now fails fast
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(root, "_meta", "PROPS")))
+      intercept[IllegalStateException] { IceLite(root, 4, Seq("id")).latestSnapshot }
+      // and subsequent merges under the stamped spec are bucket-scoped again
+      upsert(t8, Seq((2, "B")).toDF("id", "v"))
+      assert(t8.read(spark).get.count() == 3)
+    }
+    check((t, src) => t.mergeInto(spark, src, Seq("id")))
+    check((t, src) => t.replaceKeys(spark, src.select("id"), src))
   }
 
   test("expireSnapshots keeps the tail readable and drops only-dead data dirs") {
