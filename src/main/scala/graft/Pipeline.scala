@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{EntityRecord, InputDoc, SpanOps}
-import graft.fixtures.Corpus
+import graft.core.{InputDoc, Mention, SpanOps}
+import graft.fixtures.{Corpus, Gazetteer}
 import graft.kb.Registry
 import graft.link.Linker
 import graft.merge.MergeAnnsets
@@ -16,20 +16,20 @@ import graft.cluster.NilCluster
   * clustering -> new-entity assignment -> (subj, pred, obj) triples.
   *
   * The reference runs this as 11 HTTP hops per document
-  * (pipelinehelper/main.py:49-133); here it is ONE declarative plan with
-  * exactly these wide boundaries: merge sweep (shuffle by doc), candidate
-  * join (broadcast), top-k window (shuffle by mention), CC iterations
-  * (bounded shuffles), final aggregates. Everything else is narrow.
+  * (pipelinehelper/main.py:49-133); here it is ONE declarative plan. NER,
+  * merge, contexts and mention embeddings are document-local and run in
+  * one map over the docs; the wide boundaries are exactly: candidate join
+  * (broadcast), pair dedup + top-k window (shuffles by mention), CC
+  * iterations (bounded shuffles), resolve joins and final aggregates.
   */
 object Pipeline {
 
-  /** One row per document out of the one-pass prep (see run): the four
-    * per-doc derivations as columns, consumed downstream by row ops.
+  /** One row per document out of the one-pass prep (see run): the media
+    * refs and the embedded merged mentions — the linker's input rows.
     */
   final case class MediaRef(media_ref: String, offset: Int)
-  final case class DocPrep(doc_id: String, text: String,
-      media: Seq[MediaRef], trie: Seq[graft.core.Mention],
-      regex: Seq[graft.core.Mention])
+  final case class DocPrep(doc_id: String, media: Seq[MediaRef],
+      mentions: Seq[Linker.EmbeddedMention])
 
   final case class Result(
       linked: DataFrame,        // one row per merged mention w/ link decision
@@ -44,65 +44,55 @@ object Pipeline {
     docs.map(d => (d.doc_id, SpanOps.assemble(d.spans))).toDF("doc_id", "text")
   }
 
+  /** Per-document NER + annotation merge: the trie and regex mentions of
+    * one document's text through [[MergeAnnsets.mergeDoc]]. Serves both
+    * the prep map of [[run]] and [[merged]].
+    */
+  private def nerMerge(spark: SparkSession): (String, String) => Seq[Mention] = {
+    val bcPatterns = spark.sparkContext.broadcast(Gazetteer.patterns)
+    val bcTypes = spark.sparkContext.broadcast(
+      Gazetteer.byId.map { case (k, v) => k -> v.etype })
+    val maxTok = Gazetteer.maxPatternTokens
+    (docId, text) => MergeAnnsets.mergeDoc(
+      TrieNer.docMentions(docId, text, bcPatterns.value, bcTypes.value, maxTok) ++
+        RegexNer.docMentions(docId, text))
+  }
+
+  /** ONE-PASS doc prep: a single InputDoc deserialization and a single
+    * text assembly per document serve NER, merge, contexts, mention
+    * embeddings and media spans, so the text never leaves the map.
+    * Returns the persisted prep frame (consumed by the linker and the
+    * media triples) and the linker input exploded from it — narrow, no
+    * exchange.
+    */
+  private[graft] def prepare(spark: SparkSession, docs: Dataset[InputDoc]): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val ner = nerMerge(spark)
+    val prep = docs.map { d =>
+      val text = SpanOps.assemble(d.spans)
+      DocPrep(d.doc_id,
+        d.spans.filter(_.kind == "media").map(s => MediaRef(s.media_ref, s.offset)),
+        // contexts are stored only for the cross-encoder rerank, which
+        // run does not use
+        Linker.embedDoc(text, ner(d.doc_id, text), keepCtx = false))
+    }.toDF().persist(Ckpt.storage(spark))
+    // NOTE on the lazy prep persist: its first reader is the scan stage
+    // of the linker's eager candidate-list checkpoint, which fills the
+    // cache; the linked checkpoint and the media triples read it after,
+    // so nothing races a cold persist. An eager materializing count
+    // would only add a job barrier (r5: ~6.7 s of serial latency at
+    // 440k docs).
+    (prep, prep.select(explode(col("mentions")).as("m")).select("m.*"))
+  }
+
   /** Run the full pipeline over an input-doc dataset against a registry
     * snapshot. Pure function of (docs, registry) — the incremental loop
-    * feeds back the grown registry (see [[Incremental]]).
+    * feeds back the grown registry (see [[Incremental]]). Each doc_id
+    * names one document (the mention key is (doc_id, annset, ann_id)).
     */
   def run(spark: SparkSession, docs: Dataset[InputDoc], registry: DataFrame,
           regStats: Option[(Long, Long)] = None): Result = {
-    // ONE-PASS doc prep (r4): a single InputDoc deserialization and a
-    // single text assembly serve all four per-doc derivations — trie
-    // NER, regex NER, document text, media spans. The previous shape
-    // ran four separate typed scans of the docs persist, each
-    // re-deserializing every InputDoc (spans = an array of case
-    // objects with the full text inside) and three of them
-    // re-assembling the text. Downstream consumes this frame with ROW
-    // operations (explode/select), so the object boundary is crossed
-    // exactly once per document; the persist is serialized blocks
-    // under the Ckpt storage policy like every other stage hub.
-    import spark.implicits._
-    val prep = {
-      import graft.fixtures.Gazetteer
-      val bcPatterns = spark.sparkContext.broadcast(Gazetteer.patterns)
-      val bcTypes = spark.sparkContext.broadcast(
-        Gazetteer.byId.map { case (k, v) => k -> v.etype })
-      val maxTok = Gazetteer.maxPatternTokens
-      docs.map { d =>
-        val text = SpanOps.assemble(d.spans)
-        DocPrep(d.doc_id, text,
-          d.spans.filter(_.kind == "media")
-            .map(s => MediaRef(s.media_ref, s.offset)),
-          TrieNer.docMentions(d.doc_id, text,
-            bcPatterns.value, bcTypes.value, maxTok),
-          RegexNer.docMentions(d.doc_id, text))
-      }.toDF().persist(Ckpt.storage(spark))
-    }
-    // NOTE on the lazy prep persist: its downstream map stages (the
-    // mention-explode scan feeding the merge shuffle, the text scan
-    // feeding the embed join) are independent and can race a COLD
-    // persist, recomputing the NER-heavy prep map for partitions the
-    // other stage hasn't cached yet. Measured A/B at 440k docs (r5):
-    // an eager materializing count removed ~2.7 s of duplicated NER
-    // from the linker stage but cost ~6.7 s as a standalone job
-    // barrier — the duplication is cheap parallel work while the
-    // barrier is pure serial latency, so the prep stays LAZY.
-    // (r6 A/B, rejected: deriving text from the docs dataset instead of
-    // the prep persist avoids the cold-persist race but re-pays the
-    // InputDoc Kryo deserialize per doc — measured neutral-to-worse at
-    // sf0.1, 14.3/16.3 s vs 13.7/14.0 s; the lazy-prep race stays the
-    // cheaper evil, as the 440k A/B above already concluded.)
-    val text = prep.select(col("doc_id"), col("text"))
-
-    // ONE explode over the concatenated annsets instead of a
-    // trie-scan ∪ regex-scan (r5): the union put TWO map branches over
-    // the prep persist into the merge stage, doubling that stage's
-    // scans of (and cold-cache races over) the NER-heavy prep frame.
-    // concat preserves the union multiset — the merge sweep re-orders
-    // by (start, end, type, source) either way.
-    val mentions = prep
-      .select(explode(concat(col("trie"), col("regex"))).as("m"))
-      .select("m.*").as[graft.core.Mention]
-    val merged = MergeAnnsets.merge(spark, Seq(mentions))
+    val (prep, embedded) = prepare(spark, docs)
 
     // ONE registry aggregate serves both the linker's broadcast-or-salt
     // gate (row count) and the new-entity id base (max id) — separate
@@ -120,7 +110,7 @@ object Pipeline {
     // Candidate lists stay a separate mention-keyed frame — NOT a wide
     // column dragged through every downstream shuffle of `linked`.
     val (linkedRaw, mentionCandidates) =
-      Linker.linkWithCandidates(spark, merged, text, registry,
+      Linker.linkEmbedded(spark, embedded, registry,
         registryRows = Some(regRows))
     val linked = Ckpt(linkedRaw)
 
@@ -321,10 +311,10 @@ object Pipeline {
   def mentions(spark: SparkSession, dir: String) =
     TrieNer.mentions(spark, parallelDocs(spark, dir))
 
-  def merged(spark: SparkSession, dir: String) = {
-    val docs = parallelDocs(spark, dir)
-    MergeAnnsets.merge(spark,
-      Seq(TrieNer.mentions(spark, docs), RegexNer.mentions(spark, docs)))
+  def merged(spark: SparkSession, dir: String): Dataset[Mention] = {
+    import spark.implicits._
+    val ner = nerMerge(spark)
+    parallelDocs(spark, dir).flatMap(d => ner(d.doc_id, SpanOps.assemble(d.spans)))
   }
 
   /** Reference-shaped NIL-cluster records incl. the member `mentions`

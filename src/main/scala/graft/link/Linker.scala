@@ -61,52 +61,86 @@ object Linker {
   val NilWeights: Array[Double] = Array(1.0, 1.0, 2.0, 2.0, 1.0, 1.0, -0.5)
   val NilBias: Double = -4.0
 
-  private val embedMentionUdf = udf((cl: String, m: String, cr: String) =>
-    Embed.embedMention(cl, m, cr))
+  /** One mention row ready for linking: the merged mention, its context
+    * windows (stored only for the cross-encoder rerank, `keepCtx`) and
+    * its mention embedding — the columns [[withEmbeddingsDF]] emits.
+    */
+  final case class EmbeddedMention(
+      doc_id: String, annset: String, ann_id: Int, mention_type: String,
+      start: Int, end: Int, mention: String, skip: Boolean,
+      gazetteer_id: Long, ctx_left: String, ctx_right: String,
+      m_emb: Array[Float])
 
-  /** Attach context windows + mention embeddings: a shuffled hash join
-    * mentions x texts on doc_id with INLINE context slicing. A typed
-    * per-doc cogroup was measured slower (r4): it deserialized 8.8M
-    * Mention objects through Kryo and re-encoded every output row
-    * through the reflection encoder (the linker phase dominated the
-    * ladder's 4-executor wall). Here both sides stay Tungsten rows: the
-    * build side holds each doc's text ONCE per partition hash map (a
-    * per-mention join that CARRIED the full text on every joined row was
-    * measured GC-bound at ~35% of executor time; the codegen projection
-    * below consumes `text` inside the join stage and only the <=30-char
-    * slices survive), and the embed UDF is the single object boundary.
-    * Scale: doc_id-keyed shuffle join, one text row per doc — no skew;
-    * at 100 TB the per-partition build side is corpus_bytes/partitions.
-    * Context windows feed the mention embedding either way; they are
-    * STORED on the row only for the cross-encoder rerank (`keepCtx`).
+  /** The ±30-char context windows of the mention at [start, end):
+    * (text[start-30 .. start), text[end .. end+30)), clamped to the text.
     *
-    * UNICODE SCOPE (ADVICE r4): Spark's `substr` counts CODE POINTS
-    * while Mention.start/end are UTF-16 indices from String ops in the
-    * NER stage, so on text containing supplementary characters (outside
-    * the BMP — emoji etc.) the context windows shift by the
-    * surrogate-pair offset (the offsets of the MENTIONS themselves are
-    * unaffected — only the ±30-char context padding shifts).
+    * UNICODE SCOPE (ADVICE r4): `start`/`end` count CODE POINTS, as the
+    * Spark `substr` expressions this replaced did (equal on any text
+    * without lone surrogates, for offsets >= 0), while Mention.start/end are UTF-16 indices from
+    * String ops in the NER stage. On text containing supplementary
+    * characters (outside the BMP — emoji etc.) the context windows
+    * therefore shift by the surrogate-pair offset (the offsets of the
+    * MENTIONS themselves are unaffected — only the ±30-char context
+    * padding shifts).
+    */
+  def contexts(text: String, start: Int, end: Int): (String, String) = {
+    val n = text.codePointCount(0, text.length)
+    def slice(from: Int, until: Int): String = {
+      val (a, b) = (math.min(math.max(from, 0), n), math.min(until, n))
+      if (a >= b) ""
+      else text.substring(text.offsetByCodePoints(0, a), text.offsetByCodePoints(0, b))
+    }
+    (slice(start - 30, start), slice(end, end + 30))
+  }
+
+  /** (ctx_left, ctx_right, m_emb) of one mention of `text`; the contexts
+    * feed the embedding either way and are kept only under `keepCtx`.
+    */
+  private def embedAt(text: String, start: Int, end: Int, mention: String,
+                      keepCtx: Boolean): (String, String, Array[Float]) = {
+    val (cl, cr) = contexts(text, start, end)
+    (if (keepCtx) cl else "", if (keepCtx) cr else "",
+      Embed.embedMention(cl, mention, cr))
+  }
+
+  /** Embed the merged mentions of ONE document — the per-document form of
+    * [[withEmbeddingsDF]], run inside Pipeline's prep map where the text
+    * is already at hand.
+    */
+  def embedDoc(text: String, mentions: Seq[Mention],
+               keepCtx: Boolean): Seq[EmbeddedMention] =
+    mentions.map { m =>
+      val (cl, cr, emb) = embedAt(text, m.start, m.end, m.mention, keepCtx)
+      EmbeddedMention(m.doc_id, m.annset, m.ann_id, m.mention_type, m.start,
+        m.end, m.mention, m.skip, m.gazetteer_id, cl, cr, emb)
+    }
+
+  private val embedUdf = udf(embedAt _)
+
+  /** Attach context windows + mention embeddings to mentions held apart
+    * from their text: a shuffled hash join mentions x texts on doc_id,
+    * then the embed UDF slices and embeds each row. The build side holds
+    * each doc's text ONCE per partition hash map (a per-mention join that
+    * CARRIED the full text on every joined row was measured GC-bound at
+    * ~35% of executor time); only the <=30-char slices survive the
+    * projection. Pipeline.run does not come here: its prep map embeds
+    * with [[embedDoc]] while the text is still in hand, so its linker
+    * input plans no exchange.
     */
   def withEmbeddingsDF(
       spark: SparkSession,
       mentions: Dataset[Mention],
       docText: DataFrame,
-      keepCtx: Boolean = true): DataFrame = {
-    val t = docText.select(col("doc_id"), col("text"))
-    // cl = text[max(0, start-30) .. start)  (0-based, end-exclusive)
-    // cr = text[end .. end+30)              (substr clamps at the end)
-    val cl = col("text").substr(
-      greatest(col("start") - lit(29), lit(1)), least(lit(30), col("start")))
-    val cr = col("text").substr(col("end") + lit(1), lit(30))
+      keepCtx: Boolean = true): DataFrame =
     mentions.toDF()
-      .join(t.hint("SHUFFLE_HASH"), Seq("doc_id"))
-      .withColumn("m_emb", embedMentionUdf(cl, col("mention"), cr))
-      // contexts are stored only for the cross-encoder rerank
-      .withColumn("ctx_left", if (keepCtx) cl else lit(""))
-      .withColumn("ctx_right", if (keepCtx) cr else lit(""))
-      .select("doc_id", "annset", "ann_id", "mention_type", "start", "end",
-        "mention", "skip", "gazetteer_id", "ctx_left", "ctx_right", "m_emb")
-  }
+      .join(docText.select(col("doc_id"), col("text")).hint("SHUFFLE_HASH"),
+        Seq("doc_id"))
+      .withColumn("e", embedUdf(col("text"), col("start"), col("end"),
+        col("mention"), lit(keepCtx)))
+      .select(col("doc_id"), col("annset"), col("ann_id"), col("mention_type"),
+        col("start"), col("end"), col("mention"), col("skip"),
+        col("gazetteer_id"), col("e._1").as("ctx_left"),
+        col("e._2").as("ctx_right"), col("e._3").as("m_emb"))
 
   /** Cross-encoder rerank stand-in (reference optional stage,
     * crossencoder/__main__.py:94-157: candidates re-scored with the full
@@ -287,18 +321,28 @@ object Linker {
       spark: SparkSession, mentions: Dataset[Mention], docText: DataFrame,
       registry: DataFrame, rerank: Boolean = false,
       registryRows: Option[Long] = None,
+      broadcastMaxRows: Long = BroadcastMaxRows): (DataFrame, DataFrame) =
+    // the embed join feeds three branches of linkEmbedded: persist it
+    // (Ckpt.storage, not .cache(): keeps the widest hot frame out of the
+    // executor storage pools on the multi-executor bench)
+    linkEmbedded(spark,
+      withEmbeddingsDF(spark, mentions, docText, keepCtx = rerank)
+        .persist(graft.Ckpt.storage(spark)),
+      registry, rerank, registryRows, broadcastMaxRows)
+
+  /** [[linkWithCandidates]] over mentions that are already embedded
+    * (the [[EmbeddedMention]] columns, contexts kept iff `rerank`).
+    * `allDf` is consumed by three branches (skip path, candidates, NIL
+    * features), so the caller hands in a persisted frame or a narrow
+    * projection of one. COLUMN filters keep everything in Tungsten — a
+    * typed `.filter(_.skip)` would pay full object SerDe per row per
+    * pass.
+    */
+  private[graft] def linkEmbedded(
+      spark: SparkSession, allDf: DataFrame, registry: DataFrame,
+      rerank: Boolean = false, registryRows: Option[Long] = None,
       broadcastMaxRows: Long = BroadcastMaxRows): (DataFrame, DataFrame) = {
     import spark.implicits._
-
-    // mention-scale with embeddings + contexts — the widest hot frame;
-    // Ckpt.storage (not .cache()) keeps it out of the executor storage
-    // pools on the multi-executor bench (see Pipeline.run note).
-    // COLUMN filters + row-based embed join (r4): the persisted frame
-    // is consumed by three branches, and a typed cogroup or typed
-    // `.filter(_.skip)` would pay full object SerDe per row per pass —
-    // the row join + codegen filters keep everything in Tungsten.
-    val allDf = withEmbeddingsDF(spark, mentions, docText, keepCtx = rerank)
-      .persist(graft.Ckpt.storage(spark))
 
     // skip-path: dictionary-resolved or DATE mentions bypass scoring
     // (reference linking.skip, TrieNER.py:79-81 / spacyner/main.py:51-54).
@@ -306,7 +350,7 @@ object Linker {
     // candidate join — project them out BEFORE the skip/linked frames
     // enter the union + feats join + hydrate exchanges (guide §2.3:
     // project before the exchange); only `candidates` below consumes
-    // them, straight off the persisted frame.
+    // them, straight off `allDf`.
     val wideCols = Seq("m_emb", "ctx_left", "ctx_right")
     val skipPath = allDf.filter(col("skip"))
       .drop(wideCols: _*)

@@ -1,8 +1,7 @@
 package graft.merge
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.core.Mention
 
 /** Merge of per-source annotation sets into one `entities_merged` set —
@@ -29,11 +28,11 @@ import graft.core.Mention
   *    merge_sets.py:243-265 + main.py:15-16), keep ALL tied-longest,
   *    dedup ignoring source (merge_sets.py:151-165).
   *
-  * Spark shape: one per-doc shuffle builds transitive overlap CHAINS via
-  * the running-max sweep (anchored groups are refinements of chains);
-  * each chain — bounded by the overlap fan-in of one text region — is
-  * resolved by a pure kernel in flatMapGroups. Linear per partition, no
-  * joins; at 10^12 docs this is a single hash shuffle on doc_id.
+  * Spark shape: none of its own. [[mergeDoc]] is a pure kernel over ONE
+  * document's mentions (transitive overlap CHAINS by running max end,
+  * each resolved into anchored groups), so [[graft.Pipeline]] runs it
+  * inside the per-document prep map with no shuffle at all; [[merge]]
+  * over mention datasets is one hash shuffle on doc_id plus the kernel.
   */
 object MergeAnnsets {
 
@@ -124,13 +123,13 @@ object MergeAnnsets {
 
   /** Dedup ignoring source (merge_sets.py:151-165): annotations equal on
     * (start, end, type, root, text) collapse; the highest-priority source
-    * survives (the reference rewrites source to the merged-set name, so
-    * its pick is unobservable — ours keeps provenance deterministically).
+    * survives, ties broken by [[annOrder]] (the reference rewrites source
+    * to the merged-set name, so its pick is unobservable — ours keeps
+    * provenance deterministically).
     */
   private def uniqueAnns(anns: Seq[Ann]): Seq[Ann] =
     anns.groupBy(a => (a.start, a.end, a.mention_type, a.root_type, a.mention))
-      .values.map(_.sortBy(a => (-a.prio, a.source)).head).toSeq
-      .sortBy(a => (a.start, a.end, a.mention_type, a.source))
+      .values.map(_.min(Ordering.by((a: Ann) => -a.prio).orElse(annOrder))).toSeq
 
   /** Longest-selection over a partial-overlap group
     * (inner_reduce_partial_overlaps, merge_sets.py:243-265): root filter
@@ -184,84 +183,63 @@ object MergeAnnsets {
     out.result()
   }
 
+  /** Total order over kernel rows: reading order (start, end, type,
+    * source) first, then every other field, so the sort, the dedup pick
+    * and the ann ids never depend on input order.
+    */
+  private val annOrder: Ordering[Ann] = {
+    import Ordering.Double.TotalOrdering
+    Ordering.by((a: Ann) => (a.start, a.end, a.mention_type, a.source,
+      a.mention, a.score, a.skip, a.gazetteer_id, a.annset))
+  }
+
+  /** The whole merge of ONE document's mentions (the reference merges
+    * per document too): F16 types, sort, split into overlap chains by
+    * running max end (anchored groups and same-span companions never
+    * cross a chain), root types + anchored-group resolution per chain,
+    * then ann ids 1..n in reading order. Pure and input-order invariant.
+    */
+  def mergeDoc(anns: Seq[Mention]): Seq[Mention] = {
+    val sorted = anns.map { m =>
+      val t = normalizeEntity(m.mention_type)
+      Ann(m.doc_id, m.annset, t, t, m.start, m.end, m.mention, m.score,
+        m.source, m.skip, m.gazetteer_id)
+    }.sorted(annOrder)
+    val chains = Seq.newBuilder[Seq[Ann]]
+    var chain = Vector.empty[Ann]
+    var maxEnd = Int.MinValue
+    sorted.foreach { a =>
+      if (chain.nonEmpty && a.start >= maxEnd) { chains += chain; chain = Vector.empty }
+      chain :+= a
+      maxEnd = math.max(maxEnd, a.end)
+    }
+    if (chain.nonEmpty) chains += chain
+    chains.result().flatMap(c => resolveChain(withRoots(c)))
+      .sorted(annOrder).zipWithIndex.map { case (a, i) =>
+        Mention(a.doc_id, AnnSet, i + 1, a.mention_type, a.start, a.end,
+          a.mention, a.score, a.source, a.skip, a.gazetteer_id)
+      }
+  }
+
   /** Full merge. `typesWhitelist` = P4 (None = all types pass, reference
     * types_list); `annsetExclusion` = P5 (reference annset_exclusion_list,
-    * keyed on the mention's source annset name).
+    * keyed on the mention's source annset name). One exchange: the
+    * filtered mentions group by doc_id and each document runs
+    * [[mergeDoc]].
     */
   def merge(spark: SparkSession, sources: Seq[Dataset[Mention]],
             typesWhitelist: Option[Set[String]] = None,
             annsetExclusion: Set[String] = Set.empty): Dataset[Mention] = {
     import spark.implicits._
-    val union = sources.map(_.toDF()).reduce(_ unionByName _)
-
-    val selected = union
+    sources.map(_.toDF()).reduce(_ unionByName _)
       .filter(!col("annset").isin(annsetExclusion.toSeq: _*) || lit(annsetExclusion.isEmpty))
       .filter(typesWhitelist match {
         case Some(ts) => col("mention_type").isin(ts.toSeq: _*)
         case None => lit(true)
       })
-
-    // F16 normalize as a codegen'd expression (no UDF in the hot path)
-    val normed = selected.withColumn("norm_type",
-      when(lower(col("mention_type")) === "person",
-        substring(col("mention_type"), 1, 3))
-        .otherwise(col("mention_type")))
-
-    // Overlap-chain sweep: ONE shuffle, partitioned by doc. Chains are
-    // transitive-overlap components; anchored groups (and same-span
-    // root-type companions -- same span => same chain) refine them
-    // inside the kernel. Singleton chains -- the overwhelming majority
-    // -- bypass the kernel entirely: a 1-element group is kept verbatim,
-    // so the row-encoding cost is paid only where overlaps exist.
-    val order = Window.partitionBy(col("doc_id"))
-      .orderBy(col("start"), col("end"), col("norm_type"), col("source"))
-    val runMax = max(col("end")).over(order.rowsBetween(Window.unboundedPreceding, -1))
-    val grouped = normed
-      .withColumn("prev_max_end", runMax)
-      .withColumn("new_grp",
-        when(col("prev_max_end").isNull || col("start") >= col("prev_max_end"), 1)
-          .otherwise(0))
-      .withColumn("grp", sum(col("new_grp")).over(
-        order.rowsBetween(Window.unboundedPreceding, 0)))
-      // chain size: (doc_id, grp) clustering is satisfied by the
-      // existing hash(doc_id) exchange -- no second shuffle
-      .withColumn("chain_n", count(lit(1)).over(
-        Window.partitionBy(col("doc_id"), col("grp"))))
-
-    val base = grouped.select(
-      col("doc_id"), col("annset"), col("norm_type").as("mention_type"),
-      col("start"), col("end"), col("mention"),
-      col("score"), col("source"), col("skip"), col("gazetteer_id"),
-      col("grp"), col("chain_n"))
-
-    val singletons = base.filter(col("chain_n") === 1).drop("grp", "chain_n")
-
-    val resolvedMulti = base.filter(col("chain_n") > 1)
-      .as[(String, String, String, Int, Int, String, Double, String, Boolean, Long, Long, Long)]
-      .groupByKey { case (doc, _, _, _, _, _, _, _, _, _, grp, _) => (doc, grp) }
-      .flatMapGroups { (_: (String, Long), it) =>
-        val chain = it.map { case (d, as, t, s, e, m, sc, src, sk, gid, _, _) =>
-          Ann(d, as, t, t, s, e, m, sc, src, sk, gid)
-        }.toSeq.sortBy(a => (a.start, a.end, a.mention_type, a.source))
-        resolveChain(withRoots(chain))
-      }
-      .toDF()
-      .select(col("doc_id"), col("annset"), col("mention_type"),
-        col("start"), col("end"), col("mention"), col("score"),
-        col("source"), col("skip"), col("gazetteer_id"))
-
-    val winners = singletons.unionByName(resolvedMulti)
-
-    // W7 contiguous ann ids per doc in reading order
-    val wAnn = Window.partitionBy(col("doc_id"))
-      .orderBy(col("start"), col("end"), col("mention_type"))
-    winners
-      .withColumn("ann_id", row_number().over(wAnn))
-      .select(
-        col("doc_id"), lit(AnnSet).as("annset"), col("ann_id"),
-        col("mention_type"), col("start"), col("end"), col("mention"),
-        col("score"), col("source"), col("skip"), col("gazetteer_id"))
       .as[Mention]
+      .groupByKey(_.doc_id)
+      .flatMapGroups((_, it) => mergeDoc(it.toSeq))
   }
 
 }

@@ -110,6 +110,54 @@ class MergeLinkerSpec extends SparkTestBase {
     assert(ex.map(_.mention).toSet == Set("spark", "2024-01-01"))
   }
 
+  test("merge: tied winners get deterministic ann ids (case 5, roots split 2-2)") {
+    // three sources of equal (zero) priority on one span: a1's PER takes
+    // root ORG from its same-annset ORG companion, a2's and a3's PER keep
+    // PER -> 2-2 tie, no unique priority source -> case 5 keeps all
+    // roots. Two PER rows survive (roots ORG and PER) and tie on
+    // (start, end, type); the a2/a3 PER pair dedups to one. Ids follow
+    // the total order (source next), whatever the input order.
+    val rows = Seq(
+      m("d", "a1", "x", "PER", 0, 5, "alpha"),
+      m("d", "a1", "x", "ORG", 0, 5, "alpha"),
+      m("d", "a2", "y", "PER", 0, 5, "alpha"),
+      m("d", "a3", "z", "PER", 0, 5, "alpha"))
+    val expected = Seq((1, "ORG", "x"), (2, "PER", "x"), (3, "PER", "y"))
+    def ids(out: Seq[Mention]) =
+      out.map(o => (o.ann_id, o.mention_type, o.source)).sorted
+    assert(ids(MergeAnnsets.merge(spark, Seq(spark.createDataset(rows)))
+      .collect().toSeq) == expected)
+    rows.permutations.foreach(p => assert(ids(MergeAnnsets.mergeDoc(p)) == expected))
+  }
+
+  test("Pipeline's per-document prep equals the shuffled merge + embed join") {
+    import graft.core.{InputDoc, Span, SpanOps}
+    import graft.link.Linker
+    import graft.ner.{RegexNer, TrieNer}
+    // overlapping trie/regex takes, a DATE, and a supplementary
+    // character ahead of the mentions (code-point context windows)
+    val docs = spark.createDataset(Seq(
+      InputDoc("a", SpanOps.withOffsets(Seq(
+        Span("text", "\uD83D\uDE00 spark and customer then fast key on 2024-01-01", "", 0),
+        Span("media", "", "img:1", 0),
+        Span("text", "slow part meets big data spark", "", 0)))),
+      InputDoc("b", SpanOps.withOffsets(Seq(
+        Span("text", "merge join plus slow merge of fast keys", "", 0))))))
+    val shuffled = Linker.withEmbeddingsDF(spark,
+      MergeAnnsets.merge(spark, Seq(TrieNer.mentions(spark, docs),
+        RegexNer.mentions(spark, docs))),
+      Pipeline.docText(spark, docs), keepCtx = false)
+    val (prep, embedded) = Pipeline.prepare(spark, docs)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.mkString(",")
+        case v => String.valueOf(v)
+      }.mkString("|")).sorted.toSeq
+    assert(embedded.columns.toSeq == shuffled.columns.toSeq)
+    assert(rows(embedded).nonEmpty && rows(embedded) == rows(shuffled))
+    prep.unpersist()
+  }
+
   test("F16 normalize_entity (merge_sets.py:50-54)") {
     assert(MergeAnnsets.normalizeEntity("person") == "per")
     assert(MergeAnnsets.normalizeEntity("Person") == "Per")

@@ -119,6 +119,33 @@ class PlanSpec extends SparkTestBase {
       s"wide columns in candidate exchanges: $offenders")
   }
 
+  test("Pipeline.run's linker input plans no shuffle exchange") {
+    // NER, merge, contexts and embeddings are document-local and run in
+    // the prep map: no doc-keyed exchange (merge window, embed join) may
+    // sit between the docs and the candidate join. The walk descends into
+    // the prep persist's own plan.
+    import graft.core.{InputDoc, Span, SpanOps}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import spark.implicits._
+    val docs = spark.createDataset(Seq(
+      InputDoc("a", SpanOps.withOffsets(Seq(Span("text", "spark and customer data", "", 0)))),
+      InputDoc("b", SpanOps.withOffsets(Seq(Span("text", "slow part meets spark", "", 0))))))
+    val (prep, embedded) = Pipeline.prepare(spark, docs)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plan = embedded.queryExecution.executedPlan
+    assert(nodes(plan).exists(_.isInstanceOf[InMemoryTableScanExec]), plan)
+    val exchanges = nodes(plan).collect { case s: ShuffleExchangeLike => s }
+    assert(exchanges.isEmpty, s"exchanges in the linker input:\n$plan")
+    prep.unpersist()
+  }
+
   test("full outer join reuses the aggregation partitioning (no 3rd exchange)") {
     // Both sides pre-aggregate on the join keys, so the join itself must
     // not introduce an exchange: exactly two shuffles (one per groupBy),

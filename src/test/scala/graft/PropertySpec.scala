@@ -3,15 +3,16 @@ package graft
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.functions.Similarity
 import graft.cluster.NilCluster
-import graft.core.{Span, SpanOps}
+import graft.core.{Mention, Span, SpanOps}
+import graft.merge.MergeAnnsets
 
 /** Property-based checks (SURVEY.md §5.3) — raw ScalaCheck driven from
   * ScalaTest (no scalatestplus bridge in the offline cache).
   */
 class PropertySpec extends SparkTestBase {
 
-  private def check(p: Prop): Unit = {
-    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60), p)
+  private def check(p: Prop, n: Int = 60): Unit = {
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(n), p)
     assert(r.passed, r.status.toString)
   }
 
@@ -94,5 +95,73 @@ class PropertySpec extends SparkTestBase {
     check(Prop.forAll(strGen, strGen) { (a, b) =>
       Similarity.jaccardTokens(a, b) == ref(a, b)
     })
+  }
+
+  // Random annotation sets of one document: nested, tied, same-span and
+  // cross-type mentions from several annsets and sources (two of them
+  // unmapped, priority 0), with repeated surfaces so the dedup and the
+  // parts limits fire.
+  private def docAnns(doc: String): Gen[Seq[Mention]] = {
+    val ann = for {
+      annset <- Gen.oneOf("entities_trie", "entities_regex", "a3")
+      source <- Gen.oneOf("trie", "regex", "x", "y")
+      tpe <- Gen.oneOf("PER", "ORG", "ROLE", "PRODUCT", "ALG", "OP", "TYPE",
+        "LOC", "TRIBUNALE", "person", "Person", "DATE")
+      start <- Gen.chooseNum(0, 14)
+      len <- Gen.chooseNum(1, 7)
+      mention <- Gen.oneOf("alpha", "alpha beta", "a b c d e f g",
+        "a b c d e f g h i j k", "x y")
+      score <- Gen.oneOf(1.0, 0.8, 0.5)
+      skip <- Gen.oneOf(true, false)
+      gid <- Gen.oneOf(-1L, 1L, 2L)
+    } yield Mention(doc, annset, 0, tpe, start, start + len, mention, score,
+      source, skip, gid)
+    Gen.chooseNum(0, 14).flatMap(n => Gen.listOfN(n, ann))
+  }
+
+  test("mergeDoc is invariant under input permutation (property)") {
+    check(Prop.forAll(docAnns("d"), Gen.long) { (anns, seed) =>
+      MergeAnnsets.mergeDoc(new scala.util.Random(seed).shuffle(anns)) ==
+        MergeAnnsets.mergeDoc(anns)
+    }, 300)
+  }
+
+  test("merge == mergeDoc per document on multi-document sets (property)") {
+    import spark.implicits._
+    val docsGen = Gen.chooseNum(1, 6).flatMap(n =>
+      Gen.sequence[Seq[Seq[Mention]], Seq[Mention]](
+        (0 until n).map(i => docAnns(s"d$i"))).map(_.flatten))
+    check(Prop.forAll(docsGen) { anns =>
+      val viaSpark = MergeAnnsets.merge(spark, Seq(spark.createDataset(anns)))
+        .collect().toSeq.sortBy(m => (m.doc_id, m.ann_id))
+      val perDoc = anns.groupBy(_.doc_id).toSeq.sortBy(_._1)
+        .flatMap { case (_, ms) => MergeAnnsets.mergeDoc(ms) }
+      viaSpark == perDoc
+    }, 20)
+  }
+
+  test("context slicer == the Spark substr expressions it replaced (property)") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // BMP letters, spaces and surrogate pairs (emoji, CJK Ext-B, math
+    // alphanumerics); offsets run from 0 to past the end of the text
+    val piece = Gen.frequency(
+      (6, Gen.alphaChar.map(_.toString)), (2, Gen.const(" ")),
+      (1, Gen.const("\u00e9")),
+      (2, Gen.oneOf(0x1F600, 0x20000, 0x1D400).map(cp => new String(Character.toChars(cp)))))
+    val row = for {
+      text <- Gen.chooseNum(0, 80).flatMap(n => Gen.listOfN(n, piece).map(_.mkString))
+      n = text.codePointCount(0, text.length)
+      start <- Gen.chooseNum(0, n + 35)
+      end <- Gen.chooseNum(0, n + 35)
+    } yield (text, start, end)
+    check(Prop.forAll(Gen.listOfN(200, row)) { rows =>
+      val viaSpark = rows.toDF("text", "start", "end").select(
+        col("text").substr(greatest(col("start") - lit(29), lit(1)),
+          least(lit(30), col("start"))),
+        col("text").substr(col("end") + lit(1), lit(30)))
+        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      viaSpark == rows.map { case (t, s, e) => graft.link.Linker.contexts(t, s, e) }
+    }, 5)
   }
 }
