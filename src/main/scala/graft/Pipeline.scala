@@ -28,7 +28,7 @@ object Pipeline {
     * refs and the embedded merged mentions — the linker's input rows.
     */
   final case class MediaRef(media_ref: String, offset: Int)
-  final case class DocPrep(doc_id: String, media: Seq[MediaRef],
+  private[graft] final case class DocPrep(doc_id: String, media: Seq[MediaRef],
       mentions: Seq[Linker.EmbeddedMention])
 
   final case class Result(
@@ -72,9 +72,7 @@ object Pipeline {
       val text = SpanOps.assemble(d.spans)
       DocPrep(d.doc_id,
         d.spans.filter(_.kind == "media").map(s => MediaRef(s.media_ref, s.offset)),
-        // contexts are stored only for the cross-encoder rerank, which
-        // run does not use
-        Linker.embedDoc(text, ner(d.doc_id, text), keepCtx = false))
+        Linker.embedDoc(text, ner(d.doc_id, text)))
     }.toDF().persist(Ckpt.storage(spark))
     // NOTE on the lazy prep persist: its first reader is the scan stage
     // of the linker's eager candidate-list checkpoint, which fills the

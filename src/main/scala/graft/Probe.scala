@@ -60,35 +60,26 @@ object Probe {
   }
 
   /** The pipeline's stages, each materialized (Ckpt) so its wall is its
-    * own work; `pipeline` is the whole Pipeline.run + triples count.
+    * own work; `prep` is Pipeline's per-document NER + merge + embed map,
+    * `link` the linker over its output; `pipeline` is the whole
+    * Pipeline.run + triples count.
     */
   private def pipelineStages(spark: SparkSession, dir: String, k: Int,
                              stages: Stages): Unit = {
     import graft.cluster.NilCluster
     import graft.link.Linker
-    import graft.merge.MergeAnnsets
-    import graft.ner.{RegexNer, TrieNer}
     val docs = Ckpt(fixtures.Corpus.inputDocs(spark, dir).repartition(Bench.ScaleParts))
     val reg = kb.Registry.seed(spark).toDF()
-    val text = Ckpt(Pipeline.docText(spark, docs))
     println(s"[probe] docs=${docs.count()}")
-    var trie, regex, merged, emb, linked: DataFrame = null
+    var emb, linked: DataFrame = null
     def stage(name: String)(f: => Unit): Unit = timed(name, k, stages)(f)
-    stage("ner") {
-      trie = Ckpt(TrieNer.mentions(spark, docs).toDF())
-      regex = Ckpt(RegexNer.mentions(spark, docs).toDF())
-    }
-    import spark.implicits._
-    stage("merge") {
-      merged = Ckpt(MergeAnnsets.merge(spark, Seq(trie, regex).map(_.as[core.Mention])).toDF())
-    }
-    stage("embed") {
-      emb = Ckpt(Linker.withEmbeddingsDF(spark, merged.as[core.Mention], text, keepCtx = false))
+    stage("prep") {
+      val (prep, embedded) = Pipeline.prepare(spark, docs)
+      emb = Ckpt(embedded)
+      prep.unpersist()
     }
     stage("candidates")(Ckpt(Linker.candidates(spark, emb.filter(!col("skip")), reg)))
-    stage("link") {
-      linked = Ckpt(Linker.linkWithCandidates(spark, merged.as[core.Mention], text, reg)._1)
-    }
+    stage("link") { linked = Ckpt(Linker.linkEmbedded(spark, emb, reg)._1) }
     stage("cluster") {
       val r = NilCluster.clusterFull(spark,
         linked.filter(col("is_nil") && col("mention_type") =!= "DATE"))

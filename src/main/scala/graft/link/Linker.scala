@@ -65,7 +65,7 @@ object Linker {
     * windows (stored only for the cross-encoder rerank, `keepCtx`) and
     * its mention embedding — the columns [[withEmbeddingsDF]] emits.
     */
-  final case class EmbeddedMention(
+  private[graft] final case class EmbeddedMention(
       doc_id: String, annset: String, ann_id: Int, mention_type: String,
       start: Int, end: Int, mention: String, skip: Boolean,
       gazetteer_id: Long, ctx_left: String, ctx_right: String,
@@ -83,7 +83,7 @@ object Linker {
     * MENTIONS themselves are unaffected — only the ±30-char context
     * padding shifts).
     */
-  def contexts(text: String, start: Int, end: Int): (String, String) = {
+  private[graft] def contexts(text: String, start: Int, end: Int): (String, String) = {
     val n = text.codePointCount(0, text.length)
     def slice(from: Int, until: Int): String = {
       val (a, b) = (math.min(math.max(from, 0), n), math.min(until, n))
@@ -104,13 +104,14 @@ object Linker {
   }
 
   /** Embed the merged mentions of ONE document — the per-document form of
-    * [[withEmbeddingsDF]], run inside Pipeline's prep map where the text
-    * is already at hand.
+    * [[withEmbeddingsDF]] with `keepCtx = false`, run inside Pipeline's
+    * prep map where the text is already at hand. Contexts are not stored:
+    * the pipeline does not rerank.
     */
-  def embedDoc(text: String, mentions: Seq[Mention],
-               keepCtx: Boolean): Seq[EmbeddedMention] =
+  private[graft] def embedDoc(text: String,
+                              mentions: Seq[Mention]): Seq[EmbeddedMention] =
     mentions.map { m =>
-      val (cl, cr, emb) = embedAt(text, m.start, m.end, m.mention, keepCtx)
+      val (cl, cr, emb) = embedAt(text, m.start, m.end, m.mention, keepCtx = false)
       EmbeddedMention(m.doc_id, m.annset, m.ann_id, m.mention_type, m.start,
         m.end, m.mention, m.skip, m.gazetteer_id, cl, cr, emb)
     }
