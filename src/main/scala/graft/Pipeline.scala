@@ -18,17 +18,17 @@ import graft.cluster.NilCluster
   * The reference runs this as 11 HTTP hops per document
   * (pipelinehelper/main.py:49-133); here it is ONE declarative plan. NER,
   * merge, contexts and mention embeddings are document-local and run in
-  * one map over the docs; the wide boundaries are exactly: candidate join
-  * (broadcast), pair dedup + top-k window (shuffles by mention), CC
-  * iterations (bounded shuffles), resolve joins and final aggregates.
+  * one map over the docs, and under the broadcast gate candidate probe,
+  * top-k and NIL prediction are mention-local in one map after it; the
+  * wide boundaries are exactly: CC iterations (bounded shuffles),
+  * resolve joins and final aggregates.
   */
 object Pipeline {
 
-  /** One row per document out of the one-pass prep (see run): the media
-    * refs and the embedded merged mentions — the linker's input rows.
+  /** One row per document out of the one-pass prep (see run): the
+    * embedded merged mentions — the linker's input rows.
     */
-  final case class MediaRef(media_ref: String, offset: Int)
-  private[graft] final case class DocPrep(doc_id: String, media: Seq[MediaRef],
+  private[graft] final case class DocPrep(doc_id: String,
       mentions: Seq[Linker.EmbeddedMention])
 
   final case class Result(
@@ -59,10 +59,10 @@ object Pipeline {
   }
 
   /** ONE-PASS doc prep: a single InputDoc deserialization and a single
-    * text assembly per document serve NER, merge, contexts, mention
-    * embeddings and media spans, so the text never leaves the map.
-    * Returns the persisted prep frame (consumed by the linker and the
-    * media triples) and the linker input exploded from it — narrow, no
+    * text assembly per document serve NER, merge, contexts and mention
+    * embeddings, so the text never leaves the map. Returns the persisted
+    * prep frame (read by both branches of the linker; the caller
+    * unpersists it) and the linker input exploded from it — narrow, no
     * exchange.
     */
   private[graft] def prepare(spark: SparkSession, docs: Dataset[InputDoc]): (DataFrame, DataFrame) = {
@@ -70,16 +70,13 @@ object Pipeline {
     val ner = nerMerge(spark)
     val prep = docs.map { d =>
       val text = SpanOps.assemble(d.spans)
-      DocPrep(d.doc_id,
-        d.spans.filter(_.kind == "media").map(s => MediaRef(s.media_ref, s.offset)),
-        Linker.embedDoc(text, ner(d.doc_id, text)))
+      DocPrep(d.doc_id, Linker.embedDoc(text, ner(d.doc_id, text)))
     }.toDF().persist(Ckpt.storage(spark))
     // NOTE on the lazy prep persist: its first reader is the scan stage
-    // of the linker's eager candidate-list checkpoint, which fills the
-    // cache; the linked checkpoint and the media triples read it after,
-    // so nothing races a cold persist. An eager materializing count
-    // would only add a job barrier (r5: ~6.7 s of serial latency at
-    // 440k docs).
+    // of the linker's eager kernel checkpoint, which fills the cache;
+    // the linked checkpoint reads it after, so nothing races a cold
+    // persist. An eager materializing count would only add a job
+    // barrier (r5: ~6.7 s of serial latency at 440k docs).
     (prep, prep.select(explode(col("mentions")).as("m")).select("m.*"))
   }
 
@@ -111,6 +108,8 @@ object Pipeline {
       Linker.linkEmbedded(spark, embedded, registry,
         registryRows = Some(regRows))
     val linked = Ckpt(linkedRaw)
+    // the linked checkpoint was the prep frame's last reader
+    prep.unpersist()
 
     val nil = linked.filter(col("is_nil") &&
       // DATE-skip mentions never cluster (reference P3/P7 interplay)
@@ -240,15 +239,17 @@ object Pipeline {
       .select(col("doc_id"), col("t.subj"), col("t.pred"), col("t.obj"))
       .distinct()
 
-    // media spans come from the prep frame (one-pass rule), not a
-    // fourth scan of the docs persist
-    val mediaT = prep
-      .select(col("doc_id"), explode(col("media")).as("mr"))
+    // media spans straight from the docs: a narrow scan that needs no
+    // NER, so the prep frame can be released above instead of staying
+    // cached for as long as the caller holds the triples
+    val mediaT = docs
+      .select(col("doc_id"), explode(col("spans")).as("s"))
+      .filter(col("s.kind") === "media")
       .select(
         col("doc_id"),
         concat(lit("doc:"), col("doc_id")).as("subj"),
         lit(":hasMedia").as("pred"),
-        col("mr.media_ref").as("obj"))
+        col("s.media_ref").as("obj"))
 
     val triples = fusedT.unionByName(mediaT)
 

@@ -353,7 +353,11 @@ object NilCluster {
       .groupBy(lower(col("mention")).as("surface"),
         col("mention"), col("mention_type"))
       .agg(count(lit(1)).as("cnt"))
-      .persist(graft.Ckpt.storage(spark))
+      // a LAZY local checkpoint, not a persist: the surface take below
+      // fills it and the cluster aggregate reads it again, but its blocks
+      // belong to the RDD (released with it), so no cache entry outlives
+      // the call and no job is added
+      .localCheckpoint(false, graft.Ckpt.storage(spark))
 
     // one job decides the path AND feeds the local path: take(limit+1)
     // instead of count()+collect() halves the eager-job count here

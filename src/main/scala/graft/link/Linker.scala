@@ -1,11 +1,12 @@
 package graft.link
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+import org.apache.spark.unsafe.types.UTF8String
 import graft.core.Mention
 import graft.functions.Similarity
-import graft.ner.TrieNer
 
 /** Candidate entity-link scoring — the engine's re-expression of the
   * reference's biencoder -> FAISS KNN -> hydrate -> NIL-predict chain
@@ -15,22 +16,16 @@ import graft.ner.TrieNer
   * Spark shape (the J1 "big one" of SURVEY.md §2.3):
   *  1. mentions needing linking (annset filter P1, !skip P2) get a
   *     deterministic context embedding (Embed, bi-encoder stand-in);
-  *  2. BLOCKED candidate join: mention tokens x registry-title token
-  *     index — broadcast when the registry is small, shuffle+salt
-  *     otherwise (skew note below);
-  *  3. score: embedding dot (F6) + norm score (F7) + string features
-  *     jaccard (F2) / levenshtein sim (F3);
-  *  4. per-mention top-k window (W1, k=10, tie-break entity_id asc);
-  *  5. NIL prediction: logistic score over (max_bi, jaccard, lev)
-  *     (reference feature set env-sample.txt:19), is_nil = score < 0.5
-  *     (nilpredictor/main.py:84,235); zero candidates => is_nil
+  *  2. BLOCKED candidates: mention tokens x registry-title tokens, each
+  *     scored by embedding dot (F6) and both norms ([[scoreMentions]]:
+  *     a broadcast posting index probed per mention, or a salted join
+  *     past the broadcast gate);
+  *  3. ONE per-mention kernel, [[scoreMention]]: pair dedup, top-k (W1,
+  *     k=10, tie-break entity_id asc), norm score (F7), jaccard (F2),
+  *     levenshtein sim (F3), the candidate list, and the NIL logistic
+  *     over the list's features (env-sample.txt:19), is_nil = score <
+  *     0.5 (nilpredictor/main.py:84,235); zero candidates => is_nil
   *     (indexer/main.py:170-173, P8).
-  *
-  * Skew at 10^12-doc scale: head surface forms ("spark") fan out on the
-  * token join. The registry side per token is tiny, so Spark broadcasts
-  * it and the join is map-side (no shuffle, skew-immune). If the
-  * registry outgrows broadcast, switch to `saltedTokenJoin` (same
-  * output, mention side salted S ways, registry token index replicated).
   */
 object Linker {
 
@@ -143,165 +138,266 @@ object Linker {
         col("gazetteer_id"), col("e._1").as("ctx_left"),
         col("e._2").as("ctx_right"), col("e._3").as("m_emb"))
 
-  /** Cross-encoder rerank stand-in (reference optional stage,
-    * crossencoder/__main__.py:94-157: candidates re-scored with the full
-    * mention+context against the entity, then re-sorted 148-156): a
-    * second, context-heavy embedding replaces the bi-encoder score for
-    * ranking. Same vehicle (deterministic hashing embed), same slot.
+  /** One candidate row of a mention on its way into [[scoreMention]]: a
+    * registry entity sharing a token with the mention, with its scalar
+    * scores (bi-encoder dot, both norms). `e_emb` feeds the rerank
+    * cosine; the salted path ships it only under rerank (null otherwise).
     */
-  private val crossEmbUdf = udf((cl: String, m: String, cr: String) =>
-    Embed.embed(cl + " " + m + " " + cr))
+  private[graft] final case class Hit(entity_id: Long, title: String,
+      type_ : String, ltitle: String, bi_score: Double, m_norm: Double,
+      e_norm: Double, e_emb: Array[Float])
+
+  /** One kept candidate: an element of the persisted candidate list
+    * (reference `linking.candidates`, indexer/main.py:175-182).
+    */
+  private[graft] final case class Cand(rank: Int, entity_id: Long,
+      title: String, type_ : String, bi_score: Double, norm_score: Double,
+      jacc: Double, lev_sim: Double, cross_score: Double)
+
+  /** The linking decision of one linkable mention plus its candidate
+    * list (empty, `top_candidate` null, when no entity shares a token).
+    */
+  private[graft] final case class Scored(doc_id: String, annset: String,
+      ann_id: Int, mention_type: String, start: Int, end: Int,
+      mention: String, skip: Boolean, gazetteer_id: Long, entity_id: Long,
+      bi_score: Double, nil_score: Double, is_nil: Boolean,
+      candidates: Seq[Cand], top_candidate: Cand)
+
+  /** A registry row as the linker indexes it ([[regEntities]]):
+    * `ltitle` = Spark `lower(title)`, `tokens` = `split(ltitle, "\\s+")`
+    * (no cleanup).
+    */
+  private[graft] final case class RegEntity(entity_id: Long, title: String,
+      type_ : String, e_emb: Array[Float], ltitle: String, tokens: Seq[String])
+
+  private[graft] def regEntities(registry: DataFrame): DataFrame = registry
+    .select(col("id").as("entity_id"), col("title"), col("type_"),
+      col("emb").as("e_emb"), lower(col("title")).as("ltitle"))
+    .withColumn("tokens", split(col("ltitle"), "\\s+"))
+
+  /** The mention side as the kernel reads it: `lmention` = Spark
+    * `lower(mention)`, `tokens` = its distinct non-empty tokens after the
+    * letter/digit cleanup.
+    */
+  private[graft] def withTokens(linkable: DataFrame): DataFrame = linkable
+    .withColumn("lmention", lower(col("mention")))
+    // length-preserving cleanup keeps tokens aligned with TrieNer
+    .withColumn("tokens", array_remove(array_distinct(split(
+      regexp_replace(col("lmention"), "[^\\p{L}\\p{N}]+", " "), "\\s+")), ""))
+
+  /** Token -> entity posting index over a collected registry (the
+    * filter step of TokenJoin's filter-and-verify; the verify step is
+    * the exact dot product). Entity norms are computed once per entity.
+    */
+  private[graft] final class TokenIndex(val entities: Array[RegEntity])
+      extends Serializable {
+    val eNorms: Array[Double] = entities.map(e => Similarity.norm(e.e_emb))
+    private val postings: Map[String, Array[Int]] = entities.indices
+      .flatMap(i => Option(entities(i).tokens).getOrElse(Nil).map(_ -> i))
+      .groupMap(_._1)(_._2).map { case (t, is) => t -> is.distinct.toArray }
+
+    /** Positions of the entities sharing a token with `tokens`, each
+      * once, in first-hit order — the broadcast form of the token join
+      * plus its pair dedup.
+      */
+    def probe(tokens: Seq[String]): Seq[Int] = {
+      val seen = scala.collection.mutable.BitSet.empty
+      tokens.flatMap(t => postings.getOrElse(t, Array.emptyIntArray))
+        .filter(seen.add)
+    }
+  }
+
+  /** [[graft.functions.FloatCosine]] in plain Scala: one pass over the
+    * common prefix, 0 when the product of the norms is 0.
+    */
+  private def floatCosine(a: Array[Float], b: Array[Float]): Double = {
+    var d = 0.0; var na = 0.0; var nb = 0.0
+    for (i <- 0 until math.min(a.length, b.length)) {
+      val (x, y) = (a(i).toDouble, b(i).toDouble)
+      d += x * y; na += x * x; nb += y * y
+    }
+    val den = math.sqrt(na) * math.sqrt(nb)
+    if (den == 0.0) 0.0 else d / den
+  }
+
+  /** Candidate-score statistics over a mention's non-empty top-k list
+    * (nilpredictor/main.py:139-152: statistics.mean/median/stdev —
+    * median averages the middle two for even n; stdev is the SAMPLE
+    * standard deviation, defined 0 here for n < 2).
+    */
+  private def scoreStats(scores: Seq[Double]): (Double, Double, Double) = {
+    val s = scores.sorted
+    val n = s.length
+    val mean = s.sum / n
+    val median = if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+    (mean, median,
+      if (n < 2) 0.0 else math.sqrt(s.map(x => (x - mean) * (x - mean)).sum / (n - 1)))
+  }
+
+  /** `T`'s fields as one struct column (a typed row of the frame), the
+    * `nulled` fields shipped as nulls.
+    */
+  private def packed[T <: Product : TypeTag](nulled: Set[String]): Column =
+    struct(Encoders.product[T].schema.fields.map(f =>
+      if (nulled(f.name)) lit(null).cast(f.dataType).as(f.name) else col(f.name)): _*)
+
+  /** The per-mention half of linking, once for both candidate paths:
+    * the reference takes one mention's top-k (indexer/main.py:247-331)
+    * and scores NIL from that list (nilpredictor/main.py:108-165):
+    *  1. dedup `hits` by entity_id (first row kept);
+    *  2. cross_score: under rerank the cross-encoder stand-in
+    *     (crossencoder/__main__.py:94-157: a context-heavy embedding of
+    *     the mention, cosine against the entity), else the bi score;
+    *  3. sort by (cross_score desc, entity_id asc), keep TopK, and per
+    *     candidate norm_score = dot / max(|m|,|e|)^2
+    *     (indexer/main.py:313-317), jacc and lev_sim;
+    *  4. max_bi / max_cross are maxes OVER THE LIST
+    *     (nilpredictor/main.py:120-131; under rerank the rank-1 bi score
+    *     need not be the largest), then the list's bi mean/median/stdev
+    *     and the NIL logistic; no candidate => NIL, score 0 (P8).
+    * Bit-identical to the Spark expressions it replaced: `lmention` /
+    * `ltitle` come from Spark's lower(), doubles compare as Spark's
+    * do, lev_sim is UTF8String's code-point Levenshtein over the lowered
+    * strings over the larger code-point length of the original ones,
+    * and pow/exp are StrictMath's, as in Spark's Pow and Exp (Math.exp
+    * may differ by an ulp once JIT-compiled).
+    */
+  private[graft] def scoreMention(m: EmbeddedMention, lmention: String,
+                                  hits: Iterator[Hit], rerank: Boolean): Scored = {
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    val uniq = hits.filter(h => seen.add(h.entity_id)).toVector
+    val crossEmb =
+      if (rerank) Embed.embed(m.ctx_left + " " + m.mention + " " + m.ctx_right)
+      else null
+    val top = uniq
+      .map(h => (h, if (rerank) floatCosine(crossEmb, h.e_emb) else h.bi_score))
+      .sortWith { case ((a, ca), (b, cb)) =>
+        val c = compareDoubles(cb, ca)
+        if (c != 0) c < 0 else a.entity_id < b.entity_id
+      }
+      .take(TopK)
+    val lm = UTF8String.fromString(lmention)
+    val mLen = UTF8String.fromString(m.mention).numChars
+    val cands = top.zipWithIndex.map { case ((h, cross), i) =>
+      val g = if (compareDoubles(h.e_norm, h.m_norm) > 0) h.e_norm else h.m_norm
+      val lev = lm.levenshteinDistance(UTF8String.fromString(h.ltitle))
+      val len = math.max(math.max(mLen, UTF8String.fromString(h.title).numChars), 1)
+      Cand(i + 1, h.entity_id, h.title, h.type_, h.bi_score,
+        h.bi_score / StrictMath.pow(g, 2), Similarity.jaccardTokens(m.mention, h.title),
+        1.0 - lev.toDouble / len.toDouble, cross)
+    }
+    def decide(entityId: Long, bi: Double, nil: Double, isNil: Boolean,
+               topCand: Cand) =
+      Scored(m.doc_id, m.annset, m.ann_id, m.mention_type, m.start, m.end,
+        m.mention, m.skip, m.gazetteer_id, entityId, bi, nil, isNil, cands, topCand)
+    // array_max's pick: SQL double order, first of equals
+    def sqlMax(xs: Seq[Double]) = xs.reduce((a, b) => if (compareDoubles(b, a) > 0) b else a)
+    if (cands.isEmpty) decide(-1L, 0.0, 0.0, isNil = true, null)
+    else {
+      val c1 = cands.head
+      val maxBi = sqlMax(cands.map(_.bi_score))
+      val (mean, median, stdev) = scoreStats(cands.map(_.bi_score))
+      val w = NilWeights
+      val sig = w(0) * maxBi + w(1) * sqlMax(cands.map(_.cross_score)) +
+        w(2) * c1.jacc + w(3) * c1.lev_sim + w(4) * mean + w(5) * median +
+        w(6) * stdev + NilBias
+      val nil = 1.0 / (1.0 + StrictMath.exp(-sig))
+      decide(if (nil < 0.5) -1L else c1.entity_id, maxBi, nil, nil < 0.5, c1)
+    }
+  }
+
+  /** [[scoreMention]] over every linkable mention ([[EmbeddedMention]]
+    * columns): one unmaterialized [[Scored]] row per mention.
+    *
+    * Broadcast-or-salt gate: while the registry fits an executor it is
+    * collected ONCE as a broadcast [[TokenIndex]], and each mention
+    * probes it, scores its hits and runs the kernel in one narrow map —
+    * no exchange, and head tokens ("spark") cannot skew anything. Past
+    * the gate the token index must shuffle: the mention side is salted
+    * and the index replicated ([[saltedTokenJoin]]); scores are computed
+    * BEFORE the first exchange so no embedding or context shuffles
+    * (~600 B per pair row, measured 519/560 MB per stage at 440k docs);
+    * dropDuplicates' map-side partial dedup drops shared-token
+    * duplicates before they ship (r6 A/B: shipping them raw to one
+    * mention-keyed exchange measured ~20% worse); then the pairs are
+    * cogrouped with their mentions, so a mention with none gets P8.
+    */
+  private[graft] def scoreMentions(spark: SparkSession, linkable: DataFrame,
+      registry: DataFrame, rerank: Boolean, regRows: Long,
+      broadcastMaxRows: Long): Dataset[Scored] = {
+    import spark.implicits._
+    val tokened = withTokens(linkable)
+    if (regRows <= broadcastMaxRows) {
+      val idx = spark.sparkContext.broadcast(
+        new TokenIndex(regEntities(registry).as[RegEntity].collect()))
+      tokened.select(packed[EmbeddedMention](Set.empty).as("_1"),
+          col("lmention").as("_2"), col("tokens").as("_3"))
+        .as[(EmbeddedMention, String, Seq[String])]
+        .map { case (m, lm, tokens) =>
+          val ix = idx.value
+          val mNorm = Similarity.norm(m.m_emb)
+          scoreMention(m, lm, ix.probe(tokens).iterator.map { i =>
+            val e = ix.entities(i)
+            Hit(e.entity_id, e.title, e.type_, e.ltitle,
+              Similarity.dot(m.m_emb, e.e_emb), mNorm, ix.eNorms(i), e.e_emb)
+          }, rerank)
+        }
+    } else {
+      val key = Seq("doc_id", "annset", "ann_id")
+      val pairs = saltedTokenJoin(
+          tokened.select((key :+ "m_emb").map(col) :+
+            explode(col("tokens")).as("token"): _*),
+          regEntities(registry).withColumn("token", explode(col("tokens"))))
+        .withColumn("bi_score", Similarity.dotCol(col("m_emb"), col("e_emb")))
+        .withColumn("m_norm", Similarity.normCol(col("m_emb")))
+        .withColumn("e_norm", Similarity.normCol(col("e_emb")))
+        .select((key ++ Seq("entity_id", "title", "type_", "ltitle", "bi_score",
+          "m_norm", "e_norm") ++ (if (rerank) Seq("e_emb") else Nil)).map(col): _*)
+        .dropDuplicates(key :+ "entity_id")
+        .select(col("doc_id").as("_1"), col("annset").as("_2"), col("ann_id").as("_3"),
+          packed[Hit](if (rerank) Set.empty else Set("e_emb")).as("_4"))
+        .as[(String, String, Int, Hit)]
+      // the mention side ships no embedding, and contexts only under rerank
+      val mentions = tokened.select(packed[EmbeddedMention](Set("m_emb") ++
+          (if (rerank) Nil else Seq("ctx_left", "ctx_right"))).as("_1"),
+          col("lmention").as("_2"))
+        .as[(EmbeddedMention, String)]
+      mentions.groupByKey(m => (m._1.doc_id, m._1.annset, m._1.ann_id))
+        .cogroup(pairs.groupByKey(p => (p._1, p._2, p._3))) { (_, ms, ps) =>
+          val hits = ps.map(_._4).toVector
+          ms.map { case (m, lm) => scoreMention(m, lm, hits.iterator, rerank) }
+        }
+    }
+  }
 
   /** Candidate generation + scoring + top-k. Registry columns required:
     * id, title, type_, emb. Returns one row per (mention, candidate)
-    * with rank <= TopK. `rerank` switches ranking to the cross-encoder
-    * score (bi-encoder still computed — it remains a NIL feature).
+    * with rank <= TopK: the kernel's candidate lists, exploded. `rerank`
+    * switches ranking to the cross-encoder score (bi-encoder still
+    * computed — it remains a NIL feature).
     */
   def candidates(spark: SparkSession, linkable: DataFrame,
                  registry: DataFrame, rerank: Boolean = false,
                  registryRows: Option[Long] = None,
-                 broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    import spark.implicits._
-
-    // ltitle computed ONCE per registry row (r6): the lev_sim feature
-    // below otherwise re-lowercases the title per surviving candidate
-    // row — and Spark 4's lower() routes non-ASCII strings through ICU,
-    // sampled at ~8% of pipeline task CPU together with the mention side.
-    val regTokens = registry
-      .select(col("id").as("entity_id"), col("title"), col("type_"),
-        col("emb").as("e_emb"))
-      .withColumn("ltitle", lower(col("title")))
-      .withColumn("token", explode(split(col("ltitle"), "\\s+")))
-
-    // narrow BEFORE the token explode: the join fans each mention out
-    // ~3-4x (one row per distinct token), so unused columns multiply —
-    // only the key, surface, embedding (and contexts under rerank) are
-    // consumed downstream of the join
-    val mentionCols = Seq("doc_id", "annset", "ann_id", "mention", "m_emb") ++
-      (if (rerank) Seq("ctx_left", "ctx_right") else Nil)
-    val mentionTokens = linkable
-      .select(mentionCols.map(col): _*)
-      // lmention once per mention row (see ltitle note above)
-      .withColumn("lmention", lower(col("mention")))
-      .withColumn("token",
-        explode(array_distinct(split(
-          // length-preserving cleanup keeps tokens aligned with TrieNer
-          regexp_replace(col("lmention"), "[^\\p{L}\\p{N}]+", " "),
-          "\\s+"))))
-      .filter(col("token") =!= "")
-
-    // Broadcast-or-salt gate: the per-token registry slice is tiny, so a
-    // broadcast map-side join is skew-immune and shuffle-free while the
-    // registry fits an executor. Past `broadcastMaxRows` entities the
-    // token index must shuffle — then head tokens ("spark") would funnel
-    // into single reducers, so the mention side is salted and the token
-    // index replicated (identical output, hot keys spread `TokenJoinSalts`
-    // ways). The registry row count is one cheap job per pipeline run —
-    // callers that already aggregate the registry (Pipeline fuses it with
-    // its max-id collect) pass it in to save the job.
-    val joined =
-      if (registryRows.getOrElse(registry.count()) <= broadcastMaxRows)
-        mentionTokens.join(broadcast(regTokens), Seq("token"))
-      else saltedTokenJoin(mentionTokens, regTokens, TokenJoinSalts)
-
-    // Width discipline ahead of the two candidate exchanges (the
-    // pair-dedup shuffle and the top-k window shuffle): a joined pair
-    // row carries two 64-float embeddings plus both context windows
-    // (~600 B/row) that downstream only needs as SCALARS — measured
-    // 519/560 MB shuffle writes per stage at 440k docs, and the
-    // 4-executor ladder level paid ~2x CPU on exactly these stages
-    // (single-box memory-bandwidth contention; at cluster scale the
-    // same bytes are network). Scores and norms are therefore computed
-    // BEFORE the first exchange (a 64-float dot per token-duplicate is
-    // ~100 FLOPs vs shipping 512 B through two shuffles) and only
-    // narrow columns shuffle. Duplicate pairs (one per shared token)
-    // compute identical score values, so the dedup keeps the same
-    // result. Expensive string features (jaccard, levenshtein) remain
-    // deferred past the window — <=k rows per mention, as before.
-    val scored = joined
-      .withColumn("bi_score", Similarity.dotCol(col("m_emb"), col("e_emb")))
-      .withColumn("m_norm", Similarity.normCol(col("m_emb")))
-      .withColumn("e_norm", Similarity.normCol(col("e_emb")))
-      .select(Seq("doc_id", "annset", "ann_id", "entity_id", "title",
-        "type_", "mention", "lmention", "ltitle",
-        "bi_score", "m_norm", "e_norm").map(col) ++
-        // under rerank the cross-encoder inputs ride to the dedup; the
-        // entity embedding is needed again on the far side for the
-        // cosine (e_emb is re-kept rather than re-joined — rerank is an
-        // opt-in path, and one wide column on DEDUPED pairs costs less
-        // than a second registry join)
-        (if (rerank) Seq(col("ctx_left"), col("ctx_right"), col("e_emb"))
-         else Nil): _*)
-    // cross_score AFTER the pair dedup (ADVICE r4): the crossEmbUdf is
-    // the one expensive per-row op here, and computing it before the
-    // dedup ran it once per shared-token duplicate (~3-4x per pair) for
-    // identical results. bi_score/norms stay pre-exchange as before
-    // (cheap dots, and keeping them narrow-only is the r4 exchange
-    // discipline).
-    // (r6 A/B, rejected: repartitioning by the mention key so dedup +
-    // top-k window share ONE exchange measured ~20% WORSE on the linker
-    // phase — the single exchange must carry the shared-token duplicate
-    // rows raw, and dropDuplicates' map-side partial dedup removes more
-    // bytes than the second exchange costs.)
-    val pairs = scored
-      .dropDuplicates("doc_id", "annset", "ann_id", "entity_id")
-      .withColumn("cross_score",
-        if (rerank)
-          graft.functions.VectorExpressions.floatCosine(
-            crossEmbUdf(col("ctx_left"), col("mention"), col("ctx_right")),
-            col("e_emb"))
-        else col("bi_score"))
-      .drop("ctx_left", "ctx_right", "e_emb")
-
-    val w = Window.partitionBy(col("doc_id"), col("annset"), col("ann_id"))
-      .orderBy(col("cross_score").desc, col("entity_id").asc)
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
-      // norm_score = dot / max(|a|,|b|)^2 (indexer/main.py:313-317);
-      // reuse the dot and the pre-exchange norms, binding the max once
-      .withColumn("norm_score",
-        col("bi_score") / pow(greatest(col("m_norm"), col("e_norm")), 2))
-      .withColumn("jacc", jaccardUdf(col("mention"), col("title")))
-      .withColumn("lev_sim",
-        lit(1.0) - levenshtein(col("lmention"), col("ltitle")).cast("double") /
-          greatest(length(col("mention")), length(col("title")), lit(1)).cast("double"))
-      .select("doc_id", "annset", "ann_id", "entity_id", "title", "type_",
-        "bi_score", "norm_score", "jacc", "lev_sim", "cross_score", "rank")
-  }
+                 broadcastMaxRows: Long = BroadcastMaxRows): DataFrame =
+    scoreMentions(spark, linkable, registry, rerank,
+        registryRows.getOrElse(registry.count()), broadcastMaxRows)
+      .select(col("doc_id"), col("annset"), col("ann_id"),
+        explode(col("candidates")).as("c"))
+      .select(Seq("doc_id", "annset", "ann_id").map(col) ++
+        Seq("entity_id", "title", "type_", "bi_score", "norm_score", "jacc",
+          "lev_sim", "cross_score", "rank").map(f => col(s"c.$f")): _*)
 
   /** Shuffle-side candidate join for registries that outgrow broadcast:
     * mention tokens salted by mention key, registry token index
     * replicated across salts (see [[graft.ops.SkewJoin.saltedJoin]]).
-    * Output rows identical to the broadcast join.
+    * Output rows identical to an unsalted join.
     */
   def saltedTokenJoin(mentionTokens: DataFrame, regTokens: DataFrame,
                       salts: Int = TokenJoinSalts): DataFrame =
     graft.ops.SkewJoin.saltedJoin(
       mentionTokens, regTokens, "token",
       Seq(col("doc_id"), col("annset"), col("ann_id")), salts)
-
-  private val jaccardUdf =
-    udf((a: String, b: String) => Similarity.jaccardTokens(a, b))
-
-  /** Candidate-score statistics over a mention's top-k list
-    * (nilpredictor/main.py:139-152: statistics.mean/median/stdev —
-    * median averages the middle two for even n; stdev is the SAMPLE
-    * standard deviation, defined 0 here for n < 2).
-    */
-  private val scoreStatsUdf = udf((scores: Seq[Double]) => {
-    val s = scores.sorted
-    val n = s.length
-    if (n == 0) (0.0, 0.0, 0.0)
-    else {
-      val mean = s.sum / n
-      val median = if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-      val stdev =
-        if (n < 2) 0.0
-        else math.sqrt(s.map(x => (x - mean) * (x - mean)).sum / (n - 1))
-      (mean, median, stdev)
-    }
-  })
 
   /** Full linking decision per mention, plus the persisted per-mention
     * candidate lists (reference stores `linking.candidates` (top-10 with
@@ -311,30 +407,29 @@ object Linker {
     * Returns (linked, mentionCandidates):
     *   linked — one row per mention: key/meta + entity_id (-1 when
     *     NIL/none), title, entity_type, bi_score, nil_score, is_nil, url;
-    *   mentionCandidates — one row per linkable mention:
-    *     (doc_id, annset, ann_id, candidates array<struct<rank,
-    *     entity_id, title, type_, bi_score, norm_score>>, top_candidate
-    *     struct) — a mention-keyed side table rather than a wide column
-    *     on every downstream row (the linked frame is checkpointed and
-    *     shuffled repeatedly; candidates ride along only where persisted).
+    *   mentionCandidates — one row per linkable mention with at least
+    *     one candidate: (doc_id, annset, ann_id, candidates array<struct<
+    *     rank, entity_id, title, type_, bi_score, norm_score, jacc,
+    *     lev_sim, cross_score>>, top_candidate struct) — a mention-keyed
+    *     side table rather than a wide column on every downstream row
+    *     (the linked frame is checkpointed and shuffled repeatedly;
+    *     candidates ride along only where persisted).
     */
   def linkWithCandidates(
       spark: SparkSession, mentions: Dataset[Mention], docText: DataFrame,
       registry: DataFrame, rerank: Boolean = false,
       registryRows: Option[Long] = None,
       broadcastMaxRows: Long = BroadcastMaxRows): (DataFrame, DataFrame) =
-    // the embed join feeds three branches of linkEmbedded: persist it
-    // (Ckpt.storage, not .cache(): keeps the widest hot frame out of the
-    // executor storage pools on the multi-executor bench)
+    // the embed join feeds both branches of linkEmbedded (skip path,
+    // kernel): checkpointed, so no cached frame outlives the call
     linkEmbedded(spark,
-      withEmbeddingsDF(spark, mentions, docText, keepCtx = rerank)
-        .persist(graft.Ckpt.storage(spark)),
+      graft.Ckpt(withEmbeddingsDF(spark, mentions, docText, keepCtx = rerank)),
       registry, rerank, registryRows, broadcastMaxRows)
 
   /** [[linkWithCandidates]] over mentions that are already embedded
     * (the [[EmbeddedMention]] columns, contexts kept iff `rerank`).
-    * `allDf` is consumed by three branches (skip path, candidates, NIL
-    * features), so the caller hands in a persisted frame or a narrow
+    * `allDf` is consumed by two branches (skip path, kernel), so the
+    * caller hands in a persisted or checkpointed frame or a narrow
     * projection of one. COLUMN filters keep everything in Tungsten — a
     * typed `.filter(_.skip)` would pay full object SerDe per row per
     * pass.
@@ -343,97 +438,34 @@ object Linker {
       spark: SparkSession, allDf: DataFrame, registry: DataFrame,
       rerank: Boolean = false, registryRows: Option[Long] = None,
       broadcastMaxRows: Long = BroadcastMaxRows): (DataFrame, DataFrame) = {
-    import spark.implicits._
-
     // skip-path: dictionary-resolved or DATE mentions bypass scoring
-    // (reference linking.skip, TrieNER.py:79-81 / spacyner/main.py:51-54).
-    // The wide columns (64-float embedding + contexts) are dead past the
-    // candidate join — project them out BEFORE the skip/linked frames
-    // enter the union + feats join + hydrate exchanges (guide §2.3:
-    // project before the exchange); only `candidates` below consumes
-    // them, straight off `allDf`.
-    val wideCols = Seq("m_emb", "ctx_left", "ctx_right")
+    // (reference linking.skip, TrieNER.py:79-81 / spacyner/main.py:51-54);
+    // the wide columns are dead here and projected out at once
     val skipPath = allDf.filter(col("skip"))
-      .drop(wideCols: _*)
+      .drop("m_emb", "ctx_left", "ctx_right")
       .withColumn("entity_id", col("gazetteer_id"))
       .withColumn("bi_score", lit(1.0))
       .withColumn("nil_score", lit(1.0))
       .withColumn("is_nil", lit(false))
 
-    val linkable = allDf.filter(!col("skip"))
-    // resolve the registry row count ONCE per run — both the candidate
-    // join and the hydrate join gate their broadcast on it
+    // resolve the registry row count ONCE per run — both the kernel's
+    // candidate path and the hydrate join gate their broadcast on it
     val regRows = registryRows.getOrElse(registry.count())
-    val cands = candidates(spark, linkable, registry, rerank, Some(regRows),
-      broadcastMaxRows)
-
-    // ONE aggregation derives everything per mention — the candidate
-    // list, the top candidate, and the NIL features. (An earlier shape
-    // consumed `cands` from three uncached branches and recomputed the
-    // whole candidate join+window three times: measured 7x slowdown.)
-    // jacc/lev ride in the struct so the rank-1 features need no second
-    // pass over `cands`.
-    val candLists = cands
-      .groupBy(col("doc_id"), col("annset"), col("ann_id"))
-      .agg(array_sort(collect_list(struct(
-        col("rank"), col("entity_id"), col("title"), col("type_"),
-        col("bi_score"), col("norm_score"), col("jacc"), col("lev_sim"),
-        col("cross_score"))))
-        .as("candidates"))
-      .withColumn("top_candidate", element_at(col("candidates"), 1))
-      .transform(graft.Ckpt(_))
-
-    // candidate-score stats are NIL features (mean/median/stdev,
-    // nilpredictor/main.py:139-152); top-candidate features join along.
-    // max_bi / max_cross are MAXES OVER THE LIST (nilpredictor/
-    // main.py:120-131), not the rank-1 row's fields: under rerank the
-    // list is ordered by cross_score, so the rank-1 row's bi_score is
-    // whatever bi score the cross-winner happens to have — taking it as
-    // max_bi would understate the feature exactly when the two encoders
-    // disagree. (Under rerank=false the two coincide.)
-    val feats = candLists.select(
-        col("doc_id"), col("annset"), col("ann_id"),
-        col("top_candidate.entity_id").as("top_entity_id"),
-        array_max(transform(col("candidates"), c => c("bi_score"))).as("max_bi"),
-        array_max(transform(col("candidates"), c => c("cross_score"))).as("max_cross"),
-        col("top_candidate.jacc").as("jacc"),
-        col("top_candidate.lev_sim").as("lev_sim"),
-        scoreStatsUdf(transform(col("candidates"), c => c("bi_score"))).as("st"))
-      .select(col("doc_id"), col("annset"), col("ann_id"),
-        col("top_entity_id"), col("max_bi"), col("max_cross"),
-        col("jacc"), col("lev_sim"),
-        col("st._1").as("sc_mean"), col("st._2").as("sc_median"),
-        col("st._3").as("sc_stdev"))
-
-    val sigArg = lit(NilWeights(0)) * col("max_bi") +
-      lit(NilWeights(1)) * col("max_cross") +
-      lit(NilWeights(2)) * col("jacc") +
-      lit(NilWeights(3)) * col("lev_sim") +
-      lit(NilWeights(4)) * col("sc_mean") +
-      lit(NilWeights(5)) * col("sc_median") +
-      lit(NilWeights(6)) * col("sc_stdev") + lit(NilBias)
-
-    val linkedPath = linkable
-      .drop(wideCols: _*)
-      .join(feats, Seq("doc_id", "annset", "ann_id"), "left")
-      .withColumn("nil_score",
-        when(col("top_entity_id").isNull, lit(0.0)) // P8: no candidates
-          .otherwise(lit(1.0) / (lit(1.0) + exp(-sigArg))))
-      .withColumn("is_nil", col("nil_score") < 0.5)
-      .withColumn("entity_id",
-        when(col("is_nil"), lit(-1L)).otherwise(col("top_entity_id")))
-      .withColumn("bi_score", coalesce(col("max_bi"), lit(0.0)))
-      .drop("top_entity_id", "max_bi", "max_cross", "jacc", "lev_sim",
-        "sc_mean", "sc_median", "sc_stdev")
-
-    val unioned = skipPath.unionByName(linkedPath)
+    // ONE checkpoint of the kernel's output serves both consumers, linked
+    // rows and candidate lists (three uncached branches off the candidate
+    // frame once recomputed its whole join three times: measured 7x)
+    val scored = graft.Ckpt(scoreMentions(spark, allDf.filter(!col("skip")),
+      registry, rerank, regRows, broadcastMaxRows)).toDF()
+    val candLists = scored.filter(size(col("candidates")) > 0)
+      .select("doc_id", "annset", "ann_id", "candidates", "top_candidate")
+    val unioned = skipPath.unionByName(scored.drop("candidates", "top_candidate"))
 
     // Hydrate join (J2): same broadcast-or-shuffle gate as the candidate
-    // join above — a 10^8-entity registry cannot broadcast even as the
-    // narrow (id,title,type_) slice. Past the gate a plain shuffle join
-    // is skew-safe here: the left side is post-top-k (one row per
-    // mention), so no entity key fans out more than the mention count
-    // that actually linked to it, and AQE handles residual skew.
+    // path — a 10^8-entity registry cannot broadcast even as the narrow
+    // (id,title,type_) slice. Past the gate a plain shuffle join is
+    // skew-safe here: the left side is post-top-k (one row per mention),
+    // so no entity key fans out more than the mention count that
+    // actually linked to it, and AQE handles residual skew.
     val reg = registry.select(col("id").as("entity_id"),
       col("title").as("ent_title"), col("type_").as("ent_type"))
     val regForHydrate =
@@ -450,11 +482,8 @@ object Linker {
             concat(lit("TRIE"), col("entity_id")))
           .when(col("entity_id") >= 0, concat(lit("kb://ent/"), col("entity_id")))
           .otherwise(lit("")))
-      // wide columns were already dropped before the union (above); the
-      // caller localCheckpoints this frame, and a checkpoint is a
-      // pruning barrier — anything kept here is carried through every
-      // downstream shuffle (measured: scaling collapses to memory
-      // bandwidth with m_emb retained)
+      // the caller's checkpoint is a pruning barrier: anything kept here
+      // rides every downstream shuffle (m_emb once collapsed scaling)
       .drop("ent_title", "ent_type")
     (linked, candLists)
   }

@@ -9,7 +9,7 @@ import graft.functions.Similarity
   *
   * Baseline: brute-force cosine top-k (exact, the FAISS-flat analog —
   * reference indexer/main.py:300-304 exact scan). Scale path: sign-LSH
-  * bucketing (random-hyperplane sketch) with multi-probe — candidates
+  * bucketing (axis-aligned sign sketch) with multi-probe — candidates
   * share a bucket, then exact rescoring inside buckets, mirroring the
   * reference's hnsw-then-exact-rescore pattern (indexer/main.py:304-317).
   */
@@ -35,35 +35,12 @@ object Ann {
     * refined (same rule as NilCluster.BlockCap): a skewed sign pattern —
     * e.g. embeddings concentrated in one orthant — otherwise makes the
     * bucket join quadratic (10^6 members -> 10^12 pairs). Buckets above
-    * the cap are split by a SECOND sign level (the next `dims` coords /
-    * next `planes` hyperplanes); refined buckets still above the cap are
-    * dropped from pair generation (graceful recall loss, never a blowup).
-    * The LSH kernels take it as a defaulted parameter so a test can
-    * exercise the cap on a small input.
+    * the cap are split by a SECOND sign level (the next `dims` coords);
+    * refined buckets still above the cap are dropped from pair generation
+    * (graceful recall loss, never a blowup). The LSH kernel takes it as a
+    * defaulted parameter so a test can exercise the cap on a small input.
     */
   val BucketCap: Int = 10000
-
-  /** Deterministic pseudo-random hyperplane component for (plane, dim):
-    * murmur-based in [-1, 1).
-    */
-  private def planeComponent(plane: Int, dim: Int): Float = {
-    val h = scala.util.hashing.MurmurHash3.productHash((plane, dim), 0x2545f491)
-    (h.toDouble / Int.MaxValue).toFloat
-  }
-
-  /** Sign bucket over hyperplanes [offset, offset+planes). */
-  private val bucketUdf = udf((v: Seq[Float], planes: Int, offset: Int) => {
-    var b = 0
-    var p = 0
-    while (p < planes) {
-      var s = 0.0
-      var i = 0
-      while (i < v.length) { s += v(i) * planeComponent(offset + p, i); i += 1 }
-      b = (b << 1) | (if (s >= 0) 1 else 0)
-      p += 1
-    }
-    b
-  })
 
   /** Self-join of `b` (id, vec, bucket, bucket2) within buckets, with the
     * BucketCap skew guard: level-1 buckets above the cap join within
@@ -98,9 +75,9 @@ object Ann {
 
   /** Axis-aligned sign-LSH top-k: bucket = sign pattern of the leading
     * `dims` coordinates (the degenerate random-hyperplane case where the
-    * planes are coordinate axes). Same bucketed shape as [[lshTopK]] but
-    * the bucket function is a pure column expression — SQL-expressible
-    * for the correctness oracle AND whole-stage-codegen'd (no UDF).
+    * planes are coordinate axes). The bucket function is a pure column
+    * expression — SQL-expressible for the correctness oracle AND
+    * whole-stage-codegen'd (no UDF).
     * Hot buckets are refined/capped (see [[BucketCap]]).
     */
   def signLshTopK(vectors: DataFrame, k: Int, dims: Int = 8,
@@ -165,17 +142,6 @@ object Ann {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", Similarity.cosineCol(col("qv"), col("nv")))
     TopK.topKPerKey(cand, Seq("query_id"), "cos", "neighbor_id", k)
-      .select("query_id", "neighbor_id", "cos", "rnk")
-  }
-
-  def lshTopK(vectors: DataFrame, k: Int, planes: Int = 6,
-              bucketCap: Int = BucketCap): DataFrame = {
-    val b = vectors.select(col("id"), col("vec"))
-      .withColumn("bucket", bucketUdf(col("vec"), lit(planes), lit(0)))
-      .withColumn("bucket2", bucketUdf(col("vec"), lit(planes), lit(planes)))
-    val scored = cappedBucketPairs(b, bucketCap)
-      .withColumn("cos", Similarity.cosineCol(col("qv"), col("cv")))
-    TopK.topKPerKey(scored, Seq("query_id"), "cos", "neighbor_id", k)
       .select("query_id", "neighbor_id", "cos", "rnk")
   }
 }

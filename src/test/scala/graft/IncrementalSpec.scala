@@ -225,4 +225,16 @@ class IncrementalSpec extends SparkTestBase {
     assert(pending == Seq(Seq("d3")),
       s"only the dangling attempt:ids set is pending, got $pending")
   }
+
+  test("batches and reannotate leave no cached frame behind") {
+    // Pipeline.run's prep frame, NilCluster's surface counts and the
+    // IceLite sources are released (or lazily checkpointed) before each
+    // call returns, so a long-lived loop holds no cache entry per batch
+    spark.catalog.clearCache()
+    val dir = Files.createTempDirectory("inc-cache").toString
+    Incremental.run(spark, spark.createDataset(corpus), dir, numBatches = 2)
+    Incremental.reannotate(spark, dir, Seq("d1", "d4"))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "cached frames outlive Incremental.run / reannotate")
+  }
 }

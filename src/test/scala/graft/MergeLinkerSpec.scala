@@ -270,6 +270,22 @@ class MergeLinkerSpec extends SparkTestBase {
     // BROADCAST hint would blow up at a 10^8-entity registry
     assert(!analyzed.toLowerCase.contains("strategy=broadcast"),
       "no broadcast hints allowed when registry exceeds broadcastMaxRows")
+    // both paths feed the same per-mention kernel: full linked rows and
+    // the candidate lists (incl. top_candidate) agree, with and without
+    // the cross-encoder rerank
+    Seq(false, true).foreach { rerank =>
+      def both(cap: Long) = {
+        val (l, c) = Linker.linkWithCandidates(spark, mentions, text, reg,
+          rerank = rerank, broadcastMaxRows = cap)
+        (l.collect().map(_.toString).sorted.toSeq,
+          c.collect().map(_.toString).sorted.toSeq)
+      }
+      val (bl, bc) = both(Linker.BroadcastMaxRows)
+      val (sl, sc) = both(0)
+      assert(bl.nonEmpty && bc.nonEmpty)
+      assert(sl == bl, s"linked rows differ (rerank=$rerank)")
+      assert(sc == bc, s"candidate lists differ (rerank=$rerank)")
+    }
   }
 
   test("linker: NIL features carry max_cross (reference LR parity)") {

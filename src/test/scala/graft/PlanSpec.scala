@@ -91,12 +91,14 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("candidate exchanges are narrow: no embedding/context columns shuffle") {
-    // The linker's pair-dedup and top-k window exchanges must ship only
-    // scalar columns — carrying the two 64-float embeddings and context
-    // windows through them measured 519/560 MB shuffle writes per 440k
-    // docs and ~2x CPU inflation on the 4-executor bench level (memory-
-    // bandwidth contention; network at cluster scale). Scores/norms are
-    // computed pre-exchange instead; this pins that shape.
+    // The linker's candidate exchanges must ship only scalar columns —
+    // carrying the two 64-float embeddings and context windows through
+    // them measured 519/560 MB shuffle writes per 440k docs and ~2x CPU
+    // inflation on the 4-executor bench level (memory-bandwidth
+    // contention; network at cluster scale). Scores/norms are computed
+    // pre-exchange instead; this pins that shape. Under the broadcast
+    // gate there is no exchange at all; past it (cap 0, the salted path)
+    // the pair-dedup and cogroup exchanges exist and must stay narrow.
     import graft.core.{InputDoc, Span, SpanOps}
     import graft.link.Linker
     import graft.ner.TrieNer
@@ -109,14 +111,26 @@ class PlanSpec extends SparkTestBase {
     val linkable = Linker.withEmbeddingsDF(spark, mentions, text)
     val cands = Linker.candidates(spark, linkable, reg)
     val wide = Set("m_emb", "e_emb", "ctx_left", "ctx_right", "emb")
+    // the walk descends into AQE plans (a plain `collect` stops at the
+    // AdaptiveSparkPlanExec leaf and sees no exchange at all)
     def shuffles(p: org.apache.spark.sql.execution.SparkPlan):
         Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike] =
-      p.collect { case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => s }
-    val offenders = shuffles(cands.queryExecution.executedPlan)
-      .map(_.child.output.map(_.name).toSet.intersect(wide))
-      .filter(_.nonEmpty)
+      PlanSpec.nodes(p).collect {
+        case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => s }
+    def wideIn(ss: Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]) =
+      ss.map(_.child.output.map(_.name).toSet.intersect(wide)).filter(_.nonEmpty)
+    val offenders = wideIn(shuffles(cands.queryExecution.executedPlan))
     assert(offenders.isEmpty,
       s"wide columns in candidate exchanges: $offenders")
+    // over a checkpointed input, so only the linker's own exchanges count
+    val embedded = Ckpt(linkable)
+    def exchanges(cap: Long) = shuffles(Linker.candidates(spark, embedded, reg,
+      broadcastMaxRows = cap).queryExecution.executedPlan)
+    assert(exchanges(Linker.BroadcastMaxRows).isEmpty)
+    val salted = exchanges(0)
+    assert(salted.nonEmpty, "the salted path shuffles")
+    assert(wideIn(salted).isEmpty,
+      s"wide columns in salted candidate exchanges: ${wideIn(salted)}")
   }
 
   test("Pipeline.run's linker input plans no shuffle exchange") {
@@ -126,7 +140,6 @@ class PlanSpec extends SparkTestBase {
     // the prep persist's own plan.
     import graft.core.{InputDoc, Span, SpanOps}
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import spark.implicits._
@@ -134,15 +147,41 @@ class PlanSpec extends SparkTestBase {
       InputDoc("a", SpanOps.withOffsets(Seq(Span("text", "spark and customer data", "", 0)))),
       InputDoc("b", SpanOps.withOffsets(Seq(Span("text", "slow part meets spark", "", 0))))))
     val (prep, embedded) = Pipeline.prepare(spark, docs)
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
-      case other => other +: other.children.flatMap(nodes)
-    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = PlanSpec.nodes(p)
     val plan = embedded.queryExecution.executedPlan
     assert(nodes(plan).exists(_.isInstanceOf[InMemoryTableScanExec]), plan)
     val exchanges = nodes(plan).collect { case s: ShuffleExchangeLike => s }
     assert(exchanges.isEmpty, s"exchanges in the linker input:\n$plan")
+    prep.unpersist()
+  }
+
+  test("Pipeline.run's linker output plans no shuffle exchange under the broadcast gate") {
+    // Under the broadcast gate the kernel runs in one narrow map over the
+    // prep frame: no exchange between the docs and the linker's
+    // checkpoint, and none after it (skip union, broadcast hydrate).
+    import graft.core.{InputDoc, Span, SpanOps}
+    import graft.link.Linker
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import spark.implicits._
+    val docs = spark.createDataset(Seq(
+      InputDoc("a", SpanOps.withOffsets(Seq(Span("text", "spark and customer data", "", 0)))),
+      InputDoc("b", SpanOps.withOffsets(Seq(Span("text", "slow part meets spark on 2024-01-01", "", 0))))))
+    val reg = graft.kb.Registry.seed(spark).toDF()
+    val (prep, embedded) = Pipeline.prepare(spark, docs)
+    val kernel = Linker.scoreMentions(spark, embedded.filter(!col("skip")), reg,
+      rerank = false, reg.count(), Linker.BroadcastMaxRows).toDF()
+    val (linked, cands) = Linker.linkEmbedded(spark, embedded, reg)
+    Seq("kernel" -> kernel, "linked" -> linked, "candidates" -> cands).foreach {
+      case (name, df) =>
+        val plan = df.queryExecution.executedPlan
+        val all = PlanSpec.nodes(plan)
+        assert(all.exists(_.isInstanceOf[InMemoryTableScanExec]) || name == "candidates",
+          s"$name: the walk must reach the prep persist\n$plan")
+        assert(!all.exists(_.isInstanceOf[ShuffleExchangeLike]),
+          s"$name plans a shuffle exchange:\n$plan")
+    }
+    assert(linked.count() > 0 && cands.count() > 0)
     prep.unpersist()
   }
 
@@ -156,5 +195,20 @@ class PlanSpec extends SparkTestBase {
     val exchanges = plan.linesIterator.count(_.contains("Exchange hashpartitioning"))
     assert(exchanges <= 2, s"expected <=2 exchanges, got $exchanges\n$plan")
     assert(plan.contains("FullOuter"), plan)
+  }
+}
+
+object PlanSpec {
+  import org.apache.spark.sql.execution.SparkPlan
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+
+  /** Every node of a physical plan, descending into AQE plans and into
+    * the plans of cached relations.
+    */
+  def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+    case other => other +: other.children.flatMap(nodes)
   }
 }

@@ -164,4 +164,134 @@ class PropertySpec extends SparkTestBase {
       viaSpark == rows.map { case (t, s, e) => graft.link.Linker.contexts(t, s, e) }
     }, 5)
   }
+
+  /** Text pieces for the linker properties: letters, spaces, punctuation,
+    * characters whose case mapping changes their length or depends on
+    * context (İ, ß, Σ/ς), and surrogate pairs.
+    */
+  private val linkPiece: Gen[String] = Gen.frequency(
+    (6, Gen.alphaChar.map(_.toString)), (2, Gen.const(" ")),
+    (1, Gen.oneOf(",", ".", "-", "'")),
+    (2, Gen.oneOf("\u0130", "\u00df", "\u03a3", "\u03c2", "\u00c9")),
+    (1, Gen.oneOf(0x1F600, 0x20000, 0x1D400).map(cp => new String(Character.toChars(cp)))))
+  private def linkText(max: Int): Gen[String] =
+    Gen.chooseNum(0, max).flatMap(n => Gen.listOfN(n, linkPiece).map(_.mkString))
+
+  test("linker kernel: lev_sim, norm_score and NIL score == the Spark expressions they replaced (property)") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.link.{Embed, Linker}
+    // one mention against up to 14 titles; the kernel keeps the top 10
+    val caseGen = for {
+      mention <- linkText(12).map("m" + _)
+      titles <- Gen.chooseNum(0, 14).flatMap(n => Gen.listOfN(n, linkText(14)))
+    } yield (mention, titles)
+    check(Prop.forAllNoShrink(Gen.listOfN(25, caseGen)) { cases =>
+      // lower() stays Spark's, as in the linker
+      val lowered = cases.flatMap { case (m, ts) => m +: ts }.distinct
+        .toDF("s").select(col("s"), lower(col("s"))).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      val scored = cases.zipWithIndex.map { case ((m, ts), i) =>
+        val mEmb = Embed.embed(m)
+        val em = Linker.EmbeddedMention("d", "a", i, "ORG", 0, 1, m, skip = false,
+          -1L, "", "", mEmb)
+        Linker.scoreMention(em, lowered(m), ts.zipWithIndex.iterator.map { case (t, j) =>
+          val eEmb = Embed.embed(t + j) // distinct embeddings, some near-ties
+          Linker.Hit(j.toLong, t, "ORG", lowered(t), Similarity.dot(mEmb, eEmb),
+            Similarity.norm(mEmb), Similarity.norm(eEmb), eEmb)
+        }, rerank = false)
+      }
+      // per kept candidate: the pre-kernel Spark expressions
+      val kept = scored.flatMap(s => s.candidates.map { c =>
+        (s.ann_id, c.entity_id, s.mention, c.title, Embed.embed(s.mention),
+          Embed.embed(c.title + c.entity_id), c.lev_sim, c.norm_score)
+      }).toDF("i", "e", "mention", "title", "m_emb", "e_emb", "lev", "norm")
+      val perCand = kept.select(col("lev"), col("norm"),
+          (lit(1.0) - levenshtein(lower(col("mention")), lower(col("title"))).cast("double") /
+            greatest(length(col("mention")), length(col("title")), lit(1)).cast("double"))
+            .as("lev_spark"),
+          (Similarity.dotCol(col("m_emb"), col("e_emb")) /
+            pow(greatest(Similarity.normCol(col("m_emb")),
+              Similarity.normCol(col("e_emb"))), 2)).as("norm_spark"))
+        .collect().forall(r => r.getDouble(0) == r.getDouble(2) &&
+          r.getDouble(1) == r.getDouble(3))
+      // per mention: array_max features, the rank-1 features, the
+      // list statistics, and the logistic as the Spark columns wrote it
+      def stats(xs: Seq[Double]): (Double, Double, Double) = {
+        val s = xs.sorted; val n = s.length
+        val mean = s.sum / n
+        val median = if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
+        (mean, median,
+          if (n < 2) 0.0 else math.sqrt(s.map(x => (x - mean) * (x - mean)).sum / (n - 1)))
+      }
+      val w = Linker.NilWeights
+      val perMention = scored.map { s =>
+        val bi = s.candidates.map(_.bi_score)
+        val (mean, median, stdev) = if (bi.isEmpty) (0.0, 0.0, 0.0) else stats(bi)
+        (s.nil_score, bi, s.candidates.map(_.cross_score),
+          s.candidates.headOption.map(_.jacc).getOrElse(0.0),
+          s.candidates.headOption.map(_.lev_sim).getOrElse(0.0),
+          mean, median, stdev, bi.nonEmpty)
+      }.toDF("nil", "bi", "cross", "jacc", "lev", "mean", "median", "stdev", "has")
+      val sig = lit(w(0)) * array_max(col("bi")) + lit(w(1)) * array_max(col("cross")) +
+        lit(w(2)) * col("jacc") + lit(w(3)) * col("lev") + lit(w(4)) * col("mean") +
+        lit(w(5)) * col("median") + lit(w(6)) * col("stdev") + lit(Linker.NilBias)
+      val nilOk = perMention.select(col("nil"),
+          when(!col("has"), lit(0.0)).otherwise(lit(1.0) / (lit(1.0) + exp(-sig))))
+        .collect().forall(r => r.getDouble(0) == r.getDouble(1))
+      perCand && nilOk && scored.forall(s => s.is_nil == (s.nil_score < 0.5))
+    }, 6)
+  }
+
+  test("token probe + dedup == the token join + dropDuplicates it replaced (property)") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.link.Linker
+    // titles: repeated tokens, punctuation, leading whitespace, empty
+    // titles and duplicate titles (tied scores)
+    val tok = Gen.oneOf("spark", "fast", "key", "merge", "join", "Spark,", "key.",
+      "\u0130stanbul", "stra\u00dfe", "\u03a3igma")
+    val title = Gen.frequency(
+      (6, Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, tok).map(_.mkString(" ")))),
+      (1, Gen.const("")), (1, Gen.oneOf(" spark key", "  fast", "key key key")))
+    val mention = Gen.chooseNum(1, 3).flatMap(n =>
+      Gen.listOfN(n, Gen.frequency((4, tok), (1, Gen.const("-")), (1, Gen.const("x"))))
+        .map(_.mkString(" ")))
+    check(Prop.forAllNoShrink(Gen.listOfN(30, title), Gen.listOfN(30, mention)) { (titles, mentions) =>
+      val reg = titles.zipWithIndex.map { case (t, i) =>
+        (i.toLong, t, "ORG", graft.link.Embed.embed(t)) }.toDF("id", "title", "type_", "emb")
+      val ms = mentions.zipWithIndex.map { case (m, i) =>
+        (i, m, graft.link.Embed.embed("ctx " + m)) }.toDF("ann_id", "mention", "m_emb")
+      // the parent's shape, written out
+      val regTokens = reg.select(col("id").as("entity_id"), col("emb").as("e_emb"))
+        .join(reg.select(col("id").as("entity_id"),
+          explode(split(lower(col("title")), "\\s+")).as("token")), "entity_id")
+      val viaJoin = ms.withColumn("token", explode(array_distinct(split(
+          regexp_replace(lower(col("mention")), "[^\\p{L}\\p{N}]+", " "), "\\s+"))))
+        .filter(col("token") =!= "")
+        .join(regTokens, Seq("token"))
+        .withColumn("bi", Similarity.dotCol(col("m_emb"), col("e_emb")))
+        .withColumn("mn", Similarity.normCol(col("m_emb")))
+        .withColumn("en", Similarity.normCol(col("e_emb")))
+        .dropDuplicates("ann_id", "entity_id")
+        .select("ann_id", "entity_id", "bi", "mn", "en").collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+        .toSet
+      // the probe, over the linker's own registry and mention columns
+      val idx = new Linker.TokenIndex(
+        Linker.regEntities(reg).as[Linker.RegEntity].collect())
+      val viaProbe = Linker.withTokens(ms)
+        .select("ann_id", "m_emb", "tokens").as[(Int, Array[Float], Seq[String])]
+        .collect().flatMap { case (i, mEmb, tokens) =>
+          val hits = idx.probe(tokens)
+          assert(hits.distinct.size == hits.size, "probe returns each entity once")
+          hits.map { e =>
+            val ent = idx.entities(e)
+            (i, ent.entity_id, Similarity.dot(mEmb, ent.e_emb), Similarity.norm(mEmb),
+              idx.eNorms(e))
+          }
+        }.toSet
+      viaProbe == viaJoin
+    }, 8)
+  }
 }
