@@ -111,45 +111,13 @@ object Pipeline {
     // the linked checkpoint was the prep frame's last reader
     prep.unpersist()
 
-    val nil = linked.filter(col("is_nil") &&
-      // DATE-skip mentions never cluster (reference P3/P7 interplay)
-      col("mention_type") =!= "DATE")
-    val clusterRes = NilCluster.clusterFull(spark, nil)
-    val clustersRaw = clusterRes.clusters
-
-    // Deterministic contiguous new-entity ids (W7, reference
-    // indexer/main.py:408-411): base = max registry id (fused aggregate
-    // above).
-
-    // One row per NIL cluster, with ids following the cluster_key order
-    // on both paths. On NilCluster's local path there are at most
-    // LocalLimit clusters (one per surface at most), so the id assignment
-    // runs in plain Scala over a LocalRelation instead of a window +
-    // checkpoint — two fewer eager jobs, and every downstream cluster
-    // join broadcasts a local table. The distributed path keeps the
-    // clusters distributed.
-    val nilIdField = org.apache.spark.sql.types.StructField("nil_id",
-      org.apache.spark.sql.types.LongType, nullable = false)
-    val clusterSchema = org.apache.spark.sql.types.StructType(
-      clustersRaw.schema.fields :+ nilIdField)
-    val clusters: DataFrame =
-      if (clusterRes.isLocal) {
-        import org.apache.spark.sql.Row
-        val sorted = clustersRaw.collect().sortBy(_.getAs[String]("cluster_key"))
-        val rows = sorted.zipWithIndex.map { case (r, i) =>
-          Row.fromSeq(r.toSeq :+ (base + i + 1L))
-        }
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows.toSeq, 1), clusterSchema)
-      } else {
-        // a global Window.orderBy would funnel every row through ONE
-        // partition; rangepartition-sort + zipWithIndex keeps the id
-        // assignment parallel and deterministic
-        val withIds = clustersRaw.sort(col("cluster_key")).rdd.zipWithIndex.map {
-          case (r, i) => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (base + i + 1L))
-        }
-        Ckpt(spark.createDataFrame(withIds, clusterSchema))
-      }
+    // DATE-skip mentions never cluster (reference P3/P7 interplay)
+    val isNilRow = col("is_nil") && col("mention_type") =!= "DATE"
+    // NIL clusters numbered where they are made: deterministic contiguous
+    // new-entity ids after the registry max (W7, reference
+    // indexer/main.py:408-411; fused aggregate above)
+    val clusterRes = NilCluster.clusterFull(spark, linked.filter(isNilRow), idBase = base)
+    val clusters = clusterRes.clusters
 
     val newEntities = clusters.select(
       col("nil_id").as("id"),
@@ -165,28 +133,22 @@ object Pipeline {
     // resolved display name per mention: ent:<title> or nil:<title>.
     // The NIL assignment is a pure function of the mention's SURFACE
     // (NilCluster assigns by lower(mention)), so resolution joins the
-    // VOCABULARY-sized surface -> (nil_name, nil_id, type) map — a
-    // broadcast on the local path, a surface-keyed shuffle of the small
-    // map otherwise — instead of joining the mention-sized assignments
-    // frame back on the annotation key (measured flipping to a spilling
-    // sort-merge join of the whole linked frame at 240k docs).
-    val vocabNames = clusterRes.surfaceMap.select("surface", "cluster_key")
-      .join(clusters.select("cluster_key", "nil_id", "title", "cluster_type"),
-        Seq("cluster_key"))
-      .select(col("surface"),
-        concat(lit("nil:"), col("title")).as("nil_name"),
-        col("nil_id"), col("cluster_type"))
-    // Only the NIL rows enter the vocab join. A single left join with a
-    // NULL surface on every non-NIL row (the large majority) would hash
-    // all of them to ONE shuffle partition on the distributed path —
-    // null keys are retained but not special-cased by sort-merge joins,
-    // so the resolve stage would serialize at exactly the >LocalLimit
-    // scale the distributed path exists for.
-    val isNilRow = col("is_nil") && col("mention_type") =!= "DATE"
+    // VOCABULARY-sized surface map — broadcast-hinted by NilCluster on
+    // its driver path, a surface-keyed shuffle of the small map otherwise
+    // — instead of joining the mention-sized assignments frame back on
+    // the annotation key (measured flipping to a spilling sort-merge join
+    // of the whole linked frame at 240k docs).
+    // Only the NIL rows enter this join. A single left join with a NULL
+    // surface on every non-NIL row (the large majority) would hash all of
+    // them to ONE shuffle partition on the distributed path — null keys
+    // are retained but not special-cased by sort-merge joins, so the
+    // resolve stage would serialize at exactly the >LocalLimit scale the
+    // distributed path exists for.
     val nilResolved = linked.filter(isNilRow)
       .withColumn("surface", lower(col("mention")))
-      .join(if (clusterRes.isLocal) broadcast(vocabNames) else vocabNames,
-        Seq("surface"), "left")
+      .join(clusterRes.surfaceMap.select(col("surface"),
+        concat(lit("nil:"), col("title")).as("nil_name"),
+        col("nil_id"), col("cluster_type")), Seq("surface"), "left")
       .drop("surface")
     val passThrough = linked.filter(!isNilRow)
       .withColumn("nil_name", lit(null).cast("string"))

@@ -25,7 +25,7 @@ import graft.link.Embed
   * raw mentions: 10^12 mentions collapse to the surface vocabulary first
   * (one distinct + one broadcast-join back). Only stage 1 is global, and
   * it is the only stage with two drivers: union-find on the driver up to
-  * `LocalLimit` surfaces, [[ConnectedComponents]] min-id label
+  * `LocalLimit` vocabulary rows, [[ConnectedComponents]] min-id label
   * propagation above it. Both take their candidate pairs from one rule
   * ([[blockKeys]] blocks, blocks above `BlockCap` dropped: [[blockPairs]])
   * and one metric ([[stringLink]]).
@@ -35,8 +35,10 @@ import graft.link.Embed
   * `groupByKey(...).flatMapGroups` on the distributed path:
   *   [[stage2]]  one stage-1 component -> cosine sub-clusters;
   *   [[stage3]]  one [[signBucket]] of sub-cluster centroids -> merges;
-  *   [[finish]]  one final cluster -> breakup, key (min surface), center.
-  * So the two paths give identical keys and centers (tested).
+  *   [[finish]]  one final cluster -> breakup, key (min surface), center;
+  *   [[clusterRecord]]  one keyed cluster's vocabulary -> its record.
+  * So the two paths give identical keys, centers, records and — numbered
+  * in one key order — nil ids (tested).
   *
   * Scale bound of the distributed path: a group must fit in one task —
   * one stage-1 component, one sign bucket of centroids, or one final
@@ -74,9 +76,11 @@ object NilCluster {
     */
   val BlockCap: Int = 5000
 
-  /** Max distinct surfaces for the driver-side path. ~100k surfaces x
-    * 64-d float = ~26 MB — comfortably driver-sized; beyond that the
-    * distributed path takes over.
+  /** Max (surface, mention, mention_type) vocabulary rows for the
+    * driver-side path — every distinct surface has at least one, so this
+    * also bounds the surfaces the driver embeds (~100k x 64-d float =
+    * ~26 MB) and, unlike a distinct-surface count, the rows it holds for
+    * the cluster records. Beyond it the distributed path takes over.
     */
   val LocalLimit = 100000L
 
@@ -309,112 +313,126 @@ object NilCluster {
   // entry point
   // ---------------------------------------------------------------------
 
-  /** Full clustering result. `surfaceMap` (surface -> cluster_key) is
-    * vocabulary-sized — the collapse that makes 10^12 mentions
-    * clusterable — and `isLocal` says whether it is a driver-built
-    * LocalRelation (broadcastable for free). Downstream joins that only
-    * need a mention's cluster should go through surfaceMap by SURFACE,
-    * not through `assignments` by annotation key: the assignments frame
-    * is mention-sized, and joining it back to the linked frame was
-    * measured flipping to a spilling sort-merge join at 240k docs
-    * (15.7 -> 276.6 core-s for the resolve stage, 1.5x input).
+  /** Full clustering result, NIL clusters already numbered.
+    *   assignments: doc_id, annset, ann_id, cluster_key
+    *   clusters: cluster_key, title, cluster_type, nelements, n_surfaces,
+    *             center(array<float>), nil_id
+    *   surfaceMap: surface, cluster_key, nil_id, title, cluster_type
+    * `surfaceMap` is vocabulary-sized — the collapse that makes 10^12
+    * mentions clusterable — and already carries the broadcast hint on
+    * the driver path (`isLocal`), where it is a LocalRelation bounded by
+    * `LocalLimit`. Downstream joins that only need a mention's cluster
+    * should go through surfaceMap by SURFACE, not through `assignments`
+    * by annotation key: the assignments frame is mention-sized, and
+    * joining it back to the linked frame was measured flipping to a
+    * spilling sort-merge join at 240k docs (15.7 -> 276.6 core-s for the
+    * resolve stage, 1.5x input).
     */
   final case class ClusterResult(assignments: DataFrame, clusters: DataFrame,
                                  surfaceMap: DataFrame, isLocal: Boolean)
 
-  /** Cluster NIL mentions. Input columns required:
-    * (doc_id, annset, ann_id, mention, mention_type). Returns
-    * (assignments, clusters):
-    *   assignments: doc_id, annset, ann_id, cluster_key
-    *   clusters: cluster_key, title, cluster_type, nelements, n_surfaces,
-    *             center(array<float>)
-    */
-  def cluster(spark: SparkSession, nilMentions: DataFrame,
-              localLimit: Long = LocalLimit): (DataFrame, DataFrame) = {
-    val r = clusterFull(spark, nilMentions, localLimit)
-    (r.assignments, r.clusters)
-  }
+  /** One numbered NIL cluster: the `clusters` row of [[ClusterResult]]. */
+  final case class ClusterRec(cluster_key: String, title: String,
+      cluster_type: String, nelements: Long, n_surfaces: Long,
+      center: Array[Float], nil_id: Long)
 
+  /** Cluster NIL mentions (columns doc_id, annset, ann_id, mention,
+    * mention_type) and number the clusters: nil_id = idBase + 1, 2, ...
+    * in cluster_key order (UTF-8 byte order on both paths; reference
+    * indexer/main.py:408-411). Two paths, one record kernel
+    * ([[clusterRecord]]): up to `localLimit` (surface, mention,
+    * mention_type) rows everything after the one gating `take` runs on
+    * the driver into local tables; above it the surfaces cluster
+    * distributed, the kernel runs per `groupByKey(cluster_key)` group
+    * and the ids come from a range sort + zipWithIndex.
+    */
   def clusterFull(spark: SparkSession, nilMentions: DataFrame,
-                  localLimit: Long = LocalLimit): ClusterResult = {
+                  localLimit: Long = LocalLimit, idBase: Long = 0L): ClusterResult = {
     import spark.implicits._
-    // ONE mention-scale pass (r5): collapse to the (surface, case-form,
-    // type) vocabulary FIRST — a map-side-combining aggregate — and
-    // derive everything downstream (surface set, titles, types, sizes)
-    // from that vocabulary-scale frame. The previous shape persisted the
-    // mention-scale frame TWICE (normalized + assigned) and scanned the
-    // assigned persist three more times (two mode aggregates + sizes),
-    // each a separate job with its own window/join stages: ~4 s of
-    // per-level serial stage dispatch on the bench ladder for aggregates
-    // whose true output is vocabulary-sized. Counts are exact, so mode /
-    // nelements / n_surfaces are unchanged (sum of per-form counts ==
-    // count over mentions).
+    // ONE mention-scale pass: collapse to the (surface, case-form, type)
+    // vocabulary FIRST — a map-side-combining aggregate — and derive
+    // everything downstream (surface set, titles, types, sizes) from
+    // that vocabulary-scale frame. Counts are exact, so mode / nelements
+    // / n_surfaces equal their mention-level definitions.
     val counts = nilMentions
       .groupBy(lower(col("mention")).as("surface"),
         col("mention"), col("mention_type"))
       .agg(count(lit(1)).as("cnt"))
-      // a LAZY local checkpoint, not a persist: the surface take below
-      // fills it and the cluster aggregate reads it again, but its blocks
-      // belong to the RDD (released with it), so no cache entry outlives
-      // the call and no job is added
+      .as[(String, String, String, Long)]
+      // a LAZY local checkpoint, not a persist: the take below fills it
+      // and the distributed path reads it again, but its blocks belong
+      // to the RDD (released with it), so no cache entry outlives the
+      // call and no job is added
       .localCheckpoint(false, graft.Ckpt.storage(spark))
 
-    // one job decides the path AND feeds the local path: take(limit+1)
-    // instead of count()+collect() halves the eager-job count here
-    val surfacesDf = counts.select("surface").distinct()
-    val head = surfacesDf.as[String].take(localLimit.toInt + 1)
+    // one job decides the path AND feeds the whole local path
+    val head = counts.take(localLimit.toInt + 1)
     val isLocal = head.length <= localLimit
 
-    val surfToCluster: DataFrame =
+    val (clusters, surfaceMap) =
       if (isLocal) {
-        val local = clusterSurfacesLocal(head.toSeq)
-        local.toSeq.map { case (s, (k, c)) => (s, k, c) }
-          .toDF("surface", "cluster_key", "center")
+        val bySurface = clusterSurfacesLocal(head.map(_._1).toSeq)
+        val recs = head.toSeq.groupBy(r => bySurface(r._1)._1).toSeq
+          .sortWith((a, b) => utf8Less(a._1, b._1)).zipWithIndex
+          .map { case ((key, rows), i) =>
+            clusterRecord(key, bySurface(rows.head._1)._2, rows, idBase + i + 1L)
+          }
+        val byKey = recs.map(c => c.cluster_key -> c).toMap
+        val sm = bySurface.toSeq.map { case (s, (k, _)) =>
+          val c = byKey(k)
+          (s, k, c.nil_id, c.title, c.cluster_type)
+        }
+        (recs.toDF(), broadcast(sm.toDF(SurfaceMapCols: _*)))
       } else {
-        clusterSurfacesDistributed(spark, surfacesDf)
+        val surf = clusterSurfacesDistributed(spark, counts.toDF())
+        val recs = counts.toDF().join(surf, Seq("surface"))
+          .as[(String, String, String, Long, String, Array[Float])]
+          .groupByKey(_._5).mapGroups { (key, it) =>
+            val rows = it.toSeq
+            clusterRecord(key, rows.head._6, rows.map(r => (r._1, r._2, r._3, r._4)), 0L)
+          }
+        // a global Window.orderBy would funnel every row through ONE
+        // partition; range sort + zipWithIndex keeps the numbering
+        // parallel and deterministic
+        val numbered = graft.Ckpt(recs.sort("cluster_key").rdd.zipWithIndex
+          .map { case (c, i) => c.copy(nil_id = idBase + i + 1L) }.toDF())
+        // no broadcast hint: this map is unbounded, AQE picks the join
+        val sm = surf.select("surface", "cluster_key")
+          .join(numbered.select("cluster_key", "nil_id", "title", "cluster_type"),
+            Seq("cluster_key"))
+          .select(SurfaceMapCols.map(col): _*)
+        (numbered, sm)
       }
-
-    // broadcast hint ONLY on the local path (a driver-built LocalRelation
-    // bounded by localLimit); the distributed path's surface map is
-    // unbounded — hinting broadcast there would ship the whole
-    // vocabulary to every executor. AQE picks the join there.
-    val surfKey = surfToCluster.select("surface", "cluster_key")
-
-    // title (A1) / type (A2) mode with (count desc, value asc) tie-break,
-    // nelements, n_surfaces — ONE vocabulary-scale aggregate over the
-    // keyed counts ([[clusterAggUdf]]; value order matches Spark's
-    // UTF8String binary ordering, which the previous orderBy used).
-    val withKey = counts.join(
-      if (isLocal) broadcast(surfKey) else surfKey, Seq("surface"))
-    val agg = withKey.groupBy(col("cluster_key"))
-      .agg(clusterAggUdaf(col("surface"), col("mention"),
-        col("mention_type"), col("cnt")).as("m"))
-      .select(col("cluster_key"), col("m._1").as("title"),
-        col("m._2").as("cluster_type"), col("m._3").as("nelements"),
-        col("m._4").as("n_surfaces"))
-    val centers = surfToCluster.select("cluster_key", "center")
-      .dropDuplicates("cluster_key")
-    val clusters = agg.join(
-      if (isLocal) broadcast(centers) else centers, Seq("cluster_key"))
 
     // mention-scale assignments stay LAZY and unpersisted: Pipeline.run
     // resolves by surface (surfaceMap) and never consumes them; API
     // callers that fan out over assignments should checkpoint first.
     val assignments = nilMentions
       .withColumn("surface", lower(col("mention")))
-      .join(if (isLocal) broadcast(surfKey) else surfKey, Seq("surface"))
+      .join(surfaceMap.select("surface", "cluster_key"), Seq("surface"))
       .select("doc_id", "annset", "ann_id", "cluster_key")
-    ClusterResult(assignments, clusters, surfKey, isLocal)
+    ClusterResult(assignments, clusters, surfaceMap, isLocal)
   }
 
-  /** Cluster-record aggregate over keyed (surface, mention, mention_type,
-    * cnt) rows: (title, cluster_type, nelements, n_surfaces). Mode
-    * tie-break = (count desc, value asc) in UTF-8 BYTE order — identical
-    * to the `orderBy(cnt.desc, value.asc)` window it replaces, because
-    * Spark's UTF8String comparison is unsigned byte-wise. A null value
-    * sorts FIRST (smallest), matching Spark's nulls-first ascending
-    * ordering (ADVICE r5: the previous UDF NPEd on null mention/type,
-    * which the window it replaced tolerated).
+  private val SurfaceMapCols =
+    Seq("surface", "cluster_key", "nil_id", "title", "cluster_type")
+
+  /** ONE cluster's record from its (surface, mention, mention_type, cnt)
+    * vocabulary rows: title (A1) / type (A2) = count-weighted mode with
+    * (count desc, value asc) tie-break, nelements = mention count,
+    * n_surfaces = distinct surfaces. The one kernel both paths run.
+    */
+  private def clusterRecord(key: String, center: Array[Float],
+      rows: Seq[(String, String, String, Long)], nilId: Long): ClusterRec =
+    ClusterRec(key,
+      weightedMode(rows.groupMapReduce(_._2)(_._4)(_ + _)),
+      weightedMode(rows.groupMapReduce(_._3)(_._4)(_ + _)),
+      rows.map(_._4).sum, rows.map(_._1).distinct.size.toLong, center, nilId)
+
+  /** Value order of the mode tie-break and of the cluster numbering:
+    * UTF-8 BYTE order, i.e. Spark's UTF8String comparison (so the
+    * distributed path's `sort` gives the same ids). A null value sorts
+    * FIRST (smallest), matching Spark's nulls-first ascending ordering.
     */
   private def utf8Less(a: String, b: String): Boolean = {
     if (a == null) return b != null // null < any non-null; null == null
@@ -439,61 +457,4 @@ object NilCluster {
     }
     best
   }
-
-  /** Mutable buffer of the typed cluster aggregate (Kryo-encoded between
-    * partial and merge phases).
-    */
-  final case class ClusterAggBuf(
-      byMention: scala.collection.mutable.HashMap[String, Long],
-      byType: scala.collection.mutable.HashMap[String, Long],
-      surfaces: scala.collection.mutable.HashSet[String],
-      var n: Long)
-
-  /** Typed map-side-combining Aggregator replacing the r5
-    * collect_list + UDF shape (VERDICT r5 #5): the per-cluster
-    * vocabulary never materializes as one array — partial buffers hold
-    * (value -> count) maps that merge associatively, so the plan is a
-    * partial/final ObjectHashAggregate like every other aggregate here.
-    * Mode/tie-break semantics identical (weightedMode at finish; counts
-    * sum associatively, so the result is independent of merge order).
-    */
-  private val clusterAgg = new org.apache.spark.sql.expressions.Aggregator[
-      (String, String, String, Long), ClusterAggBuf,
-      (String, String, Long, Long)] {
-    def zero: ClusterAggBuf = ClusterAggBuf(
-      scala.collection.mutable.HashMap.empty,
-      scala.collection.mutable.HashMap.empty,
-      scala.collection.mutable.HashSet.empty, 0L)
-    def reduce(b: ClusterAggBuf, x: (String, String, String, Long)): ClusterAggBuf = {
-      val (s, mn, t, c) = x
-      b.byMention(mn) = b.byMention.getOrElse(mn, 0L) + c
-      b.byType(t) = b.byType.getOrElse(t, 0L) + c
-      b.surfaces += s
-      b.n += c
-      b
-    }
-    def merge(a: ClusterAggBuf, b: ClusterAggBuf): ClusterAggBuf = {
-      b.byMention.foreach { case (k, v) =>
-        a.byMention(k) = a.byMention.getOrElse(k, 0L) + v }
-      b.byType.foreach { case (k, v) =>
-        a.byType(k) = a.byType.getOrElse(k, 0L) + v }
-      a.surfaces ++= b.surfaces
-      a.n += b.n
-      a
-    }
-    def finish(b: ClusterAggBuf): (String, String, Long, Long) =
-      (weightedMode(b.byMention), weightedMode(b.byType), b.n,
-        b.surfaces.size.toLong)
-    def bufferEncoder: org.apache.spark.sql.Encoder[ClusterAggBuf] =
-      org.apache.spark.sql.Encoders.kryo[ClusterAggBuf]
-    def outputEncoder: org.apache.spark.sql.Encoder[(String, String, Long, Long)] =
-      org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong)
-  }
-
-  private lazy val clusterAggUdaf =
-    org.apache.spark.sql.functions.udaf(clusterAgg)
 }

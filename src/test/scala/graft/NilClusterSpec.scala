@@ -56,8 +56,9 @@ class NilClusterSpec extends SparkTestBase {
       (s"d$i", "m", 1, s, "PRODUCT")
     }.toDF("doc_id", "annset", "ann_id", "mention", "mention_type")
     // localLimit=2 < 7 distinct surfaces -> distributed path
-    val (asgD, clD) = NilCluster.cluster(spark, mentions, localLimit = 2)
-    val (asgL, clL) = NilCluster.cluster(spark, mentions)
+    val dist = NilCluster.clusterFull(spark, mentions, localLimit = 2)
+    val NilCluster.ClusterResult(asgD, clD, _, _) = dist
+    val NilCluster.ClusterResult(asgL, clL, _, _) = NilCluster.clusterFull(spark, mentions)
     def keyOf(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "cluster_key").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
@@ -67,6 +68,8 @@ class NilClusterSpec extends SparkTestBase {
     // the surface->cluster map must NOT be broadcast-hinted when distributed
     val plan = asgD.queryExecution.optimizedPlan.toString
     assert(!plan.contains("ResolvedHint"), "no broadcast hint on distributed path")
+    assert(!dist.surfaceMap.queryExecution.optimizedPlan.toString.contains("ResolvedHint"),
+      "no broadcast hint on the distributed surface map")
   }
 
   test("hot-block cap drops overfull blocks identically on both paths") {
@@ -151,7 +154,7 @@ class NilClusterSpec extends SparkTestBase {
       ("d2", "m", 2, "fast key", "PRODUCT"),
       ("d3", "m", 1, "slow part", "PRODUCT"))
       .toDF("doc_id", "annset", "ann_id", "mention", "mention_type")
-    val (asg, cl) = NilCluster.cluster(spark, mentions)
+    val NilCluster.ClusterResult(asg, cl, _, _) = NilCluster.clusterFull(spark, mentions)
     val clusters = cl.collect()
     assert(clusters.length == 2)
     val fk = clusters.find(_.getAs[String]("cluster_key") == "fast key").get
@@ -162,11 +165,11 @@ class NilClusterSpec extends SparkTestBase {
   }
 
   test("typed cluster aggregate: partial-merge invariant and null tolerance (r6)") {
-    // r6 replaced the collect_list+UDF cluster record aggregate with a
-    // map-side-combining Aggregator: the record must be identical under
-    // any partitioning (partial buffers merge in arbitrary order), and a
-    // null mention_type must behave like the nulls-first ascending window
-    // ordering the r5 UDF replaced (ADVICE r5: it NPEd before)
+    // the cluster record must be identical under any partitioning and on
+    // both paths (one record kernel: in memory on the driver path, per
+    // groupByKey group on the distributed one), and a null mention_type
+    // must behave like the nulls-first ascending window ordering the r5
+    // UDF replaced (ADVICE r5: it NPEd before)
     val rows = Seq(
       ("d1", "m", 1, "Acme Co", "ORG"),
       ("d2", "m", 1, "acme co", "ORG"),
@@ -182,11 +185,31 @@ class NilClusterSpec extends SparkTestBase {
         r.getAs[Long]("n_surfaces"))
     assert(c1.map(key).sortBy(_.toString).toSeq ===
       c8.map(key).sortBy(_.toString).toSeq)
+    def keyId(r: org.apache.spark.sql.Row) = (key(r), r.getAs[Long]("nil_id"))
+    val cD = NilCluster.clusterFull(spark, df8, localLimit = 0).clusters.collect()
+    assert(cD.map(keyId).sortBy(_.toString).toSeq ===
+      c1.map(keyId).sortBy(_.toString).toSeq, "both paths give equal records")
     // 2x "Acme Co" vs 2x "acme co": count tie -> byte-order asc picks "Acme Co";
     // types: 3x ORG beats 1x null
     val r = c1.head
     assert(r.getAs[String]("title") == "Acme Co")
     assert(r.getAs[String]("cluster_type") == "ORG")
     assert(r.getAs[Long]("nelements") == 4)
+  }
+
+  test("nil ids follow one key order on both paths (UTF-8 bytes, not UTF-16)") {
+    // a key led by a supplementary character (an emoji: surrogate pair
+    // D83D DE00) sorts before fullwidth x (FF58) in UTF-16 code units but
+    // after it in UTF-8 bytes; the ids must not depend on which path ran
+    val mentions = Seq("\uD83D\uDE00x", "\uFF58", "plain key").zipWithIndex
+      .map { case (m, i) => (s"d$i", "m", 1, m, "PRODUCT") }
+      .toDF("doc_id", "annset", "ann_id", "mention", "mention_type")
+    def ids(limit: Long) = NilCluster.clusterFull(spark, mentions, limit, idBase = 10L)
+      .clusters.select("cluster_key", "nil_id").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val local = ids(NilCluster.LocalLimit)
+    assert(local.size == 3 && local.values.toSet == Set(11L, 12L, 13L))
+    assert(ids(0) == local)
+    assert(local("\uFF58") < local("\uD83D\uDE00x"))
   }
 }

@@ -6,6 +6,9 @@ import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkTestBase {
 
+  /** Jobs of one Pipeline.run + triples.count() on sf0.001. */
+  private val JobBudget = 12
+
   test("span assembly round-trips the document text") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sfUnit/documents.parquet")
@@ -77,6 +80,32 @@ class PipelineSpec extends SparkTestBase {
     def fresh() = Pipeline.run(spark, Corpus.inputDocs(spark, sfUnit),
       Registry.seed(spark).toDF()).triples.collect().map(_.toString).sorted
     assert(fresh().sameElements(fresh()))
+  }
+
+  test("job budget: one Pipeline.run plus triples.count() on sf0.001 (ROADMAP item 3)") {
+    // every eager job is serial latency on a small batch; an added one
+    // fails here (the budget only moves down, with the change that earns it)
+    import graft.fixtures.Corpus
+    import graft.kb.Registry
+    import org.apache.spark.GraftTestShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val docs = Corpus.inputDocs(spark, sfUnit)
+    val reg = Registry.seed(spark).toDF()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(e.stageInfos.maxBy(_.stageId).name))
+    }
+    GraftTestShim.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      Pipeline.run(spark, docs, reg).triples.count()
+      GraftTestShim.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(jobs.size == JobBudget, jobs.asScala.mkString("jobs: ", "; ", ""))
   }
 
   test("candidate lists persist per linkable mention, rank-ordered (J1)") {
