@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.core.{InputDoc, Mention, SpanOps}
+import graft.core.{InputDoc, Mention, SpanOps, Triple}
 import graft.fixtures.{Corpus, Gazetteer}
 import graft.kb.Registry
 import graft.link.Linker
+import graft.link.Linker.LinkedRow
 import graft.merge.MergeAnnsets
 import graft.ner.{RegexNer, TrieNer}
 import graft.cluster.NilCluster
@@ -19,9 +19,12 @@ import graft.cluster.NilCluster
   * (pipelinehelper/main.py:49-133); here it is ONE declarative plan. NER,
   * merge, contexts and mention embeddings are document-local and run in
   * one map over the docs, and under the broadcast gate candidate probe,
-  * top-k and NIL prediction are mention-local in one map after it; the
-  * wide boundaries are exactly: CC iterations (bounded shuffles),
-  * resolve joins and final aggregates.
+  * top-k and NIL prediction are mention-local in one map after it, into
+  * the linker's one checkpoint. Resolution and triples are
+  * document-local again ([[resolveDoc]]). The wide boundaries are
+  * exactly: the NIL surface counts (plus CC iterations past
+  * `NilCluster.LocalLimit`), the NIL rows' surface join, and the one
+  * doc_id grouping of the resolve kernel.
   */
 object Pipeline {
 
@@ -61,9 +64,9 @@ object Pipeline {
   /** ONE-PASS doc prep: a single InputDoc deserialization and a single
     * text assembly per document serve NER, merge, contexts and mention
     * embeddings, so the text never leaves the map. Returns the persisted
-    * prep frame (read by both branches of the linker; the caller
-    * unpersists it) and the linker input exploded from it — narrow, no
-    * exchange.
+    * prep frame (read by the linker, by two branches past its broadcast
+    * gate; the caller unpersists it) and the linker input exploded from
+    * it — narrow, no exchange.
     */
   private[graft] def prepare(spark: SparkSession, docs: Dataset[InputDoc]): (DataFrame, DataFrame) = {
     import spark.implicits._
@@ -72,11 +75,9 @@ object Pipeline {
       val text = SpanOps.assemble(d.spans)
       DocPrep(d.doc_id, Linker.embedDoc(text, ner(d.doc_id, text)))
     }.toDF().persist(Ckpt.storage(spark))
-    // NOTE on the lazy prep persist: its first reader is the scan stage
-    // of the linker's eager kernel checkpoint, which fills the cache;
-    // the linked checkpoint reads it after, so nothing races a cold
-    // persist. An eager materializing count would only add a job
-    // barrier (r5: ~6.7 s of serial latency at 440k docs).
+    // a LAZY persist: the linker's eager checkpoint fills it (past the
+    // broadcast gate its branches share it); an eager count would only
+    // add a job barrier (r5: ~6.7 s of serial latency at 440k docs)
     (prep, prep.select(explode(col("mentions")).as("m")).select("m.*"))
   }
 
@@ -100,19 +101,14 @@ object Pipeline {
       (regAgg.getLong(0), regAgg.getLong(1))
     }
 
-    // localCheckpoint truncates the lineage: the triple-rule union
-    // references this frame 5x and planning cost explodes otherwise.
-    // Candidate lists stay a separate mention-keyed frame — NOT a wide
-    // column dragged through every downstream shuffle of `linked`.
-    val (linkedRaw, mentionCandidates) =
+    // the linked rows and the candidate lists (J1) project the linker's
+    // ONE checkpoint: the tail below never replans the linker's lineage
+    val (linked, mentionCandidates) =
       Linker.linkEmbedded(spark, embedded, registry,
         registryRows = Some(regRows))
-    val linked = Ckpt(linkedRaw)
-    // the linked checkpoint was the prep frame's last reader
+    // the linker's checkpoint was the prep frame's last reader
     prep.unpersist()
 
-    // DATE-skip mentions never cluster (reference P3/P7 interplay)
-    val isNilRow = col("is_nil") && col("mention_type") =!= "DATE"
     // NIL clusters numbered where they are made: deterministic contiguous
     // new-entity ids after the registry max (W7, reference
     // indexer/main.py:408-411; fused aggregate above)
@@ -130,76 +126,9 @@ object Pipeline {
       col("cluster_type").as("type_"),
       col("center").as("emb"))
 
-    // resolved display name per mention: ent:<title> or nil:<title>.
-    // The NIL assignment is a pure function of the mention's SURFACE
-    // (NilCluster assigns by lower(mention)), so resolution joins the
-    // VOCABULARY-sized surface map — broadcast-hinted by NilCluster on
-    // its driver path, a surface-keyed shuffle of the small map otherwise
-    // — instead of joining the mention-sized assignments frame back on
-    // the annotation key (measured flipping to a spilling sort-merge join
-    // of the whole linked frame at 240k docs).
-    // Only the NIL rows enter this join. A single left join with a NULL
-    // surface on every non-NIL row (the large majority) would hash all of
-    // them to ONE shuffle partition on the distributed path — null keys
-    // are retained but not special-cased by sort-merge joins, so the
-    // resolve stage would serialize at exactly the >LocalLimit scale the
-    // distributed path exists for.
-    val nilResolved = linked.filter(isNilRow)
-      .withColumn("surface", lower(col("mention")))
-      .join(clusterRes.surfaceMap.select(col("surface"),
-        concat(lit("nil:"), col("title")).as("nil_name"),
-        col("nil_id"), col("cluster_type")), Seq("surface"), "left")
-      .drop("surface")
-    val passThrough = linked.filter(!isNilRow)
-      .withColumn("nil_name", lit(null).cast("string"))
-      .withColumn("nil_id", lit(null).cast("long"))
-      .withColumn("cluster_type", lit(null).cast("string"))
-    val resolved = nilResolved.unionByName(passThrough)
-      .withColumn("name",
-        when(col("nil_name").isNotNull, col("nil_name"))
-          .when(col("entity_id") >= 0, concat(lit("ent:"), col("title")))
-          .otherwise(lit(null)))
-      .withColumn("rtype",
-        when(col("nil_name").isNotNull, col("cluster_type"))
-          .otherwise(col("entity_type")))
-      .filter(col("name").isNotNull)
-      .transform(Ckpt(_))
-
-    // :mentions / :typedAs / :sameAsCluster / :coOccursWith in ONE scan
-    // of the resolved checkpoint + ONE distinct (r6 fuses the adjacency
-    // triples in too). A localCheckpoint is a row store — every scan
-    // deserializes FULL rows (no column pruning) — so the previous shape
-    // (projection branch + separate window branch, each with its own
-    // distinct) paid two full deserialize passes and three exchanges.
-    // Here the doc-partitioned lead() window runs first and every triple
-    // kind explodes off the windowed rows: one ckpt scan, one window
-    // exchange, one distinct exchange. The fused distinct is equivalent
-    // because the four triple kinds carry distinct `pred` constants:
-    // distinct(union) = union(distincts).
-    val emptyT = array().cast("array<struct<subj:string,pred:string,obj:string>>")
-    val wAdj = Window.partitionBy(col("doc_id")).orderBy(col("start"))
-    val fusedT = resolved
-      .withColumn("next_name", lead(col("name"), 1).over(wAdj))
-      .select(col("doc_id"), explode(concat(
-        array(
-          struct(concat(lit("doc:"), col("doc_id")).as("subj"),
-            lit(":mentions").as("pred"), col("name").as("obj")),
-          struct(col("name").as("subj"),
-            lit(":typedAs").as("pred"), col("rtype").as("obj"))),
-        when(col("nil_name").isNotNull, array(
-          struct(col("nil_name").as("subj"),
-            lit(":sameAsCluster").as("pred"),
-            concat(lit("NIL"), col("nil_id")).as("obj"))))
-          .otherwise(emptyT),
-        when(col("next_name").isNotNull && col("next_name") =!= col("name"),
-          array(
-            struct(least(col("name"), col("next_name")).as("subj"),
-              lit(":coOccursWith").as("pred"),
-              greatest(col("name"), col("next_name")).as("obj"))))
-          .otherwise(emptyT)
-      )).as("t"))
-      .select(col("doc_id"), col("t.subj"), col("t.pred"), col("t.obj"))
-      .distinct()
+    val perDoc = resolve(spark, linked, clusterRes.surfaceMap)
+    val resolved = perDoc.select(explode(col("linked")).as("r")).select("r.m.*",
+      "r.nil_name", "r.nil_id", "r.cluster_type", "r.name", "r.rtype")
 
     // media spans straight from the docs: a narrow scan that needs no
     // NER, so the prep frame can be released above instead of staying
@@ -213,26 +142,91 @@ object Pipeline {
         lit(":hasMedia").as("pred"),
         col("s.media_ref").as("obj"))
 
-    val triples = fusedT.unionByName(mediaT)
+    val triples = perDoc.select(explode(col("triples")).as("t")).select("t.*")
+      .unionByName(mediaT)
 
     // J9: pseudo-cluster records for NOT-NIL mentions, grouped by url
     // (reference nilcluster/main.py:124-161): title from the linked
     // entity, type = mode over linked types with (count desc, value asc)
-    // tie-break (Counter.most_common analog), nelements = mention count.
-    val notNil = resolved.filter(!col("is_nil") && col("url") =!= "")
-    val nnCounts = notNil.groupBy(col("url"), col("entity_type"))
-      .agg(count(lit(1)).as("cnt"))
-    val wMode = Window.partitionBy(col("url"))
-      .orderBy(col("cnt").desc, col("entity_type").asc)
-    val nnType = nnCounts.withColumn("rn", row_number().over(wMode))
-      .filter(col("rn") === 1)
-      .select(col("url"), col("entity_type").as("cluster_type"))
-    val notNilClusters = notNil.groupBy(col("url"))
-      .agg(max(col("title")).as("title"), count(lit(1)).as("nelements"))
-      .join(nnType, Seq("url"))
+    // tie-break (Counter.most_common analog: the min of (-count, type)),
+    // nelements = mention count.
+    val notNilClusters = resolved.filter(!col("is_nil") && col("url") =!= "")
+      .groupBy(col("url"), col("entity_type"))
+      .agg(max(col("title")).as("title"), count(lit(1)).as("cnt"))
+      .groupBy(col("url"))
+      .agg(max(col("title")).as("title"), sum(col("cnt")).as("nelements"),
+        min(struct(-col("cnt"), col("entity_type"))).as("mode"))
+      .select(col("url"), col("title"), col("nelements"),
+        col("mode.entity_type").as("cluster_type"))
 
     Result(resolved, mentionCandidates, clusters, notNilClusters,
       newEntities, triples)
+  }
+
+  /** DATE-skip mentions never cluster (reference P3/P7 interplay). */
+  private val isNilRow = col("is_nil") && col("mention_type") =!= "DATE"
+
+  /** A row of Result.linked: the linked row, its NIL cluster (null off
+    * the NIL rows), its display name and type.
+    */
+  private[graft] final case class Resolved(m: LinkedRow, nil_name: String,
+      nil_id: Option[Long], cluster_type: String, name: String, rtype: String)
+
+  /** One document's resolved mentions and its (deduped) triples. */
+  private[graft] final case class DocOut(doc_id: String, linked: Seq[Resolved],
+      triples: Seq[Triple])
+
+  /** Resolution and triples, once per document, checkpointed once (for
+    * Result.linked, triples, notNilClusters). A NIL row's cluster is a
+    * function of its SURFACE, so only NIL rows join the vocabulary-sized
+    * surface map (broadcast-hinted on NilCluster's driver path): a NULL
+    * surface on every other row would hash them all to ONE partition on
+    * the distributed path. Then one groupByKey(doc_id) feeds
+    * [[resolveDoc]].
+    */
+  private[graft] def resolve(spark: SparkSession, linked: DataFrame,
+                             surfaceMap: DataFrame): DataFrame = {
+    import spark.implicits._
+    val row = struct(linked.columns.toSeq.map(col): _*).as("_1")
+    val nil = linked.filter(isNilRow)
+      .withColumn("surface", lower(col("mention")))
+      .join(surfaceMap.select(col("surface"), col("nil_id"),
+        col("title").as("nil_title"), col("cluster_type")), Seq("surface"), "left")
+      .select(row, col("nil_id").as("_2"), col("nil_title").as("_3"),
+        col("cluster_type").as("_4"))
+    val rest = linked.filter(!isNilRow).select(row, lit(null).cast("long").as("_2"),
+      lit(null).cast("string").as("_3"), lit(null).cast("string").as("_4"))
+    Ckpt(nil.unionByName(rest).as[(LinkedRow, Option[Long], String, String)]
+      .groupByKey(_._1.doc_id).mapGroups(resolveDoc)).toDF()
+  }
+
+  /** One document's tail (the reference resolves and emits each document
+    * on its own, pipelinehelper/main.py:49-133) over (linked row, nil_id,
+    * cluster title, cluster type) rows: name = nil:<cluster title> or
+    * ent:<title> (no name: dropped); :mentions, :typedAs, :sameAsCluster
+    * and :coOccursWith with the next mention in the total order (start,
+    * annset, ann_id), the pair in UTF-8 byte order as Spark's least/
+    * greatest; deduped. Pure and input-order invariant.
+    */
+  private[graft] def resolveDoc(docId: String,
+      rows: Iterator[(LinkedRow, Option[Long], String, String)]): DocOut = {
+    val res = rows.flatMap { case (m, nilId, nilTitle, clusterType) =>
+      val nilName = Option(nilTitle).map("nil:" + _)
+      nilName.orElse(Option.when(m.entity_id >= 0)("ent:" + m.title)).map(name =>
+        Resolved(m, nilName.orNull, nilId, clusterType, name,
+          if (nilName.isDefined) clusterType else m.entity_type))
+    }.toVector.sortBy(r => (r.m.start, r.m.annset, r.m.ann_id))
+    val out = scala.collection.mutable.LinkedHashSet.empty[Triple]
+    res.foreach { r =>
+      out += Triple(docId, "doc:" + docId, ":mentions", r.name)
+      out += Triple(docId, r.name, ":typedAs", r.rtype)
+      if (r.nil_name != null)
+        out += Triple(docId, r.nil_name, ":sameAsCluster", r.nil_id.map("NIL" + _).orNull)
+    }
+    res.iterator.zip(res.iterator.drop(1)).filter(p => p._1.name != p._2.name)
+      .map(p => if (NilCluster.utf8Less(p._2.name, p._1.name)) p.swap else p)
+      .foreach(p => out += Triple(docId, p._1.name, ":coOccursWith", p._2.name))
+    DocOut(docId, res, out.toVector)
   }
 
   // ---- convenience entry points over the sf-derived corpus ------------

@@ -59,10 +59,11 @@ object Probe {
     stages.print()
   }
 
-  /** The pipeline's stages, each materialized (Ckpt) so its wall is its
-    * own work; `prep` is Pipeline's per-document NER + merge + embed map,
-    * `link` the linker over its output; `pipeline` is the whole
-    * Pipeline.run + triples count.
+  /** The stages Pipeline.run takes, each materialized so its wall is
+    * its own work: `prep` is the per-document NER + merge + embed map,
+    * `link` the linker's one checkpoint, `cluster` the NIL clustering,
+    * `resolve` the per-document resolve-and-triples checkpoint;
+    * `pipeline` is the whole Pipeline.run + triples count.
     */
   private def pipelineStages(spark: SparkSession, dir: String, k: Int,
                              stages: Stages): Unit = {
@@ -71,20 +72,20 @@ object Probe {
     val docs = Ckpt(fixtures.Corpus.inputDocs(spark, dir).repartition(Bench.ScaleParts))
     val reg = kb.Registry.seed(spark).toDF()
     println(s"[probe] docs=${docs.count()}")
-    var emb, linked: DataFrame = null
+    var emb, linked, surfaceMap: DataFrame = null
     def stage(name: String)(f: => Unit): Unit = timed(name, k, stages)(f)
     stage("prep") {
       val (prep, embedded) = Pipeline.prepare(spark, docs)
       emb = Ckpt(embedded)
       prep.unpersist()
     }
-    stage("candidates")(Ckpt(Linker.candidates(spark, emb.filter(!col("skip")), reg)))
-    stage("link") { linked = Ckpt(Linker.linkEmbedded(spark, emb, reg)._1) }
+    stage("link") { linked = Linker.linkEmbedded(spark, emb, reg)._1 }
+    // as in Pipeline.run: the surface map keeps its driver-path hint
     stage("cluster") {
-      val r = NilCluster.clusterFull(spark,
-        linked.filter(col("is_nil") && col("mention_type") =!= "DATE"))
-      Ckpt(r.clusters); Ckpt(r.surfaceMap)
+      surfaceMap = NilCluster.clusterFull(spark,
+        linked.filter(col("is_nil") && col("mention_type") =!= "DATE")).surfaceMap
     }
+    stage("resolve")(Pipeline.resolve(spark, linked, surfaceMap))
     stage("pipeline")(Pipeline.run(spark, docs, reg).triples.count())
   }
 

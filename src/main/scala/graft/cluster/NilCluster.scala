@@ -314,31 +314,29 @@ object NilCluster {
   // ---------------------------------------------------------------------
 
   /** Full clustering result, NIL clusters already numbered.
-    *   assignments: doc_id, annset, ann_id, cluster_key
     *   clusters: cluster_key, title, cluster_type, nelements, n_surfaces,
     *             center(array<float>), nil_id
     *   surfaceMap: surface, cluster_key, nil_id, title, cluster_type
     * `surfaceMap` is vocabulary-sized — the collapse that makes 10^12
     * mentions clusterable — and already carries the broadcast hint on
     * the driver path (`isLocal`), where it is a LocalRelation bounded by
-    * `LocalLimit`. Downstream joins that only need a mention's cluster
-    * should go through surfaceMap by SURFACE, not through `assignments`
-    * by annotation key: the assignments frame is mention-sized, and
-    * joining it back to the linked frame was measured flipping to a
-    * spilling sort-merge join at 240k docs (15.7 -> 276.6 core-s for the
-    * resolve stage, 1.5x input).
+    * `LocalLimit`. A mention's cluster is found through surfaceMap by
+    * SURFACE, never by annotation key: a mention-sized assignments frame
+    * joined back to the linked frame was measured flipping to a spilling
+    * sort-merge join at 240k docs (15.7 -> 276.6 core-s for the resolve
+    * stage, 1.5x input).
     */
-  final case class ClusterResult(assignments: DataFrame, clusters: DataFrame,
-                                 surfaceMap: DataFrame, isLocal: Boolean)
+  final case class ClusterResult(clusters: DataFrame, surfaceMap: DataFrame,
+                                 isLocal: Boolean)
 
   /** One numbered NIL cluster: the `clusters` row of [[ClusterResult]]. */
   final case class ClusterRec(cluster_key: String, title: String,
       cluster_type: String, nelements: Long, n_surfaces: Long,
       center: Array[Float], nil_id: Long)
 
-  /** Cluster NIL mentions (columns doc_id, annset, ann_id, mention,
-    * mention_type) and number the clusters: nil_id = idBase + 1, 2, ...
-    * in cluster_key order (UTF-8 byte order on both paths; reference
+  /** Cluster NIL mentions (columns mention, mention_type) and number
+    * the clusters: nil_id = idBase + 1, 2, ... in cluster_key order
+    * (UTF-8 byte order on both paths; reference
     * indexer/main.py:408-411). Two paths, one record kernel
     * ([[clusterRecord]]): up to `localLimit` (surface, mention,
     * mention_type) rows everything after the one gating `take` runs on
@@ -403,15 +401,7 @@ object NilCluster {
           .select(SurfaceMapCols.map(col): _*)
         (numbered, sm)
       }
-
-    // mention-scale assignments stay LAZY and unpersisted: Pipeline.run
-    // resolves by surface (surfaceMap) and never consumes them; API
-    // callers that fan out over assignments should checkpoint first.
-    val assignments = nilMentions
-      .withColumn("surface", lower(col("mention")))
-      .join(surfaceMap.select("surface", "cluster_key"), Seq("surface"))
-      .select("doc_id", "annset", "ann_id", "cluster_key")
-    ClusterResult(assignments, clusters, surfaceMap, isLocal)
+    ClusterResult(clusters, surfaceMap, isLocal)
   }
 
   private val SurfaceMapCols =
@@ -429,12 +419,13 @@ object NilCluster {
       weightedMode(rows.groupMapReduce(_._3)(_._4)(_ + _)),
       rows.map(_._4).sum, rows.map(_._1).distinct.size.toLong, center, nilId)
 
-  /** Value order of the mode tie-break and of the cluster numbering:
-    * UTF-8 BYTE order, i.e. Spark's UTF8String comparison (so the
-    * distributed path's `sort` gives the same ids). A null value sorts
+  /** Value order of the mode tie-break, of the cluster numbering and of
+    * Pipeline's co-occurrence pairs: UTF-8 BYTE order, i.e. Spark's
+    * UTF8String comparison (so the distributed path's `sort` gives the
+    * same ids). A null value sorts
     * FIRST (smallest), matching Spark's nulls-first ascending ordering.
     */
-  private def utf8Less(a: String, b: String): Boolean = {
+  private[graft] def utf8Less(a: String, b: String): Boolean = {
     if (a == null) return b != null // null < any non-null; null == null
     if (b == null) return false
     val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)

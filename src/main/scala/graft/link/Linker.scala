@@ -25,7 +25,9 @@ import graft.functions.Similarity
   *     levenshtein sim (F3), the candidate list, and the NIL logistic
   *     over the list's features (env-sample.txt:19), is_nil = score <
   *     0.5 (nilpredictor/main.py:84,235); zero candidates => is_nil
-  *     (indexer/main.py:170-173, P8).
+  *     (indexer/main.py:170-173, P8); a linked mention takes its title
+  *     and type from its top candidate, a skip mention from the registry
+  *     row of its gazetteer id.
   */
 object Linker {
 
@@ -154,14 +156,42 @@ object Linker {
       title: String, type_ : String, bi_score: Double, norm_score: Double,
       jacc: Double, lev_sim: Double, cross_score: Double)
 
-  /** The linking decision of one linkable mention plus its candidate
-    * list (empty, `top_candidate` null, when no entity shares a token).
+  /** One mention's linked row: the columns of the `linked` frame, in
+    * order (built by [[linkedRow]]).
     */
-  private[graft] final case class Scored(doc_id: String, annset: String,
-      ann_id: Int, mention_type: String, start: Int, end: Int,
-      mention: String, skip: Boolean, gazetteer_id: Long, entity_id: Long,
-      bi_score: Double, nil_score: Double, is_nil: Boolean,
-      candidates: Seq[Cand], top_candidate: Cand)
+  private[graft] final case class LinkedRow(entity_id: Long, doc_id: String,
+      annset: String, ann_id: Int, mention_type: String, start: Int, end: Int,
+      mention: String, skip: Boolean, gazetteer_id: Long, bi_score: Double,
+      nil_score: Double, is_nil: Boolean, title: String, entity_type: String,
+      url: String)
+
+  /** A mention's linked row plus its candidate list (empty, with
+    * `top_candidate` null, on a skip row and when no entity shares a
+    * token).
+    */
+  private[graft] final case class Scored(m: LinkedRow, candidates: Seq[Cand],
+      top_candidate: Cand)
+
+  /** `m`'s linked row: title "" and type = mention type where the registry
+    * gives none, URL by P9 (reference indexer/main.py:81-86,
+    * TrieNER.py:82-83; a NIL url is set after clustering).
+    */
+  private def linkedRow(m: EmbeddedMention, entityId: Long, bi: Double,
+      nil: Double, isNil: Boolean, title: String, etype: String): LinkedRow =
+    LinkedRow(entityId, m.doc_id, m.annset, m.ann_id, m.mention_type, m.start,
+      m.end, m.mention, m.skip, m.gazetteer_id, bi, nil, isNil,
+      Option(title).getOrElse(""), Option(etype).getOrElse(m.mention_type),
+      if (isNil || entityId < 0) ""
+      else if (m.skip) s"TRIE$entityId"
+      else s"kb://ent/$entityId")
+
+  /** A skip mention (dictionary-resolved or DATE; reference linking.skip,
+    * TrieNER.py:79-81 / spacyner/main.py:51-54) bypasses scoring: it
+    * links its gazetteer id, titled and typed by that registry row.
+    */
+  private def skipped(m: EmbeddedMention, title: String, etype: String): Scored =
+    Scored(linkedRow(m, m.gazetteer_id, 1.0, 1.0, isNil = false, title, etype),
+      Nil, null)
 
   /** A registry row as the linker indexes it ([[regEntities]]):
     * `ltitle` = Spark `lower(title)`, `tokens` = `split(ltitle, "\\s+")`
@@ -187,11 +217,13 @@ object Linker {
 
   /** Token -> entity posting index over a collected registry (the
     * filter step of TokenJoin's filter-and-verify; the verify step is
-    * the exact dot product). Entity norms are computed once per entity.
+    * the exact dot product). Entity norms are computed once per entity;
+    * the same rows hydrate skip mentions by id.
     */
   private[graft] final class TokenIndex(val entities: Array[RegEntity])
       extends Serializable {
     val eNorms: Array[Double] = entities.map(e => Similarity.norm(e.e_emb))
+    private val ids: Map[Long, RegEntity] = entities.map(e => e.entity_id -> e).toMap
     private val postings: Map[String, Array[Int]] = entities.indices
       .flatMap(i => Option(entities(i).tokens).getOrElse(Nil).map(_ -> i))
       .groupMap(_._1)(_._2).map { case (t, is) => t -> is.distinct.toArray }
@@ -205,6 +237,9 @@ object Linker {
       tokens.flatMap(t => postings.getOrElse(t, Array.emptyIntArray))
         .filter(seen.add)
     }
+
+    /** The registry row with this id (a skip mention's gazetteer id). */
+    def byId(id: Long): Option[RegEntity] = ids.get(id)
   }
 
   /** [[graft.functions.FloatCosine]] in plain Scala: one pass over the
@@ -286,10 +321,13 @@ object Linker {
         h.bi_score / StrictMath.pow(g, 2), Similarity.jaccardTokens(m.mention, h.title),
         1.0 - lev.toDouble / len.toDouble, cross)
     }
+    // a linked row takes the registry title and type its top candidate
+    // carries; a NIL row links no entity
     def decide(entityId: Long, bi: Double, nil: Double, isNil: Boolean,
                topCand: Cand) =
-      Scored(m.doc_id, m.annset, m.ann_id, m.mention_type, m.start, m.end,
-        m.mention, m.skip, m.gazetteer_id, entityId, bi, nil, isNil, cands, topCand)
+      Scored(linkedRow(m, entityId, bi, nil, isNil,
+          if (isNil) null else topCand.title, if (isNil) null else topCand.type_),
+        cands, topCand)
     // array_max's pick: SQL double order, first of equals
     def sqlMax(xs: Seq[Double]) = xs.reduce((a, b) => if (compareDoubles(b, a) > 0) b else a)
     if (cands.isEmpty) decide(-1L, 0.0, 0.0, isNil = true, null)
@@ -306,27 +344,27 @@ object Linker {
     }
   }
 
-  /** [[scoreMention]] over every linkable mention ([[EmbeddedMention]]
-    * columns): one unmaterialized [[Scored]] row per mention.
-    *
-    * Broadcast-or-salt gate: while the registry fits an executor it is
-    * collected ONCE as a broadcast [[TokenIndex]], and each mention
-    * probes it, scores its hits and runs the kernel in one narrow map —
-    * no exchange, and head tokens ("spark") cannot skew anything. Past
-    * the gate the token index must shuffle: the mention side is salted
-    * and the index replicated ([[saltedTokenJoin]]); scores are computed
-    * BEFORE the first exchange so no embedding or context shuffles
-    * (~600 B per pair row, measured 519/560 MB per stage at 440k docs);
-    * dropDuplicates' map-side partial dedup drops shared-token
-    * duplicates before they ship (r6 A/B: shipping them raw to one
-    * mention-keyed exchange measured ~20% worse); then the pairs are
-    * cogrouped with their mentions, so a mention with none gets P8.
+  /** Every mention ([[EmbeddedMention]] columns) linked: one unmaterialized
+    * [[Scored]] row each, by [[scoreMention]] or, for a skip mention,
+    * [[skipped]]. Broadcast-or-salt gate: while the registry fits an
+    * executor it is collected ONCE as a broadcast [[TokenIndex]] and one
+    * narrow map probes it, scores the hits and runs the kernel (a skip
+    * mention looks its gazetteer id up) — no exchange, and head tokens
+    * ("spark") cannot skew anything. Past the gate the mention side is
+    * salted and the index replicated ([[saltedTokenJoin]]); scores are
+    * computed BEFORE the first exchange so no embedding or context
+    * shuffles (~600 B per pair row, measured 519/560 MB per stage at 440k
+    * docs); dropDuplicates' map-side partial dedup drops shared-token
+    * duplicates before they ship (r6 A/B: ~20% better than shipping them
+    * raw); the pairs are cogrouped with their mentions, so a mention with
+    * none gets P8; skip mentions take a plain shuffle join with the
+    * registry (id, title, type_), skew-safe at one row per mention.
     */
-  private[graft] def scoreMentions(spark: SparkSession, linkable: DataFrame,
+  private[graft] def scoreMentions(spark: SparkSession, mentions: DataFrame,
       registry: DataFrame, rerank: Boolean, regRows: Long,
       broadcastMaxRows: Long): Dataset[Scored] = {
     import spark.implicits._
-    val tokened = withTokens(linkable)
+    val tokened = withTokens(mentions)
     if (regRows <= broadcastMaxRows) {
       val idx = spark.sparkContext.broadcast(
         new TokenIndex(regEntities(registry).as[RegEntity].collect()))
@@ -335,17 +373,23 @@ object Linker {
         .as[(EmbeddedMention, String, Seq[String])]
         .map { case (m, lm, tokens) =>
           val ix = idx.value
-          val mNorm = Similarity.norm(m.m_emb)
-          scoreMention(m, lm, ix.probe(tokens).iterator.map { i =>
-            val e = ix.entities(i)
-            Hit(e.entity_id, e.title, e.type_, e.ltitle,
-              Similarity.dot(m.m_emb, e.e_emb), mNorm, ix.eNorms(i), e.e_emb)
-          }, rerank)
+          if (m.skip) {
+            val e = ix.byId(m.gazetteer_id)
+            skipped(m, e.map(_.title).orNull, e.map(_.type_).orNull)
+          } else {
+            val mNorm = Similarity.norm(m.m_emb)
+            scoreMention(m, lm, ix.probe(tokens).iterator.map { i =>
+              val e = ix.entities(i)
+              Hit(e.entity_id, e.title, e.type_, e.ltitle,
+                Similarity.dot(m.m_emb, e.e_emb), mNorm, ix.eNorms(i), e.e_emb)
+            }, rerank)
+          }
         }
     } else {
       val key = Seq("doc_id", "annset", "ann_id")
+      val linkable = tokened.filter(!col("skip"))
       val pairs = saltedTokenJoin(
-          tokened.select((key :+ "m_emb").map(col) :+
+          linkable.select((key :+ "m_emb").map(col) :+
             explode(col("tokens")).as("token"): _*),
           regEntities(registry).withColumn("token", explode(col("tokens"))))
         .withColumn("bi_score", Similarity.dotCol(col("m_emb"), col("e_emb")))
@@ -357,22 +401,31 @@ object Linker {
         .select(col("doc_id").as("_1"), col("annset").as("_2"), col("ann_id").as("_3"),
           packed[Hit](if (rerank) Set.empty else Set("e_emb")).as("_4"))
         .as[(String, String, Int, Hit)]
-      // the mention side ships no embedding, and contexts only under rerank
-      val mentions = tokened.select(packed[EmbeddedMention](Set("m_emb") ++
-          (if (rerank) Nil else Seq("ctx_left", "ctx_right"))).as("_1"),
+      // no mention side ships an embedding, and contexts only under rerank
+      val narrow = Set("m_emb") ++ (if (rerank) Nil else Seq("ctx_left", "ctx_right"))
+      val scored = linkable.select(packed[EmbeddedMention](narrow).as("_1"),
           col("lmention").as("_2"))
         .as[(EmbeddedMention, String)]
-      mentions.groupByKey(m => (m._1.doc_id, m._1.annset, m._1.ann_id))
+        .groupByKey(m => (m._1.doc_id, m._1.annset, m._1.ann_id))
         .cogroup(pairs.groupByKey(p => (p._1, p._2, p._3))) { (_, ms, ps) =>
           val hits = ps.map(_._4).toVector
           ms.map { case (m, lm) => scoreMention(m, lm, hits.iterator, rerank) }
         }
+      val skips = mentions.filter(col("skip"))
+        .join(registry.select(col("id").as("gazetteer_id"), col("title").as("_2"),
+          col("type_").as("_3")), Seq("gazetteer_id"), "left")
+        .select(packed[EmbeddedMention](Set("m_emb", "ctx_left", "ctx_right")).as("_1"),
+          col("_2"), col("_3"))
+        .as[(EmbeddedMention, String, String)]
+        .map { case (m, title, etype) => skipped(m, title, etype) }
+      scored.union(skips)
     }
   }
 
   /** Candidate generation + scoring + top-k. Registry columns required:
     * id, title, type_, emb. Returns one row per (mention, candidate)
-    * with rank <= TopK: the kernel's candidate lists, exploded. `rerank`
+    * with rank <= TopK: the kernel's candidate lists, exploded (a skip
+    * mention has none). `rerank`
     * switches ranking to the cross-encoder score (bi-encoder still
     * computed — it remains a NIL feature).
     */
@@ -382,7 +435,7 @@ object Linker {
                  broadcastMaxRows: Long = BroadcastMaxRows): DataFrame =
     scoreMentions(spark, linkable, registry, rerank,
         registryRows.getOrElse(registry.count()), broadcastMaxRows)
-      .select(col("doc_id"), col("annset"), col("ann_id"),
+      .select(col("m.doc_id"), col("m.annset"), col("m.ann_id"),
         explode(col("candidates")).as("c"))
       .select(Seq("doc_id", "annset", "ann_id").map(col) ++
         Seq("entity_id", "title", "type_", "bi_score", "norm_score", "jacc",
@@ -410,82 +463,39 @@ object Linker {
     *   mentionCandidates — one row per linkable mention with at least
     *     one candidate: (doc_id, annset, ann_id, candidates array<struct<
     *     rank, entity_id, title, type_, bi_score, norm_score, jacc,
-    *     lev_sim, cross_score>>, top_candidate struct) — a mention-keyed
-    *     side table rather than a wide column on every downstream row
-    *     (the linked frame is checkpointed and shuffled repeatedly;
-    *     candidates ride along only where persisted).
+    *     lev_sim, cross_score>>, top_candidate struct).
+    * Both are projections of ONE checkpoint that holds the lists on the
+    * linked rows: one materialization serves both.
     */
   def linkWithCandidates(
       spark: SparkSession, mentions: Dataset[Mention], docText: DataFrame,
       registry: DataFrame, rerank: Boolean = false,
       registryRows: Option[Long] = None,
       broadcastMaxRows: Long = BroadcastMaxRows): (DataFrame, DataFrame) =
-    // the embed join feeds both branches of linkEmbedded (skip path,
-    // kernel): checkpointed, so no cached frame outlives the call
+    // past the gate several branches read the embed join: checkpointed,
+    // so no cached frame outlives the call
     linkEmbedded(spark,
       graft.Ckpt(withEmbeddingsDF(spark, mentions, docText, keepCtx = rerank)),
       registry, rerank, registryRows, broadcastMaxRows)
 
   /** [[linkWithCandidates]] over mentions that are already embedded
     * (the [[EmbeddedMention]] columns, contexts kept iff `rerank`).
-    * `allDf` is consumed by two branches (skip path, kernel), so the
-    * caller hands in a persisted or checkpointed frame or a narrow
-    * projection of one. COLUMN filters keep everything in Tungsten — a
-    * typed `.filter(_.skip)` would pay full object SerDe per row per
-    * pass.
+    * Past the broadcast gate `allDf` is read by several branches, so
+    * the caller hands in a persisted or checkpointed frame or a narrow
+    * projection of one. ONE checkpoint holds every mention's linked row
+    * with its candidate list; both returned frames project it.
     */
   private[graft] def linkEmbedded(
       spark: SparkSession, allDf: DataFrame, registry: DataFrame,
       rerank: Boolean = false, registryRows: Option[Long] = None,
       broadcastMaxRows: Long = BroadcastMaxRows): (DataFrame, DataFrame) = {
-    // skip-path: dictionary-resolved or DATE mentions bypass scoring
-    // (reference linking.skip, TrieNER.py:79-81 / spacyner/main.py:51-54);
-    // the wide columns are dead here and projected out at once
-    val skipPath = allDf.filter(col("skip"))
-      .drop("m_emb", "ctx_left", "ctx_right")
-      .withColumn("entity_id", col("gazetteer_id"))
-      .withColumn("bi_score", lit(1.0))
-      .withColumn("nil_score", lit(1.0))
-      .withColumn("is_nil", lit(false))
-
-    // resolve the registry row count ONCE per run — both the kernel's
-    // candidate path and the hydrate join gate their broadcast on it
-    val regRows = registryRows.getOrElse(registry.count())
-    // ONE checkpoint of the kernel's output serves both consumers, linked
-    // rows and candidate lists (three uncached branches off the candidate
-    // frame once recomputed its whole join three times: measured 7x)
-    val scored = graft.Ckpt(scoreMentions(spark, allDf.filter(!col("skip")),
-      registry, rerank, regRows, broadcastMaxRows)).toDF()
-    val candLists = scored.filter(size(col("candidates")) > 0)
-      .select("doc_id", "annset", "ann_id", "candidates", "top_candidate")
-    val unioned = skipPath.unionByName(scored.drop("candidates", "top_candidate"))
-
-    // Hydrate join (J2): same broadcast-or-shuffle gate as the candidate
-    // path — a 10^8-entity registry cannot broadcast even as the narrow
-    // (id,title,type_) slice. Past the gate a plain shuffle join is
-    // skew-safe here: the left side is post-top-k (one row per mention),
-    // so no entity key fans out more than the mention count that
-    // actually linked to it, and AQE handles residual skew.
-    val reg = registry.select(col("id").as("entity_id"),
-      col("title").as("ent_title"), col("type_").as("ent_type"))
-    val regForHydrate =
-      if (regRows <= broadcastMaxRows) broadcast(reg) else reg
-    val linked = unioned
-      .join(regForHydrate, Seq("entity_id"), "left")
-      .withColumn("title", coalesce(col("ent_title"), lit("")))
-      .withColumn("entity_type",
-        coalesce(col("ent_type"), col("mention_type")))
-      // URL synthesis P9 (reference indexer/main.py:81-86, TrieNER.py:82-83)
-      .withColumn("url",
-        when(col("is_nil"), lit(""))  // NIL url assigned after clustering
-          .when(col("skip") && col("entity_id") >= 0,
-            concat(lit("TRIE"), col("entity_id")))
-          .when(col("entity_id") >= 0, concat(lit("kb://ent/"), col("entity_id")))
-          .otherwise(lit("")))
-      // the caller's checkpoint is a pruning barrier: anything kept here
-      // rides every downstream shuffle (m_emb once collapsed scaling)
-      .drop("ent_title", "ent_type")
-    (linked, candLists)
+    // one checkpoint, no embeddings in it: uncached branches off one
+    // candidate frame once recomputed its join per branch (measured 7x)
+    val rows = graft.Ckpt(scoreMentions(spark, allDf, registry, rerank,
+      registryRows.getOrElse(registry.count()), broadcastMaxRows)).toDF()
+    (rows.select("m.*"),
+      rows.filter(size(col("candidates")) > 0).select(col("m.doc_id"),
+        col("m.annset"), col("m.ann_id"), col("candidates"), col("top_candidate")))
   }
 
   /** Linking decisions only (see [[linkWithCandidates]]). */

@@ -261,11 +261,14 @@ class MergeLinkerSpec extends SparkTestBase {
     assert(links(0) == broadcastPath,
       "salted token join must reproduce the broadcast join exactly")
     // past the gate NOTHING may carry an explicit broadcast hint — the
-    // candidate join salts and the J2 hydrate join (registry id/title/
-    // type_) falls back to a plain shuffle join; at a 10^8-entity
+    // candidate join salts and the skip mentions' hydrate join (registry
+    // id/title/type_) is a plain shuffle join; at a 10^8-entity
     // registry an unconditional broadcast(reg) would OOM the driver
-    val analyzed = Linker.link(spark, mentions, text, reg, broadcastMaxRows = 0)
-      .queryExecution.analyzed.toString
+    // (read off the linker's checkpoints: `linked` only projects one)
+    val ckpts = PlanSpec.checkpointPlans(spark)(
+      Linker.link(spark, mentions, text, reg, broadcastMaxRows = 0))
+    assert(ckpts.nonEmpty)
+    val analyzed = ckpts.map(_.analyzed.toString).mkString("\n")
     // the SHUFFLE_HASH hint on the embed join is fine — only a
     // BROADCAST hint would blow up at a 10^8-entity registry
     assert(!analyzed.toLowerCase.contains("strategy=broadcast"),

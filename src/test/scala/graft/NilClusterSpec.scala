@@ -57,18 +57,19 @@ class NilClusterSpec extends SparkTestBase {
     }.toDF("doc_id", "annset", "ann_id", "mention", "mention_type")
     // localLimit=2 < 7 distinct surfaces -> distributed path
     val dist = NilCluster.clusterFull(spark, mentions, localLimit = 2)
-    val NilCluster.ClusterResult(asgD, clD, _, _) = dist
-    val NilCluster.ClusterResult(asgL, clL, _, _) = NilCluster.clusterFull(spark, mentions)
+    val NilCluster.ClusterResult(clD, smD, _) = dist
+    val NilCluster.ClusterResult(clL, smL, _) = NilCluster.clusterFull(spark, mentions)
+    // every mention resolves through the surface map: equal maps assign
+    // every mention the same cluster on both paths
     def keyOf(df: org.apache.spark.sql.DataFrame) = df
-      .select("doc_id", "cluster_key").collect()
+      .select("surface", "cluster_key").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(keyOf(asgD) == keyOf(asgL))
+    assert(keyOf(smD) == keyOf(smL))
+    assert(keyOf(smL).map(_._1) == surfaces.map(_.toLowerCase).toSet)
     assert(clD.select("cluster_key").collect().map(_.getString(0)).toSet ==
            clL.select("cluster_key").collect().map(_.getString(0)).toSet)
     // the surface->cluster map must NOT be broadcast-hinted when distributed
-    val plan = asgD.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("ResolvedHint"), "no broadcast hint on distributed path")
-    assert(!dist.surfaceMap.queryExecution.optimizedPlan.toString.contains("ResolvedHint"),
+    assert(!smD.queryExecution.optimizedPlan.toString.contains("ResolvedHint"),
       "no broadcast hint on the distributed surface map")
   }
 
@@ -154,14 +155,17 @@ class NilClusterSpec extends SparkTestBase {
       ("d2", "m", 2, "fast key", "PRODUCT"),
       ("d3", "m", 1, "slow part", "PRODUCT"))
       .toDF("doc_id", "annset", "ann_id", "mention", "mention_type")
-    val NilCluster.ClusterResult(asg, cl, _, _) = NilCluster.clusterFull(spark, mentions)
+    val NilCluster.ClusterResult(cl, sm, _) = NilCluster.clusterFull(spark, mentions)
     val clusters = cl.collect()
     assert(clusters.length == 2)
     val fk = clusters.find(_.getAs[String]("cluster_key") == "fast key").get
     // mode with (count desc, value asc): "fast key" x2 beats "Fast Key" x1
     assert(fk.getAs[String]("title") == "fast key")
     assert(fk.getAs[Long]("nelements") == 3)
-    assert(asg.count() == 4)
+    // every input mention resolves: its lower(mention) has a surface row
+    val mapped = sm.select("surface").collect().map(_.getString(0)).toSet
+    assert(mentions.select(lower(col("mention"))).collect().map(_.getString(0))
+      .forall(mapped))
   }
 
   test("typed cluster aggregate: partial-merge invariant and null tolerance (r6)") {

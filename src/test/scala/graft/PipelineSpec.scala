@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 class PipelineSpec extends SparkTestBase {
 
   /** Jobs of one Pipeline.run + triples.count() on sf0.001. */
-  private val JobBudget = 12
+  private val JobBudget = 10
 
   test("span assembly round-trips the document text") {
     import spark.implicits._
@@ -106,6 +106,48 @@ class PipelineSpec extends SparkTestBase {
     } finally sc.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     assert(jobs.size == JobBudget, jobs.asScala.mkString("jobs: ", "; ", ""))
+  }
+
+  test("NER runs once per document: prep map once, media scan once") {
+    // the input docs are evaluated by exactly two readers: the prep map
+    // (NER, merge, embed; both linker branches share its persist) and the
+    // :hasMedia scan. A recomputed prep block would count a third time.
+    import graft.kb.Registry
+    import spark.implicits._
+    val evals = spark.sparkContext.longAccumulator("doc-evals")
+    val docs = Corpus.inputDocs(spark, sfUnit)
+    val n = docs.count()
+    val counted = docs.map { d => evals.add(1); d }
+    Pipeline.run(spark, counted, Registry.seed(spark).toDF()).triples.count()
+    assert(n > 0 && evals.value == 2 * n, s"${evals.value} evaluations of $n docs")
+  }
+
+  test("resolve kernel: triples are the same under every input order, start ties included") {
+    // two pairs of mentions share a start; the next mention is taken in
+    // the total order (start, annset, ann_id), so :coOccursWith never
+    // depends on the order the rows arrive in
+    import graft.link.Linker.LinkedRow
+    def row(ann: Int, start: Int, mention: String, id: Long, nil: Boolean) =
+      LinkedRow(if (nil) -1L else id, "d", "merged", ann, "ORG", start,
+        start + mention.length, mention, false, -1L, 0.5, 0.5, nil,
+        if (nil) "" else mention, "ORG", if (nil) "" else s"kb://ent/$id")
+    val rows = Seq(
+      (row(1, 0, "spark", 1L, nil = false), None, null, null),
+      (row(2, 0, "fast key", -1L, nil = true), Some(17L), "fast key", "PRODUCT"),
+      (row(3, 9, "customer", 3L, nil = false), None, null, null),
+      (row(4, 9, "merge join", 5L, nil = false), None, null, null),
+      (row(5, 20, "spark", 1L, nil = false), None, null, null))
+    def out(rs: Seq[(LinkedRow, Option[Long], String, String)]) = {
+      val o = Pipeline.resolveDoc("d", rs.iterator)
+      (o.linked.map(_.m.ann_id), o.triples.toSet)
+    }
+    val expected = out(rows)
+    assert(expected._1 == Seq(1, 2, 3, 4, 5))
+    assert(expected._2.filter(_.pred == ":coOccursWith").map(t => (t.subj, t.obj)) == Set(
+      ("ent:spark", "nil:fast key"), ("ent:customer", "nil:fast key"),
+      ("ent:customer", "ent:merge join"), ("ent:merge join", "ent:spark")))
+    assert(expected._2.size == 4 + 4 + 1 + 4) // mentions, typedAs, sameAsCluster, pairs
+    rows.permutations.foreach(p => assert(out(p) == expected, p.map(_._1.ann_id)))
   }
 
   test("candidate lists persist per linkable mention, rank-ordered (J1)") {

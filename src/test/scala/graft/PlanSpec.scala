@@ -157,10 +157,12 @@ class PlanSpec extends SparkTestBase {
 
   test("Pipeline.run's linker output plans no shuffle exchange under the broadcast gate") {
     // Under the broadcast gate the kernel runs in one narrow map over the
-    // prep frame: no exchange between the docs and the linker's
-    // checkpoint, and none after it (skip union, broadcast hydrate).
+    // prep frame (skip mentions hydrate from the same index): no exchange
+    // between the docs and the linker's ONE checkpoint, and none after
+    // it: linked rows and candidate lists are projections of it.
     import graft.core.{InputDoc, Span, SpanOps}
     import graft.link.Linker
+    import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import spark.implicits._
@@ -171,18 +173,55 @@ class PlanSpec extends SparkTestBase {
     val (prep, embedded) = Pipeline.prepare(spark, docs)
     val kernel = Linker.scoreMentions(spark, embedded.filter(!col("skip")), reg,
       rerank = false, reg.count(), Linker.BroadcastMaxRows).toDF()
-    val (linked, cands) = Linker.linkEmbedded(spark, embedded, reg)
-    Seq("kernel" -> kernel, "linked" -> linked, "candidates" -> cands).foreach {
-      case (name, df) =>
-        val plan = df.queryExecution.executedPlan
+    var linked, cands: org.apache.spark.sql.DataFrame = null
+    val ckpts = PlanSpec.checkpointPlans(spark) {
+      val (l, c) = Linker.linkEmbedded(spark, embedded, reg)
+      linked = l; cands = c
+    }
+    assert(ckpts.size == 1, s"the linker checkpoints once: ${ckpts.size}")
+    Seq("kernel" -> kernel.queryExecution.executedPlan, "checkpoint" -> ckpts.head.executedPlan,
+        "linked" -> linked.queryExecution.executedPlan,
+        "candidates" -> cands.queryExecution.executedPlan).foreach {
+      case (name, plan) =>
         val all = PlanSpec.nodes(plan)
-        assert(all.exists(_.isInstanceOf[InMemoryTableScanExec]) || name == "candidates",
+        assert(all.exists(_.isInstanceOf[InMemoryTableScanExec]) ||
+            name == "linked" || name == "candidates",
           s"$name: the walk must reach the prep persist\n$plan")
         assert(!all.exists(_.isInstanceOf[ShuffleExchangeLike]),
           s"$name plans a shuffle exchange:\n$plan")
     }
+    // both outputs read the same checkpointed RDD, and nothing else
+    def scans(p: SparkPlan) = PlanSpec.nodes(p).collect { case r: RDDScanExec => r.rdd.id }
+    val ids = Seq(linked, cands).map(df => scans(df.queryExecution.executedPlan))
+    assert(ids.forall(_.size == 1) && ids.distinct.size == 1,
+      s"linked and candidates must read one checkpoint: $ids")
     assert(linked.count() > 0 && cands.count() > 0)
     prep.unpersist()
+  }
+
+  test("Pipeline.run's tail after the NIL counts: one doc grouping, no Window") {
+    // Past clusterFull the rest is document-local: the NIL rows' surface
+    // join (a broadcast on the driver path) and ONE doc_id grouping feed
+    // the per-document resolve kernel, whose checkpoint the triples read.
+    import graft.fixtures.Corpus
+    import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val docs = Corpus.inputDocs(spark, sfUnit)
+    val reg = graft.kb.Registry.seed(spark).toDF()
+    var res: Pipeline.Result = null
+    val ckpts = PlanSpec.checkpointPlans(spark) { res = Pipeline.run(spark, docs, reg) }
+    val kernel = ckpts.map(_.executedPlan)
+      .filter(_.output.map(_.name) == Seq("doc_id", "linked", "triples"))
+    assert(kernel.size == 1, s"one resolve checkpoint: ${ckpts.map(_.analyzed.output.map(_.name))}")
+    val tail = Seq(kernel.head, res.triples.queryExecution.executedPlan).flatMap(PlanSpec.nodes)
+    val shuffles = tail.collect { case s: ShuffleExchangeLike => s }
+    assert(shuffles.size == 1, s"expected the doc grouping only:\n${kernel.head}")
+    assert(PlanSpec.nodes(shuffles.head.child).exists {
+      case _: AppendColumnsExec | _: AppendColumnsWithObjectExec => true
+      case _ => false
+    }, s"the exchange must be the groupByKey:\n${kernel.head}")
+    assert(!tail.exists(_.nodeName.contains("Window")), s"Window in the tail:\n${kernel.head}")
+    assert(res.triples.count() > 0)
   }
 
   test("full outer join reuses the aggregation partitioning (no 3rd exchange)") {
@@ -199,16 +238,38 @@ class PlanSpec extends SparkTestBase {
 }
 
 object PlanSpec {
-  import org.apache.spark.sql.execution.SparkPlan
-  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+  import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
   import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
-  /** Every node of a physical plan, descending into AQE plans and into
-    * the plans of cached relations.
+  /** Every node of a physical plan, descending into AQE plans and their
+    * query stages and into the plans of cached relations.
     */
   def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => q +: nodes(q.plan)
     case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
     case other => other +: other.children.flatMap(nodes)
+  }
+
+  /** The query executions of the dataset checkpoints `f` runs, in
+    * order (a checkpoint's own plan is gone from the frame it returns).
+    */
+  def checkpointPlans(spark: SparkSession)(f: => Unit): Seq[QueryExecution] = {
+    import org.apache.spark.GraftTestShim
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        if (name == "localCheckpoint" || name == "checkpoint") plans.add(qe)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    GraftTestShim.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { f; GraftTestShim.drainListenerBus(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
   }
 }

@@ -203,7 +203,7 @@ class PropertySpec extends SparkTestBase {
       }
       // per kept candidate: the pre-kernel Spark expressions
       val kept = scored.flatMap(s => s.candidates.map { c =>
-        (s.ann_id, c.entity_id, s.mention, c.title, Embed.embed(s.mention),
+        (s.m.ann_id, c.entity_id, s.m.mention, c.title, Embed.embed(s.m.mention),
           Embed.embed(c.title + c.entity_id), c.lev_sim, c.norm_score)
       }).toDF("i", "e", "mention", "title", "m_emb", "e_emb", "lev", "norm")
       val perCand = kept.select(col("lev"), col("norm"),
@@ -228,7 +228,7 @@ class PropertySpec extends SparkTestBase {
       val perMention = scored.map { s =>
         val bi = s.candidates.map(_.bi_score)
         val (mean, median, stdev) = if (bi.isEmpty) (0.0, 0.0, 0.0) else stats(bi)
-        (s.nil_score, bi, s.candidates.map(_.cross_score),
+        (s.m.nil_score, bi, s.candidates.map(_.cross_score),
           s.candidates.headOption.map(_.jacc).getOrElse(0.0),
           s.candidates.headOption.map(_.lev_sim).getOrElse(0.0),
           mean, median, stdev, bi.nonEmpty)
@@ -239,7 +239,7 @@ class PropertySpec extends SparkTestBase {
       val nilOk = perMention.select(col("nil"),
           when(!col("has"), lit(0.0)).otherwise(lit(1.0) / (lit(1.0) + exp(-sig))))
         .collect().forall(r => r.getDouble(0) == r.getDouble(1))
-      perCand && nilOk && scored.forall(s => s.is_nil == (s.nil_score < 0.5))
+      perCand && nilOk && scored.forall(s => s.m.is_nil == (s.m.nil_score < 0.5))
     }, 6)
   }
 
