@@ -18,25 +18,26 @@ import graft.tables.IceLite
   * not see each other's new entities; every later batch does.
   *
   * State tables under `workDir`:
-  *   documents        InputDoc rows            MERGE key (doc_id)
-  *   mentions         linked mention rows      MERGE key (doc_id, annset, ann_id)
-  *   entity_registry  EntityRecord rows        MERGE key (id, indexer)
-  *   triples          (doc_id, subj, pred, obj) MERGE key all four
-  *   lineage          (batch_id, stage, status) append-only, no wall-clock
-  *   metrics          (batch_id, metric, value) append-only (wall-clock ok;
-  *                    excluded from identity checks)
+  *   documents          InputDoc rows             MERGE key (doc_id)
+  *   mentions           linked mention rows       replaced per doc_id
+  *   mention_candidates top-k candidate lists     replaced per doc_id
+  *   triples            (doc_id, subj, pred, obj) replaced per doc_id
+  *   entity_registry    EntityRecord rows         MERGE key (id, indexer)
+  *   lineage            (batch_id, stage, status) append-only, no wall-clock
+  *   metrics            (batch_id, metric, value) append-only (wall-clock ok;
+  *                      excluded from identity checks)
   *
   * Crash consistency: every table commit is an atomic pointer swap; the
   * lineage "done" row for a batch is written LAST, so a kill at any
-  * point re-runs the batch, and MERGE INTO keyed upserts make the replay
-  * idempotent — the final tables are byte-identical to an uninterrupted
-  * run (tested).
+  * point re-runs the batch, and the keyed writes (per-doc replace,
+  * keyed MERGE) make the replay idempotent — the final tables are
+  * byte-identical to an uninterrupted run (tested).
   */
 object Incremental {
 
-  /** KB state tables. The row tables are hash-BUCKETED on doc_id (a
-    * prefix of every merge key), so a micro-batch MERGE rewrites only
-    * the touched buckets — O(batch), not O(table), at 10^12 docs.
+  /** KB state tables. The row tables are hash-BUCKETED on doc_id (their
+    * write key), so a micro-batch write rewrites only the touched
+    * buckets — O(batch), not O(table), at 10^12 docs.
     * Registry buckets on entity id; lineage/metrics are append-only.
     */
   final case class Tables(workDir: String) {
@@ -55,27 +56,48 @@ object Incremental {
   def withBatch(docs: Dataset[InputDoc], numBatches: Int): DataFrame =
     docs.toDF().withColumn("batch_id", pmod(hash(col("doc_id")), lit(numBatches)))
 
-  def doneBatches(spark: SparkSession, t: Tables): Set[Int] =
-    t.lineage.read(spark) match {
-      case Some(df) => df.filter(col("status") === "done")
-        .select("batch_id").distinct().collect().map(_.getInt(0)).toSet
-      case None => Set.empty
-    }
+  def doneBatches(spark: SparkSession, t: Tables): Set[Int] = readLineage(spark, t).done
 
-  /** Registry snapshot each unfinished batch is pinned to (recorded in a
-    * batch-start lineage row BEFORE any table mutation). A mid-batch
-    * crash replay re-runs against this time-traveled snapshot, not the
-    * half-grown registry, so the replay is byte-identical and the keyed
-    * MERGEs are idempotent. First attempt's pin wins (min) — later
-    * attempts may observe the crashed attempt's registry merge.
+  /** The lineage table's (batch_id, stage, status) rows, read with ONE
+    * collect; every resume and expiry decision derives from them in
+    * [[Lineage]].
     */
-  def pinnedSnapshots(spark: SparkSession, t: Tables): Map[Int, Int] =
-    t.lineage.read(spark) match {
-      case Some(df) => df.filter(col("stage") === "registry_snapshot")
-        .groupBy("batch_id").agg(min(col("status").cast("int")).as("snap"))
-        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
-      case None => Map.empty
-    }
+  private def readLineage(spark: SparkSession, t: Tables): Lineage =
+    Lineage(t.lineage.read(spark).toSeq.flatMap(_.select("batch_id", "stage", "status")
+      .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2)))))
+
+  private final case class Lineage(rows: Seq[(Int, String, String)]) {
+    def done: Set[Int] = rows.collect { case (b, _, "done") => b }.toSet
+
+    /** Registry snapshot each batch is pinned to (its registry_snapshot
+      * row, written BEFORE any table mutation): a mid-batch crash replay
+      * re-runs against it, not the half-grown registry. First attempt's
+      * pin wins (min) — later attempts may observe the crashed attempt's
+      * registry merge.
+      */
+    def batchPins: Map[Int, Int] =
+      rows.collect { case (b, "registry_snapshot", s) => b -> s.toInt }
+        .groupMapReduce(_._1)(_._2)(math.min)
+
+    /** Reannotate id-sets whose LATEST attempt (highest marker) has no
+      * done row — a completed replay supersedes a crashed attempt's
+      * dangling start — each with the registry snapshot that attempt
+      * pinned (None for pre-pin marker formats: callers then pin the
+      * current snapshot).
+      */
+    def danglingReannotations: Map[String, Option[Int]] =
+      rows.collect { case (_, st, s) if st.startsWith("reannotate") => parseMarker(st, s) }
+        .groupBy(_._1).flatMap { case (ids, attempts) =>
+          val latest = attempts.map(_._2).max
+          if (attempts.exists(a => a._2 == latest && !a._4)) None
+          else Some(ids -> attempts.collectFirst { case (_, `latest`, Some(s), true) => s })
+        }
+  }
+
+  /** Append one (batch_id, stage, status) row to the lineage table. */
+  private def mark(spark: SparkSession, t: Tables, b: Int, stage: String, status: String): Unit =
+    t.lineage.append(spark.createDataFrame(Seq((b, stage, status)))
+      .toDF("batch_id", "stage", "status"))
 
   /** Run (or resume) the incremental population. `upToBatch` limits how
     * many batches run this invocation (for kill/resume testing); default
@@ -101,9 +123,9 @@ object Incremental {
                  limit: Int = Int.MaxValue)(docsOf: Int => Dataset[InputDoc]): Tables = {
     val t = Tables(workDir)
     if (!t.registry.exists) t.registry.overwrite(Registry.seed(spark).toDF())
-    val done = doneBatches(spark, t)
-    val pinned = pinnedSnapshots(spark, t)
-    batchIds.filterNot(done).take(limit)
+    val lineage = readLineage(spark, t)
+    val pinned = lineage.batchPins
+    batchIds.filterNot(lineage.done).take(limit)
       .foreach(b => processBatch(spark, t, docsOf(b), b, pinned.get(b)))
     t
   }
@@ -115,15 +137,37 @@ object Incremental {
     "start", "end", "mention", "skip", "entity_id", "title", "entity_type",
     "bi_score", "nil_score", "is_nil", "url", "name").map(col)
 
+  /** Annotate `docs` against registry snapshot `snapId` and write the
+    * result: the `mentions`, `mention_candidates` and `triples` rows of
+    * every doc in `delKeys` (one `doc_id` column) are replaced by what
+    * this run emits, one commit per table (IceLite.replaceKeys: a doc
+    * that now emits fewer rows keeps no stale ones, and no snapshot ever
+    * lacks its rows), then the new NIL entities are MERGEd into the
+    * registry. The one step behind [[processBatch]] (a re-sent doc, as
+    * the reference's re-POST) and [[reannotate]].
+    */
+  private def annotate(spark: SparkSession, t: Tables, docs: Dataset[InputDoc],
+                       delKeys: DataFrame, snapId: Int): Pipeline.Result = {
+    val registry = t.registry.readSnapshot(spark, snapId).cache()
+    val res = Pipeline.run(spark, docs, registry)
+    t.mentions.replaceKeys(spark, delKeys, res.linked.select(MentionColumns: _*))
+    t.candidates.replaceKeys(spark, delKeys, res.candidates)
+    t.triples.replaceKeys(spark, delKeys, res.triples)
+    t.registry.mergeInto(spark, res.newEntities, Seq("id", "indexer"))
+    registry.unpersist()
+    res
+  }
+
   /** One micro-batch of KB population against `t`: pin the registry
-    * snapshot, run the pipeline, MERGE results, append metrics, and
+    * snapshot, MERGE the documents, [[annotate]] them (a re-sent doc's
+    * rows are replaced by its latest annotation), append metrics, and
     * commit the lineage "done" row LAST (the resume point). The batch
     * loop and the Structured Streaming front-end
     * ([[graft.streaming.StreamKb.populate]]) both reach it through
     * [[runPending]], so the crash/replay protocol is identical: a
     * replay of batch `b` (foreachBatch re-invocation or loop resume) is
     * skipped if its done row exists, and otherwise re-runs against the
-    * PINNED registry snapshot, making the keyed MERGEs byte-identical
+    * PINNED registry snapshot, making its keyed writes byte-identical
     * to an uninterrupted run.
     */
   def processBatch(spark: SparkSession, t: Tables, batchDocs: Dataset[InputDoc],
@@ -136,22 +180,11 @@ object Incremental {
     // half-merged state a crashed attempt left behind.
     val snapId = pinnedSnap.getOrElse {
       val id = t.registry.latestSnapshot.get
-      t.lineage.append(Seq((b, "registry_snapshot", id.toString))
-        .toDF("batch_id", "stage", "status"))
+      mark(spark, t, b, "registry_snapshot", id.toString)
       id
     }
-    val registry = t.registry.readSnapshot(spark, snapId).cache()
-
-    val res = Pipeline.run(spark, batchDocs, registry)
-
     t.documents.mergeInto(spark, batchDocs.toDF(), Seq("doc_id"))
-    t.mentions.mergeInto(spark, res.linked.select(MentionColumns: _*),
-      Seq("doc_id", "annset", "ann_id"))
-    t.candidates.mergeInto(spark, res.candidates,
-      Seq("doc_id", "annset", "ann_id"))
-    t.triples.mergeInto(spark, res.triples,
-      Seq("doc_id", "subj", "pred", "obj"))
-    t.registry.mergeInto(spark, res.newEntities, Seq("id", "indexer"))
+    val res = annotate(spark, t, batchDocs, batchDocs.select("doc_id"), snapId)
 
     // one fused counting job instead of four eager .count()s — the
     // per-batch serial driver fraction is the scaling bottleneck
@@ -170,18 +203,15 @@ object Incremental {
       :+ ((b, "wall_ms", wallMs)))
       .toDF("batch_id", "metric", "value"))
     // lineage LAST: commit point for resume
-    t.lineage.append(Seq((b, "pipeline", "done")).toDF("batch_id", "stage", "status"))
-    registry.unpersist()
+    mark(spark, t, b, "pipeline", "done")
   }
 
   /** I3 reannotate flow (reference pipelinehelper/main.py:19-34): fetch
     * stored documents, re-run the pipeline against the CURRENT registry
     * (entities discovered since the original annotation are now linkable
-    * — previously-NIL mentions may resolve to ent: links), and REPLACE
-    * the docs' annotations. Stale rows are dropped in the SAME snapshot
-    * commit that inserts the fresh ones (IceLite.replaceKeys), so a
-    * re-run that emits fewer mentions/triples leaves no orphans AND a
-    * crash never leaves a window where the docs' annotations are gone.
+    * — previously-NIL mentions may resolve to ent: links), and replace
+    * the docs' annotations through [[annotate]], the same step a batch
+    * uses.
     *
     * Crash protocol: a "reannotate_start" lineage row is committed
     * BEFORE any table mutation and a matching "reannotate" row after the
@@ -198,17 +228,12 @@ object Incremental {
     // buckets they hash into, not the whole documents table
     val docs = t.documents.readKeyedIn(spark, docIds).get.as[InputDoc]
 
-    // Registry pin (same protocol as run()'s registry_snapshot rows): a
-    // crash REPLAY of this id-set must see the registry as of the first
-    // attempt's start — the crashed attempt may already have merged its
-    // new NIL entities, and re-running against that half-grown registry
-    // would link mentions to entities created by an attempt that "never
-    // happened", a state no uninterrupted execution can produce. A
-    // dangling start row for the SAME id-set carries the pin to reuse.
-    val snapId = danglingReannotations(spark, t).get(idList).flatten
+    // Registry pin (the batch protocol): a crash REPLAY of this id-set
+    // must see the registry as of the first attempt's start, not one
+    // holding NIL entities the crashed attempt merged. A dangling start
+    // row for the SAME id-set carries the pin to reuse.
+    val snapId = readLineage(spark, t).danglingReannotations.get(idList).flatten
       .getOrElse(t.registry.latestSnapshot.get)
-    val registry = t.registry.readSnapshot(spark, snapId).cache()
-    val res = Pipeline.run(spark, docs, registry)
 
     // attempt marker = current lineage snapshot count: unique per attempt
     // (every append bumps it), deterministic (no wall-clock/random), and
@@ -216,16 +241,9 @@ object Incremental {
     // the crashed attempt's start dangling without flagging the replay.
     // The pinned registry snapshot rides in the marker for replays.
     val marker = s"${t.lineage.snapshots.size}:$snapId:$idList"
-    t.lineage.append(Seq((-1, "reannotate_start", marker))
-      .toDF("batch_id", "stage", "status"))
-    val delKeys = docIds.toDF("doc_id")
-    t.mentions.replaceKeys(spark, delKeys, res.linked.select(MentionColumns: _*))
-    t.candidates.replaceKeys(spark, delKeys, res.candidates)
-    t.triples.replaceKeys(spark, delKeys, res.triples)
-    t.registry.mergeInto(spark, res.newEntities, Seq("id", "indexer"))
-    t.lineage.append(Seq((-1, "reannotate", marker))
-      .toDF("batch_id", "stage", "status"))
-    registry.unpersist()
+    mark(spark, t, -1, "reannotate_start", marker)
+    annotate(spark, t, docs, docIds.toDF("doc_id"), snapId)
+    mark(spark, t, -1, "reannotate", marker)
     t
   }
 
@@ -245,28 +263,6 @@ object Incremental {
     }
   }
 
-  private def reannotateRows(spark: SparkSession, t: Tables): Seq[(String, Int, Option[Int], Boolean)] =
-    t.lineage.read(spark) match {
-      case None => Seq.empty
-      case Some(df) => df.filter(col("stage").startsWith("reannotate"))
-        .select("stage", "status").collect().toSeq
-        .map(r => parseMarker(r.getString(0), r.getString(1)))
-    }
-
-  /** Reannotate id-sets whose LATEST attempt (highest marker) has no
-    * done row — a completed replay supersedes a crashed attempt's
-    * dangling start — each with the registry snapshot that attempt
-    * pinned (None for pre-pin marker formats: callers then pin the
-    * current snapshot).
-    */
-  private def danglingReannotations(spark: SparkSession,
-                                    t: Tables): Map[String, Option[Int]] =
-    reannotateRows(spark, t).groupBy(_._1).flatMap { case (ids, attempts) =>
-      val latest = attempts.map(_._2).max
-      if (attempts.exists(a => a._2 == latest && !a._4)) None
-      else Some(ids -> attempts.collectFirst { case (_, `latest`, Some(s), true) => s })
-    }
-
   /** Registry snapshot ids pinned by UNFINISHED work (batches with a
     * registry_snapshot lineage row but no done row; reannotate attempts
     * whose latest marker lacks a completion row). A crash replay
@@ -274,10 +270,9 @@ object Incremental {
     * them.
     */
   private[graft] def danglingRegistryPins(spark: SparkSession, t: Tables): Set[Int] = {
-    val done = doneBatches(spark, t)
-    val batchPins = pinnedSnapshots(spark, t)
-      .collect { case (b, s) if !done.contains(b) => s }
-    (batchPins ++ danglingReannotations(spark, t).values.flatten).toSet
+    val lineage = readLineage(spark, t)
+    (lineage.batchPins.collect { case (b, s) if !lineage.done(b) => s } ++
+      lineage.danglingReannotations.values.flatten).toSet
   }
 
   /** Table maintenance for a long-lived work dir (Iceberg's
@@ -315,6 +310,6 @@ object Incremental {
     * crashed attempt's dangling start row never re-flags it).
     */
   def pendingReannotations(spark: SparkSession, workDir: String): Seq[Seq[String]] =
-    danglingReannotations(spark, Tables(workDir)).keys.toSeq.sorted
+    readLineage(spark, Tables(workDir)).danglingReannotations.keys.toSeq.sorted
       .map(_.split(",").toSeq)
 }

@@ -22,8 +22,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Submit {
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: run <sfDir> <workDir> [numBatches] | " +
-      "reannotate <workDir> <docIds> | maintain <workDir> [keepLast]")
+    val usage = "usage: run <sfDir> <workDir> [numBatches] | " +
+      "reannotate <workDir> <docIds> | maintain <workDir> [keepLast]"
+    require(args.nonEmpty, usage)
     // setIfMissing: production defaults that a spark-submit --conf can
     // still override. Kryo + lz4 block compression matter here — the
     // pipeline's stage-boundary checkpoints hold InternalRows, and the
@@ -37,8 +38,6 @@ object Submit {
       .appName("graft-kb-population")
       .config(conf)
       .getOrCreate()
-    val usage = "usage: run <sfDir> <workDir> [numBatches] | " +
-      "reannotate <workDir> <docIds> | maintain <workDir> [keepLast]"
     try args(0) match {
       case "run" =>
         require(args.length >= 3, usage)

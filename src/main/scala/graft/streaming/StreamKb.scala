@@ -14,9 +14,9 @@ import graft.core.{InputDoc, SpanOps}
   * pushed through 11 service hops one at a time. The Spark-native analog
   * is a document STREAM: `readStream` over an arriving-files directory,
   * micro-batched through the exact same per-batch population protocol as
-  * [[graft.Incremental]] (registry snapshot pinning, keyed MERGEs,
-  * lineage-last commit), so a streaming deployment and a batch backfill
-  * produce byte-identical KB tables.
+  * [[graft.Incremental]] (registry snapshot pinning, per-doc replace of
+  * a document's annotations, lineage-last commit), so a streaming
+  * deployment and a batch backfill produce byte-identical KB tables.
   *
   * Exactly-once: Spark's foreachBatch may re-invoke a batch after a
   * failure with the SAME batchId; [[populate]] skips batches whose
@@ -48,8 +48,8 @@ object StreamKb {
   }
 
   /** Drive KB population from a document stream. Each micro-batch runs
-    * the full pipeline against the then-current registry and MERGEs into
-    * the IceLite state tables under `workDir`; `checkpointDir` is the
+    * the full pipeline against the then-current registry and writes the
+    * IceLite state tables under `workDir`; `checkpointDir` is the
     * Spark streaming checkpoint (source offsets). Entities discovered in
     * one micro-batch are linkable in the next — the reference's
     * incremental-KB semantics (indexer/main.py:353-437) in stream form.

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.{InputDoc, Span, SpanOps}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -17,6 +18,13 @@ class IncrementalSpec extends SparkTestBase {
     doc("d4", "slow part and merge join"),
     doc("d5", "spark customer window"),
     doc("d6", "fast key one more time"))
+
+  /** Jobs of one processBatch re-sending 2 documents and of one
+    * 2-document reannotate, on a work dir that already holds the corpus
+    * (the budgets only move down, with the change that earns it).
+    */
+  private val ProcessBatchJobs = 40
+  private val ReannotateJobs = 32
 
   private def tableState(t: Incremental.Tables, name: String): Seq[String] = {
     val df = name match {
@@ -236,5 +244,55 @@ class IncrementalSpec extends SparkTestBase {
     Incremental.reannotate(spark, dir, Seq("d1", "d4"))
     assert(spark.sharedState.cacheManager.isEmpty,
       "cached frames outlive Incremental.run / reannotate")
+  }
+
+  test("a re-sent document's stored rows are exactly its latest annotation") {
+    // batch 0 leaves d1's "fast key" a NIL; batch 1 re-sends d1 after
+    // batch 0 registered the entity, so d1 now links it. Every stored d1
+    // row must come from that latest run, none from batch 0's.
+    val dir = Files.createTempDirectory("incResent").toString
+    val t = Incremental.Tables(dir)
+    t.registry.overwrite(graft.kb.Registry.seed(spark).toDF())
+    val byId = corpus.map(d => d.doc_id -> d).toMap
+    def batch(ids: String*) = spark.createDataset(ids.map(byId))
+    Incremental.processBatch(spark, t, batch("d1", "d2"), 0, None)
+    Incremental.processBatch(spark, t, batch("d1", "d3"), 1, None)
+
+    val pin = t.lineage.read(spark).get
+      .filter(col("batch_id") === 1 && col("stage") === "registry_snapshot")
+      .select("status").as[String].collect().map(_.toInt).min
+    val res = Pipeline.run(spark, batch("d1"), t.registry.readSnapshot(spark, pin))
+    Seq(t.triples -> res.triples, t.mentions -> res.linked, t.candidates -> res.candidates)
+      .foreach { case (tbl, emitted) =>
+        val stored = tbl.read(spark).get
+        def d1(df: DataFrame) = df.filter(col("doc_id") === "d1")
+          .select(stored.columns.map(col): _*).collect().map(_.toString).sorted.toSeq
+        assert(d1(emitted).nonEmpty, s"${tbl.root}: d1 emits no rows")
+        assert(d1(stored) == d1(emitted), s"${tbl.root}: stored d1 rows differ from its latest run")
+      }
+    val stale = t.triples.read(spark).get.filter(col("doc_id") === "d1" &&
+      (col("subj") === "nil:fast key" || col("obj") === "nil:fast key"))
+    assert(stale.isEmpty, stale.collect().mkString("stale d1 triples: ", "; ", ""))
+  }
+
+  test("lineage is read with one job; batch and reannotate job counts") {
+    val dir = Files.createTempDirectory("incJobs").toString
+    Incremental.run(spark, spark.createDataset(corpus), dir, numBatches = 3)
+    Incremental.reannotate(spark, dir, Seq("d1", "d4"))
+    val t = Incremental.Tables(dir)
+    def jobs(body: => Any) = PipelineSpec.jobsOf(spark)(body)
+
+    val resume = jobs(Incremental.runPending(spark, dir, 0 until 3)(b =>
+      fail(s"batch $b is done and must not run again")))
+    val pins = jobs(Incremental.danglingRegistryPins(spark, t))
+    val batch = jobs(Incremental.processBatch(spark, t,
+      spark.createDataset(corpus.take(2)), 3, None))
+    val reann = jobs(Incremental.reannotate(spark, dir, Seq("d2", "d5")))
+    info(s"jobs: runPending ${resume.size}, danglingRegistryPins ${pins.size}, " +
+      s"processBatch ${batch.size}, reannotate ${reann.size}")
+    assert(resume.size == 1, resume.mkString("runPending jobs: ", "; ", ""))
+    assert(pins.size == 1, pins.mkString("danglingRegistryPins jobs: ", "; ", ""))
+    assert(batch.size == ProcessBatchJobs, batch.mkString("processBatch jobs: ", "; ", ""))
+    assert(reann.size == ReannotateJobs, reann.mkString("reannotate jobs: ", "; ", ""))
   }
 }

@@ -87,25 +87,10 @@ class PipelineSpec extends SparkTestBase {
     // fails here (the budget only moves down, with the change that earns it)
     import graft.fixtures.Corpus
     import graft.kb.Registry
-    import org.apache.spark.GraftTestShim
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
     val docs = Corpus.inputDocs(spark, sfUnit)
     val reg = Registry.seed(spark).toDF()
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(e.stageInfos.maxBy(_.stageId).name))
-    }
-    GraftTestShim.drainListenerBus(sc)
-    sc.addSparkListener(listener)
-    try {
-      Pipeline.run(spark, docs, reg).triples.count()
-      GraftTestShim.drainListenerBus(sc)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    assert(jobs.size == JobBudget, jobs.asScala.mkString("jobs: ", "; ", ""))
+    val jobs = PipelineSpec.jobsOf(spark)(Pipeline.run(spark, docs, reg).triples.count())
+    assert(jobs.size == JobBudget, jobs.mkString("jobs: ", "; ", ""))
   }
 
   test("NER runs once per document: prep map once, media scan once") {
@@ -234,5 +219,33 @@ class PipelineSpec extends SparkTestBase {
     val near = Similarity.jaccLevDistance("spark", "spork")
     val far = Similarity.jaccLevDistance("spark", "zzzzz")
     assert(near > 0.5 && near < far)
+  }
+}
+
+object PipelineSpec {
+
+  /** Spark jobs started while `body` runs, each named by its job
+    * description or else by its last stage: the listener bus is drained
+    * before the listener is added and before it is read, so the list is
+    * complete and holds no earlier job.
+    */
+  def jobsOf(spark: org.apache.spark.sql.SparkSession)(body: => Any): Seq[String] = {
+    import org.apache.spark.GraftTestShim
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(e.stageInfos.maxBy(_.stageId).name))
+    }
+    GraftTestShim.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      GraftTestShim.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.asScala.toSeq
   }
 }
